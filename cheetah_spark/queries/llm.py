@@ -3893,14 +3893,35 @@ def q_llm_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_recall_eval_frame(load_table(spark, sf_dir, "documents"))
 
 
+def _prefix_shingles(t: DataFrame) -> DataFrame:
+    """Each document's prefix-filter shingles from its (doc_id, sh,
+    n_sh) shingle set: its ``floor(n_sh * (1 - cut)) + 1`` rarest
+    shingles by (document frequency, shingle), as (doc_id, s) rows.
+
+    Document frequency is a COUNT over one (s)-partitioned window, not
+    aggregate + join-back: the join shape shuffles the exploded posting
+    stream TWICE (agg by s, then the probe side by s again); the window
+    pays one s-shuffle then reuses the partitioning (guide §2.4 — the
+    r13 CS13/CS14 span/url-dedup pattern)."""
+    from pyspark.sql.window import Window
+
+    wc = Window.partitionBy("s")
+    wd = Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("s").asc())
+    return (
+        t.select("doc_id", "n_sh", F.explode("sh").alias("s"))
+        .withColumn("df", F.count("*").over(wc))
+        .withColumn("rn", F.row_number().over(wd))
+        .where(F.col("rn") <= F.floor(F.col("n_sh") * (1.0 - _NJ_CUT)) + 1)
+        .select("doc_id", "s")
+    )
+
+
 def dedup_recall_eval_frame(d: DataFrame, panel: int = _EVAL_PANEL) -> DataFrame:
     """The recall eval over an arbitrary documents-shaped frame
     (doc_id, text) with a configurable panel budget: the stride grows
     with the corpus so |panel| stays ~<= ``panel`` at any scale. The
     registered query binds the pinned default; the config transform
     binds user panels."""
-    from pyspark.sql.window import Window
-
     spark = d.sparkSession
     n_docs = d.count()  # scalar: sets the panel stride
     stride = 1 + n_docs // panel
@@ -3910,21 +3931,7 @@ def dedup_recall_eval_frame(d: DataFrame, panel: int = _EVAL_PANEL) -> DataFrame
         .withColumn("n_sh", F.size("sh"))
         .persist()
     )
-    post = t.select("doc_id", "n_sh", F.explode("sh").alias("s"))
-    # document frequency as a COUNT over one (s)-partitioned window,
-    # not aggregate + join-back: the join shape shuffles the exploded
-    # posting stream TWICE (agg by s, then the probe side by s again);
-    # the window pays one s-shuffle then reuses the partitioning
-    # (guide §2.4 — the r13 CS13/CS14 span/url-dedup pattern)
-    wc = Window.partitionBy("s")
-    wd = Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("s").asc())
-    prefix = (
-        post.withColumn("df", F.count("*").over(wc))
-        .withColumn("rn", F.row_number().over(wd))
-        .where(F.col("rn") <= F.floor(F.col("n_sh") * (1.0 - _NJ_CUT)) + 1)
-        .select("doc_id", "s")
-        .persist()
-    )
+    prefix = _prefix_shingles(t).persist()
     qprefix = prefix.where(F.col("doc_id") % stride == 0)
     truth_cand = (
         qprefix.alias("a")

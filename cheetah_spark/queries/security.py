@@ -374,8 +374,10 @@ def brute_force_state_stage(
         # same (ts, event_id) lexsort on extracted arrays (guide §4.2)
         chunks = list(pdfs)
         rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-        ts_all = rows["ts"].to_numpy().astype("datetime64[s]").astype(np.int64)
-        order = np.lexsort((rows["event_id"].to_numpy(), ts_all))
+        # order on the full timestamp, like the oracle's (ts, event_id);
+        # seconds only for the reported run starts
+        ts_ns = rows["ts"].to_numpy().astype("datetime64[ns]").astype(np.int64)
+        order = np.lexsort((rows["event_id"].to_numpy(), ts_ns))
         # vectorized fold: a non-failure row CLOSES the run of
         # consecutive failures immediately before it; the batch tail
         # leaves an open run that carries into the next batch. Same
@@ -386,7 +388,7 @@ def brute_force_state_stage(
         # count it again.
         carried_counted = cur_run >= min_run
         ets = rows["event_type"].to_numpy()[order]
-        ts_s = ts_all[order]
+        ts_s = ts_ns[order] // 10**9
         n = len(ets)
         closers = np.flatnonzero(ets != fail)
         if closers.size:

@@ -1625,35 +1625,16 @@ def s_llm_sft_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "s_sec_impossible_travel",
-    oracle=None,  # set below: shares the batch operator's oracle verbatim
-    tags=("streaming", "security", "spatial", "stateful"),
-)
-def s_sec_impossible_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming impossible-travel detection — the custom KEYED-STATE
-    showcase: each user's state store entry carries exactly (last lat,
-    last lon, last ts, running hop/impossible/distance totals), every
-    replayed micro-batch advances it through the same snapped haversine
-    stages as the batch operator (per-row Decimal snapping reproduces
-    the SQL DECIMAL casts: both round the shortest decimal string
-    HALF_UP), and the drained final state per user hash-matches
-    q_sec_impossible_travel's oracle VERBATIM.
-
-    This is the operator class the reference's Handler surface cannot
-    express without external state (SURVEY §2A T1): sequential per-key
-    geometry across arbitrarily sliced batches. In-batch rows sort by
-    (ts, event_id); cross-batch order is the replay's ts-ordered
-    admission — the same contract every session/SCD2 stream here
-    relies on. State is O(1) per live user."""
+def _impossible_travel_update():
+    """s_sec_impossible_travel's per-user fold, the
+    ``applyInPandasWithState`` body: a closure, so it ships to the
+    Python workers by value."""
     import hashlib
     import math
     from decimal import ROUND_HALF_UP, Decimal
 
     import numpy as np
     import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     def snapf(x: float, places: str) -> float:
         return float(Decimal(repr(x)).quantize(Decimal(places), rounding=ROUND_HALF_UP))
@@ -1679,7 +1660,7 @@ def s_sec_impossible_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         chunks = list(pdfs)
         rows = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
         eids = rows["event_id"].to_numpy()
-        ts_ns = rows["ts"].to_numpy().astype(np.int64)
+        ts_ns = rows["ts"].to_numpy().astype("datetime64[ns]").astype(np.int64)
         order = np.lexsort((eids, ts_ns))
         uid = int(key[0])
         for eid, t_ns in zip(eids[order], ts_ns[order]):
@@ -1706,6 +1687,34 @@ def s_sec_impossible_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             columns=["user_id", "n_hops", "n_impossible", "km_milli"],
             copy=False,
         )
+
+    return update
+
+
+@register(
+    "s_sec_impossible_travel",
+    oracle=None,  # set below: shares the batch operator's oracle verbatim
+    tags=("streaming", "security", "spatial", "stateful"),
+)
+def s_sec_impossible_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming impossible-travel detection — the custom KEYED-STATE
+    showcase: each user's state store entry carries exactly (last lat,
+    last lon, last ts, running hop/impossible/distance totals), every
+    replayed micro-batch advances it through the same snapped haversine
+    stages as the batch operator (per-row Decimal snapping reproduces
+    the SQL DECIMAL casts: both round the shortest decimal string
+    HALF_UP), and the drained final state per user hash-matches
+    q_sec_impossible_travel's oracle VERBATIM.
+
+    This is the operator class the reference's Handler surface cannot
+    express without external state (SURVEY §2A T1): sequential per-key
+    geometry across arbitrarily sliced batches. In-batch rows sort by
+    (ts, event_id); cross-batch order is the replay's ts-ordered
+    admission — the same contract every session/SCD2 stream here
+    relies on. State is O(1) per live user."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    update = _impossible_travel_update()
 
     src_dir = events_stream_dir(spark, sf_dir)
     stream = ParquetSource(src_dir, streaming=True, max_files_per_trigger=4).read(spark)

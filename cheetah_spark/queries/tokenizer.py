@@ -187,11 +187,15 @@ def q_llm_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     how a training pipeline actually counts tokens; the regex
     token_count operator is the pre-tokenizer estimate).
 
-    Map-only: per document, each lowercase-whitespace word is encoded
-    by rank-ordered merge folds (operators/bpe.py:encode_expr — the
-    trainer's own left-to-right non-overlapping semantics), then
-    per-lang accounting aggregates. No shuffle until the |langs|-row
-    aggregate; at 100 TB this is one codegen scan.
+    Plan (operators/bpe.py:encode_docs): the corpus is split into
+    lowercase-whitespace words; the DISTINCT words (the vocabulary, one
+    shuffle bounded by its size) are encoded once each by rank-ordered
+    merge folds (encode_expr — the trainer's own left-to-right
+    non-overlapping semantics); the per-word stats are attached back
+    to the word occurrences by a broadcast hash join, summed per
+    document, left-joined back to the documents (zero-word docs count
+    0) and aggregated per lang. The folds cost |vocab| x |merges|,
+    never |occurrences| x |merges|.
 
     Contract (hash-verified values, not just booleans): total_chars
     (pre-merge symbol count) is SQL-exact, and total_tokens_first —

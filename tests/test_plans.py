@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 from cheetah_spark.registry import REGISTRY, _ensure_loaded
 
@@ -27,6 +28,34 @@ def plan(df, mode: str = "formatted") -> str:
 
 def _q(name, spark, sf_dir):
     return REGISTRY[name].fn(spark, sf_dir)
+
+
+def plan_nodes(p: str) -> list[tuple[int, str, int]]:
+    """(depth, operator, node id) of each line of a formatted plan's
+    tree, top-down."""
+    nodes = []
+    for line in p.split("\n\n")[0].splitlines()[1:]:
+        m = re.match(r"^([ :+-]*)(?:\* )?(.+?) \((\d+)\)$", line)
+        if m:
+            nodes.append((len(m.group(1)), m.group(2).strip(), int(m.group(3))))
+    return nodes
+
+
+def plan_details(p: str) -> dict[int, str]:
+    """Node id -> that node's section of a formatted plan's details."""
+    sections = re.split(r"\n\n(?=\(\d+\) )", p)
+    return {int(re.match(r"\((\d+)\)", x).group(1)): x for x in sections if x.startswith("(")}
+
+
+def subtree_ids(nodes: list[tuple[int, str, int]], root_id: int) -> set[int]:
+    """Node ids of the subtree rooted at ``root_id`` (itself included)."""
+    i = next(k for k, n in enumerate(nodes) if n[2] == root_id)
+    ids = {root_id}
+    for depth, _, nid in nodes[i + 1:]:
+        if depth <= nodes[i][0]:
+            break
+        ids.add(nid)
+    return ids
 
 
 def test_scan_project_prunes_columns(spark, sf_dir):
@@ -306,11 +335,17 @@ def test_bpe_encode_folds_merges_over_vocab_broadcast(spark, sf_dir):
     assert "BroadcastHashJoin" in tree, tree
     assert "SortMergeJoin" not in tree, tree
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, p
-    # the merge fold (aggregate over the symbol array) runs under the
-    # BroadcastExchange (vocab branch): the detail section's aggregate
-    # lambdas must all reference the distinct-word column, and the
-    # occurrence-side projections must carry none
-    assert "HashAggregate" in tree, tree
+    # the merge folds (aggregate() over each word's symbol array) are
+    # computed only on the vocabulary branch: in the word-keyed
+    # distinct aggregate under the innermost BroadcastExchange, never
+    # on the occurrence side of either join
+    nodes, details = plan_nodes(p), plan_details(p)
+    fold_ids = {nid for nid, d in details.items() if "aggregate(" in d}
+    assert fold_ids, p
+    vocab = max((n for n in nodes if n[1] == "BroadcastExchange"), key=lambda n: n[0])
+    assert fold_ids <= subtree_ids(nodes, vocab[2]), p
+    for nid in fold_ids:
+        assert re.search(r"Keys \[1\]: \[word#", details[nid]), details[nid]
 
 
 def test_weighted_sample_uses_window_group_limit(spark, sf_dir):
@@ -1033,3 +1068,25 @@ def test_recall_eval_prefix_df_is_window_not_join(spark, sf_dir):
     out = dedup_recall_eval_frame(d, panel=50)
     row = out.collect()[0]
     assert row.n_true >= 0 and 0.0 <= row.recall <= 1.0
+
+    from cheetah_spark.queries.llm import _prefix_shingles
+
+    docs = load_table(spark, sf_dir, "documents")
+    t = docs.select("doc_id", F.split("text", " ").alias("sh")).withColumn("n_sh", F.size("sh"))
+    p = plan(_prefix_shingles(t))
+    nodes, details = plan_nodes(p), plan_details(p)
+    names = [name for _, name, _ in nodes]
+    assert not any("Join" in n or "Aggregate" in n for n in names), p
+    # df: one COUNT window partitioned by s alone
+    df_windows = [
+        details[nid] for _, name, nid in nodes
+        if name == "Window" and "count(1) windowspecdefinition(s#" in details[nid]
+    ]
+    assert len(df_windows) == 1, p
+    assert re.search(r"AS df#\d+L\], \[s#\d+\]$", df_windows[0].strip()), df_windows[0]
+    # two shuffles: by s for df, by doc_id for the per-doc rank
+    keys = sorted(
+        re.search(r"hashpartitioning\((\w+)#", details[nid]).group(1)
+        for _, name, nid in nodes if name == "Exchange"
+    )
+    assert keys == ["doc_id", "s"], p

@@ -107,6 +107,37 @@ def test_brute_force_rule_on_adversarial_shapes(spark, tmp_path):
     assert _canon(pd.DataFrame([r.asDict() for r in rows])) == oracle
 
 
+def test_brute_force_stream_orders_by_full_ts_not_seconds(spark, tmp_path):
+    """Rows of one user within one second whose sub-second order
+    disagrees with event_id order: the oracle orders by (ts, event_id),
+    so three failures at .1/.2/.3 s followed by a success at .9 s with
+    the LOWEST event_id is a compromised burst. Ordering by ts
+    truncated to seconds would put the success first and leave an
+    open, uncompromised run."""
+    t0 = pd.Timestamp("2024-01-01 00:00:05")
+    rows = [
+        {"event_id": i + 1, "ts": t0 + pd.Timedelta(milliseconds=ms),
+         "user_id": 1, "event_type": et, "value": 0.0, "props": "{}"}
+        for i, (ms, et) in enumerate(
+            [(900, "purchase"), (100, "error"), (200, "error"), (300, "error")]
+        )
+    ]
+    pd.DataFrame(rows).to_parquet(tmp_path / "events.parquet", index=False)
+
+    # one trigger admits every replay file, so all four rows meet in one
+    # call of the keyed fold (across triggers the replay orders them)
+    streamed = _brute_force_stream(spark, str(tmp_path), max_files_per_trigger=8).collect()
+    got = {
+        r["user_id"]: (r["n_bursts"], r["n_compromised"], r["max_run_len"])
+        for r in streamed
+    }
+    assert got == {1: (1, 1, 3)}
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'")
+    oracle = _canon(con.sql(_BF_ORACLE).df())
+    assert _canon(pd.DataFrame([r.asDict() for r in streamed])) == oracle
+
+
 @pytest.mark.parametrize("name,batch_name", [
     ("s_sec_port_scan", "q_sec_port_scan"),
     ("s_sec_log_drift", "q_sec_log_drift"),
@@ -164,3 +195,36 @@ def test_log_drift_detects_total_outage_via_zero_fill(spark, tmp_path):
     assert _canon(con.sql(_LD_ORACLE).df()) == _canon(
         REGISTRY["q_sec_log_drift"].fn(spark, str(tmp_path))
     )
+
+
+class _NewState:
+    """The slice of GroupState the keyed folds use, for a new key."""
+
+    exists = False
+
+    def update(self, value):
+        self.value = value
+
+
+def test_impossible_travel_fold_normalizes_ts_unit():
+    """The s_sec_impossible_travel fold reads ts as nanoseconds whatever
+    unit the Arrow-to-pandas conversion delivers: a datetime64[us]
+    series folds to the same emission and state as datetime64[ns]."""
+    from cheetah_spark.queries.streams import _impossible_travel_update
+
+    ts = pd.Series([
+        pd.Timestamp("2024-01-01 00:00:00"),
+        pd.Timestamp("2024-01-01 00:10:00"),
+        pd.Timestamp("2024-01-01 05:00:00.5"),
+    ])
+
+    def fold(unit):
+        rows = pd.DataFrame(
+            {"user_id": [7] * 3, "event_id": [1, 2, 3], "ts": ts.astype(f"datetime64[{unit}]")}
+        )
+        state = _NewState()
+        out = next(_impossible_travel_update()((7,), iter([rows]), state))
+        return out.values.tolist(), state.value
+
+    assert fold("us")[1][2] == int(ts.iloc[-1].timestamp())  # last ts, seconds
+    assert fold("us") == fold("ns")
