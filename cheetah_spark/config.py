@@ -742,6 +742,7 @@ def build_transform(cfg: Mapping[str, Any]) -> Handler:
         def near_dedup(df: DataFrame) -> DataFrame:
             from cheetah_spark.queries.llm import (
                 _MH_BANDS,
+                minhash_bands,
                 minhash_bucket_expr,
                 minhash_sig_expr,
                 minhash_sigs_arrow,
@@ -754,20 +755,10 @@ def build_transform(cfg: Mapping[str, Any]) -> Handler:
                 # keys are the family's shared expression, so cost is
                 # one (band, bucket) shuffle + a bucket-min + an
                 # anti-join: O(corpus), never O(pairs). Shingle-less
-                # docs have NULL sigs (no near-dup identity) and are
-                # kept — they never enter the banding.
-                # minhash_sigs_arrow normalizes its id column to
-                # "doc_id" whatever the input name — restore the
-                # configured name so the anti-join key lines up
-                sigs = (
-                    minhash_sigs_arrow(df, id_col=id_col, text_col=col)
-                    .where(F.col("sig").isNotNull())
-                    .withColumnRenamed("doc_id", id_col)
-                )
-                banded = sigs.select(
-                    id_col,
-                    F.explode(F.sequence(F.lit(0), F.lit(_MH_BANDS - 1))).alias("b"),
-                    minhash_bucket_expr(F.col("sig"), F.col("b")).alias("bucket"),
+                # docs get no signature row (no near-dup identity), so
+                # they never enter the banding and are kept.
+                banded = minhash_bands(
+                    minhash_sigs_arrow(df, id_col=id_col, text_col=col), id_col
                 )
                 # bucket-min as a WINDOW over the one (band, bucket)
                 # shuffle — not an agg + self-join, which would evaluate

@@ -141,37 +141,29 @@ def oracle_minhash_perm(h31_expr: str, a: int, b: int) -> str:
     return f"(({a}::BIGINT * {h31_expr} + {b}) % {MINHASH_P})"
 
 
+def list_segments(lst):
+    """``(values, starts, ends)`` of an Arrow ``ListArray``: ``values``
+    is the child array cut to this array's rows, and ``starts``/``ends``
+    (int64 numpy) bound each row's segment in it, so row i is
+    ``values[starts[i]:ends[i]]``. The one list decode every Arrow fold
+    here shares: a sliced array (``RecordBatch.slice``) keeps its
+    parent's child, so its raw offsets need not start at 0; they are
+    rebased onto the cut child."""
+    import numpy as np
+
+    off = lst.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    lo, hi = int(off[0]), int(off[-1])
+    offs = off - lo
+    return lst.values.slice(lo, hi - lo), offs[:-1], offs[1:]
+
+
 # SimHash (Charikar) over the distinct token set: each token votes
 # +1/-1 per bit position of its hash56; the fingerprint sets bits with
-# positive tally. Computed as explode → 56 partial-agg SUMs → bit
-# reassembly: one md5 per distinct token TOTAL, map-side combine, one
-# doc_id shuffle. (A nested higher-order-function formulation recomputes
-# the token hashes once per bit — 56× the md5 work — and was the top
-# bench hotspot before this shape.)
+# positive tally. The token hashes run JVM-side (one md5 per distinct
+# token) and the tally, sign and bit packing run in one map-only Arrow
+# fold per batch.
 
 SIMHASH_BITS = 56  # md5-prefix hash width; keeps values in signed 64-bit
-
-
-def simhash_tally_aggs(h: str = "h", bits: int = SIMHASH_BITS) -> list[Column]:
-    """One SUM aggregate per bit over exploded (doc, token-hash) rows."""
-    return [
-        F.sum(
-            F.when(F.shiftright(F.col(h), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"sh_t{b}")
-        for b in range(bits)
-    ]
-
-
-def simhash_from_tallies(bits: int = SIMHASH_BITS) -> Column:
-    """Reassemble the fingerprint long from the per-bit tally columns."""
-    expr: Column | None = None
-    for b in range(bits):
-        term = F.when(F.col(f"sh_t{b}") > 0, F.lit(1 << b).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-        expr = term if expr is None else expr + term
-    assert expr is not None
-    return expr
 
 
 def simhash_df(docs, text_col: str = "text", id_col: str = "doc_id", bits: int = SIMHASH_BITS):
@@ -180,54 +172,45 @@ def simhash_df(docs, text_col: str = "text", id_col: str = "doc_id", bits: int =
 
     Bit-identical to the former explode + 56-SUM-agg plan (the per-bit
     tally is the same integer sum over the same hash56 values; pinned
-    by the family's DuckDB oracles), with the same drop-tokenless-docs
-    row set (explode emitted no row for them; here the empty-list rows
-    are filtered out). Why: the explode shipped ~80 rows/doc into a
-    56-column partial aggregate and a doc_id shuffle; the Arrow fold
-    is map-only — no exploded intermediate, no shuffle — and the tally
-    runs as one numpy broadcast + segmented reduceat per batch
-    (guide §4.2; measured 3.96 s → 0.80 s warm at sf0.1, the same 5×
-    the MinHash signature pass gained from the identical treatment)."""
+    by the family's DuckDB oracles), with the same row set: a
+    tokenless doc gets no row, as the oracle's GROUP BY gives it none.
+    Why: the explode shipped ~80 rows/doc into a 56-column partial
+    aggregate and a doc_id shuffle; the Arrow fold is map-only — no
+    exploded intermediate, no shuffle — and the tally runs as one
+    numpy broadcast + segmented reduceat per batch (guide §4.2;
+    measured 3.96 s → 0.80 s warm at sf0.1, the same 5× the MinHash
+    signature pass gained from the identical treatment)."""
+    hs = F.transform(F.array_distinct(tokens(F.col(text_col))), lambda t: hash56(t))
+    base = docs.select(
+        F.col(id_col), F.coalesce(hs, F.array().cast("array<bigint>")).alias("hs")
+    )
+    return base.mapInArrow(
+        lambda batches: _simhash_fold(batches, bits), f"`{id_col}` long, simh long"
+    )
+
+
+def _simhash_fold(batches, bits: int = SIMHASH_BITS):
+    """The Arrow stage of :func:`simhash_df`: batches of (id, token-hash
+    list) in, (id, simh) out, with no row for an empty list."""
     import numpy as np
     import pyarrow as pa
 
     shifts = np.arange(bits, dtype=np.int64)
     weights = np.int64(1) << shifts
-
-    hs = F.transform(F.array_distinct(tokens(F.col(text_col))), lambda t: hash56(t))
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.coalesce(hs, F.array().cast("array<bigint>")).alias("hs"),
-    )
-
-    def fold(batches):
-        for rb in batches:
-            ids = rb.column(0)
-            lst = rb.column(1)
-            off_raw = lst.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            vals = lst.values.to_numpy(zero_copy_only=False).astype(np.int64)
-            flat = vals[off_raw[0] : off_raw[-1]]
-            offs = off_raw - off_raw[0]
-            starts, ends = offs[:-1], offs[1:]
-            nonempty = ends > starts
-            if flat.size:
-                pm = 2 * ((flat[:, None] >> shifts) & 1) - 1  # (n_hashes, bits) ±1
-                tly = np.add.reduceat(pm, starts[nonempty], axis=0)
-                simh = ((tly > 0) * weights).sum(axis=1)
-            else:
-                simh = np.empty(0, dtype=np.int64)
-            out = np.zeros(len(starts), dtype=np.int64)
-            out[nonempty] = simh
-            yield pa.record_batch(
-                [ids, pa.array(out, type=pa.int64()), pa.array(nonempty)],
-                names=["doc_id", "simh", "ok"],
-            )
-
-    return (
-        base.mapInArrow(fold, "doc_id long, simh long, ok boolean")
-        .where(F.col("ok"))
-        .select(F.col("doc_id").alias(id_col), "simh")
-    )
+    for rb in batches:
+        vals, starts, ends = list_segments(rb.column(1))
+        keep = ends > starts
+        flat = vals.to_numpy(zero_copy_only=False)
+        if flat.size:
+            pm = 2 * ((flat[:, None] >> shifts) & 1) - 1  # (n_hashes, bits) ±1
+            tly = np.add.reduceat(pm, starts[keep], axis=0)
+            simh = ((tly > 0) * weights).sum(axis=1)
+        else:
+            simh = np.empty(0, dtype=np.int64)
+        yield pa.record_batch(
+            [rb.column(0).filter(pa.array(keep)), pa.array(simh, type=pa.int64())],
+            names=[rb.schema.names[0], "simh"],
+        )
 
 
 def oracle_simhash_per_doc(bits: int = SIMHASH_BITS, table: str = "documents") -> str:
@@ -264,24 +247,6 @@ SIMHASH_WIDE_BLOCKS = 4  # k+1 for the hamming-3 pigeonhole
 SIMHASH_WIDE_BLOCK_BITS = SIMHASH_WIDE_BITS // SIMHASH_WIDE_BLOCKS  # 32
 
 
-def _wide_hash_cols(t: Column) -> list[Column]:
-    m = F.md5(t)
-    return [
-        F.conv(F.substring(m, 1, 14), 16, 10).cast("bigint").alias("wh0"),
-        F.conv(F.substring(m, 15, 14), 16, 10).cast("bigint").alias("wh1"),
-        F.conv(F.substring(m, 29, 4), 16, 10).cast("bigint").alias("wh2"),
-    ]
-
-
-def _wide_bit(g: int) -> Column:
-    """Bit g (0..127) of the per-token 128-bit md5 hash."""
-    if g < 56:
-        return F.shiftright(F.col("wh0"), g).bitwiseAND(F.lit(1))
-    if g < 112:
-        return F.shiftright(F.col("wh1"), g - 56).bitwiseAND(F.lit(1))
-    return F.shiftright(F.col("wh2"), g - 112).bitwiseAND(F.lit(1))
-
-
 def simhash_wide_df(docs, text_col: str = "text", id_col: str = "doc_id"):
     """(id, blk0..blk3) 128-bit fingerprint — one md5 per distinct
     token JVM-side (the md5-string array is materialized once and the
@@ -291,8 +256,8 @@ def simhash_wide_df(docs, text_col: str = "text", id_col: str = "doc_id"):
 
     Bit-identical to the former explode + 128-SUM-agg plan (same
     per-bit integer tallies over the same wh0/wh1/wh2 values — the
-    DuckDB oracle mirror is unchanged); tokenless docs are dropped in
-    both formulations. Same guide-§4.2 rationale and measured shape as
+    DuckDB oracle mirror is unchanged); a tokenless doc gets no row in
+    either formulation. Same guide-§4.2 rationale and measured shape as
     :func:`simhash_df`, with the bigger win here: the old plan carried
     ONE HUNDRED TWENTY-EIGHT aggregate columns through a partial+final
     aggregation and a doc_id shuffle."""
@@ -308,39 +273,28 @@ def simhash_wide_df(docs, text_col: str = "text", id_col: str = "doc_id"):
 
     # ship the md5 HEX array once — deriving wh0/wh1/wh2 with three
     # JVM transforms would re-inline (and re-execute) the md5 lambda
-    # per transform (no CSE across higher-order functions, the same
-    # trap the module docstring warns about); the nibble parse below
-    # is a fully vectorized numpy fold over the raw hex bytes
+    # per transform (Catalyst does not CSE across higher-order
+    # functions); the nibble parse below is a fully vectorized numpy
+    # fold over the raw hex bytes
     ms = F.transform(
         F.array_distinct(tokens(F.col(text_col))), lambda t: F.md5(t)
     )
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.coalesce(ms, F.array().cast("array<string>")).alias("ms"),
+        F.col(id_col), F.coalesce(ms, F.array().cast("array<string>")).alias("ms")
     )
+    names = [id_col] + [f"blk{b}" for b in range(SIMHASH_WIDE_BLOCKS)]
 
     def fold(batches):
         for rb in batches:
-            ids = rb.column(0)
-            lst = rb.column(1)
-            off_raw = lst.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            offs = off_raw - off_raw[0]
-            starts, ends = offs[:-1], offs[1:]
-            nonempty = ends > starts
-            n_tok = int(off_raw[-1] - off_raw[0])
-            if n_tok:
-                svals = lst.values  # StringArray of 32-char md5 hex
+            svals, starts, ends = list_segments(rb.column(1))  # md5 hex strings
+            keep = ends > starts
+            if len(svals):
                 obuf = np.frombuffer(svals.buffers()[1], dtype=np.int32)
-                so = obuf[svals.offset : svals.offset + len(svals) + 1].astype(np.int64)
+                so = obuf[svals.offset : svals.offset + len(svals) + 1]
                 data = np.frombuffer(svals.buffers()[2], dtype=np.uint8)
-                # md5 hex is fixed 32 bytes and never null → the slice
-                # is contiguous and reshapes exactly; index through the
-                # LIST offsets so a sliced batch reads only its tokens
-                hexb = (
-                    data[so[off_raw[0]] : so[off_raw[-1]]]
-                    .reshape(-1, 32)
-                    .astype(np.int64)
-                )
+                # md5 hex is fixed 32 bytes and never null → the byte
+                # range is contiguous and reshapes exactly
+                hexb = data[so[0] : so[-1]].reshape(-1, 32).astype(np.int64)
                 d = np.where(hexb >= 97, hexb - 87, hexb - 48)  # nibbles
                 wh0 = d[:, 0:14] @ pow16_14
                 wh1 = d[:, 14:28] @ pow16_14
@@ -354,8 +308,7 @@ def simhash_wide_df(docs, text_col: str = "text", id_col: str = "doc_id"):
                     axis=1,
                 )  # (n_tokens, 128), global bit order g = column index
                 pm = 2 * bits - 1
-                tly = np.add.reduceat(pm, starts[nonempty], axis=0)  # (k, 128)
-                pos = tly > 0
+                pos = np.add.reduceat(pm, starts[keep], axis=0) > 0  # (k, 128)
                 blks = np.stack(
                     [
                         (pos[:, b * bb : (b + 1) * bb] * block_w).sum(axis=1)
@@ -365,22 +318,13 @@ def simhash_wide_df(docs, text_col: str = "text", id_col: str = "doc_id"):
                 )  # (k, 4)
             else:
                 blks = np.empty((0, SIMHASH_WIDE_BLOCKS), dtype=np.int64)
-            out = np.zeros((len(starts), SIMHASH_WIDE_BLOCKS), dtype=np.int64)
-            out[nonempty] = blks
             yield pa.record_batch(
-                [ids]
-                + [pa.array(out[:, b], type=pa.int64()) for b in range(SIMHASH_WIDE_BLOCKS)]
-                + [pa.array(nonempty)],
-                names=["doc_id", "blk0", "blk1", "blk2", "blk3", "ok"],
+                [rb.column(0).filter(pa.array(keep))]
+                + [pa.array(blks[:, b], type=pa.int64()) for b in range(SIMHASH_WIDE_BLOCKS)],
+                names=names,
             )
 
-    return (
-        base.mapInArrow(
-            fold, "doc_id long, blk0 long, blk1 long, blk2 long, blk3 long, ok boolean"
-        )
-        .where(F.col("ok"))
-        .select(F.col("doc_id").alias(id_col), "blk0", "blk1", "blk2", "blk3")
-    )
+    return base.mapInArrow(fold, ", ".join(f"`{n}` long" for n in names))
 
 
 def oracle_simhash_wide_per_doc(table: str = "documents") -> str:

@@ -10,15 +10,14 @@ comparisons are bit-stable up to snap precision.
 Scale posture: these are pure expressions → whole-stage codegen, no
 Python, no shuffle. The O(n²) pairing around them is what must be
 bounded at 100 TB — see q_llm_similarity_topk (broadcast query set) and
-q_llm_ann_lsh (sign-LSH banding) in queries/llm.py.
+q_llm_ann_lsh in queries/llm.py (sign-LSH banding: its Arrow fold projects
+onto the :func:`_lsh_sign` hyperplanes defined here).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from cheetah_spark.functions.text import hash56
 
 
 def _d(col: Column) -> Column:
@@ -112,29 +111,3 @@ def _lsh_sign(band: int, bit: int, i: int) -> float:
 
     h = int(hashlib.md5(f"{band}:{bit}:{i}".encode()).hexdigest()[:14], 16)
     return 1.0 if h & 1 else -1.0
-
-
-def sign_lsh_bucket(vec: Column, band: int, bits_per_band: int = 8, dim: int = 64) -> Column:
-    """Random-hyperplane (sign) LSH bucket id for one band.
-
-    Bucket id packs the sign bits of ``bits_per_band`` hyperplane
-    projections; the hyperplane ±1 components are md5-derived literals
-    embedded in the plan (plan-build-time constants → the per-row work
-    is ``bits_per_band`` literal-weighted dot products inside codegen).
-
-    Cosine-similar vectors agree on most sign bits, so near-duplicates
-    collide in at least one band with high probability; the band bucket
-    is the shuffle key, which keeps candidate generation linear instead
-    of the O(n²) cross join.
-    """
-    v = _d(vec)
-    acc = F.lit(0).cast("bigint")
-    for bit in range(bits_per_band):
-        signs = F.array(*[F.lit(_lsh_sign(band, bit, i)) for i in range(dim)])
-        proj = F.aggregate(
-            F.zip_with(v, signs, lambda x, s: x * s), F.lit(0.0), lambda a, x: a + x
-        )
-        acc = acc + F.when(proj >= 0, F.lit(1 << bit).cast("bigint")).otherwise(
-            F.lit(0).cast("bigint")
-        )
-    return acc

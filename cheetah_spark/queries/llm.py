@@ -340,12 +340,8 @@ def _winnow_fp_arrow(d: DataFrame) -> DataFrame:
         for rb in batches:
             ids = rb.column(0)
             langs = rb.column(1)
-            lst = rb.column(2)
-            off_raw = lst.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            vals = lst.values.to_numpy(zero_copy_only=False).astype(np.int64)
-            flat = vals[off_raw[0] : off_raw[-1]]
-            offs = off_raw - off_raw[0]
-            starts, ends = offs[:-1], offs[1:]
+            vals, starts, ends = X.list_segments(rb.column(2))
+            flat = vals.to_numpy(zero_copy_only=False)
             n = flat.size
             if n >= w:
                 win = np.lib.stride_tricks.sliding_window_view(flat, w)
@@ -552,19 +548,23 @@ def minhash_bucket_expr(sig: "F.Column", b: "F.Column") -> "F.Column":
 
 def minhash_sig_expr(text: "F.Column") -> "F.Column":
     """Map-only MinHash signature (array<bigint>[32]) as ONE column
-    expression — no explode, no aggregation. Equivalent to
-    :func:`_minhash_sigs_of` (same md5-once-per-shingle base, same
-    permutations; equality pinned by the s_llm_minhash_dedup oracle),
-    but usable where a shuffle cannot precede the consumer — e.g.
-    ahead of a stateful streaming operator (Spark rejects aggregation
-    there). Shape matters: each shingle's md5 is computed ONCE and all
+    expression, NULL for a doc with no shingles. Same values as
+    :func:`minhash_sigs_arrow` (same md5-once-per-shingle base, same
+    permutations; both pinned against the DuckDB
+    ``_oracle_minhash_sigs`` in test_llm), but interpreted, so several
+    times slower. It stays for the two places the Arrow stage cannot
+    go: a ``withColumn`` that keeps every row (the ``minhash_sig``
+    config transform), and a streaming plan below a keyed-state stage
+    (the streaming ``minhash_dedup`` transform after ``url_dedup``: the
+    planner rejects Arrow evaluation over state-emitter rows).
+
+    Shape matters: each shingle's md5 is computed ONCE and all
     32 permutations derive from it inside one per-shingle transform,
     then an elementwise-min fold collapses the shingle axis — 32
     separate array_min(transform(hs,…)) expressions would re-inline
     (and re-execute) the md5 transform per permutation, because
     Catalyst does not CSE across higher-order functions (measured
-    2.6×). Batch callers still prefer _minhash_sigs_of (map-side
-    partial aggregation)."""
+    2.6×)."""
     hs = F.transform(
         F.array_distinct(X.shingles(X.tokens(text), 3)),
         lambda s: X.minhash_base(s),
@@ -578,11 +578,12 @@ def minhash_sig_expr(text: "F.Column") -> "F.Column":
     folded = F.aggregate(
         per_shingle, init, lambda acc, x: F.zip_with(acc, x, lambda a, b: F.least(a, b))
     )
-    # a doc with < 3 tokens has NO shingles: the batch formulation
-    # drops it (no group), so the map-only form must yield NULL, not
+    # a doc with < 3 tokens has NO shingles: the Arrow kernel emits no
+    # row for it, so this row-keeping form must yield NULL, not
     # the untouched init sentinel — which would put every short doc in
     # one universal bucket and flag them all as mutual near-duplicates
-    # (round-5 review finding; callers filter null sigs)
+    # (round-5 review finding; the streaming minhash_dedup gives NULL
+    # sigs a singleton bucket)
     return F.when(F.size(per_shingle) > 0, folded)
 
 
@@ -592,35 +593,28 @@ def minhash_sigs_arrow(
     text_col: str = "text",
     shingles_col: str | None = None,
 ) -> DataFrame:
-    """(doc_id, sig array<bigint>[32]) computed map-only: md5 base
+    """(id_col, sig array<bigint>[32]) computed map-only — THE MinHash
+    signature kernel of every batch and micro-batch caller: md5 base
     hashes JVM-side (one per distinct shingle, the same
     ``X.minhash_base`` expression every formulation shares), then the
     32 permutations + elementwise-min fold VECTORIZED in one
     ``mapInArrow`` stage (numpy broadcasting + segmented
     ``minimum.reduceat`` — zero per-shingle Python).
 
-    Why this exists (r7 verdict item #7, measured at sf0.1/local[32]):
+    A doc with no shingles (fewer than 3 tokens, or null text) gets NO
+    row, as the oracle's ``GROUP BY doc_id`` gives it none
+    (:func:`_oracle_minhash_sigs`); the id column keeps its name.
+
+    Why this shape (r7 verdict item #7, measured at sf0.1/local[32]):
     the pure-Column :func:`minhash_sig_expr` fold runs on Spark's
-    interpreted higher-order-function path, and it dominated the
-    streaming dedup's wall time — the stream portion of
+    interpreted higher-order-function path — the stream portion of
     s_llm_minhash_dedup measured 12.8 s with the HOF fold vs 4.0 s
-    with this formulation (engine floor ~1.0 s; the batch
-    explode+partial-agg form does the same math in 1.5 s but is
-    illegal upstream of a stateful streaming aggregate). Bit-identical
-    outputs: the permutation math is the same
-    ``(a*h + b) % MINHASH_P`` over int64 (a,h < 2^31 so products fit),
-    pinned by test_llm's equality test and the streaming oracle.
-
-    Short/null docs (no shingles) yield NULL sigs, matching
-    minhash_sig_expr's contract — callers filter ``sig IS NOT NULL``."""
-    import numpy as np
-    import pyarrow as pa
-
-    a_np = np.array([a for a, _ in _MH_PARAMS], dtype=np.int64).reshape(-1, 1)
-    b_np = np.array([b for _, b in _MH_PARAMS], dtype=np.int64).reshape(-1, 1)
-    p_mod = X.MINHASH_P
-    n_hashes = _MH_HASHES
-
+    with this formulation (engine floor ~1.0 s) — and the former
+    batch explode + 32 partial-agg mins took ~10× longer than this
+    fold on the full corpus (6.7 s → 0.7 s warm at sf0.1: no 2M-row
+    explode, no shuffle). The permutation math is the same
+    ``(a*h + b) % MINHASH_P`` over int64 (a,h < 2^31 so products
+    fit)."""
     # shingles_col: a caller that already materialized each doc's
     # DISTINCT shingle array (q_llm_ngram_jaccard, the recall eval)
     # hashes it directly instead of re-tokenizing the text
@@ -631,71 +625,41 @@ def minhash_sigs_arrow(
     )
     hs = F.transform(shingled, lambda s: X.minhash_base(s))
     # never-null input lists: a null text's hs coalesces to [] so the
-    # Arrow offsets stay well-defined; [] → NULL sig on the way out
+    # Arrow offsets stay well-defined; [] rows are dropped in the fold
     base = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.coalesce(hs, F.array().cast("array<bigint>")).alias("hs"),
+        F.col(id_col), F.coalesce(hs, F.array().cast("array<bigint>")).alias("hs")
     )
-
-    def perm_fold(batches):
-        for rb in batches:
-            ids = rb.column(0)
-            lst = rb.column(1)
-            off_raw = lst.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            vals = lst.values.to_numpy(zero_copy_only=False).astype(np.int64)
-            # normalize a possibly-sliced child array to 0-based offsets
-            flat = vals[off_raw[0] : off_raw[-1]]
-            offs = off_raw - off_raw[0]
-            starts, ends = offs[:-1], offs[1:]
-            nonempty = ends > starts
-            n_rows = len(starts)
-            if flat.size:
-                perms = (a_np * flat + b_np) % p_mod  # (32, n_shingles)
-                # empty segments have start==end, so consecutive
-                # NONEMPTY starts are exact boundaries in flat
-                red = np.minimum.reduceat(perms, starts[nonempty], axis=1)
-                sig_vals = red.T.ravel()
-            else:
-                sig_vals = np.empty(0, dtype=np.int64)
-            counts = np.where(nonempty, n_hashes, 0)
-            out_offs = np.concatenate(([0], np.cumsum(counts))).astype(np.int32)
-            sig_arr = pa.ListArray.from_arrays(
-                pa.array(out_offs, type=pa.int32()),
-                pa.array(sig_vals, type=pa.int64()),
-                mask=pa.array(~nonempty),
-            )
-            yield pa.record_batch([ids, sig_arr], names=["doc_id", "sig"])
-
-    return base.mapInArrow(perm_fold, "doc_id long, sig array<bigint>")
+    return base.mapInArrow(_minhash_fold, f"`{id_col}` long, sig array<bigint>")
 
 
-def _minhash_sigs_from_shingles(t: DataFrame, sh: str = "sh") -> DataFrame:
-    """(doc_id, sig array<bigint>[32]) from a frame that already holds
-    each doc's DISTINCT shingle array — so queries that materialize
-    the shingle table anyway (q_llm_ngram_jaccard, the recall eval)
-    derive signatures from it instead of re-tokenizing the corpus
-    (guide §1.2 step 1: one pass, not two). Same Arrow perm-fold as
-    :func:`_minhash_sigs_of`; docs with an empty/null shingle array
-    are dropped, exactly like the old explode formulation."""
-    return minhash_sigs_arrow(t, shingles_col=sh).where(F.col("sig").isNotNull())
+def _minhash_fold(batches):
+    """The Arrow stage of :func:`minhash_sigs_arrow`: batches of (id,
+    base-hash list) in, (id, sig) out, with no row for an empty list."""
+    import numpy as np
+    import pyarrow as pa
 
-
-def _minhash_sigs_of(d: DataFrame) -> DataFrame:
-    """(doc_id, sig array<bigint>[32]) for batch callers — the Arrow
-    perm-fold (:func:`minhash_sigs_arrow`) with shingle-less docs
-    dropped (the old explode+agg emitted no row for them; the Arrow
-    stage emits NULL sigs, so the filter restores the identical row
-    set — pinned by test_minhash_sigs_arrow_matches_batch...).
-
-    History: this was explode + 32 partial-agg mins (one md5 per
-    distinct shingle, map-side partials before a doc_id shuffle).
-    That shape beat the interpreted HOF fold 30×, but the Arrow
-    perm-fold beats IT ~10× warm at sf0.1 (6.7 s → 0.7 s for the
-    full-corpus pass: no 2M-row explode, no shuffle at all — the
-    per-doc min-fold runs as segmented numpy reduceat inside one
-    map stage, guide §4.2), and it is the formulation the streaming
-    twin always used, so batch and stream now share one definition."""
-    return minhash_sigs_arrow(d).where(F.col("sig").isNotNull())
+    a_np = np.array([a for a, _ in _MH_PARAMS], dtype=np.int64).reshape(-1, 1)
+    b_np = np.array([b for _, b in _MH_PARAMS], dtype=np.int64).reshape(-1, 1)
+    for rb in batches:
+        vals, starts, ends = X.list_segments(rb.column(1))
+        keep = ends > starts
+        flat = vals.to_numpy(zero_copy_only=False)
+        if flat.size:
+            perms = (a_np * flat + b_np) % X.MINHASH_P  # (32, n_shingles)
+            # empty segments have start==end, so consecutive NONEMPTY
+            # starts are exact boundaries in flat
+            sig_vals = np.minimum.reduceat(perms, starts[keep], axis=1).T.ravel()
+        else:
+            sig_vals = np.empty(0, dtype=np.int64)
+        n_out = sig_vals.size // _MH_HASHES
+        sig_arr = pa.ListArray.from_arrays(
+            pa.array(np.arange(0, (n_out + 1) * _MH_HASHES, _MH_HASHES, dtype=np.int32)),
+            pa.array(sig_vals, type=pa.int64()),
+        )
+        yield pa.record_batch(
+            [rb.column(0).filter(pa.array(keep)), sig_arr],
+            names=[rb.schema.names[0], "sig"],
+        )
 
 
 def _oracle_minhash_sigs(table: str = "documents") -> str:
@@ -749,7 +713,7 @@ def _oracle_bands_cand(sigs_cte: str = "sigs") -> str:
 def q_llm_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH near-duplicate detection, the full scale path:
 
-    shingle(3-gram) → 32-hash MinHash signature (map-only codegen) →
+    shingle(3-gram) → 32-hash MinHash signature (map-only Arrow fold) →
     8 bands × 4 rows, banded by md5 of the band slice → shuffle on
     (band, bucket) self-join for candidates (NO cross join: cost is
     O(sum of bucket sizes²), linear for non-adversarial data) →
@@ -758,8 +722,18 @@ def q_llm_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the band join is the only shuffle; the signature join
     back is two hash joins on doc_id. Bucket keys are 128-bit md5 →
     uniform; AQE skew-join splits any hot bucket."""
-    sigs = _minhash_sigs_of(load_table(spark, sf_dir, "documents"))
+    sigs = minhash_sigs_arrow(load_table(spark, sf_dir, "documents"))
     return _minhash_pairs(sigs)
+
+
+def minhash_bands(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id_col, b, bucket): one row per signature band, keyed by
+    :func:`minhash_bucket_expr` — the banding every batch and
+    micro-batch MinHash consumer shares (oracle mirror: the ``bands``
+    CTE of :func:`_oracle_bands_cand`)."""
+    return sigs.select(
+        id_col, F.explode(F.sequence(F.lit(0), F.lit(_MH_BANDS - 1))).alias("b"), "sig"
+    ).select(id_col, "b", minhash_bucket_expr(F.col("sig"), F.col("b")).alias("bucket"))
 
 
 def _minhash_band_candidates(sigs: DataFrame) -> DataFrame:
@@ -769,15 +743,7 @@ def _minhash_band_candidates(sigs: DataFrame) -> DataFrame:
 
     Callers should ``persist()`` ``sigs`` first: the band self-join
     evaluates it twice (and signature-join consumers add more reads)."""
-    bands = sigs.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.lit(_MH_BANDS - 1))).alias("b"),
-        F.col("sig"),
-    ).select(
-        "doc_id",
-        "b",
-        minhash_bucket_expr(F.col("sig"), F.col("b")).alias("bucket"),
-    )
+    bands = minhash_bands(sigs)
     return (
         bands.alias("a")
         .join(bands.alias("c"), on=["b", "bucket"])
@@ -890,9 +856,8 @@ def q_llm_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.array_distinct(X.shingles(toks, 3)).alias("sh")
     ).withColumn("n_sh", F.size("sh")).localCheckpoint()
     # signatures derive from the checkpointed shingle table — the raw
-    # corpus is tokenized exactly once for this query (previously
-    # _minhash_sigs_of(d) re-tokenized it a second time)
-    cand = _minhash_band_candidates(_minhash_sigs_from_shingles(t))
+    # corpus is tokenized exactly once for this query
+    cand = _minhash_band_candidates(minhash_sigs_arrow(t, shingles_col="sh"))
     a = t.select(
         F.col("doc_id").alias("doc_id_a"),
         F.col("sh").alias("sh_a"), F.col("n_sh").alias("n_sh_a"),
@@ -2022,7 +1987,7 @@ def q_llm_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # leaks past the query (guide §5)
     s2 = fp.join(keep, ["content_fp", "doc_id"]).select("doc_id", "lang", "text").localCheckpoint()
     near = (
-        _minhash_pairs(_minhash_sigs_of(s2))
+        _minhash_pairs(minhash_sigs_arrow(s2))
         .select(F.col("doc_id_b").alias("doc_id"))
         .distinct()
     )
@@ -3959,12 +3924,11 @@ def dedup_recall_eval_frame(d: DataFrame, panel: int = _EVAL_PANEL) -> DataFrame
         .persist()
     )
     # signatures derive from the PERSISTED shingle table, not from the
-    # raw text: explode(t.sh) is value-identical to _minhash_sigs_of's
-    # explode(array_distinct(shingles(tokens(text)))) — same tokens
-    # expr, same distinct shingle set — and skips a second full
+    # raw text: t.sh is the same array_distinct(shingles(tokens(text)))
+    # the kernel would build, and reusing it skips a second full
     # tokenize+shingle pass over the corpus (guide §1.2 step 1: don't
     # recompute what a materialized proxy already holds)
-    sigs = _minhash_sigs_from_shingles(t).persist()
+    sigs = minhash_sigs_arrow(t, shingles_col="sh").persist()
     cand = _minhash_band_candidates(sigs)
     # panel-bounded pair set, consumed by TWO actions (the n_hit join
     # and the n_cand count) — materialize it once or the whole

@@ -607,14 +607,14 @@ def _streaming_minhash_oracle() -> str:
 def s_llm_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING near-duplicate detection — the curation family's
     MinHash-LSH banding run against history as documents ARRIVE: each
-    micro-batch computes signatures map-side (a shuffle-free
-    formulation of q_llm_minhash_dedup's expressions — see
-    minhash_sig_expr), explodes them to (band, bucket) keys, and a
-    JVM stateful streaming aggregation carries ONE bounded value per
-    bucket — the minimum doc_id ever seen — so any later arrival
-    colliding with an earlier document in any band is flagged. This
-    is how a production ingest pipeline near-dedups a stream against
-    everything already ingested without re-scanning it.
+    micro-batch computes signatures map-side (q_llm_minhash_dedup's
+    kernel, minhash_sigs_arrow), explodes them to (band, bucket) keys
+    (minhash_bands), and a JVM stateful streaming aggregation carries
+    ONE bounded value per bucket — the minimum doc_id ever seen — so
+    any later arrival colliding with an earlier document in any band
+    is flagged. This is how a production ingest pipeline near-dedups
+    a stream against everything already ingested without re-scanning
+    it.
 
     State is O(#occupied buckets) x 8 bytes in the JVM state store,
     NOT corpus-sized, and deliberately NOT a Python stateful operator:
@@ -660,11 +660,7 @@ def _stream_minhash_flagged(
     set = banded arrivals with doc_id above their bucket's final min
     — identical to flagging each arrival online, because a doc is
     flagged iff ANY bucket it lands in ever saw a smaller doc_id."""
-    from cheetah_spark.queries.llm import (
-        _MH_BANDS,
-        minhash_bucket_expr,
-        minhash_sigs_arrow,
-    )
+    from cheetah_spark.queries.llm import minhash_bands, minhash_sigs_arrow
     from cheetah_spark.streaming import documents_stream_dir
 
     src_dir = documents_stream_dir(spark, sf_dir)
@@ -686,27 +682,13 @@ def _stream_minhash_flagged(
     fanout = spark.sparkContext.defaultParallelism
 
     def banded(df):
-        # map-only signature: Spark rejects an aggregation (the batch
-        # _minhash_sigs_of shape) ahead of a streaming agg, and the
-        # pure-Column HOF fold (minhash_sig_expr) runs interpreted —
-        # 12.8 s vs 4.0 s for the Arrow-vectorized fold at sf0.1 (r7
-        # verdict item #7; engine floor ~1 s, so the sig WAS the wall)
-        return (
-            minhash_sigs_arrow(df.repartition(fanout))
-            # shingle-less docs have NULL sigs (no near-dup identity) —
-            # same as the batch formulation dropping them
-            .where(F.col("sig").isNotNull())
-            .select(
-                "doc_id",
-                F.explode(F.sequence(F.lit(0), F.lit(_MH_BANDS - 1))).alias("b"),
-                "sig",
-            )
-            .select(
-                "doc_id",
-                "b",
-                minhash_bucket_expr(F.col("sig"), F.col("b")).alias("bucket"),
-            )
-        )
+        # map-only signature: Spark rejects an aggregation ahead of a
+        # streaming agg, and the pure-Column HOF fold (minhash_sig_expr)
+        # runs interpreted — 12.8 s vs 4.0 s for the Arrow kernel at
+        # sf0.1 (r7 verdict item #7; engine floor ~1 s, so the sig WAS
+        # the wall). Shingle-less docs get no signature row, so they
+        # never enter the banding.
+        return minhash_bands(minhash_sigs_arrow(df.repartition(fanout)))
 
     # foreachBatch parquet spool, NOT the memory sink (r9): the
     # update-mode aggregation emits ~|occupied buckets| rows per
@@ -724,20 +706,10 @@ def _stream_minhash_flagged(
             output_mode="update",
         )
     final_min = sunk.groupBy("b", "bucket").agg(F.min("min_doc").alias("m"))
-    # batch-side arrivals use the cheaper explode+partial-agg signature
-    # (identical buckets by construction; the map-only expression is
-    # only REQUIRED upstream of the streaming aggregation)
-    from cheetah_spark.queries.llm import _minhash_sigs_of
-
-    sigs = _minhash_sigs_of(load_table(spark, sf_dir, "documents"))
-    arrivals = sigs.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.lit(_MH_BANDS - 1))).alias("b"),
-        "sig",
-    ).select(
-        "doc_id",
-        "b",
-        minhash_bucket_expr(F.col("sig"), F.col("b")).alias("bucket"),
+    # batch-side arrivals: the same kernel and banding over the whole
+    # corpus, so their buckets equal the streamed ones by construction
+    arrivals = minhash_bands(
+        minhash_sigs_arrow(load_table(spark, sf_dir, "documents"))
     )
     return (
         arrivals.join(final_min, ["b", "bucket"])

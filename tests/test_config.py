@@ -1152,7 +1152,7 @@ def test_minhash_dedup_transform_batch_matches_pair_composition(tmp_path, spark,
     from pyspark.sql import functions as F
 
     from cheetah_spark.__main__ import main
-    from cheetah_spark.queries.llm import _minhash_band_candidates, _minhash_sigs_of
+    from cheetah_spark.queries.llm import _minhash_band_candidates, minhash_sigs_arrow
 
     src = str(tmp_path / "mh_docs")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -1173,7 +1173,7 @@ def test_minhash_dedup_transform_batch_matches_pair_composition(tmp_path, spark,
     staged = spark.read.parquet(src)
     flagged = {
         r.doc_id_b
-        for r in _minhash_band_candidates(_minhash_sigs_of(staged).persist())
+        for r in _minhash_band_candidates(minhash_sigs_arrow(staged).persist())
         .select("doc_id_b")
         .distinct()
         .collect()
@@ -1354,8 +1354,7 @@ def test_decontaminate_composes_after_keyed_state_in_one_streaming_plan(
 
 def test_minhash_dedup_transform_custom_id_column(tmp_path, spark):
     """The batch minhash_dedup binding must honor a non-default id
-    column (minhash_sigs_arrow normalizes its id to 'doc_id'
-    internally — the transform restores the configured name): two
+    column (minhash_sigs_arrow and minhash_bands carry it by name): two
     exact-duplicate texts collapse to the lower id, the distinct text
     survives untouched."""
     from cheetah_spark.config import pipeline_from_config

@@ -181,67 +181,66 @@ def test_embed_dedup_contract_above_adaptive_floor(spark, tmp_path):
     assert srows == drows
 
 
+_MH_DOCS = [
+    (1, "spark table scan filter join group order sort"),
+    (2, "column value hash stream batch merge big small"),
+    (3, "spark table scan filter join group order sort"),
+    (10, "hi"),  # 1 token -> no shingles
+    (11, "two words"),  # 2 tokens -> no shingles
+    (12, None),  # null text -> no shingles
+]
+
+
+def _oracle_sigs(rows):
+    """doc_id -> sig from the DuckDB reference (``_oracle_minhash_sigs``,
+    the batch GROUP BY formulation) over the same rows."""
+    import duckdb
+
+    from cheetah_spark.queries.llm import _oracle_minhash_sigs
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    return {k: list(v) for k, v in con.execute(_oracle_minhash_sigs()).fetchall()}
+
+
 def test_minhash_sig_expr_matches_batch_and_handles_short_docs(spark):
-    """The map-only signature equals the batch explode+agg signature
-    per doc, and shingle-less docs (< 3 tokens) yield NULL instead of
-    the universal init sentinel (which would collide every short doc
-    with every other — round-5 review finding)."""
+    """The row-keeping Column signature equals the DuckDB batch
+    reference per doc, and shingle-less docs (< 3 tokens, null text)
+    yield NULL instead of the universal init sentinel (which would
+    collide every short doc with every other — round-5 review
+    finding)."""
     from pyspark.sql import functions as F
 
-    from cheetah_spark.queries.llm import _minhash_sigs_of, minhash_sig_expr
+    from cheetah_spark.queries.llm import minhash_sig_expr
 
-    d = spark.createDataFrame(
-        [
-            (1, "spark table scan filter join group order sort"),
-            (2, "column value hash stream batch merge big small"),
-            (3, "spark table scan filter join group order sort"),
-            (10, "hi"),  # 1 token -> no shingles
-            (11, "two words"),  # 2 tokens -> no shingles
-        ],
-        "doc_id long, text string",
-    )
-    batch = {r.doc_id: list(r.sig) for r in _minhash_sigs_of(d).collect()}
+    oracle = _oracle_sigs(_MH_DOCS)
+    assert set(oracle) == {1, 2, 3}
+    d = spark.createDataFrame(_MH_DOCS, "doc_id long, text string")
     maponly = {
         r.doc_id: (list(r.sig) if r.sig is not None else None)
         for r in d.select("doc_id", minhash_sig_expr(F.col("text")).alias("sig")).collect()
     }
-    assert set(batch) == {1, 2, 3}  # batch drops shingle-less docs
-    assert maponly[10] is None and maponly[11] is None
-    for k, v in batch.items():
-        assert maponly[k] == v, f"sig mismatch for doc {k}"
+    assert maponly == {**oracle, 10: None, 11: None, 12: None}
 
 
 def test_minhash_sigs_arrow_matches_batch_and_handles_short_docs(spark):
-    """The Arrow-vectorized map-only signature (the streaming dedup's
-    hot path since r8) is bit-identical to the batch explode+agg
-    signature, with the same NULL-for-shingle-less contract — including
-    null text and an all-empty batch."""
-    from cheetah_spark.queries.llm import _minhash_sigs_of, minhash_sigs_arrow
+    """The Arrow signature kernel equals the DuckDB batch reference:
+    bit-identical sigs, and like the reference's GROUP BY no row at
+    all for a shingle-less doc (10, 11, 12) — also when a whole batch
+    has none. The caller's id column name is kept."""
+    from cheetah_spark.queries.llm import minhash_sigs_arrow
 
-    d = spark.createDataFrame(
-        [
-            (1, "spark table scan filter join group order sort"),
-            (2, "column value hash stream batch merge big small"),
-            (3, "spark table scan filter join group order sort"),
-            (10, "hi"),  # 1 token -> no shingles
-            (11, "two words"),  # 2 tokens -> no shingles
-            (12, None),  # null text -> no shingles
-        ],
-        "doc_id long, text string",
-    )
-    batch = {r.doc_id: list(r.sig) for r in _minhash_sigs_of(d).collect()}
-    arrow = {
-        r.doc_id: (list(r.sig) if r.sig is not None else None)
-        for r in minhash_sigs_arrow(d).collect()
-    }
-    assert set(arrow) == {1, 2, 3, 10, 11, 12}
-    assert arrow[10] is None and arrow[11] is None and arrow[12] is None
-    for k, v in batch.items():
-        assert arrow[k] == v, f"sig mismatch for doc {k}"
-    # an all-shingle-less partition must not trip the empty-flat path
+    oracle = _oracle_sigs(_MH_DOCS)
+    d = spark.createDataFrame(_MH_DOCS, "doc_id long, text string")
+    arrow = {r.doc_id: list(r.sig) for r in minhash_sigs_arrow(d).collect()}
+    assert arrow == oracle
+    # an all-shingle-less batch must not trip the empty-flat path
     short = spark.createDataFrame([(20, "x"), (21, None)], "doc_id long, text string")
-    rows = minhash_sigs_arrow(short).collect()
-    assert {r.doc_id: r.sig for r in rows} == {20: None, 21: None}
+    assert minhash_sigs_arrow(short).collect() == []
+    renamed = minhash_sigs_arrow(d.withColumnRenamed("doc_id", "key"), id_col="key")
+    assert renamed.columns == ["key", "sig"]
+    assert {r.key: list(r.sig) for r in renamed.collect()} == oracle
 
 
 def test_ann_contract_empty_embeddings_fails_loud(spark, tmp_path):

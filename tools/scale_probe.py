@@ -254,10 +254,10 @@ def main() -> None:
         _exact_topk,
         _kmeans_centroids,
         _minhash_band_candidates,
-        _minhash_sigs_of,
         _semdedup_per_cluster,
         _SH_BLOCK_BITS,
         _SH_BLOCKS,
+        minhash_sigs_arrow,
     )
     from cheetah_spark.functions import text as X
 
@@ -382,7 +382,7 @@ def main() -> None:
         if only:
             spark.catalog.clearCache()
             continue
-        sigs = _minhash_sigs_of(docs).persist()
+        sigs = minhash_sigs_arrow(docs).persist()
         mh_cand = _minhash_band_candidates(sigs).count()
         sigs.unpersist()
         fp = X.simhash_df(docs)
