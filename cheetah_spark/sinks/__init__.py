@@ -44,6 +44,60 @@ def _start(writer, checkpoint: Optional[str], trigger: Optional[dict]):
     return writer.start()
 
 
+def write_capture(out: DataFrame, path: str, checkpoint: Optional[str], trigger: Optional[dict]):
+    """Append ``out`` to the NDJSON capture at ``path``: a streaming
+    JSON file sink (checkpoint defaults to ``<path>/_checkpoint``) or a
+    batch append. Replay sources read the capture back."""
+    if out.isStreaming:
+        w = out.writeStream.format("json").option("path", path).outputMode("append")
+        return _start(w, checkpoint or f"{path}/_checkpoint", trigger)
+    out.write.mode("append").json(path)
+    return None
+
+
+def send_partitions(
+    out: DataFrame,
+    send: Callable,
+    name: str,
+    checkpoint: Optional[str],
+    trigger: Optional[dict],
+    output_mode: str = "append",
+):
+    """Run ``send(rows)`` once per partition of ``out`` (one client per
+    executor partition); a stream does so per micro-batch through
+    ``foreachBatch``, checkpointed under
+    ``/tmp/cheetah_spark_ckpt/<name>_<uuid>`` by default."""
+    if out.isStreaming:
+        w = out.writeStream.foreachBatch(
+            lambda batch, _id: batch.foreachPartition(send)
+        ).outputMode(output_mode)
+        return _start(
+            w, checkpoint or f"/tmp/cheetah_spark_ckpt/{name}_{uuid.uuid4().hex[:8]}", trigger
+        )
+    out.foreachPartition(send)
+    return None
+
+
+def write_transport(
+    out: DataFrame,
+    transport: str,
+    live: str,
+    name: str,
+    capture_path: str,
+    send: Callable,
+    checkpoint: Optional[str],
+    trigger: Optional[dict],
+):
+    """The transport sink: ``replay`` appends the NDJSON capture, the
+    ``live`` transport sends every partition; anything else raises."""
+    t = transport.lower()
+    if t == "replay":
+        return write_capture(out, capture_path, checkpoint, trigger)
+    if t != live:
+        raise ValueError(f"{name}: unknown transport {t!r} ({live}|replay)")
+    return send_partitions(out, send, name, checkpoint, trigger)
+
+
 @dataclass
 class ConsoleSink(Sink):
     """Print rows (reference printer D1). Batch: show(); stream:
@@ -244,12 +298,7 @@ class MqttReplaySink(Sink):
         )
 
     def write(self, df: DataFrame):
-        out = self._capture(df)
-        if df.isStreaming:
-            w = out.writeStream.format("json").option("path", self.path).outputMode("append")
-            return _start(w, self.checkpoint or f"{self.path}/_checkpoint", self.trigger)
-        out.write.mode("append").json(self.path)
-        return None
+        return write_capture(self._capture(df), self.path, self.checkpoint, self.trigger)
 
 
 class ErrDontAck(Exception):

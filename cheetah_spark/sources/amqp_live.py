@@ -37,8 +37,6 @@ redelivery rather than fail.
 
 from __future__ import annotations
 
-import json
-import os
 import re
 import socket
 import struct
@@ -51,9 +49,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
-from cheetah_spark.sinks import Sink
+from cheetah_spark.sinks import Sink, write_transport
 from cheetah_spark.sources import Source
-from cheetah_spark.sources.seqwindow import SeqWindowStreamReader
+from cheetah_spark.sources.seqwindow import (
+    NdjsonReplayFactory,
+    SeqWindowStreamReader,
+    load_stream,
+)
 
 AMQP_SCHEMA = "exchange string, routing_key string, payload string"
 
@@ -713,65 +715,9 @@ class _ConsumeListener:
             self._client.close()
 
 
-@dataclass
-class AmqpReplayFactory:
-    """NDJSON capture stand-in (schema: exchange, routing_key,
-    payload), delivered ``chunk_size`` records per micro-batch
-    ``pump()``; ``chunk_size<=0`` drains at construction."""
-
-    capture_path: str = ""
-    chunk_size: int = 0
-
-    def __call__(self, on_msg, on_error):
-        pump = _AmqpReplayPump(self, on_msg)
-        if self.chunk_size <= 0:
-            pump.pump_all()
-        return pump
-
-
-class _AmqpReplayPump:
-    def __init__(self, factory: AmqpReplayFactory, on_msg):
-        self._factory = factory
-        self._on_msg = on_msg
-        self._gen = self._deliveries()
-
-    def _iter_capture(self):
-        path = self._factory.capture_path
-        names = sorted(os.listdir(path)) if os.path.isdir(path) else [""]
-        for name in names:
-            fp = os.path.join(path, name) if name else path
-            if name and not (name.endswith(".json") or name.endswith(".ndjson")):
-                continue
-            with open(fp) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    rec = json.loads(line)
-                    yield rec["exchange"], rec["routing_key"], rec["payload"]
-
-    def _deliveries(self):
-        delivered = 0
-        for exchange, routing_key, payload in self._iter_capture():
-            # replay has no broker to ack: delivery_tag None
-            self._on_msg(None, exchange, routing_key, payload)
-            delivered += 1
-            cs = self._factory.chunk_size
-            if cs > 0 and delivered % cs == 0:
-                yield
-
-    def pump(self):
-        try:
-            next(self._gen)
-        except StopIteration:
-            pass
-
-    def pump_all(self):
-        for _ in self._gen:  # pragma: no cover - chunk_size=0 never yields
-            pass
-
-    def close(self):
-        pass
+def _amqp_item(rec: dict) -> tuple:
+    # replay has no broker to ack: delivery_tag None
+    return None, rec["exchange"], rec["routing_key"], rec["payload"]
 
 
 def _amqp_factory(options) -> Callable:
@@ -785,10 +731,7 @@ def _amqp_factory(options) -> Callable:
             binding_key=options.get("binding_key") or "#",
         )
     if transport == "replay":
-        return AmqpReplayFactory(
-            capture_path=options.get("capture_path") or "",
-            chunk_size=int(options.get("chunk_size") or 0),
-        )
+        return NdjsonReplayFactory.from_options(options, _amqp_item)
     raise ValueError(f"amqp: unknown transport {transport!r} (socket|replay)")
 
 
@@ -860,10 +803,6 @@ class AmqpStreamDataSource(DataSource):
         return _AmqpSimpleStreamReader(self.options)
 
 
-def register_amqp_source(spark: SparkSession) -> None:
-    spark.dataSource.register(AmqpStreamDataSource)
-
-
 # ---------------------------------------------------------------------------
 # Source / Sink adapters (config types)
 # ---------------------------------------------------------------------------
@@ -897,21 +836,18 @@ class AmqpSource(Source):
             if self.binding_key and self.binding_key != "#":
                 env = env.where(_routing_match_col(self.binding_key))
             return env
-        register_amqp_source(spark)
-        reader = spark.readStream.format("cheetah-amqp")
-        for k, v in (
-            ("transport", self.transport),
-            ("addr", self.addr),
-            ("exchange", self.exchange),
-            ("exchange_type", self.exchange_type),
-            ("queue", self.queue),
-            ("binding_key", self.binding_key),
-            ("capture_path", self.capture_path),
-            ("chunk_size", str(self.chunk_size) if self.chunk_size else ""),
-        ):
-            if v:
-                reader = reader.option(k, v)
-        return reader.load()
+        return load_stream(
+            spark,
+            AmqpStreamDataSource,
+            transport=self.transport,
+            addr=self.addr,
+            exchange=self.exchange,
+            exchange_type=self.exchange_type,
+            queue=self.queue,
+            binding_key=self.binding_key,
+            capture_path=self.capture_path,
+            chunk_size=self.chunk_size,
+        )
 
 
 @dataclass
@@ -930,9 +866,6 @@ class AmqpSink(Sink):
     trigger: Optional[dict] = None
 
     def write(self, df: DataFrame):
-        from cheetah_spark.sinks import _start
-
-        t = self.transport.lower()
         cols = set(df.columns)
         ex_col = F.col("exchange") if "exchange" in cols else F.lit(self.exchange)
         rk_col = F.col("routing_key") if "routing_key" in cols else F.lit(self.routing_key)
@@ -944,20 +877,6 @@ class AmqpSink(Sink):
         out = df.select(
             ex_col.alias("exchange"), rk_col.alias("routing_key"), payload_col.alias("payload")
         )
-        if t == "replay":
-            if df.isStreaming:
-                w = (
-                    out.writeStream.format("json")
-                    .option("path", self.capture_path)
-                    .outputMode("append")
-                )
-                return _start(
-                    w, self.checkpoint or f"{self.capture_path}/_checkpoint", self.trigger
-                )
-            out.write.mode("append").json(self.capture_path)
-            return None
-        if t != "socket":
-            raise ValueError(f"amqp: unknown transport {t!r} (socket|replay)")
         addr, exchange, ex_type = self.addr, self.exchange, "topic"
 
         def send(rows):
@@ -973,16 +892,7 @@ class AmqpSink(Sink):
                 if client is not None:
                     client.close()
 
-        if df.isStreaming:
-            import uuid as _uuid
-
-            w = out.writeStream.foreachBatch(
-                lambda batch, _id: batch.foreachPartition(send)
-            ).outputMode("append")
-            return _start(
-                w,
-                self.checkpoint or f"/tmp/cheetah_spark_ckpt/amqp_{_uuid.uuid4().hex[:8]}",
-                self.trigger,
-            )
-        out.foreachPartition(send)
-        return None
+        return write_transport(
+            out, self.transport, "socket", "amqp", self.capture_path, send,
+            self.checkpoint, self.trigger,
+        )

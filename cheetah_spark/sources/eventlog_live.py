@@ -37,11 +37,9 @@ and the replay tests share one tested parser.
 from __future__ import annotations
 
 import json
-import os
 import sys
-import threading
 from dataclasses import dataclass
-from typing import Callable, Iterator, Optional, Tuple
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,6 +47,7 @@ from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
 from cheetah_spark.sources import Source
+from cheetah_spark.sources.seqwindow import SeqWindowStreamReader, capture_files, load_stream
 
 # Subscription constants — system_windows.go:16-43
 EVT_SUBSCRIBE_TO_FUTURE_EVENTS = 1
@@ -182,19 +181,12 @@ class _ReplayHandle:
 
 
 def _iter_xml_capture(path: str) -> Iterator[str]:
-    for name in sorted(os.listdir(path)):
-        full = os.path.join(path, name)
-        if name.startswith(("_", ".")):
-            continue
-        if name.endswith(".xml"):
-            with open(full) as fh:
+    for fp in capture_files(path, (".xml", ".json", ".ndjson")):
+        with open(fp) as fh:
+            if fp.endswith(".xml"):
                 yield fh.read()
-        elif name.endswith((".json", ".ndjson")):
-            with open(full) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if line:
-                        yield json.loads(line)["xml"]
+            else:
+                yield from (json.loads(line)["xml"] for line in fh if line.strip())
 
 
 def _make_factory(options) -> Callable:
@@ -212,9 +204,11 @@ def _make_factory(options) -> Callable:
 EVENTLOG_STREAM_SCHEMA = "xml string, channel string"
 
 
-class _EventLogSimpleStreamReader(SimpleDataSourceStreamReader):
-    """Driver-side reader: same seq-offset slicing as the MQTT reader,
-    minus acks (push subscription has none — commit is a no-op)."""
+class _EventLogSimpleStreamReader(SeqWindowStreamReader):
+    """Seq-window reader over the push subscription. No acks: the
+    subscription has none, so commit is a no-op."""
+
+    _PICKLE_FIELDS = ("_channel", "_query", "_method", "_factory", "_accept_data_loss")
 
     def __init__(self, options):
         self._channel = options.get("channel") or ""
@@ -230,90 +224,35 @@ class _EventLogSimpleStreamReader(SimpleDataSourceStreamReader):
         )
         self._init_runtime()
 
-    def _init_runtime(self):
-        self._lock = threading.Lock()
-        self._buffer: list[str] = []
-        self._window: dict[int, list[tuple]] = {}
-        self._fatal: Optional[Exception] = None
-        self._handle = None
+    def _make_listener(self):
+        return self._factory(
+            self._channel, self._query, self._method, self._on_item, self._on_error
+        )
 
-    # Spark pickles the reader into the runner process before first
-    # use; ship only the declarative config (see mqtt_live).
-    def __getstate__(self):
-        return {
-            "_channel": self._channel,
-            "_query": self._query,
-            "_method": self._method,
-            "_factory": self._factory,
-            "_accept_data_loss": self._accept_data_loss,
-        }
+    def _row_of(self, xml: str) -> tuple:
+        return (xml, self._channel)
 
-    def __setstate__(self, state):
-        self.__dict__.update(state)
-        self._init_runtime()
-
-    def _on_xml(self, xml: str) -> None:
-        with self._lock:
-            self._buffer.append(xml)
-
-    def _on_error(self, exc: Exception) -> None:
-        self._fatal = exc
-
-    def _ensure(self):
-        if self._handle is None:
-            self._handle = self._factory(
-                self._channel, self._query, self._method, self._on_xml, self._on_error
-            )
-
-    def initialOffset(self) -> dict:
-        self._ensure()
-        return {"seq": 0}
-
-    def read(self, start: dict) -> Tuple[Iterator[tuple], dict]:
-        self._ensure()
-        if self._fatal is not None:
-            raise RuntimeError(str(self._fatal))
-        with self._lock:
-            drained, self._buffer = self._buffer, []
-        start_seq = start["seq"]
-        rows = [(xml, self._channel) for xml in drained]
-        self._window[start_seq] = rows
-        for k in sorted(self._window)[:-8]:
-            del self._window[k]
-        return iter(rows), {"seq": start_seq + len(rows)}
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        rows = self._window.get(start["seq"])
-        if rows is not None:
-            return iter(rows[: end["seq"] - start["seq"]])
+    def _on_lost_window(self, start_seq: int, end_seq: int) -> None:
         # A push subscription has no redelivery: a replay window lost
         # to a driver restart is unrecoverable data loss. The transport
         # is documented at-most-once, but losing rows SILENTLY (empty
         # batch committed, stream reports success) hides it from the
         # operator — fail fast instead (round-4 advice).
-        if end["seq"] - start["seq"] > 0:
-            if self._accept_data_loss:
-                import sys
-
-                print(
-                    f"windows_events: replay window lost for offsets "
-                    f"[{start['seq']},{end['seq']}) after restart — advancing "
-                    "past it (accept_data_loss=true); rows are unrecoverable "
-                    "(at-most-once transport)",
-                    file=sys.stderr,
-                )
-                return iter(())
+        if not self._accept_data_loss:
             raise RuntimeError(
                 f"windows_events: replay window lost for offsets "
-                f"[{start['seq']},{end['seq']}) after restart — the push "
+                f"[{start_seq},{end_seq}) after restart — the push "
                 "subscription cannot redeliver; rows are unrecoverable "
                 "(at-most-once transport). Set accept_data_loss=true to log "
                 "the loss and advance instead"
             )
-        return iter(())
-
-    def commit(self, end: dict) -> None:  # push subscription: nothing to ack
-        pass
+        print(
+            f"windows_events: replay window lost for offsets "
+            f"[{start_seq},{end_seq}) after restart — advancing "
+            "past it (accept_data_loss=true); rows are unrecoverable "
+            "(at-most-once transport)",
+            file=sys.stderr,
+        )
 
 
 class EventLogStreamDataSource(DataSource):
@@ -329,11 +268,6 @@ class EventLogStreamDataSource(DataSource):
 
     def simpleStreamReader(self, schema: StructType) -> SimpleDataSourceStreamReader:
         return _EventLogSimpleStreamReader(self.options)
-
-
-def register_eventlog_source(spark: SparkSession) -> None:
-    # idempotent per-session catalog write; no memo (see mqtt_live)
-    spark.dataSource.register(EventLogStreamDataSource)
 
 
 @dataclass
@@ -352,16 +286,15 @@ class EventLogLiveSource(Source):
     streaming: bool = True
 
     def read(self, spark: SparkSession) -> DataFrame:
-        register_eventlog_source(spark)
-        return (
-            spark.readStream.format("cheetah-eventlog")
-            .option("channel", self.channel)
-            .option("query", self.query)
-            .option("method", self.method)
-            .option("transport", self.transport)
-            .option("capture_path", self.capture_path)
-            .option("fail_after", str(self.fail_after))
-            .load()
+        return load_stream(
+            spark,
+            EventLogStreamDataSource,
+            channel=self.channel,
+            query=self.query,
+            method=self.method,
+            transport=self.transport,
+            capture_path=self.capture_path,
+            fail_after=self.fail_after,
         )
 
 

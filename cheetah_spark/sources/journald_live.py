@@ -29,13 +29,12 @@ mechanism.
 from __future__ import annotations
 
 import base64
-import os
 import shutil
 import struct
 import subprocess
 import threading
 from dataclasses import dataclass
-from typing import BinaryIO, Callable, Iterator, Optional, Tuple
+from typing import BinaryIO, Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,7 +42,12 @@ from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
 from cheetah_spark.sources import Source
-from cheetah_spark.sources.seqwindow import SeqWindowStreamReader
+from cheetah_spark.sources.seqwindow import (
+    ReplayPump,
+    SeqWindowStreamReader,
+    capture_files,
+    load_stream,
+)
 
 JOURNALD_STREAM_SCHEMA = "entry string, cursor string"
 
@@ -205,56 +209,15 @@ class JournaldReplayFactory:
     chunk_size: int = 0
 
     def __call__(self, on_entry, on_error):
-        adapter = _ReplayAdapter(self, on_entry)
-        if self.chunk_size <= 0:
-            adapter.pump_all()
-        return adapter
+        return ReplayPump(_replay_entries(self.capture_path), self.chunk_size, on_entry)
 
 
-class _ReplayAdapter:
-    def __init__(self, factory: JournaldReplayFactory, on_entry):
-        self._factory = factory
-        self._on_entry = on_entry
-        self._gen = self._deliveries()
-
-    def _iter_entries(self) -> Iterator[str]:
-        path = self._factory.capture_path
-        files = (
-            [
-                os.path.join(path, n)
-                for n in sorted(os.listdir(path))
-                if not n.startswith(("_", ".")) and n.endswith((".export", ".txt"))
-            ]
-            if os.path.isdir(path)
-            else [path]
-        )
-        for fp in files:
-            # binary-safe: a recorded capture can carry the export
-            # format's length-prefixed binary fields too
-            with open(fp, "rb") as fh:
-                yield from _frame_entries_bytes(fh)
-
-    def _deliveries(self):
-        delivered = 0
-        for entry in self._iter_entries():
-            self._on_entry(entry)
-            delivered += 1
-            cs = self._factory.chunk_size
-            if cs > 0 and delivered % cs == 0:
-                yield
-
-    def pump(self):
-        try:
-            next(self._gen)
-        except StopIteration:
-            pass
-
-    def pump_all(self):
-        for _ in self._gen:  # pragma: no cover - chunk_size=0 never yields
-            pass
-
-    def close(self):
-        pass
+def _replay_entries(path: str) -> Iterator[str]:
+    for fp in capture_files(path, (".export", ".txt")):
+        # binary-safe: a recorded capture can carry the export
+        # format's length-prefixed binary fields too
+        with open(fp, "rb") as fh:
+            yield from _frame_entries_bytes(fh)
 
 
 def _make_factory(options) -> Callable:
@@ -318,10 +281,6 @@ class JournaldStreamDataSource(DataSource):
         return _JournaldSimpleStreamReader(self.options)
 
 
-def register_journald_source(spark: SparkSession) -> None:
-    spark.dataSource.register(JournaldStreamDataSource)
-
-
 @dataclass
 class JournaldSource(Source):
     """Source adapter over the cheetah-journald stream format. The
@@ -338,16 +297,15 @@ class JournaldSource(Source):
     streaming: bool = True
 
     def read(self, spark: SparkSession) -> DataFrame:
-        register_journald_source(spark)
-        df = (
-            spark.readStream.format("cheetah-journald")
-            .option("transport", self.transport)
-            .option("follow", str(self.follow).lower())
-            .option("after_cursor", self.after_cursor)
-            .option("extra_args", ",".join(self.extra_args))
-            .option("capture_path", self.capture_path)
-            .option("chunk_size", str(self.chunk_size))
-            .load()
+        df = load_stream(
+            spark,
+            JournaldStreamDataSource,
+            transport=self.transport,
+            follow=self.follow,
+            after_cursor=self.after_cursor,
+            extra_args=",".join(self.extra_args),
+            capture_path=self.capture_path,
+            chunk_size=self.chunk_size,
         )
         if self.content_type == "auto":
             from cheetah_spark.functions import journald as JD

@@ -37,7 +37,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cheetah_spark.sinks import Sink, _start
+from cheetah_spark.sinks import Sink, _start, write_capture
 from cheetah_spark.sources import Source
 
 CAPTURE_SCHEMA = (
@@ -197,10 +197,4 @@ class KafkaSink(Sink):
             "value",
             F.lit(None).cast("long").alias("timestamp_ms"),
         )
-        if df.isStreaming:
-            w = cap.writeStream.format("json").option("path", self.capture_path).outputMode(
-                "append"
-            )
-            return _start(w, self.checkpoint or f"{self.capture_path}/_checkpoint", self.trigger)
-        cap.write.mode("append").json(self.capture_path)
-        return None
+        return write_capture(cap, self.capture_path, self.checkpoint, self.trigger)

@@ -44,7 +44,6 @@ import base64
 import hashlib
 import http.server
 import json
-import os
 import threading
 import urllib.request
 from dataclasses import dataclass
@@ -55,9 +54,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
-from cheetah_spark.sinks import Sink
+from cheetah_spark.sinks import Sink, write_transport
 from cheetah_spark.sources import Source
-from cheetah_spark.sources.seqwindow import SeqWindowStreamReader
+from cheetah_spark.sources.seqwindow import (
+    ReplayPump,
+    SeqWindowStreamReader,
+    capture_lines,
+    load_stream,
+)
 
 KINESIS_SCHEMA = (
     "shard_id string, sequence_number string, partition_key string, data string"
@@ -442,9 +446,15 @@ class _KinesisReplaySimpleStreamReader(SeqWindowStreamReader):
         self._init_runtime()
 
     def _make_listener(self):
-        return _KinesisReplayPump(
-            self._capture_path, self._chunk_size, self._n_shards, self._on_item
-        )
+        return ReplayPump(self._routed(), self._chunk_size, self._on_item)
+
+    def _routed(self) -> Iterator[tuple]:
+        seqs = [0] * self._n_shards
+        for line in capture_lines(self._capture_path):
+            rec = json.loads(line)
+            i = shard_for_key(rec["partition_key"], self._n_shards)
+            yield shard_id_str(i), str(seqs[i]), rec["partition_key"], rec["data"]
+            seqs[i] += 1
 
     def _row_of(self, item) -> tuple:
         return item
@@ -455,53 +465,6 @@ class _KinesisReplaySimpleStreamReader(SeqWindowStreamReader):
             "of the capture pump; the live transport re-fetches from the "
             "service instead (cursor reader)"
         )
-
-
-class _KinesisReplayPump:
-    def __init__(self, capture_path: str, chunk_size: int, n_shards: int, on_item):
-        self._capture_path = capture_path
-        self._chunk_size = chunk_size
-        self._n_shards = n_shards
-        self._on_item = on_item
-        self._gen = self._deliveries()
-        if chunk_size <= 0:
-            for _ in self._gen:
-                pass
-
-    def _iter_capture(self):
-        path = self._capture_path
-        names = sorted(os.listdir(path)) if os.path.isdir(path) else [""]
-        for name in names:
-            fp = os.path.join(path, name) if name else path
-            if name and not (name.endswith(".json") or name.endswith(".ndjson")):
-                continue
-            with open(fp) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    rec = json.loads(line)
-                    yield rec["partition_key"], rec["data"]
-
-    def _deliveries(self):
-        delivered = 0
-        seqs = [0] * self._n_shards
-        for pk, data in self._iter_capture():
-            i = shard_for_key(pk, self._n_shards)
-            self._on_item((shard_id_str(i), str(seqs[i]), pk, data))
-            seqs[i] += 1
-            delivered += 1
-            if self._chunk_size > 0 and delivered % self._chunk_size == 0:
-                yield
-
-    def pump(self):
-        try:
-            next(self._gen)
-        except StopIteration:
-            pass
-
-    def close(self):
-        pass
 
 
 class KinesisStreamDataSource(DataSource):
@@ -523,10 +486,6 @@ class KinesisStreamDataSource(DataSource):
         if transport == "replay":
             return _KinesisReplaySimpleStreamReader(self.options)
         raise ValueError(f"kinesis: unknown transport {transport!r} (http|replay)")
-
-
-def register_kinesis_source(spark: SparkSession) -> None:
-    spark.dataSource.register(KinesisStreamDataSource)
 
 
 # ---------------------------------------------------------------------------
@@ -583,20 +542,17 @@ class KinesisSource(Source):
                 "partition_key",
                 "data",
             )
-        register_kinesis_source(spark)
-        reader = spark.readStream.format("cheetah-kinesis")
-        for k, v in (
-            ("transport", self.transport),
-            ("addr", self.addr),
-            ("stream", self.stream),
-            ("max_records", str(self.max_records) if self.max_records != 1000 else ""),
-            ("shard_count", str(self.shard_count) if self.shard_count != 4 else ""),
-            ("capture_path", self.capture_path),
-            ("chunk_size", str(self.chunk_size) if self.chunk_size else ""),
-        ):
-            if v:
-                reader = reader.option(k, v)
-        return reader.load()
+        return load_stream(
+            spark,
+            KinesisStreamDataSource,
+            transport=self.transport,
+            addr=self.addr,
+            stream=self.stream,
+            max_records=self.max_records,
+            shard_count=self.shard_count,
+            capture_path=self.capture_path,
+            chunk_size=self.chunk_size,
+        )
 
 
 @dataclass
@@ -615,9 +571,6 @@ class KinesisSink(Sink):
     trigger: Optional[dict] = None
 
     def write(self, df: DataFrame):
-        from cheetah_spark.sinks import _start
-
-        t = self.transport.lower()
         cols = set(df.columns)
         pk_col = F.col("partition_key") if "partition_key" in cols else F.lit("0")
         data_col = (
@@ -626,20 +579,6 @@ class KinesisSink(Sink):
             else F.to_json(F.struct(*[F.col(c) for c in df.columns]))
         )
         out = df.select(pk_col.alias("partition_key"), data_col.alias("data"))
-        if t == "replay":
-            if df.isStreaming:
-                w = (
-                    out.writeStream.format("json")
-                    .option("path", self.capture_path)
-                    .outputMode("append")
-                )
-                return _start(
-                    w, self.checkpoint or f"{self.capture_path}/_checkpoint", self.trigger
-                )
-            out.write.mode("append").json(self.capture_path)
-            return None
-        if t != "http":
-            raise ValueError(f"kinesis: unknown transport {t!r} (http|replay)")
         addr, stream, bsz = self.addr, self.stream, min(self.batch_size, 500)
 
         def send(rows):
@@ -653,16 +592,7 @@ class KinesisSink(Sink):
             if batch:
                 client.put_records(stream, batch)
 
-        if df.isStreaming:
-            import uuid as _uuid
-
-            w = out.writeStream.foreachBatch(
-                lambda batch, _id: batch.foreachPartition(send)
-            ).outputMode("append")
-            return _start(
-                w,
-                self.checkpoint or f"/tmp/cheetah_spark_ckpt/kinesis_{_uuid.uuid4().hex[:8]}",
-                self.trigger,
-            )
-        out.foreachPartition(send)
-        return None
+        return write_transport(
+            out, self.transport, "http", "kinesis", self.capture_path, send,
+            self.checkpoint, self.trigger,
+        )

@@ -37,7 +37,7 @@ from typing import Iterable, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cheetah_spark.sinks import Sink
+from cheetah_spark.sinks import Sink, send_partitions
 from cheetah_spark.sources import Source
 
 MEMCACHE_SCHEMA = "key string, flags int, value string"
@@ -230,8 +230,6 @@ class MemcacheSink(Sink):
         )
 
     def write(self, df: DataFrame):
-        from cheetah_spark.sinks import _start
-
         out = self._normalize(df)
         addr, flags, exptime = self.addr, self.flags, self.exptime
 
@@ -246,20 +244,9 @@ class MemcacheSink(Sink):
                 if client is not None:
                     client.close()
 
-        if df.isStreaming:
-            import uuid as _uuid
-
-            w = out.writeStream.foreachBatch(
-                lambda batch, _id: batch.foreachPartition(send)
-            ).outputMode("update")
-            return _start(
-                w,
-                self.checkpoint
-                or f"/tmp/cheetah_spark_ckpt/memcache_{_uuid.uuid4().hex[:8]}",
-                self.trigger,
-            )
-        out.foreachPartition(send)
-        return None
+        return send_partitions(
+            out, send, "memcache", self.checkpoint, self.trigger, output_mode="update"
+        )
 
 
 @dataclass

@@ -56,20 +56,23 @@ throughput grows with parallelism, bounded by the broker.
 from __future__ import annotations
 
 import json
-import os
+import re
 import threading
-import uuid
 from dataclasses import dataclass
-from typing import Callable, Iterator, Optional, Tuple
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
-from cheetah_spark.sources.seqwindow import SeqWindowStreamReader
-
-from cheetah_spark.sources import Source
-from cheetah_spark.sinks import Sink
+from cheetah_spark.sinks import Sink, send_partitions
+from cheetah_spark.sources import Source, mqtt_filter_regex
+from cheetah_spark.sources.seqwindow import (
+    ReplayPump,
+    SeqWindowStreamReader,
+    capture_lines,
+    load_stream,
+)
 
 
 @dataclass
@@ -206,63 +209,39 @@ class ReplayClientFactory:
     chunk_size: int = 0  # 0 = deliver everything at connect
 
     def __call__(self, opts: MqttOpts, on_message, on_connection_lost):
-        from cheetah_spark.sources import mqtt_filter_regex
-        import re
-
         if self.fail_connect:
             # parity: connect token error (mqtt.go:149-151)
             raise ConnectionError(f"mqtt connect error: {opts.broker or 'broker down'}")
         adapter = _ReplayAdapter(self)
         adapter._client_id = opts.client_id  # logged with publishes (tests)
+        if not self.capture_path:  # publish-only client: nothing to deliver
+            return adapter
         pat = re.compile(mqtt_filter_regex(opts.topic))
 
-        def deliveries():
+        def messages():
             delivered = 0
-            for rec in sorted(_iter_capture(self.capture_path), key=lambda r: r["mid"]):
+            for mid, line in enumerate(capture_lines(self.capture_path, (".json",))):
+                rec = json.loads(line)
                 if not pat.match(rec["topic"]):
                     continue  # broker-side filter: non-matching never leaves the broker
                 if 0 <= self.drop_connection_after <= delivered:
                     adapter.connected = False
                     on_connection_lost(Exception("mqtt connection lost: simulated"))
                     return
-                on_message(
-                    MqttMessage(
-                        rec["topic"],
-                        rec["payload"].encode(),
-                        rec["mid"],
-                        min(int(rec.get("qos", 0)), opts.qos),  # §3.8.4 downgrade
-                        bool(rec.get("retained", False)),
-                        ack=adapter._log_ack,
-                    )
+                yield MqttMessage(
+                    rec["topic"],
+                    rec["payload"].encode(),
+                    mid,
+                    min(int(rec.get("qos", 0)), opts.qos),  # §3.8.4 downgrade
+                    bool(rec.get("retained", False)),
+                    ack=adapter._log_ack,
                 )
                 delivered += 1
-                if self.chunk_size > 0 and delivered % self.chunk_size == 0:
-                    yield  # pause until the reader's next poll pumps again
 
-        gen = deliveries()
-        if self.chunk_size > 0:
-            adapter._pump_gen = gen  # reader pumps one chunk per micro-batch
-        else:
-            for _ in gen:  # pragma: no cover - chunk_size=0 never yields
-                pass
+        # the reader pumps one chunk per micro-batch (a live push
+        # transport has no pump; the reader feature-detects)
+        adapter.pump = ReplayPump(messages(), self.chunk_size, on_message).pump
         return adapter
-
-
-def _iter_capture(path: str) -> Iterator[dict]:
-    if not path:  # publish-only client: nothing to deliver
-        return
-    mid = 0
-    for name in sorted(os.listdir(path)):
-        if name.startswith(("_", ".")) or not name.endswith(".json"):
-            continue
-        with open(os.path.join(path, name)) as fh:
-            for line in fh:
-                line = line.strip()
-                if line:
-                    rec = json.loads(line)
-                    rec["mid"] = mid
-                    mid += 1
-                    yield rec
 
 
 class _ReplayAdapter:
@@ -270,17 +249,6 @@ class _ReplayAdapter:
         self._factory = factory
         self.connected = True
         self._lock = threading.Lock()
-        self._pump_gen = None
-
-    def pump(self):
-        """Deliver the next capture chunk (replay-only prefetch hook —
-        a live push transport has no pump; the reader feature-detects)."""
-        gen = self._pump_gen
-        if gen is not None:
-            try:
-                next(gen)
-            except StopIteration:
-                self._pump_gen = None
 
     def _append(self, log_path: str, rec: dict):
         if not log_path:
@@ -418,14 +386,6 @@ class MqttStreamDataSource(DataSource):
         return _MqttSimpleStreamReader(self.options)
 
 
-def register_mqtt_source(spark: SparkSession) -> None:
-    """Register the cheetah-mqtt format on this session. Registration
-    is an idempotent per-session catalog write, so no memo — an
-    id(spark)-keyed cache would go stale when CPython reuses a
-    garbage-collected session's address."""
-    spark.dataSource.register(MqttStreamDataSource)
-
-
 @dataclass
 class MqttLiveSource(Source):
     """Source adapter over the cheetah-mqtt stream format (S3).
@@ -450,23 +410,22 @@ class MqttLiveSource(Source):
     streaming: bool = True
 
     def read(self, spark: SparkSession) -> DataFrame:
-        register_mqtt_source(spark)
-        return (
-            spark.readStream.format("cheetah-mqtt")
-            .option("broker", self.broker)
-            .option("client_id", self.client_id)
-            .option("topic", self.topic)
-            .option("qos", str(self.qos))
-            .option("username", self.username)
-            .option("password", self.password)
-            .option("keep_alive", str(self.keep_alive))
-            .option("transport", self.transport)
-            .option("capture_path", self.capture_path)
-            .option("ack_log", self.ack_log)
-            .option("drop_connection_after", str(self.drop_connection_after))
-            .option("fail_connect", str(self.fail_connect).lower())
-            .option("chunk_size", str(self.chunk_size))
-            .load()
+        return load_stream(
+            spark,
+            MqttStreamDataSource,
+            broker=self.broker,
+            client_id=self.client_id,
+            topic=self.topic,
+            qos=self.qos,
+            username=self.username,
+            password=self.password,
+            keep_alive=self.keep_alive,
+            transport=self.transport,
+            capture_path=self.capture_path,
+            ack_log=self.ack_log,
+            drop_connection_after=self.drop_connection_after,
+            fail_connect=self.fail_connect,
+            chunk_size=self.chunk_size,
         )
 
 
@@ -550,17 +509,4 @@ class MqttLiveSink(Sink):
         return publish_partition
 
     def write(self, df: DataFrame):
-        publish = self._publisher()
-        if df.isStreaming:
-            w = df.writeStream.foreachBatch(
-                lambda batch, _id: batch.foreachPartition(publish)
-            ).outputMode("append")
-            from cheetah_spark.sinks import _start
-
-            return _start(
-                w,
-                self.checkpoint or f"/tmp/cheetah_spark_ckpt/mqtt_{uuid.uuid4().hex[:8]}",
-                self.trigger,
-            )
-        df.foreachPartition(publish)
-        return None
+        return send_partitions(df, self._publisher(), "mqtt", self.checkpoint, self.trigger)

@@ -33,7 +33,6 @@ JetStream consumers, which need a real server.
 from __future__ import annotations
 
 import json
-import os
 import socket
 import threading
 from dataclasses import dataclass
@@ -44,9 +43,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
-from cheetah_spark.sinks import Sink
+from cheetah_spark.sinks import Sink, write_transport
 from cheetah_spark.sources import Source
-from cheetah_spark.sources.seqwindow import SeqWindowStreamReader
+from cheetah_spark.sources.seqwindow import (
+    NdjsonReplayFactory,
+    SeqWindowStreamReader,
+    load_stream,
+)
 
 NATS_SCHEMA = "subject string, reply_to string, payload string"
 
@@ -355,65 +358,8 @@ class _SubListener:
             self._client.close()
 
 
-@dataclass
-class NatsReplayFactory:
-    """NDJSON capture stand-in (schema: subject, reply_to, payload),
-    delivered ``chunk_size`` records per micro-batch ``pump()`` (the
-    redis/syslog replay-adapter discipline); ``chunk_size<=0`` drains
-    at construction."""
-
-    capture_path: str = ""
-    chunk_size: int = 0
-
-    def __call__(self, on_msg, on_error):
-        pump = _NatsReplayPump(self, on_msg)
-        if self.chunk_size <= 0:
-            pump.pump_all()
-        return pump
-
-
-class _NatsReplayPump:
-    def __init__(self, factory: NatsReplayFactory, on_msg):
-        self._factory = factory
-        self._on_msg = on_msg
-        self._gen = self._deliveries()
-
-    def _iter_capture(self):
-        path = self._factory.capture_path
-        names = sorted(os.listdir(path)) if os.path.isdir(path) else [""]
-        for name in names:
-            fp = os.path.join(path, name) if name else path
-            if name and not (name.endswith(".json") or name.endswith(".ndjson")):
-                continue
-            with open(fp) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    rec = json.loads(line)
-                    yield rec["subject"], rec.get("reply_to") or "", rec["payload"]
-
-    def _deliveries(self):
-        delivered = 0
-        for subject, reply_to, payload in self._iter_capture():
-            self._on_msg(subject, reply_to, payload)
-            delivered += 1
-            cs = self._factory.chunk_size
-            if cs > 0 and delivered % cs == 0:
-                yield
-
-    def pump(self):
-        try:
-            next(self._gen)
-        except StopIteration:
-            pass
-
-    def pump_all(self):
-        for _ in self._gen:  # pragma: no cover - chunk_size=0 never yields
-            pass
-
-    def close(self):
-        pass
+def _nats_item(rec: dict) -> tuple:
+    return rec["subject"], rec.get("reply_to") or "", rec["payload"]
 
 
 def _nats_factory(options) -> Callable:
@@ -425,10 +371,7 @@ def _nats_factory(options) -> Callable:
             queue=options.get("queue") or "",
         )
     if transport == "replay":
-        return NatsReplayFactory(
-            capture_path=options.get("capture_path") or "",
-            chunk_size=int(options.get("chunk_size") or 0),
-        )
+        return NdjsonReplayFactory.from_options(options, _nats_item)
     raise ValueError(f"nats: unknown transport {transport!r} (socket|replay)")
 
 
@@ -475,10 +418,6 @@ class NatsStreamDataSource(DataSource):
         return _NatsSimpleStreamReader(self.options)
 
 
-def register_nats_source(spark: SparkSession) -> None:
-    spark.dataSource.register(NatsStreamDataSource)
-
-
 # ---------------------------------------------------------------------------
 # Source / Sink adapters (config types)
 # ---------------------------------------------------------------------------
@@ -510,19 +449,16 @@ class NatsSource(Source):
             if self.subject and self.subject != ">":
                 env = env.where(_subject_match_col(self.subject))
             return env
-        register_nats_source(spark)
-        reader = spark.readStream.format("cheetah-nats")
-        for k, v in (
-            ("transport", self.transport),
-            ("addr", self.addr),
-            ("subject", self.subject),
-            ("queue", self.queue),
-            ("capture_path", self.capture_path),
-            ("chunk_size", str(self.chunk_size) if self.chunk_size else ""),
-        ):
-            if v:
-                reader = reader.option(k, v)
-        return reader.load()
+        return load_stream(
+            spark,
+            NatsStreamDataSource,
+            transport=self.transport,
+            addr=self.addr,
+            subject=self.subject,
+            queue=self.queue,
+            capture_path=self.capture_path,
+            chunk_size=self.chunk_size,
+        )
 
 
 def _subject_match_col(pattern: str):
@@ -555,9 +491,6 @@ class NatsSink(Sink):
     trigger: Optional[dict] = None
 
     def write(self, df: DataFrame):
-        from cheetah_spark.sinks import _start
-
-        t = self.transport.lower()
         cols = set(df.columns)
         subject_col = F.col("subject") if "subject" in cols else F.lit(self.subject)
         reply_col = F.col("reply_to") if "reply_to" in cols else F.lit("")
@@ -571,20 +504,6 @@ class NatsSink(Sink):
             reply_col.alias("reply_to"),
             payload_col.alias("payload"),
         )
-        if t == "replay":
-            if df.isStreaming:
-                w = (
-                    out.writeStream.format("json")
-                    .option("path", self.capture_path)
-                    .outputMode("append")
-                )
-                return _start(
-                    w, self.checkpoint or f"{self.capture_path}/_checkpoint", self.trigger
-                )
-            out.write.mode("append").json(self.capture_path)
-            return None
-        if t != "socket":
-            raise ValueError(f"nats: unknown transport {t!r} (socket|replay)")
         addr = self.addr
 
         def send(rows):
@@ -598,16 +517,7 @@ class NatsSink(Sink):
                 if client is not None:
                     client.close()
 
-        if df.isStreaming:
-            import uuid as _uuid
-
-            w = out.writeStream.foreachBatch(
-                lambda batch, _id: batch.foreachPartition(send)
-            ).outputMode("append")
-            return _start(
-                w,
-                self.checkpoint or f"/tmp/cheetah_spark_ckpt/nats_{_uuid.uuid4().hex[:8]}",
-                self.trigger,
-            )
-        out.foreachPartition(send)
-        return None
+        return write_transport(
+            out, self.transport, "socket", "nats", self.capture_path, send,
+            self.checkpoint, self.trigger,
+        )

@@ -32,7 +32,6 @@ from __future__ import annotations
 
 import itertools
 import json
-import os
 import socket
 import struct
 import threading
@@ -44,9 +43,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
-from cheetah_spark.sinks import Sink
+from cheetah_spark.sinks import Sink, write_transport
 from cheetah_spark.sources import Source
-from cheetah_spark.sources.seqwindow import SeqWindowStreamReader
+from cheetah_spark.sources.seqwindow import (
+    NdjsonReplayFactory,
+    SeqWindowStreamReader,
+    load_stream,
+)
 
 NSQ_SCHEMA = "topic string, message_id string, attempts int, body string"
 
@@ -424,65 +427,9 @@ class _NsqSubListener:
             self._client.close()
 
 
-@dataclass
-class NsqReplayFactory:
-    """NDJSON capture stand-in (schema: topic, body), delivered
-    ``chunk_size`` records per micro-batch ``pump()``; ``chunk_size<=0``
-    drains at construction."""
-
-    capture_path: str = ""
-    chunk_size: int = 0
-
-    def __call__(self, on_msg, on_error):
-        pump = _NsqReplayPump(self, on_msg)
-        if self.chunk_size <= 0:
-            pump.pump_all()
-        return pump
-
-
-class _NsqReplayPump:
-    def __init__(self, factory: NsqReplayFactory, on_msg):
-        self._factory = factory
-        self._on_msg = on_msg
-        self._gen = self._deliveries()
-
-    def _iter_capture(self):
-        path = self._factory.capture_path
-        names = sorted(os.listdir(path)) if os.path.isdir(path) else [""]
-        for name in names:
-            fp = os.path.join(path, name) if name else path
-            if name and not (name.endswith(".json") or name.endswith(".ndjson")):
-                continue
-            with open(fp) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    rec = json.loads(line)
-                    yield rec["topic"], rec["body"]
-
-    def _deliveries(self):
-        delivered = 0
-        for topic, body in self._iter_capture():
-            # replay has no nsqd to FIN: message_id None, attempts 1
-            self._on_msg(topic, None, 1, body)
-            delivered += 1
-            cs = self._factory.chunk_size
-            if cs > 0 and delivered % cs == 0:
-                yield
-
-    def pump(self):
-        try:
-            next(self._gen)
-        except StopIteration:
-            pass
-
-    def pump_all(self):
-        for _ in self._gen:  # pragma: no cover - chunk_size=0 never yields
-            pass
-
-    def close(self):
-        pass
+def _nsq_item(rec: dict) -> tuple:
+    # replay has no nsqd to FIN: message_id None, attempts 1
+    return rec["topic"], None, 1, rec["body"]
 
 
 def _nsq_factory(options) -> Callable:
@@ -495,10 +442,7 @@ def _nsq_factory(options) -> Callable:
             rdy=int(options.get("rdy") or 2500),
         )
     if transport == "replay":
-        return NsqReplayFactory(
-            capture_path=options.get("capture_path") or "",
-            chunk_size=int(options.get("chunk_size") or 0),
-        )
+        return NdjsonReplayFactory.from_options(options, _nsq_item)
     raise ValueError(f"nsq: unknown transport {transport!r} (socket|replay)")
 
 
@@ -570,10 +514,6 @@ class NsqStreamDataSource(DataSource):
         return _NsqSimpleStreamReader(self.options)
 
 
-def register_nsq_source(spark: SparkSession) -> None:
-    spark.dataSource.register(NsqStreamDataSource)
-
-
 # ---------------------------------------------------------------------------
 # Source / Sink adapters (config types)
 # ---------------------------------------------------------------------------
@@ -615,20 +555,17 @@ class NsqSource(Source):
             if self.topic:
                 env = env.where(F.col("topic") == self.topic)
             return env
-        register_nsq_source(spark)
-        reader = spark.readStream.format("cheetah-nsq")
-        for k, v in (
-            ("transport", self.transport),
-            ("addr", self.addr),
-            ("topic", self.topic),
-            ("channel", self.channel),
-            ("rdy", str(self.rdy) if self.rdy != 2500 else ""),
-            ("capture_path", self.capture_path),
-            ("chunk_size", str(self.chunk_size) if self.chunk_size else ""),
-        ):
-            if v:
-                reader = reader.option(k, v)
-        return reader.load()
+        return load_stream(
+            spark,
+            NsqStreamDataSource,
+            transport=self.transport,
+            addr=self.addr,
+            topic=self.topic,
+            channel=self.channel,
+            rdy=self.rdy,
+            capture_path=self.capture_path,
+            chunk_size=self.chunk_size,
+        )
 
 
 @dataclass
@@ -646,9 +583,6 @@ class NsqSink(Sink):
     trigger: Optional[dict] = None
 
     def write(self, df: DataFrame):
-        from cheetah_spark.sinks import _start
-
-        t = self.transport.lower()
         cols = set(df.columns)
         topic_col = F.col("topic") if "topic" in cols else F.lit(self.topic)
         body_col = (
@@ -657,20 +591,6 @@ class NsqSink(Sink):
             else F.to_json(F.struct(*[F.col(c) for c in df.columns]))
         )
         out = df.select(topic_col.alias("topic"), body_col.alias("body"))
-        if t == "replay":
-            if df.isStreaming:
-                w = (
-                    out.writeStream.format("json")
-                    .option("path", self.capture_path)
-                    .outputMode("append")
-                )
-                return _start(
-                    w, self.checkpoint or f"{self.capture_path}/_checkpoint", self.trigger
-                )
-            out.write.mode("append").json(self.capture_path)
-            return None
-        if t != "socket":
-            raise ValueError(f"nsq: unknown transport {t!r} (socket|replay)")
         addr = self.addr
 
         def send(rows):
@@ -684,16 +604,7 @@ class NsqSink(Sink):
                 if client is not None:
                     client.close()
 
-        if df.isStreaming:
-            import uuid as _uuid
-
-            w = out.writeStream.foreachBatch(
-                lambda batch, _id: batch.foreachPartition(send)
-            ).outputMode("append")
-            return _start(
-                w,
-                self.checkpoint or f"/tmp/cheetah_spark_ckpt/nsq_{_uuid.uuid4().hex[:8]}",
-                self.trigger,
-            )
-        out.foreachPartition(send)
-        return None
+        return write_transport(
+            out, self.transport, "socket", "nsq", self.capture_path, send,
+            self.checkpoint, self.trigger,
+        )

@@ -38,7 +38,6 @@ import base64
 import http.server
 import itertools
 import json
-import os
 import threading
 import time
 import urllib.request
@@ -50,9 +49,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
-from cheetah_spark.sinks import Sink
+from cheetah_spark.sinks import Sink, write_transport
 from cheetah_spark.sources import Source
-from cheetah_spark.sources.seqwindow import SeqWindowStreamReader
+from cheetah_spark.sources.seqwindow import (
+    NdjsonReplayFactory,
+    SeqWindowStreamReader,
+    load_stream,
+)
 
 PUBSUB_SCHEMA = "message_id string, attributes string, data string"
 
@@ -400,64 +403,9 @@ class _PullListener:
         self._closing = True
 
 
-@dataclass
-class PubSubReplayFactory:
-    """NDJSON capture stand-in (schema: message_id, attributes, data),
-    delivered ``chunk_size`` records per micro-batch ``pump()``;
-    ``chunk_size<=0`` drains at construction."""
-
-    capture_path: str = ""
-    chunk_size: int = 0
-
-    def __call__(self, on_msg, on_error):
-        pump = _PubSubReplayPump(self, on_msg)
-        if self.chunk_size <= 0:
-            pump.pump_all()
-        return pump
-
-
-class _PubSubReplayPump:
-    def __init__(self, factory: PubSubReplayFactory, on_msg):
-        self._factory = factory
-        self._on_msg = on_msg
-        self._gen = self._deliveries()
-
-    def _iter_capture(self):
-        path = self._factory.capture_path
-        names = sorted(os.listdir(path)) if os.path.isdir(path) else [""]
-        for name in names:
-            fp = os.path.join(path, name) if name else path
-            if name and not (name.endswith(".json") or name.endswith(".ndjson")):
-                continue
-            with open(fp) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    rec = json.loads(line)
-                    yield rec["message_id"], rec["attributes"], rec["data"]
-
-    def _deliveries(self):
-        delivered = 0
-        for mid, attrs, data in self._iter_capture():
-            self._on_msg(None, mid, attrs, data)  # replay: nothing to ack
-            delivered += 1
-            cs = self._factory.chunk_size
-            if cs > 0 and delivered % cs == 0:
-                yield
-
-    def pump(self):
-        try:
-            next(self._gen)
-        except StopIteration:
-            pass
-
-    def pump_all(self):
-        for _ in self._gen:  # pragma: no cover - chunk_size=0 never yields
-            pass
-
-    def close(self):
-        pass
+def _pubsub_item(rec: dict) -> tuple:
+    # replay: nothing to ack
+    return None, rec["message_id"], rec["attributes"], rec["data"]
 
 
 def _pubsub_factory(options) -> Callable:
@@ -471,10 +419,7 @@ def _pubsub_factory(options) -> Callable:
             max_messages=int(options.get("max_messages") or 500),
         )
     if transport == "replay":
-        return PubSubReplayFactory(
-            capture_path=options.get("capture_path") or "",
-            chunk_size=int(options.get("chunk_size") or 0),
-        )
+        return NdjsonReplayFactory.from_options(options, _pubsub_item)
     raise ValueError(f"pubsub: unknown transport {transport!r} (http|replay)")
 
 
@@ -545,10 +490,6 @@ class PubSubStreamDataSource(DataSource):
         return _PubSubSimpleStreamReader(self.options)
 
 
-def register_pubsub_source(spark: SparkSession) -> None:
-    spark.dataSource.register(PubSubStreamDataSource)
-
-
 # ---------------------------------------------------------------------------
 # Source / Sink adapters (config types)
 # ---------------------------------------------------------------------------
@@ -584,21 +525,18 @@ class PubSubSource(Source):
             if self.filter:
                 env = env.where(filter_match_col(self.filter))
             return env
-        register_pubsub_source(spark)
-        reader = spark.readStream.format("cheetah-pubsub")
-        for k, v in (
-            ("transport", self.transport),
-            ("addr", self.addr),
-            ("project", self.project),
-            ("subscription", self.subscription),
-            ("poll_ms", str(self.poll_ms) if self.poll_ms != 100 else ""),
-            ("max_messages", str(self.max_messages) if self.max_messages != 500 else ""),
-            ("capture_path", self.capture_path),
-            ("chunk_size", str(self.chunk_size) if self.chunk_size else ""),
-        ):
-            if v:
-                reader = reader.option(k, v)
-        return reader.load()
+        return load_stream(
+            spark,
+            PubSubStreamDataSource,
+            transport=self.transport,
+            addr=self.addr,
+            project=self.project,
+            subscription=self.subscription,
+            poll_ms=self.poll_ms,
+            max_messages=self.max_messages,
+            capture_path=self.capture_path,
+            chunk_size=self.chunk_size,
+        )
 
 
 @dataclass
@@ -618,9 +556,6 @@ class PubSubSink(Sink):
     trigger: Optional[dict] = None
 
     def write(self, df: DataFrame):
-        from cheetah_spark.sinks import _start
-
-        t = self.transport.lower()
         cols = set(df.columns)
         mid_col = F.col("message_id") if "message_id" in cols else F.lit("")
         attrs_col = F.col("attributes") if "attributes" in cols else F.lit("{}")
@@ -634,20 +569,6 @@ class PubSubSink(Sink):
             attrs_col.alias("attributes"),
             data_col.alias("data"),
         )
-        if t == "replay":
-            if df.isStreaming:
-                w = (
-                    out.writeStream.format("json")
-                    .option("path", self.capture_path)
-                    .outputMode("append")
-                )
-                return _start(
-                    w, self.checkpoint or f"{self.capture_path}/_checkpoint", self.trigger
-                )
-            out.write.mode("append").json(self.capture_path)
-            return None
-        if t != "http":
-            raise ValueError(f"pubsub: unknown transport {t!r} (http|replay)")
         addr, project, topic, bsz = self.addr, self.project, self.topic, self.batch_size
 
         def send(rows):
@@ -663,16 +584,7 @@ class PubSubSink(Sink):
             if batch:
                 client.publish(topic, batch)
 
-        if df.isStreaming:
-            import uuid as _uuid
-
-            w = out.writeStream.foreachBatch(
-                lambda batch, _id: batch.foreachPartition(send)
-            ).outputMode("append")
-            return _start(
-                w,
-                self.checkpoint or f"/tmp/cheetah_spark_ckpt/pubsub_{_uuid.uuid4().hex[:8]}",
-                self.trigger,
-            )
-        out.foreachPartition(send)
-        return None
+        return write_transport(
+            out, self.transport, "http", "pubsub", self.capture_path, send,
+            self.checkpoint, self.trigger,
+        )

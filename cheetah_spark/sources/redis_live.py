@@ -29,7 +29,6 @@ acks by committed id (the same upstream-cursor pattern as journald).
 from __future__ import annotations
 
 import json
-import os
 import socket
 import threading
 from dataclasses import dataclass
@@ -40,9 +39,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
-from cheetah_spark.sinks import Sink
+from cheetah_spark.sinks import Sink, write_transport
 from cheetah_spark.sources import Source
-from cheetah_spark.sources.seqwindow import SeqWindowStreamReader
+from cheetah_spark.sources.seqwindow import (
+    NdjsonReplayFactory,
+    SeqWindowStreamReader,
+    load_stream,
+)
 
 REDIS_STREAM_SCHEMA = "stream string, id string, fields string"
 
@@ -294,69 +297,8 @@ class _XReadPoller:
         self._closing = True
 
 
-@dataclass
-class RedisReplayFactory:
-    """NDJSON capture stand-in (schema: stream, id, fields). Delivers
-    ``chunk_size`` entries per ``pump()`` call (one per micro-batch
-    ``read()``) so the streaming/batch agreement gate exercises
-    multi-batch admission and offset windows the way the syslog /
-    journald replay adapters do (round-10 advice: the old factory
-    drained the whole capture during construction, collapsing
-    ``s_redis_replay`` to a single micro-batch). ``chunk_size<=0``
-    keeps the drain-at-construction behavior."""
-
-    capture_path: str = ""
-    chunk_size: int = 0
-
-    def __call__(self, on_entry, on_error):
-        adapter = _RedisReplayPump(self, on_entry)
-        if self.chunk_size <= 0:
-            adapter.pump_all()
-        return adapter
-
-
-class _RedisReplayPump:
-    def __init__(self, factory: RedisReplayFactory, on_entry):
-        self._factory = factory
-        self._on_entry = on_entry
-        self._gen = self._deliveries()
-
-    def _iter_capture(self):
-        path = self._factory.capture_path
-        names = sorted(os.listdir(path)) if os.path.isdir(path) else [""]
-        for name in names:
-            fp = os.path.join(path, name) if name else path
-            if name and not (name.endswith(".json") or name.endswith(".ndjson")):
-                continue
-            with open(fp) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    rec = json.loads(line)
-                    yield rec["stream"], rec["id"], rec["fields"]
-
-    def _deliveries(self):
-        delivered = 0
-        for stream, sid, fields in self._iter_capture():
-            self._on_entry(stream, sid, fields)
-            delivered += 1
-            cs = self._factory.chunk_size
-            if cs > 0 and delivered % cs == 0:
-                yield
-
-    def pump(self):
-        try:
-            next(self._gen)
-        except StopIteration:
-            pass
-
-    def pump_all(self):
-        for _ in self._gen:  # pragma: no cover - chunk_size=0 never yields
-            pass
-
-    def close(self):
-        pass
+def _redis_item(rec: dict) -> tuple:
+    return rec["stream"], rec["id"], rec["fields"]
 
 
 def _redis_factory(options) -> Callable:
@@ -369,10 +311,7 @@ def _redis_factory(options) -> Callable:
             poll_ms=int(options.get("poll_ms") or 25),
         )
     if transport == "replay":
-        return RedisReplayFactory(
-            capture_path=options.get("capture_path") or "",
-            chunk_size=int(options.get("chunk_size") or 0),
-        )
+        return NdjsonReplayFactory.from_options(options, _redis_item)
     raise ValueError(f"redis: unknown transport {transport!r} (socket|replay)")
 
 
@@ -415,10 +354,6 @@ class RedisStreamDataSource(DataSource):
 
     def simpleStreamReader(self, schema: StructType) -> SimpleDataSourceStreamReader:
         return _RedisSimpleStreamReader(self.options)
-
-
-def register_redis_source(spark: SparkSession) -> None:
-    spark.dataSource.register(RedisStreamDataSource)
 
 
 # ---------------------------------------------------------------------------
@@ -464,20 +399,17 @@ class RedisSource(Source):
             finally:
                 client.close()
             return spark.createDataFrame(rows, REDIS_STREAM_SCHEMA)
-        register_redis_source(spark)
-        reader = spark.readStream.format("cheetah-redis")
-        for k, v in (
-            ("transport", self.transport),
-            ("addr", self.addr),
-            ("stream", self.stream),
-            ("start_id", self.start_id),
-            ("poll_ms", str(self.poll_ms)),
-            ("capture_path", self.capture_path),
-            ("chunk_size", str(self.chunk_size) if self.chunk_size else ""),
-        ):
-            if v:
-                reader = reader.option(k, v)
-        return reader.load()
+        return load_stream(
+            spark,
+            RedisStreamDataSource,
+            transport=self.transport,
+            addr=self.addr,
+            stream=self.stream,
+            start_id=self.start_id,
+            poll_ms=self.poll_ms,
+            capture_path=self.capture_path,
+            chunk_size=self.chunk_size,
+        )
 
 
 @dataclass
@@ -496,9 +428,6 @@ class RedisStreamSink(Sink):
     trigger: Optional[dict] = None
 
     def write(self, df: DataFrame):
-        from cheetah_spark.sinks import _start
-
-        t = self.transport.lower()
         cols = set(df.columns)
         stream_col = F.col("stream") if "stream" in cols else F.lit(self.stream)
         id_col = F.col("id") if "id" in cols else F.lit("*")
@@ -510,23 +439,6 @@ class RedisStreamSink(Sink):
         out = df.select(
             stream_col.alias("stream"), id_col.alias("id"), fields_col.alias("fields")
         )
-        if t == "replay":
-            # streaming frames route through writeStream like KafkaSink's
-            # capture path (round-10 advice: a config pipeline with a
-            # streaming source and a redis sink must start, not raise)
-            if df.isStreaming:
-                w = (
-                    out.writeStream.format("json")
-                    .option("path", self.capture_path)
-                    .outputMode("append")
-                )
-                return _start(
-                    w, self.checkpoint or f"{self.capture_path}/_checkpoint", self.trigger
-                )
-            out.write.mode("append").json(self.capture_path)
-            return None
-        if t != "socket":
-            raise ValueError(f"redis: unknown transport {t!r} (socket|replay)")
         addr = self.addr
 
         def send(rows):
@@ -540,17 +452,7 @@ class RedisStreamSink(Sink):
                 if client is not None:
                     client.close()
 
-        if df.isStreaming:
-            import uuid as _uuid
-
-            w = out.writeStream.foreachBatch(
-                lambda batch, _id: batch.foreachPartition(send)
-            ).outputMode("append")
-            return _start(
-                w,
-                self.checkpoint
-                or f"/tmp/cheetah_spark_ckpt/redis_{_uuid.uuid4().hex[:8]}",
-                self.trigger,
-            )
-        out.foreachPartition(send)
-        return None
+        return write_transport(
+            out, self.transport, "socket", "redis", self.capture_path, send,
+            self.checkpoint, self.trigger,
+        )

@@ -1,6 +1,7 @@
 """Shared seq-window stream-reader base for push/pump transports.
 
-The cheetah-mqtt / cheetah-syslog / cheetah-journald sources all run
+The live transport sources (amqp, nats, nsq, pubsub, redis, zmq, mqtt,
+syslog, journald, eventlog, and kinesis's replay transport) all run
 the same driver-side reader machinery on the PySpark Python Data
 Source API (``SimpleDataSourceStreamReader``):
 
@@ -37,12 +38,30 @@ Subclass contract:
   exception for an unrecoverable lost replay window, or override
   ``_on_lost_window`` entirely for softer policies (mqtt QoS≥1 warns
   and relies on broker redelivery).
+
+Replay transports (a recorded capture standing in for the live
+sender) share the rest:
+
+- ``capture_files`` / ``capture_lines`` list a capture file or
+  directory the way Spark's batch reader does: sorted names, no
+  ``_``/``.`` files, and only the files a streaming file sink
+  committed to ``_spark_metadata`` when that manifest exists;
+- ``ReplayPump`` delivers the capture's items ``chunk_size`` per
+  micro-batch ``read`` (all at construction when ``chunk_size <= 0``);
+- ``NdjsonReplayFactory`` is the replay factory of the transports
+  whose capture is NDJSON; each passes only its record → item
+  mapping.
 """
 
 from __future__ import annotations
 
+import itertools
+import json
+import os
 import threading
-from typing import Iterator, Optional, Tuple
+from dataclasses import dataclass
+from typing import Callable, Iterable, Iterator, List, Optional, Tuple
+from urllib.parse import unquote
 
 from pyspark.sql.datasource import SimpleDataSourceStreamReader
 
@@ -151,3 +170,120 @@ class SeqWindowStreamReader(SimpleDataSourceStreamReader):
             if seq >= end["seq"]:
                 break
             self._pending.pop(seq).ack()
+
+
+def load_stream(spark, data_source, **options):
+    """Register ``data_source`` on the session and open it as a stream,
+    forwarding every non-empty option as a string (each reader's option
+    parser supplies the defaults). Registration is an idempotent
+    per-session catalog write, so there is no memo: an id(spark)-keyed
+    cache would go stale when CPython reuses a collected session's
+    address."""
+    spark.dataSource.register(data_source)
+    reader = spark.readStream.format(data_source.name())
+    for k, v in options.items():
+        if v is not None and v != "":
+            reader = reader.option(k, str(v))
+    return reader.load()
+
+
+# ---------------------------------------------------------------------------
+# Replay transports: capture listing + chunked delivery
+# ---------------------------------------------------------------------------
+
+NDJSON_SUFFIXES = (".json", ".ndjson")
+
+
+def _committed_names(log_dir: str) -> Optional[set]:
+    """Base names of the files a Spark file sink committed, read from
+    its ``_spark_metadata`` log (the latest ``N.compact`` plus the batch
+    files after it), or None when there is no log."""
+    if not os.path.isdir(log_dir):
+        return None
+    batches = {}
+    for name in os.listdir(log_dir):
+        stem = name[: -len(".compact")] if name.endswith(".compact") else name
+        if stem.isdigit():
+            batches[int(stem)] = name
+    first = max((b for b, n in batches.items() if n.endswith(".compact")), default=0)
+    committed = set()
+    for b in sorted(b for b in batches if b >= first):
+        with open(os.path.join(log_dir, batches[b])) as fh:
+            next(fh, None)  # the log version line, "v1"
+            for line in fh:
+                if line.strip():
+                    entry = json.loads(line)
+                    if entry.get("action") == "add":
+                        committed.add(unquote(entry["path"].rsplit("/", 1)[-1]))
+    return committed
+
+
+def capture_files(path: str, suffixes: Tuple[str, ...] = NDJSON_SUFFIXES) -> List[str]:
+    """The files of a capture in read order. A file path is the whole
+    capture. A directory lists its ``suffixes`` files by sorted name,
+    skipping ``_``/``.`` names; when a streaming file sink wrote it, only
+    the files its manifest committed count, as for Spark's batch
+    reader (a part file from a crashed batch is not in the capture)."""
+    if not os.path.isdir(path):
+        return [path]
+    names = sorted(
+        n for n in os.listdir(path) if not n.startswith(("_", ".")) and n.endswith(suffixes)
+    )
+    committed = _committed_names(os.path.join(path, "_spark_metadata"))
+    if committed is not None:
+        names = [n for n in names if n in committed]
+    return [os.path.join(path, n) for n in names]
+
+
+def capture_lines(path: str, suffixes: Tuple[str, ...] = NDJSON_SUFFIXES) -> Iterator[str]:
+    """Every non-blank line of the capture's files, newline removed."""
+    for fp in capture_files(path, suffixes):
+        with open(fp) as fh:
+            for line in fh:
+                line = line.rstrip("\n")
+                if line.strip():
+                    yield line
+
+
+class ReplayPump:
+    """Deliver ``items`` to ``deliver``: ``chunk_size`` items per
+    ``pump()`` — the core's ``read`` calls it once per micro-batch — or
+    every item at construction when ``chunk_size <= 0``. ``pump()``
+    after the last item is a no-op."""
+
+    def __init__(self, items: Iterable, chunk_size: int, deliver: Callable) -> None:
+        self._items = iter(items)
+        self._chunk_size = chunk_size if chunk_size > 0 else None
+        self._deliver = deliver
+        if self._chunk_size is None:
+            self.pump()
+
+    def pump(self) -> None:
+        for item in itertools.islice(self._items, self._chunk_size):
+            self._deliver(item)
+
+    def close(self) -> None:
+        pass
+
+
+@dataclass
+class NdjsonReplayFactory:
+    """Replay transport over an NDJSON capture: ``item`` maps one
+    capture record to the argument tuple of the transport's message
+    callback (a module-level function, so the factory pickles)."""
+
+    item: Callable[[dict], tuple]
+    capture_path: str = ""
+    chunk_size: int = 0
+
+    @classmethod
+    def from_options(cls, options, item: Callable[[dict], tuple]) -> "NdjsonReplayFactory":
+        return cls(
+            item,
+            capture_path=options.get("capture_path") or "",
+            chunk_size=int(options.get("chunk_size") or 0),
+        )
+
+    def __call__(self, on_msg, on_error) -> ReplayPump:
+        items = (self.item(json.loads(line)) for line in capture_lines(self.capture_path))
+        return ReplayPump(items, self.chunk_size, lambda args: on_msg(*args))

@@ -35,22 +35,21 @@ Delivery contract: offsets are admitted-line counts ``{"seq": n}``;
 in-memory window after a restart, ``commit`` acks replay records
 below the committed offset.
 
-The seq-window reader core (buffer/window/offset/commit) is shared
-with mqtt_live/journald_live via
-:class:`cheetah_spark.sources.seqwindow.SeqWindowStreamReader` — an
-offset-machinery fix lands once (the r8 self-declared debt, closed
-r9); this module supplies only the transports and the envelope/ack/
+The seq-window reader core (buffer/window/offset/commit), the replay
+pump and the capture lister are shared with every live transport via
+:mod:`cheetah_spark.sources.seqwindow` — an offset-machinery fix lands
+once (the r8 self-declared debt, closed r9); this module supplies only
+the transports, the bare-text replay fallback and the envelope/ack/
 lost-window hooks.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import socket
 import threading
 from dataclasses import dataclass
-from typing import Callable, Iterator, Optional, Tuple
+from typing import Callable, Iterator, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,7 +57,12 @@ from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
 from cheetah_spark.sources import Source
-from cheetah_spark.sources.seqwindow import SeqWindowStreamReader
+from cheetah_spark.sources.seqwindow import (
+    ReplayPump,
+    SeqWindowStreamReader,
+    capture_lines,
+    load_stream,
+)
 
 SYSLOG_STREAM_SCHEMA = "raw string, peer string"
 
@@ -207,79 +211,33 @@ class SyslogReplayFactory:
     chunk_size: int = 0
 
     def __call__(self, opts: SyslogOpts, on_record, on_error):
-        adapter = _ReplayAdapter(self, on_record)
-        if self.chunk_size <= 0:
-            adapter.pump_all()
-        return adapter
-
-
-class _ReplayAdapter:
-    def __init__(self, factory: SyslogReplayFactory, on_record):
-        self._factory = factory
-        self._on_record = on_record
-        self._lock = threading.Lock()
-        self._gen = self._deliveries()
-
-    def _iter_capture(self) -> Iterator[tuple[str, str]]:
-        path = self._factory.capture_path
-        names = (
-            sorted(
-                n
-                for n in os.listdir(path)
-                if not n.startswith(("_", ".")) and n.endswith((".json", ".txt"))
-            )
-            if os.path.isdir(path)
-            else [""]
+        return ReplayPump(
+            _replay_records(self.capture_path), self.chunk_size, lambda rec: on_record(*rec)
         )
-        for name in names:
-            fp = os.path.join(path, name) if name else path
-            with open(fp) as fh:
-                for line in fh:
-                    line = line.rstrip("\n")
-                    if not line:
-                        continue
-                    # NDJSON record if it parses as one; otherwise the
-                    # line IS the message — a bare-text capture may
-                    # legitimately contain syslog messages that start
-                    # with '{' (JSON-payload syslog is common), and a
-                    # prefix-only gate would JSONDecodeError and kill
-                    # the replay pump (r8 advice)
-                    if line.startswith("{"):
-                        try:
-                            rec = json.loads(line)
-                            yield rec["raw"], rec.get("peer", "replay:0")
-                            continue
-                        except (json.JSONDecodeError, KeyError, TypeError):
-                            pass
-                    yield line, "replay:0"
 
-    def _deliveries(self):
-        delivered = 0
-        for raw, peer in self._iter_capture():
-            self._on_record(raw, peer)
-            delivered += 1
-            cs = self._factory.chunk_size
-            if cs > 0 and delivered % cs == 0:
-                yield
+    def log_ack(self, rec: SyslogRecord) -> None:
+        if self.ack_log:
+            with open(self.ack_log, "a") as fh:
+                fh.write(json.dumps({"seq": rec.seq, "peer": rec.peer}) + "\n")
 
-    def pump(self):
-        try:
-            next(self._gen)
-        except StopIteration:
-            pass
 
-    def pump_all(self):
-        for _ in self._gen:  # pragma: no cover - chunk_size=0 never yields
-            pass
-
-    def log_ack(self, rec: SyslogRecord):
-        if not self._factory.ack_log:
-            return
-        with self._lock, open(self._factory.ack_log, "a") as fh:
-            fh.write(json.dumps({"seq": rec.seq, "peer": rec.peer}) + "\n")
-
-    def close(self):
-        pass
+def _replay_records(path: str) -> Iterator[Tuple[str, str]]:
+    for line in capture_lines(path, (".json", ".txt")):
+        # NDJSON record if it parses as one; otherwise the line IS the
+        # message — a bare-text capture may legitimately contain syslog
+        # messages that start with '{' (JSON-payload syslog is common),
+        # and a prefix-only gate would JSONDecodeError and kill the
+        # replay pump (r8 advice)
+        if line.startswith("{"):
+            try:
+                rec = json.loads(line)
+                raw, peer = rec["raw"], rec.get("peer", "replay:0")
+            except (json.JSONDecodeError, KeyError, TypeError):
+                pass
+            else:
+                yield raw, peer
+                continue
+        yield line, "replay:0"
 
 
 def _make_factory(options) -> Callable:
@@ -325,7 +283,7 @@ class _SyslogSimpleStreamReader(SeqWindowStreamReader):
 
     def _ack_of(self, item: tuple, seq: int, listener):
         raw, peer = item
-        return SyslogRecord(raw, peer, seq, ack=getattr(listener, "log_ack", None))
+        return SyslogRecord(raw, peer, seq, ack=getattr(self._factory, "log_ack", None))
 
     def _lost_window_error(self, start_seq: int, end_seq: int) -> Exception:
         # datagram transports have no redelivery; surface the gap
@@ -351,10 +309,6 @@ class SyslogStreamDataSource(DataSource):
 
     def simpleStreamReader(self, schema: StructType) -> SimpleDataSourceStreamReader:
         return _SyslogSimpleStreamReader(self.options)
-
-
-def register_syslog_source(spark: SparkSession) -> None:
-    spark.dataSource.register(SyslogStreamDataSource)
 
 
 @dataclass
@@ -383,18 +337,17 @@ class SyslogSource(Source):
     streaming: bool = True
 
     def read(self, spark: SparkSession) -> DataFrame:
-        register_syslog_source(spark)
-        df = (
-            spark.readStream.format("cheetah-syslog")
-            .option("addr", self.addr)
-            .option("proto", self.proto)
-            .option("content_type", self.content_type)
-            .option("transport", self.transport)
-            .option("capture_path", self.capture_path)
-            .option("ack_log", self.ack_log)
-            .option("chunk_size", str(self.chunk_size))
-            .option("addr_file", self.addr_file)
-            .load()
+        df = load_stream(
+            spark,
+            SyslogStreamDataSource,
+            addr=self.addr,
+            proto=self.proto,
+            content_type=self.content_type,
+            transport=self.transport,
+            capture_path=self.capture_path,
+            ack_log=self.ack_log,
+            chunk_size=self.chunk_size,
+            addr_file=self.addr_file,
         )
         if self.content_type == "auto":
             from cheetah_spark.functions import syslog as SL

@@ -34,8 +34,6 @@ says so loudly and names a durable queue as the upgrade path)."""
 
 from __future__ import annotations
 
-import json
-import os
 import socket
 import struct
 import threading
@@ -47,9 +45,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
-from cheetah_spark.sinks import Sink
+from cheetah_spark.sinks import Sink, write_transport
 from cheetah_spark.sources import Source
-from cheetah_spark.sources.seqwindow import SeqWindowStreamReader
+from cheetah_spark.sources.seqwindow import (
+    NdjsonReplayFactory,
+    SeqWindowStreamReader,
+    load_stream,
+)
 
 ZMQ_SCHEMA = "topic string, payload string"
 
@@ -416,63 +418,8 @@ class _ZmqSubListener:
             self._client.close()
 
 
-@dataclass
-class ZmqReplayFactory:
-    """NDJSON capture stand-in (schema: topic, payload), delivered
-    ``chunk_size`` records per micro-batch ``pump()``."""
-
-    capture_path: str = ""
-    chunk_size: int = 0
-
-    def __call__(self, on_msg, on_error):
-        pump = _ZmqReplayPump(self, on_msg)
-        if self.chunk_size <= 0:
-            pump.pump_all()
-        return pump
-
-
-class _ZmqReplayPump:
-    def __init__(self, factory: ZmqReplayFactory, on_msg):
-        self._factory = factory
-        self._on_msg = on_msg
-        self._gen = self._deliveries()
-
-    def _iter_capture(self):
-        path = self._factory.capture_path
-        names = sorted(os.listdir(path)) if os.path.isdir(path) else [""]
-        for name in names:
-            fp = os.path.join(path, name) if name else path
-            if name and not (name.endswith(".json") or name.endswith(".ndjson")):
-                continue
-            with open(fp) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    rec = json.loads(line)
-                    yield rec["topic"], rec["payload"]
-
-    def _deliveries(self):
-        delivered = 0
-        for topic, payload in self._iter_capture():
-            self._on_msg(topic, payload)
-            delivered += 1
-            cs = self._factory.chunk_size
-            if cs > 0 and delivered % cs == 0:
-                yield
-
-    def pump(self):
-        try:
-            next(self._gen)
-        except StopIteration:
-            pass
-
-    def pump_all(self):
-        for _ in self._gen:  # pragma: no cover - chunk_size=0 never yields
-            pass
-
-    def close(self):
-        pass
+def _zmq_item(rec: dict) -> tuple:
+    return rec["topic"], rec["payload"]
 
 
 def _zmq_factory(options) -> Callable:
@@ -483,10 +430,7 @@ def _zmq_factory(options) -> Callable:
             prefix=options.get("prefix") or "",
         )
     if transport == "replay":
-        return ZmqReplayFactory(
-            capture_path=options.get("capture_path") or "",
-            chunk_size=int(options.get("chunk_size") or 0),
-        )
+        return NdjsonReplayFactory.from_options(options, _zmq_item)
     raise ValueError(f"zmq: unknown transport {transport!r} (socket|replay)")
 
 
@@ -532,10 +476,6 @@ class ZmqStreamDataSource(DataSource):
         return _ZmqSimpleStreamReader(self.options)
 
 
-def register_zmq_source(spark: SparkSession) -> None:
-    spark.dataSource.register(ZmqStreamDataSource)
-
-
 # ---------------------------------------------------------------------------
 # Source / Sink adapters (config types)
 # ---------------------------------------------------------------------------
@@ -563,18 +503,15 @@ class ZmqSource(Source):
             if self.prefix:
                 env = env.where(F.col("topic").startswith(self.prefix))
             return env
-        register_zmq_source(spark)
-        reader = spark.readStream.format("cheetah-zmq")
-        for k, v in (
-            ("transport", self.transport),
-            ("addr", self.addr),
-            ("prefix", self.prefix),
-            ("capture_path", self.capture_path),
-            ("chunk_size", str(self.chunk_size) if self.chunk_size else ""),
-        ):
-            if v:
-                reader = reader.option(k, v)
-        return reader.load()
+        return load_stream(
+            spark,
+            ZmqStreamDataSource,
+            transport=self.transport,
+            addr=self.addr,
+            prefix=self.prefix,
+            capture_path=self.capture_path,
+            chunk_size=self.chunk_size,
+        )
 
 
 @dataclass
@@ -593,9 +530,6 @@ class ZmqSink(Sink):
     trigger: Optional[dict] = None
 
     def write(self, df: DataFrame):
-        from cheetah_spark.sinks import _start
-
-        t = self.transport.lower()
         cols = set(df.columns)
         topic_col = F.col("topic") if "topic" in cols else F.lit(self.topic)
         payload_col = (
@@ -604,20 +538,6 @@ class ZmqSink(Sink):
             else F.to_json(F.struct(*[F.col(c) for c in df.columns]))
         )
         out = df.select(topic_col.alias("topic"), payload_col.alias("payload"))
-        if t == "replay":
-            if df.isStreaming:
-                w = (
-                    out.writeStream.format("json")
-                    .option("path", self.capture_path)
-                    .outputMode("append")
-                )
-                return _start(
-                    w, self.checkpoint or f"{self.capture_path}/_checkpoint", self.trigger
-                )
-            out.write.mode("append").json(self.capture_path)
-            return None
-        if t != "socket":
-            raise ValueError(f"zmq: unknown transport {t!r} (socket|replay)")
         addr = self.addr
 
         def send(rows):
@@ -632,16 +552,7 @@ class ZmqSink(Sink):
                 if client is not None:
                     client.close()
 
-        if df.isStreaming:
-            import uuid as _uuid
-
-            w = out.writeStream.foreachBatch(
-                lambda batch, _id: batch.foreachPartition(send)
-            ).outputMode("append")
-            return _start(
-                w,
-                self.checkpoint or f"/tmp/cheetah_spark_ckpt/zmq_{_uuid.uuid4().hex[:8]}",
-                self.trigger,
-            )
-        out.foreachPartition(send)
-        return None
+        return write_transport(
+            out, self.transport, "socket", "zmq", self.capture_path, send,
+            self.checkpoint, self.trigger,
+        )

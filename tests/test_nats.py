@@ -271,3 +271,45 @@ def test_nats_replay_streaming_matches_batch(spark, sf_dir):
     b = sorted(tuple(r) for r in q_nats_envelope(spark, sf_dir).collect())
     s = sorted(tuple(r) for r in s_nats_replay(spark, sf_dir).collect())
     assert b == s and len(b) == 10  # ten user shards of ev.click
+
+
+def test_nats_replay_follows_sink_manifest(spark, tmp_path):
+    """A capture written by the streaming replay sink carries a
+    ``_spark_metadata`` manifest. A part file it does not list (what a
+    crash before the batch commit leaves behind) is not part of the
+    capture: the batch reader skips it, so the streaming replay must
+    skip it too."""
+    import glob
+    import shutil
+
+    from cheetah_spark.streaming import run_stream_to_completion
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    (feed / "a.json").write_text(
+        "\n".join(
+            json.dumps({"subject": f"ev.{i}", "reply_to": "", "payload": f"p{i}"})
+            for i in range(10)
+        )
+    )
+    cap = str(tmp_path / "cap")
+    src = spark.readStream.schema("subject string, reply_to string, payload string").json(
+        str(feed)
+    )
+    q = NatsSink(transport="replay", capture_path=cap).write(src)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    (part,) = glob.glob(f"{cap}/part-*.json")
+    shutil.copy(part, f"{cap}/part-00001-{uuid.uuid4()}-c000.json")
+
+    batch = NatsSource(transport="replay", capture_path=cap, streaming=False).read(spark)
+    stream = run_stream_to_completion(
+        NatsSource(transport="replay", capture_path=cap, chunk_size=4).read(spark),
+        lambda df: df,
+    )
+    b = sorted(tuple(r) for r in batch.collect())
+    s = sorted(tuple(r) for r in stream.collect())
+    assert len(b) == 10
+    assert s == b
