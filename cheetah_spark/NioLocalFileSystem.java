@@ -11,6 +11,7 @@ import java.util.Set;
 import org.apache.hadoop.conf.Configuration;
 import org.apache.hadoop.fs.ChecksumFs;
 import org.apache.hadoop.fs.DelegateToFileSystem;
+import org.apache.hadoop.fs.FileStatus;
 import org.apache.hadoop.fs.FsConstants;
 import org.apache.hadoop.fs.FsServerDefaults;
 import org.apache.hadoop.fs.LocalFileSystem;
@@ -20,14 +21,18 @@ import org.apache.hadoop.fs.local.LocalConfigKeys;
 import org.apache.hadoop.fs.permission.FsPermission;
 
 /**
- * The file:// filesystem with permissions set through java.nio.
+ * The file:// filesystem with permissions and link status through java.nio.
  *
- * Without the native Hadoop library, RawLocalFileSystem.setPermission forks
- * chmod for every directory, file and .crc file it creates. Raw sets the same
- * mode bits in-process; everything else (checksums, rename, listing) is the
- * stock code. NioLocalFileSystem serves FileSystem callers (fs.file.impl: sink
- * files), Fs serves FileContext callers (fs.AbstractFileSystem.file.impl:
- * checkpoint logs, _spark_metadata, state-store files).
+ * Without the native Hadoop library, RawLocalFileSystem forks a process for
+ * two calls the streaming engine makes on every micro-batch: setPermission
+ * forks chmod for every directory, file and .crc file it creates, and
+ * getFileLinkStatus forks readlink for the source and target of every
+ * FileContext rename (each checkpoint-log and _spark_metadata commit, and its
+ * .crc). Raw answers both in-process; everything else (checksums, the rename
+ * itself, listing, symlinks) is the stock code. NioLocalFileSystem serves
+ * FileSystem callers (fs.file.impl: sink files), Fs serves FileContext callers
+ * (fs.AbstractFileSystem.file.impl: checkpoint logs, _spark_metadata,
+ * state-store files).
  */
 public class NioLocalFileSystem extends LocalFileSystem {
   public NioLocalFileSystem() {
@@ -51,6 +56,23 @@ public class NioLocalFileSystem extends LocalFileSystem {
         }
       }
       Files.setPosixFilePermissions(pathToFile(p).toPath(), perms);
+    }
+
+    /**
+     * A path that is not a symlink has the status getFileStatus gives: the
+     * stock code returns exactly that once readlink prints no target, and
+     * throws the same FileNotFoundException for a missing path. Symlinks, and
+     * paths java.nio cannot inspect, take the stock code.
+     */
+    @Override
+    public FileStatus getFileLinkStatus(Path f) throws IOException {
+      boolean link;
+      try {
+        link = Files.isSymbolicLink(pathToFile(f).toPath());
+      } catch (RuntimeException e) { // the stock code fails or answers its own way
+        link = true;
+      }
+      return link ? super.getFileLinkStatus(f) : getFileStatus(f);
     }
   }
 

@@ -31,16 +31,18 @@ from typing import Callable, Optional
 
 from pyspark.sql.streaming import StreamingQueryListener
 
-# durationMs keys → child span names (reference span-name parity)
-_PHASE_MAP = {
-    "latestOffset": "cheetah.processor.src.recv",
-    "getBatch": "cheetah.processor.src.recv",
-    "queryPlanning": "cheetah.processor.handler.handle",
-    "addBatch": "cheetah.processor.dst.send",
-    "commitBatch": "cheetah.processor.state.commit",
-    "commitOffsets": "cheetah.processor.state.commit",
-    "walCommit": "cheetah.processor.state.commit",
-}
+# durationMs keys → child span names (reference span-name parity), in the
+# order the engine runs them: MicroBatchExecution.constructNextBatch
+# (latestOffset, walCommit), runBatch (getBatch, queryPlanning, addBatch),
+# markMicroBatchEnd (commitOffsets). durationMs itself is unordered.
+_PHASES = (
+    ("latestOffset", "cheetah.processor.src.recv"),
+    ("walCommit", "cheetah.processor.state.commit"),
+    ("getBatch", "cheetah.processor.src.recv"),
+    ("queryPlanning", "cheetah.processor.handler.handle"),
+    ("addBatch", "cheetah.processor.dst.send"),
+    ("commitOffsets", "cheetah.processor.state.commit"),
+)
 
 
 @dataclass
@@ -122,10 +124,10 @@ class PipelineTracer(StreamingQueryListener):
         )
         self._exporter(root)
         offset = 0
-        for key, dur in durations.items():
-            name = _PHASE_MAP.get(key)
-            if name is None or key == "triggerExecution":
+        for key, name in _PHASES:
+            if key not in durations:
                 continue
+            dur = durations[key]
             self._exporter(
                 Span(
                     trace_id=str(p.runId),
@@ -141,12 +143,16 @@ class PipelineTracer(StreamingQueryListener):
 
 
 def ndjson_exporter(path: str) -> Callable[[Span], None]:
-    """Span → one JSON line appended to ``path`` (the OTLP/file shape)."""
+    """Span → one JSON line appended to ``path`` (the OTLP/file shape).
+
+    The file is opened once, line-buffered, so each span is on disk when
+    the call returns; ``export.close()`` closes it."""
+    fh = open(path, "a", buffering=1)
 
     def export(span: Span) -> None:
-        with open(path, "a") as fh:
-            fh.write(json.dumps(span.to_dict()) + "\n")
+        fh.write(json.dumps(span.to_dict()) + "\n")
 
+    export.close = fh.close  # type: ignore[attr-defined]
     return export
 
 

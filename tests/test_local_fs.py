@@ -1,18 +1,23 @@
 """The java.nio local filesystem (``NioLocalFileSystem.java``) against
 the stock one: same mode bits, same ``.crc`` files, same file-sink
 manifest for the batch sink, the streaming sink and its checkpoint; the
-stock fallback when ``javac`` is missing; and the session confs it adds.
+same link status and checkpoint-style rename; no process forked by those
+writes; the stock fallback when ``javac`` is missing; and the session
+confs it adds.
 
 Each filesystem needs its own JVM (the jar goes on the launch class
 path), so the writes run in subprocesses: ``python tests/test_local_fs.py
 <out_dir>`` writes everything under ``out_dir`` and prints a JSON
-summary of what is on disk."""
+summary of what is on disk. A shim directory at the front of the
+subprocess's ``PATH`` (``<out_dir>/shim``) logs every ``readlink``,
+``ls``, ``chmod`` and ``stat`` the JVM forks."""
 
 from __future__ import annotations
 
 import json
 import os
 import re
+import shutil
 import subprocess
 import sys
 from pathlib import Path
@@ -22,6 +27,8 @@ import pytest
 REPO = Path(__file__).resolve().parent.parent
 _UUID = re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}")
 _N_ROWS = 240
+# the tools Hadoop's local filesystem forks without its native library
+_FORK_TOOLS = ("readlink", "ls", "chmod", "stat")
 
 
 def _norm(rel: str) -> str:
@@ -66,6 +73,8 @@ def _write_all(out: Path) -> dict:
         shuffle_partitions=2,
         extra_conf={"spark.driver.extraClassPath": extra_cp},
     )
+    forks_log = out / "shim" / "forks.log"
+    forks_before = forks_log.stat().st_size if forks_log.exists() else 0
     jvm, hconf = spark._jvm, spark._jsc.hadoopConfiguration()
     uri = jvm.java.net.URI(f"file://{out}")
     fs = jvm.org.apache.hadoop.fs.FileSystem.get(uri, hconf)
@@ -85,6 +94,12 @@ def _write_all(out: Path) -> dict:
         trigger={"availableNow": True},
     ).write(stream)
     q.awaitTermination()
+    forks = {tool: 0 for tool in _FORK_TOOLS}
+    if forks_log.exists():
+        with open(forks_log, "rb") as fh:
+            fh.seek(forks_before)
+            for line in fh.read().decode().splitlines():
+                forks[line.split(" ", 1)[0]] += 1
     rows = {
         "batch": spark.read.json(str(out / "batch")).count(),
         "stream": spark.read.json(str(out / "stream")).count(),
@@ -99,9 +114,75 @@ def _write_all(out: Path) -> dict:
         "rows": rows,
         "tree": {d: _tree(out / d) for d in ("batch", "stream", "checkpoint")},
         "manifest": _manifest(out, out / "stream"),
+        "forks": forks,
     }
+    if summary["fs"] == "cheetah_spark.NioLocalFileSystem":
+        summary["link_status"] = _link_status(spark, out / "links")
     spark.stop()
     return summary
+
+
+def _link_status(spark, root: Path) -> dict:
+    """Per side (stock ``RawLocalFileSystem`` and its ``LocalFs``,
+    ``NioLocalFileSystem$Raw`` and its ``Fs``): ``getFileLinkStatus`` of
+    a file, a directory, symlinks with an absolute, a relative and a
+    missing target, and a missing path; then a ``FileContext`` rename
+    with ``OVERWRITE`` of a checksummed file onto an existing one, the
+    way a checkpoint log commits."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm, hconf = spark._jvm, spark._jsc.hadoopConfiguration()
+    hfs = jvm.org.apache.hadoop.fs
+    root.mkdir()
+    (root / "file").write_bytes(b"x" * 1000)
+    (root / "dir").mkdir()
+    (root / "abs_link").symlink_to(root / "file")
+    (root / "rel_link").symlink_to("file")
+    (root / "dangling").symlink_to(root / "gone")
+    stock_conf = jvm.org.apache.hadoop.conf.Configuration(hconf)
+    stock_conf.set("fs.AbstractFileSystem.file.impl", "org.apache.hadoop.fs.local.LocalFs")
+    sides = {
+        "stock": (hfs.RawLocalFileSystem(), stock_conf),
+        "nio": (getattr(jvm.cheetah_spark, "NioLocalFileSystem$Raw")(), hconf),
+    }
+    overwrite = spark.sparkContext._gateway.new_array(getattr(hfs, "Options$Rename"), 1)
+    overwrite[0] = getattr(hfs, "Options$Rename").OVERWRITE
+    checksummed = hfs.FileSystem.getLocal(hconf)
+    out = {}
+    for side, (raw, conf) in sides.items():
+        raw.initialize(jvm.java.net.URI("file:///"), hconf)
+        status = {}
+        for name in ("file", "dir", "abs_link", "rel_link", "dangling", "missing"):
+            try:
+                st = raw.getFileLinkStatus(hfs.Path(str(root / name)))
+            except Py4JJavaError as e:
+                status[name] = e.java_exception.getClass().getName()
+                continue
+            status[name] = {
+                "path": st.getPath().toString(),
+                "len": st.getLen(),
+                "is_dir": st.isDirectory(),
+                "is_symlink": st.isSymlink(),
+                "target": st.getSymlink().toString() if st.isSymlink() else None,
+                "mtime": st.getModificationTime(),
+            }
+        ren = root / f"rename_{side}"
+        for name, data in (("src", b"new log entry"), ("dst", b"old")):
+            stream = checksummed.create(hfs.Path(str(ren / name)), True)
+            stream.write(bytearray(data))
+            stream.close()
+        fc = hfs.FileContext.getFileContext(jvm.java.net.URI("file:///"), conf)
+        fc.rename(hfs.Path(str(ren / "src")), hfs.Path(str(ren / "dst")), overwrite)
+        stream = fc.open(hfs.Path(str(ren / "dst")))  # verifies the moved .crc
+        data = bytes(stream.readAllBytes())
+        stream.close()
+        out[side] = {
+            "fc": fc.getDefaultFileSystem().getClass().getName(),
+            "status": status,
+            "renamed": sorted(os.listdir(ren)),
+            "renamed_data": data.decode(),
+        }
+    return out
 
 
 def _run_writer(out: Path, env: dict) -> dict:
@@ -131,15 +212,33 @@ def _path_without_javac(farm: Path) -> str:
     return os.pathsep.join(dirs)
 
 
+def _path_with_fork_shim(out: Path, path: str) -> str:
+    """``path`` behind ``<out>/shim``, whose ``_FORK_TOOLS`` each append
+    their argv to ``<out>/shim/forks.log`` and exec the real tool."""
+    shim = out / "shim"
+    shim.mkdir(parents=True)
+    for tool in _FORK_TOOLS:
+        script = shim / tool
+        script.write_text(
+            f'#!/bin/sh\necho "{tool} $*" >> "{shim / "forks.log"}"\n'
+            f'exec "{shutil.which(tool, path=path)}" "$@"\n'
+        )
+        script.chmod(0o755)
+    return f"{shim}{os.pathsep}{path}"
+
+
 @pytest.fixture(scope="module")
 def written(tmp_path_factory):
-    """Stock run (javac hidden, empty jar cache) and java.nio run."""
+    """Stock run (javac hidden, empty jar cache) and java.nio run, each
+    behind its own fork shim."""
     base = tmp_path_factory.mktemp("local_fs")
     env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
-    stock_env = dict(env, HOME=str(base / "home"), PATH=_path_without_javac(base / "bin"))
+    stock_path = _path_without_javac(base / "bin")
+    stock_env = dict(env, HOME=str(base / "home"), PATH=_path_with_fork_shim(base / "stock", stock_path))
+    nio_env = dict(env, PATH=_path_with_fork_shim(base / "nio", env["PATH"]))
     return {
         "stock": _run_writer(base / "stock", stock_env),
-        "nio": _run_writer(base / "nio", env),
+        "nio": _run_writer(base / "nio", nio_env),
     }
 
 
@@ -173,6 +272,38 @@ def test_nio_writes_same_sink_manifest_as_stock(written):
     stock = written["stock"]["manifest"]
     assert len(stock) > 1 and all(e["action"] == "add" for e in stock)
     assert written["nio"]["manifest"] == stock
+
+
+def test_stock_run_forks_readlink(written):
+    """The shim sees the stock filesystem's forks: every checkpoint-log
+    rename asks ``readlink`` whether its source and target are links."""
+    assert written["stock"]["forks"]["readlink"] > 0
+
+
+def test_nio_run_forks_no_file_tool(written):
+    assert written["nio"]["forks"] == {tool: 0 for tool in _FORK_TOOLS}
+
+
+def test_nio_link_status_matches_stock(written):
+    sides = written["nio"]["link_status"]
+    stock = sides["stock"]["status"]
+    assert not stock["file"]["is_symlink"] and stock["file"]["len"] == 1000
+    assert stock["dir"]["is_dir"] and not stock["dir"]["is_symlink"]
+    target = stock["file"]["path"]  # file:/.../links/file
+    assert stock["abs_link"]["is_symlink"] and stock["abs_link"]["target"] == target
+    assert stock["rel_link"]["is_symlink"] and stock["rel_link"]["target"] == target
+    assert stock["dangling"]["is_symlink"] and stock["dangling"]["target"].endswith("/links/gone")
+    assert stock["missing"] == "java.io.FileNotFoundException"
+    assert sides["nio"]["status"] == stock
+
+
+def test_nio_rename_overwrite_moves_data_and_checksum_like_stock(written):
+    sides = written["nio"]["link_status"]
+    assert sides["stock"]["fc"] == "org.apache.hadoop.fs.local.LocalFs"
+    assert sides["nio"]["fc"] == "cheetah_spark.NioLocalFileSystem$Fs"
+    for side in ("stock", "nio"):
+        assert sides[side]["renamed"] == [".dst.crc", "dst"]
+        assert sides[side]["renamed_data"] == "new log entry"
 
 
 def test_extra_class_path_is_kept(written):

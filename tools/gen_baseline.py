@@ -65,7 +65,7 @@ def main() -> None:
         f"  baseline): {full.get('contention_ratio', 'n/a')} — >~1.5 marks the whole",
         "  run host-contended; single-sample >2x per-query rows from such a run",
         "  are `weak` (not regressions) until re-measured min-of-N in a quiet",
-        "  window (tools/resample.py, SCALE.md discipline).",
+        "  window (perfbench/, SCALE.md discipline).",
         "- one-time derivations excluded from per-query timings by the measured",
         f"  warm-up (`warmed`): {', '.join(warmed)}. A cross-framework",
         "  comparison must grant its harness the same warm-up; the reference's",
