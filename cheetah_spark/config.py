@@ -664,16 +664,12 @@ def build_transform(cfg: Mapping[str, Any]) -> Handler:
         # list itself inflates every plan/serialize cycle. Measured warm
         # on local[4]: ≤2k literals ≈ free (+0.05 s/action), 10k ≈ +6 s,
         # 20k ≈ +11 s, 100k ≈ +60 s. Default stays well inside the flat
-        # region; the Arrow broadcast-set path covers batch at any
-        # cardinality, so inline only needs genuinely small sets (its
-        # purpose is streaming composition with keyed-state stages).
+        # region; the Arrow broadcast-set path covers any cardinality,
+        # batch or streaming, so inline only needs genuinely small sets
+        # (its purpose is a plan with zero Python in it).
         max_inline = int(cfg.get("max_inline", 2_000))
 
         def strip_boilerplate(df: DataFrame) -> DataFrame:
-            import pandas as pd  # noqa: F401 (pandas_udf runtime dep)
-
-            from pyspark.sql.functions import pandas_udf
-
             from cheetah_spark.queries.curation import boiler_line_set
 
             spark = df.sparkSession
@@ -693,10 +689,8 @@ def build_transform(cfg: Mapping[str, Any]) -> Handler:
             boiler = sorted(boiler_line_set(corpus, col, id_col, min_docs))
             if len(boiler) <= max_inline:
                 # small set: a literal IN-list Catalyst filter keeps the
-                # whole strip JVM-side — zero Python in the plan, which
-                # also lets it compose with the keyed-state url_dedup
-                # stage in one streaming plan (the ArrowEval input path
-                # cannot consume state-emitter rows). isin() folds to
+                # whole strip JVM-side — zero Python in the plan (the
+                # q_config_fineweb plan test pins it). isin() folds to
                 # InSet (hash set) above the OptimizeIn threshold, so
                 # the per-line test is O(1), not an O(|boiler|) scan.
                 lines = F.filter(
@@ -708,30 +702,28 @@ def build_transform(cfg: Mapping[str, Any]) -> Handler:
                 return df.withColumn(col, F.array_join(lines, "\n"))
             # large set: Arrow-batched strip against a broadcast set —
             # the plan-literal would bloat the physical plan at real
-            # boilerplate cardinalities
-            if df.isStreaming:
-                raise ValueError(
-                    f"line_dedup: boilerplate set has {len(boiler)} lines "
-                    f"(> max_inline={max_inline}); the Arrow-batched strip "
-                    "cannot compose with a keyed-state stage in one "
-                    "streaming plan (the engine's ArrowEval input path "
-                    "rejects state-emitter rows). Split the chain: run the "
-                    "stateful stage in the stream and the strip per "
-                    "micro-batch (foreachBatch), or raise max_inline if "
-                    "plan size permits"
-                )
-            bset = spark.sparkContext.broadcast(set(boiler))
+            # boilerplate cardinalities. A row-preserving mapInArrow,
+            # not a scalar pandas_udf: ArrowEvalPython casts its input
+            # rows to UnsafeRow, which fails (ClassCastException)
+            # below the keyed-state url_dedup in a streaming plan.
+            bset = spark.sparkContext.broadcast(frozenset(boiler))
+            i = df.columns.index(col)
 
-            @pandas_udf("string")
-            def strip(s):
+            def strip(batches):
+                import pyarrow as pa
+
                 bs = bset.value
-                return s.map(
-                    lambda t: "\n".join(
-                        ln for ln in t.split("\n") if ln and ln not in bs
-                    )
-                )
+                for rb in batches:
+                    text = rb.column(i)
+                    kept = [
+                        None if t is None else "\n".join(
+                            ln for ln in t.split("\n") if ln and ln not in bs
+                        )
+                        for t in text.to_pylist()
+                    ]
+                    yield rb.set_column(i, col, pa.array(kept, text.type))
 
-            return df.withColumn(col, strip(F.col(col)))
+            return df.mapInArrow(strip, df.schema)
 
         return strip_boilerplate
     if kind == "minhash_dedup":
@@ -786,12 +778,14 @@ def build_transform(cfg: Mapping[str, Any]) -> Handler:
             # struct — `carry` names the columns that ride along
             # (default: everything but the text column; list only what
             # the rollup needs, the text itself NEVER belongs in the
-            # state store). Upstream of this stage everything must be
-            # Catalyst (the sig is the map-only minhash_sig_expr, not
-            # the Arrow path — ArrowEval cannot consume state-emitter
-            # rows), and an upstream url_dedup stage must declare
-            # state_output_mode="append" (the planner rejects
-            # update-mode fmgws ahead of an aggregation).
+            # state store). The sig is the map-only minhash_sig_expr:
+            # a scalar Python UDF here is inlined into the banding
+            # explode once the projections collapse, and codegen
+            # rejects it (a row-preserving mapInArrow would compose,
+            # as the line_dedup strip does). An upstream
+            # url_dedup stage must declare state_output_mode="append"
+            # (the planner rejects update-mode fmgws ahead of an
+            # aggregation).
             ride = (
                 list(carry)
                 if carry is not None

@@ -756,7 +756,7 @@ _register_ann_enrich_pair()
 # --- r13: security detections from JSON (the reference's deployment
 # shape: kawad-style daemon configs wiring a detection over the event
 # pipe) — the brute-force chain is the contract pair; port_scan and
-# log_drift transform types carry config e2e tests (tests/test_config)
+# log_drift transform types carry config e2e tests (tests/test_config.py)
 
 
 @register(

@@ -552,11 +552,13 @@ def minhash_sig_expr(text: "F.Column") -> "F.Column":
     :func:`minhash_sigs_arrow` (same md5-once-per-shingle base, same
     permutations; both pinned against the DuckDB
     ``_oracle_minhash_sigs`` in test_llm), but interpreted, so several
-    times slower. It stays for the two places the Arrow stage cannot
-    go: a ``withColumn`` that keeps every row (the ``minhash_sig``
-    config transform), and a streaming plan below a keyed-state stage
-    (the streaming ``minhash_dedup`` transform after ``url_dedup``: the
-    planner rejects Arrow evaluation over state-emitter rows).
+    times slower. It stays for two callers that keep every row: the
+    ``minhash_sig`` config transform's ``withColumn``, and the
+    streaming ``minhash_dedup`` transform below ``url_dedup``. A scalar
+    Python UDF fails in that streaming plan: once the projections
+    collapse it is inlined into the banding ``explode``, where codegen
+    rejects it. A row-preserving ``mapInArrow`` over ``_minhash_fold``
+    composes there.
 
     Shape matters: each shingle's md5 is computed ONCE and all
     32 permutations derive from it inside one per-shingle transform,
@@ -923,9 +925,10 @@ def q_llm_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Since round 9 the plan runs REP-COLLAPSE (the q_llm_dup_clusters
     r8 playbook, r8 verdict item #5): the doc-level block join
-    measured α≈0.74 candidate growth at 10→25× (SCALE_PROBE) because
-    web-corpus fixtures are dominated by exact-duplicate fingerprint
-    groups that saturate 14-bit blocks. Blocking now runs over
+    measured α≈0.74 at 10→25× (r8 scale probe: 20.9 → 41.3 s wall,
+    306 M → 1.92 G block-pair candidates) because web-corpus fixtures
+    are dominated by exact-duplicate fingerprint groups that saturate
+    14-bit blocks. Blocking now runs over
     DISTINCT fingerprints only; qualifying rep pairs expand back to
     doc pairs through two fingerprint-keyed joins, and within-group
     (hamming-0) pairs come from a group self-join — both
@@ -1760,8 +1763,9 @@ def q_llm_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stream) against a growing corpus, where per-query cost grows only
 # with collisions-per-bucket. This operator pins |Q| = _FIXEDQ_N (the
 # smallest vec_ids — deterministic and present at every scale tier) and
-# is measured LINEAR-at-worst in corpus size in SCALE_PROBE.json
-# (r9 verdict item #1: ship the fixed-|Q| story as code, not prose).
+# measured LINEAR-at-worst in corpus size (last scale probe: 3.23 s at
+# 1x, 4.64 s at 25x; alpha 0.20 to 10x, -0.10 to 25x; r9 verdict item
+# #1: ship the fixed-|Q| story as code, not prose).
 
 _FIXEDQ_N = 64
 
@@ -1846,8 +1850,8 @@ def q_llm_ann_lsh_fixedq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query side differs — a bounded broadcast table whose size does
     NOT scale with the corpus, so total work is one linear bucketing
     pass plus O(|Q| x collisions/bucket) candidate scoring. Measured
-    linear-at-worst in SCALE_PROBE.json (the grow-with-corpus contract
-    row q_llm_ann_lsh stays alongside as the evaluation-mode
+    linear-at-worst: 3.23 s at 1x, 4.64 s at 25x (the grow-with-corpus
+    contract row q_llm_ann_lsh stays alongside as the evaluation-mode
     semantics)."""
     e = load_table(spark, sf_dir, "embeddings")
     qdf = e.orderBy("vec_id").limit(_FIXEDQ_N)
@@ -2522,7 +2526,7 @@ def q_llm_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     count + recall>=0.55 pinned TRUE. Floor pinned just below the
     measured operating point of the 16-byte code + 80-candidate rerank
     pool (r7 capacity sweep: 0.64 sf0.001 / 0.76 sf0.01 / 0.69 sf0.1 /
-    0.69 at 10× — RECALL_CURVE.json), so a regression back toward the
+    0.69 at 10× in the r7 recall probe), so a regression back toward the
     old 32-bit-code quality (0.27/0.12) is hash-visible (r6 verdict
     item #3; also asserted in tests/test_llm.py::test_ann_ivfpq_recall)."""
     return _ann_contract(spark, sf_dir, _ann_ivfpq_topk(spark, sf_dir), 0.55)
@@ -2614,9 +2618,10 @@ _PQ_TRAIN_ITERS = 10
 # IVF-PQ code capacity — dialed separately from the full-scan PQ
 # variant: residual quantization error COMPOUNDS with list pruning, so
 # the composed index needs finer codebooks. Operating point from the
-# round-7 capacity sweep (RECALL_CURVE.json "capacity"/"rerank"
-# curves): 16 sub-codes × 8 bits = 16 B/vector (the standard FAISS
-# IVFADC production size) with an 80-candidate rerank pool — recall
+# round-7 capacity sweep (10x recall 0.17 at M8xK16, 0.43 at M16xK16,
+# 0.69 at M16xK256; rerank pool 20/80/160 → 0.57/0.69/0.72): 16
+# sub-codes × 8 bits = 16 B/vector (the standard FAISS IVFADC
+# production size) with an 80-candidate rerank pool — recall
 # 0.69/0.69 at 1×/10× where the old 32-bit code plateaued at
 # 0.27/0.12. The 10× plateau the r6 verdict called data-bound was
 # CODE-CAPACITY-bound: doubling sub-codes and widening K recovers it.
@@ -2632,7 +2637,7 @@ def _pq_train_books(X, m: int, k: int, iters: int = _PQ_TRAIN_ITERS):
     k rows per subspace, fixed iteration count, single-threaded numpy
     arithmetic — reproducible on any cluster, preserving the module's
     no-hidden-randomness stance while fixing the measured recall
-    plateau of raw seed-slice codebooks (RECALL_CURVE.json: IVF-PQ was
+    plateau of raw seed-slice codebooks (r7 recall probe: IVF-PQ was
     quantization-bound at 0.12 recall at 10× — the codebook, not the
     probe width, was the binding constraint).
 
@@ -3692,8 +3697,9 @@ def q_llm_knn_classify_fixedq(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure, each train partition still emits only its local top-k per
     panel query from one numpy matmul, and everything downstream of
     the map stage is O(|Q|·k·partitions) — corpus growth only adds
-    perfectly parallel map-side work, the flat-above-10x shape
-    SCALE_PROBE.json measures for the fixedq family."""
+    perfectly parallel map-side work, the flat-above-10x shape the last
+    scale probe measured for the fixedq family (1.26 s at 10x, 4.11 s at
+    25x, 6.56 s at 50x)."""
     e = load_table(spark, sf_dir, "embeddings")
     qdf = e.orderBy("vec_id").limit(_FIXEDQ_N).select("vec_id", "embedding", "label")
     qids = [int(r.vec_id) for r in qdf.select("vec_id").collect()]
@@ -3849,7 +3855,7 @@ def q_llm_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     here shares (_minhash_band_candidates, oracle-mirrored), restricted
     to pairs touching the panel. Fixture recall pins ~1.0 at the 0.5
     cut — the LSH S-curve bound 1-(1-s^r)^b checked empirically in the
-    driver gate; tests/recall_curve.py sweeps the full curve.
+    driver gate.
 
     The panel size is the eval's COST knob (a production recall
     monitor dials it per run): the registered query pins the default

@@ -897,27 +897,38 @@ def test_dedup_recall_eval_transform_from_config(tmp_path, spark, sf_dir):
 _GOPHER_SUBSET = ["wordcount", "meanlen", "symbol", "bullet", "ellipsis", "alpha"]
 
 
-def _staged_url_docs(spark, sf_dir, tmp_path):
+def _staged_url_docs(spark, sf_dir, tmp_path, footer=None):
     """documents + the fixture's messy URL column, staged as parquet —
     the corpus a FineWeb-style config chain runs over (the raw table
-    has no url column; production crawls do)."""
+    has no url column; production crawls do). ``footer`` appends one
+    shared line to every third document, so the corpus has a
+    non-empty boilerplate set (the fixture's own lines never repeat)."""
     from pyspark.sql import functions as F
 
     from cheetah_spark.queries.curation import _messy_url_expr
 
+    text = F.col("text")
+    if footer is not None:
+        text = F.when(
+            F.col("doc_id") % 3 == 0, F.concat(text, F.lit("\n" + footer))
+        ).otherwise(text)
     src = str(tmp_path / "docs_with_url")
     (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "source", "lang", "text", _messy_url_expr().alias("url"))
+        .select("doc_id", "source", "lang", text.alias("text"),
+                _messy_url_expr().alias("url"))
         .write.parquet(src)
     )
     return src
 
 
-def test_fineweb_chain_from_config_batch(tmp_path, spark, sf_dir):
+@pytest.mark.parametrize("max_inline", [None, 0])
+def test_fineweb_chain_from_config_batch(tmp_path, spark, sf_dir, max_inline):
     """The r11-verdict item #5 chain: URL dedup → Gopher quality gate →
     corpus line dedup assembled from JSON alone, output equal to the
-    independently composed DataFrame pipeline row-for-row."""
+    independently composed DataFrame pipeline row-for-row, on both
+    strip paths (inline IN-list, and ``max_inline=0``'s broadcast
+    Arrow strip)."""
     from pyspark.sql import functions as F
 
     from cheetah_spark.__main__ import main
@@ -928,7 +939,7 @@ def test_fineweb_chain_from_config_batch(tmp_path, spark, sf_dir):
         gopher_rule_exprs,
     )
 
-    src = _staged_url_docs(spark, sf_dir, tmp_path)
+    src = _staged_url_docs(spark, sf_dir, tmp_path, footer="share this page")
     cfg = {
         "source": {"type": "parquet", "path": src},
         "transforms": [
@@ -939,13 +950,16 @@ def test_fineweb_chain_from_config_batch(tmp_path, spark, sf_dir):
              "rules": _GOPHER_SUBSET},
             {"type": "line_dedup", "column": "text", "from": src},
         ],
-        "sink": {"type": "memory", "name": "cli_fineweb_batch"},
+        "sink": {"type": "memory", "name": f"cli_fineweb_batch_{max_inline}"},
     }
+    if max_inline is not None:
+        cfg["transforms"][-1]["max_inline"] = max_inline
     f = tmp_path / "cli_fineweb_batch.json"
     f.write_text(json.dumps(cfg))
     assert main(["run", "--config", str(f)]) == 0
     got = {
-        r.doc_id: r.asDict() for r in spark.table("cli_fineweb_batch").collect()
+        r.doc_id: r.asDict()
+        for r in spark.table(f"cli_fineweb_batch_{max_inline}").collect()
     }
     # the same chain composed directly
     d = spark.read.parquet(src).withColumn(
@@ -963,6 +977,7 @@ def test_fineweb_chain_from_config_batch(tmp_path, spark, sf_dir):
     rules = gopher_rule_exprs(gopher_feat_exprs(F.col("text")))
     d = d.where(~reduce(or_, [rules[k] for k in _GOPHER_SUBSET]))
     bset = set(boiler_line_set(spark.read.parquet(src)))
+    assert bset == {"share this page"}
     expect = {}
     for r in d.collect():
         row = r.asDict()
@@ -974,7 +989,8 @@ def test_fineweb_chain_from_config_batch(tmp_path, spark, sf_dir):
     assert expect  # the chain must not degenerate to an empty corpus
 
 
-def test_fineweb_chain_from_config_streaming(tmp_path, spark, sf_dir):
+@pytest.mark.parametrize("max_inline", [None, 0])
+def test_fineweb_chain_from_config_streaming(tmp_path, spark, sf_dir, max_inline):
     """The same JSON chain over a STREAMING source: url_dedup routes
     through keyed keep-min state (the first micro-batch containing a
     canonical URL emits its min-id row — deterministic under the
@@ -982,7 +998,8 @@ def test_fineweb_chain_from_config_streaming(tmp_path, spark, sf_dir):
     s_config_fineweb's driver row). Asserted here: daemon exit 0 plus
     the chain's invariants — one survivor per canonical URL, every
     survivor passed the Gopher gate, no survivor retains a boilerplate
-    line."""
+    line. ``max_inline=0`` sends the strip down the broadcast
+    pandas_udf path, which runs below the keyed-state stage too."""
     from functools import reduce
     from operator import or_
 
@@ -996,7 +1013,7 @@ def test_fineweb_chain_from_config_streaming(tmp_path, spark, sf_dir):
         gopher_rule_exprs,
     )
 
-    src = _staged_url_docs(spark, sf_dir, tmp_path)
+    src = _staged_url_docs(spark, sf_dir, tmp_path, footer="share this page")
     cfg = {
         "source": {
             "type": "parquet",
@@ -1013,13 +1030,15 @@ def test_fineweb_chain_from_config_streaming(tmp_path, spark, sf_dir):
             {"type": "line_dedup", "column": "text", "from": src},
         ],
         # update mode: the chain ends in the url_dedup keyed-state stage
-        "sink": {"type": "memory", "name": "cli_fineweb_stream",
+        "sink": {"type": "memory", "name": f"cli_fineweb_stream_{max_inline}",
                  "output_mode": "update"},
     }
+    if max_inline is not None:
+        cfg["transforms"][-1]["max_inline"] = max_inline
     f = tmp_path / "cli_fineweb_stream.json"
     f.write_text(json.dumps(cfg))
     assert main(["run", "--config", str(f), "--timeout", "20"]) == 0
-    out = spark.table("cli_fineweb_stream")
+    out = spark.table(f"cli_fineweb_stream_{max_inline}")
     n = out.count()
     assert n > 0
     # one survivor per canonical URL
@@ -1041,6 +1060,8 @@ def test_fineweb_chain_from_config_streaming(tmp_path, spark, sf_dir):
     assert fails == 0
     # no survivor retains a boilerplate line
     bset = set(boiler_line_set(spark.read.parquet(src)))
+    assert bset == {"share this page"}
+    assert pre.where(F.col("text").contains("share this page")).count() > 0
     for r in out.select("text").collect():
         assert not (set(ln for ln in r.text.split("\n") if ln) & bset)
 

@@ -140,7 +140,7 @@ def test_ann_ivfpq_recall(spark, sf_dir):
     recall = len(exact & approx) / len(exact)
     # 16-byte codes (M=16 × 8-bit) + 80-candidate rerank pool, the r7
     # capacity-sweep operating point: measured 0.64 sf0.001 / 0.76
-    # sf0.01 / 0.69 sf0.1 / 0.69 at 10× (RECALL_CURVE.json); floor
+    # sf0.01 / 0.69 sf0.1 / 0.69 at 10× (r7 recall probe); floor
     # pinned just below so codebook-quality regressions fail here.
     assert recall >= 0.55, f"IVF-PQ recall too low: {recall:.2f}"
 
