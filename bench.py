@@ -1,5 +1,6 @@
 """Per-round benchmark: the full declared-query suite at
-$SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS], plus
+$SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS] (default:
+the CPUs this process may run on), plus
 the identity-pipeline throughput mirror of the reference's
 BenchmarkMem (1e6 × 20-byte messages, reference test/stream_test.go:29-41).
 
@@ -41,10 +42,10 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from cheetah_spark.registry import REGISTRY, _ensure_loaded  # noqa: E402
-from cheetah_spark.session import get_spark  # noqa: E402
+from cheetah_spark.session import default_cpus, get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = default_cpus()
 WARM_SF_DIR = "/root/testdata/sf0.001"  # tiny: warm-up work, not load
 
 # Committed quiet-window identity baseline (sec per 1e6 rows, median of

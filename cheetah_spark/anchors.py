@@ -11,94 +11,30 @@ across every index/sketch variant and every process — they must not
 ride the per-query hot path (round-4 verdict: the anchor cost inflated
 three queries past the 2x bench gate).
 
-``anchor_df`` persists a bounded anchor table as parquet under the
-fixture cache, keyed by the source tables' (mtime, size) so a
-regenerated fixture invalidates its anchors, with a per-process row
-memo on top.  Doubles survive the parquet round trip bit-exactly
-(IEEE754 is stored verbatim), so hash oracles are unaffected; anchor
-builders must not emit timestamp columns (the NTZ footer gotcha —
-see streaming.fixture_stale).
+An anchor is one directory of the derived-fixture store
+(``cheetah_spark.derived``): a single parquet file under
+``FIXTURE_ROOT/<sf>/anchors/<name>``, rebuilt when a source table, the
+build function's source, a declared helper's source or ``params``
+changes. ``anchor_df``/``anchor_rows`` read that directory and keep its
+rows in a per-process memo keyed by the directory's key. Doubles
+survive the parquet round trip bit-exactly (IEEE754 is stored
+verbatim), so hash oracles are unaffected; anchor build functions must
+not emit timestamp columns (a parquet footer re-read infers
+TIMESTAMP_NTZ).
 """
 
 from __future__ import annotations
 
-import hashlib
-import inspect
-import json
-import os
-import shutil
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 
 from cheetah_spark.catalog import table_path
-from cheetah_spark.streaming import FIXTURE_ROOT, _tag
+from cheetah_spark.derived import _derive
+from cheetah_spark.streaming import _tag
 
-# Bumped when the anchor storage layout itself changes (marker schema,
-# parquet layout) — orthogonal to per-builder identity below.
-_ANCHOR_FORMAT_VERSION = "2"
-
-# (sf_dir, name, identity) -> (schema, [Row]) — anchors are bounded
+# (anchor dir, its store key) -> (schema, [Row]) — anchors are bounded
 # (|groups| or |Q|xk rows), so holding them on the driver is the same
 # legitimate pattern as k-means centroids or BPE merge lists.
 _memo: dict = {}
-
-
-def _src_digest(fn) -> str:
-    try:
-        src = inspect.getsource(fn)
-    except (OSError, TypeError):
-        src = getattr(fn, "__qualname__", repr(fn))
-    return hashlib.sha256(src.encode()).hexdigest()[:16]
-
-
-def _builder_identity(build, params: str, helpers: tuple = ()) -> str:
-    """Code-identity component of the staleness key (round-6 verdict
-    item #1): hash of the builder function's OWN SOURCE plus the
-    explicit ``params`` string, so editing the builder's body (new
-    constant, different tie-break) invalidates its persisted anchors
-    even when the author forgets to bump ``params``.
-
-    ``helpers`` (r8 verdict item #9, promoting the r7 advice nit):
-    DECLARED value-defining callables the builder delegates to
-    (X.hash56, a shared expression builder, an operator entry point)
-    are source-hashed into the identity too, so editing a helper's
-    body invalidates its dependents' persisted anchors without a
-    manual ``params`` bump. Declaration beats automatic
-    transitive-closure capture (considered and rejected: source
-    capture of a call graph is brittle across import cycles and
-    decorators); anything NOT declared still needs ``params`` or the
-    ``_ANCHOR_FORMAT_VERSION`` knob, and the differential hash gate
-    remains the loud backstop for silent helper drift.
-
-    Source is the right granularity: it is stable across
-    processes/machines (unlike code-object hashes, which vary with
-    Python version and closure layout) and changes exactly when the
-    builder's definition changes.  Builders whose source is
-    unavailable (C extensions, exec'd code) degrade to their qualified
-    name — ``params`` then carries the versioning burden, as before."""
-    digest = _src_digest(build)
-    helper_part = ""
-    if helpers:
-        helper_part = ";helpers:" + ",".join(_src_digest(h) for h in helpers)
-    return f"fmt:{_ANCHOR_FORMAT_VERSION};code:{digest}{helper_part};params:{params}"
-
-
-def _source_key(sf_dir: str, source_tables: tuple[str, ...]) -> str:
-    """Staleness key: (mtime_ns, size) of every source fixture file.
-    The testdata fixtures are single files; directories are walked."""
-    parts = []
-    for t in source_tables:
-        p = table_path(sf_dir, t)
-        if os.path.isdir(p):
-            for root, _dirs, files in sorted(os.walk(p)):
-                for f in sorted(files):
-                    st = os.stat(os.path.join(root, f))
-                    parts.append(f"{t}/{f}:{st.st_mtime_ns}:{st.st_size}")
-        else:
-            st = os.stat(p)
-            parts.append(f"{t}:{st.st_mtime_ns}:{st.st_size}")
-    return ";".join(parts)
 
 
 def anchor_df(
@@ -117,12 +53,11 @@ def anchor_df(
     preserves doubles), so downstream plans treat it as a broadcastable
     local relation, never a recomputation of the anchor scan.
 
-    The staleness key has three components: the source fixtures'
-    (mtime, size), the hash of the builder function's SOURCE CODE, and
-    ``params`` (explicit constants / version tag).  Either code edits
-    or param changes invalidate persisted anchors, so a code revision
-    can never be silently served values computed by an older builder
-    (round-5 advice + round-6 verdict item #1)."""
+    ``build``'s own source and the DECLARED ``helpers`` it delegates to
+    (X.hash56, a shared expression function, an operator entry point)
+    are source-hashed into the key, with ``params`` for anything the
+    source does not spell out: a code revision can never be served
+    values computed by an older build function."""
     schema, rows = anchor_rows(spark, sf_dir, name, source_tables, build, params, helpers)
     return spark.createDataFrame(rows, schema)
 
@@ -139,60 +74,21 @@ def anchor_rows(
     """Like ``anchor_df`` but returns the raw ``(schema, rows)`` memo
     entry for callers that assemble contract rows driver-side
     (``_ann_contract``) without paying a createDataFrame."""
-    identity = _builder_identity(build, params, helpers)
-    memo_key = (sf_dir, name, identity)
+
+    def write(out: str) -> None:
+        df = build(spark, sf_dir)
+        spark.createDataFrame(df.collect(), df.schema).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(out)
+
+    memo_key = _derive(
+        f"{_tag(sf_dir)}/anchors/{name}",
+        [table_path(sf_dir, t) for t in source_tables],
+        write,
+        params,
+        (build, *helpers),
+    )
     if memo_key not in _memo:
-        _memo[memo_key] = _load_or_build(
-            spark, sf_dir, name, source_tables, build, identity
-        )
+        df = spark.read.parquet(memo_key[0])
+        _memo[memo_key] = (df.schema, df.collect())
     return _memo[memo_key]
-
-
-def _load_or_build(spark, sf_dir, name, source_tables, build, identity):
-    root = f"{FIXTURE_ROOT}/{_tag(sf_dir)}/anchors"
-    path = f"{root}/{name}"
-    marker = f"{path}/_ANCHOR_KEY.json"
-    key = f"{_source_key(sf_dir, source_tables)}|builder:{identity}"
-    if os.path.exists(marker):
-        try:
-            with open(marker) as f:
-                if json.load(f).get("key") == key:
-                    df = spark.read.parquet(f"{path}/data")
-                    return (df.schema, df.collect())
-        except Exception:
-            pass  # unreadable/stale cache — rebuild below
-        shutil.rmtree(path, ignore_errors=True)
-    df = build(spark, sf_dir)
-    schema, rows = df.schema, df.collect()
-    # Atomic publish: write into a unique temp dir, rename into place.
-    # (Two racing processes both build correct anchors; rename loser is
-    # discarded. Single-writer in practice — bench hygiene forbids
-    # concurrent Spark runs — but cheap to be safe.)
-    tmp = f"{root}/.tmp-{name}-{uuid.uuid4().hex[:8]}"
-    try:
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(
-            f"{tmp}/data"
-        )
-        with open(f"{tmp}/_ANCHOR_KEY.json", "w") as f:
-            json.dump({"key": key, "sources": list(source_tables)}, f)
-        os.makedirs(root, exist_ok=True)
-        if not os.path.exists(marker):
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            shutil.rmtree(tmp, ignore_errors=True)
-    except Exception as exc:
-        # rows are still good for THIS process; surface the broken
-        # persistence (perms, disk full) so repeated rebuild cost in
-        # every process is diagnosable rather than silent
-        import sys
-
-        print(
-            f"cheetah_spark.anchors: persisting anchor {name!r} failed "
-            f"({type(exc).__name__}: {exc}); continuing unpersisted",
-            file=sys.stderr,
-        )
-        shutil.rmtree(tmp, ignore_errors=True)
-    return (schema, rows)

@@ -53,6 +53,16 @@ from cheetah_spark.sources import (
     TextScannerSource,
 )
 
+# line_dedup's inline-literal ceiling (ADVICE r12): a boilerplate set
+# of at most this many lines is stripped by a literal IN-list (an InSet
+# membership test per line, a plan with zero Python in it); a larger one
+# by the Arrow broadcast-set strip, which covers any cardinality, batch
+# or streaming. The literal list inflates every plan/serialize cycle.
+# Measured warm on local[4]: ≤2k literals ≈ free (+0.05 s/action), 10k
+# ≈ +6 s, 20k ≈ +11 s, 100k ≈ +60 s; 2k stays well inside the flat
+# region.
+INLINE_BOILER_LINES = 2_000
+
 # The reference config spells these camelCase (README.md:210-216);
 # accept both spellings.
 _MQTT_KEY_ALIASES = {
@@ -659,15 +669,6 @@ def build_transform(cfg: Mapping[str, Any]) -> Handler:
         min_docs = int(cfg.get("min_docs", 2))
         corpus_path = cfg.get("from")
 
-        # Inline-literal ceiling (ADVICE r12): the inline path plans an
-        # InSet membership test per line — O(1) lookup, but the literal
-        # list itself inflates every plan/serialize cycle. Measured warm
-        # on local[4]: ≤2k literals ≈ free (+0.05 s/action), 10k ≈ +6 s,
-        # 20k ≈ +11 s, 100k ≈ +60 s. Default stays well inside the flat
-        # region; the Arrow broadcast-set path covers any cardinality,
-        # batch or streaming, so inline only needs genuinely small sets
-        # (its purpose is a plan with zero Python in it).
-        max_inline = int(cfg.get("max_inline", 2_000))
 
         def strip_boilerplate(df: DataFrame) -> DataFrame:
             from cheetah_spark.queries.curation import boiler_line_set
@@ -687,7 +688,7 @@ def build_transform(cfg: Mapping[str, Any]) -> Handler:
             else:
                 corpus = df
             boiler = sorted(boiler_line_set(corpus, col, id_col, min_docs))
-            if len(boiler) <= max_inline:
+            if len(boiler) <= INLINE_BOILER_LINES:
                 # small set: a literal IN-list Catalyst filter keeps the
                 # whole strip JVM-side — zero Python in the plan (the
                 # q_config_fineweb plan test pins it). isin() folds to
@@ -909,8 +910,6 @@ def build_transform(cfg: Mapping[str, Any]) -> Handler:
                 ivf_assign_fn,
                 ivf_probe_topk,
             )
-            from cheetah_spark.streaming import FIXTURE_ROOT
-
             spark = df.sparkSession
             ref = spark.read.parquet(index_path).select(
                 F.col(index_id).alias("vec_id"), F.col(index_emb).alias("embedding")
@@ -925,12 +924,13 @@ def build_transform(cfg: Mapping[str, Any]) -> Handler:
             cent = ref.orderBy("vec_id").limit(n_lists).collect()
             C = np.array([r.embedding for r in cent], dtype=np.float64)
             C /= np.linalg.norm(C, axis=1, keepdims=True)
-            out = (
-                f"{FIXTURE_ROOT}/ann_index/"
+            store_name = (
+                "ann_index/"
                 f"{hashlib.sha256(index_path.encode()).hexdigest()[:12]}_{n_lists}"
             )
             index_dir = _ivf_index_core(
-                spark, ref, ivf_assign_fn(C), n_lists, index_path, out
+                spark, ref, ivf_assign_fn(C), n_lists, index_path, store_name,
+                params=f"id:{index_id};embedding:{index_emb}",
             )
             queries = df.select(
                 F.col(id_col).alias("vec_id"), F.col(emb_col).alias("embedding")

@@ -305,47 +305,35 @@ def mixed_media_table(docs: DataFrame) -> DataFrame:
 # Synthesized-media fixture persistence. The corpus a production decode
 # pipeline runs over HAS its media bytes on disk; synthesizing them per
 # query run measures the test harness, not the operator. Build each
-# synthetic media table once per fixture (same policy as the streaming
-# replay dirs and verification anchors) and let the decode queries scan
-# the persisted parquet — the measured plan is then scan → Arrow decode
-# → aggregate, one Python stage instead of two chained ones. The
-# version tag invalidates the cache when the synthesis formulas change.
-MEDIA_FIXTURE_VERSION = "v1"
+# synthetic media table once per fixture (a derived-fixture store
+# directory, like the streaming replay dirs and verification anchors)
+# and let the decode queries scan the persisted parquet — the measured
+# plan is then scan → Arrow decode → aggregate, one Python stage
+# instead of two chained ones.
 
 
 def media_fixture_dir(spark: SparkSession, sf_dir: str, kind: str) -> str:
     """Path of the persisted synthetic media table for ``sf_dir``;
     builds it on first use. ``kind``: 'mixed' (four-type envelope,
     mixed_media_table) or 'real' (png/wav only, real_media_table).
-
-    Staleness: the READY marker records the source documents fixture's
-    (mtime, size) — a regenerated fixture rebuilds the media table
-    instead of silently serving payloads synthesized from the old
-    corpus (the anchors.py policy)."""
-    import os
-    import shutil
-
+    Keyed by the documents fixture and the synthesis function's
+    source."""
     from cheetah_spark.catalog import load_table, table_path
-    from cheetah_spark.streaming import FIXTURE_ROOT, _tag
+    from cheetah_spark.derived import derived_dir
+    from cheetah_spark.streaming import _tag
 
-    out = f"{FIXTURE_ROOT}/{_tag(sf_dir)}/media_{kind}_{MEDIA_FIXTURE_VERSION}"
-    done = f"{out}/_FIXTURE_READY"
-    st = os.stat(table_path(sf_dir, "documents"))
-    key = f"{st.st_mtime_ns}:{st.st_size}"
-    if os.path.exists(done):
-        try:
-            with open(done) as fh:
-                if fh.read() == key:
-                    return out
-        except OSError:
-            pass
-        shutil.rmtree(out, ignore_errors=True)
-    docs = load_table(spark, sf_dir, "documents")
-    t = mixed_media_table(docs) if kind == "mixed" else real_media_table(docs)
-    t.write.mode("overwrite").parquet(out)
-    with open(done, "w") as fh:
-        fh.write(key)
-    return out
+    synth = mixed_media_table if kind == "mixed" else real_media_table
+
+    def build(out: str) -> None:
+        synth(load_table(spark, sf_dir, "documents")).write.mode("overwrite").parquet(out)
+
+    return derived_dir(
+        f"{_tag(sf_dir)}/media_{kind}",
+        [table_path(sf_dir, "documents")],
+        build,
+        params=f"magic:{sorted(MAGIC.items())}",
+        helpers=(synth,),
+    )
 
 
 # ---------------------------------------------------------------------------

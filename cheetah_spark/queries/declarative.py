@@ -338,7 +338,14 @@ def _fineweb_src_dir(spark: SparkSession, sf_dir: str) -> str:
         )
 
     return _ordered_stream_dir(
-        spark, sf_dir, "documents", ("doc_id",), 4, "fineweb_src_4", transform=add_url
+        spark,
+        sf_dir,
+        "documents",
+        ("doc_id",),
+        4,
+        "fineweb_src_4",
+        transform=add_url,
+        helpers=(_messy_url_expr,),
     )
 
 

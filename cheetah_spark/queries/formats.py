@@ -19,35 +19,29 @@ PushedFilters.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cheetah_spark.catalog import ensure_instant_reads, load_table
+from cheetah_spark.catalog import ensure_instant_reads, load_table, table_path
+from cheetah_spark.derived import derived_dir
 from cheetah_spark.queries._util import dsum2, oracle_dsum2
 from cheetah_spark.registry import register
-from cheetah_spark.streaming import FIXTURE_ROOT, _tag, fixture_stale
+from cheetah_spark.streaming import _tag
 
 
 def _events_format_fixture(spark: SparkSession, sf_dir: str, fmt: str, partition_by: str | None = None) -> str:
-    """Materialize events once in the target format/layout (cached;
-    rebuilt if a stale pre-instant-contract fixture is found)."""
+    """Materialize events once in the target format/layout (a
+    derived-fixture store directory)."""
     ensure_instant_reads(spark)
-    suffix = f"events_{fmt}" + (f"_by_{partition_by}" if partition_by else "")
-    out = f"{FIXTURE_ROOT}/{_tag(sf_dir)}/{suffix}"
-    done = f"{out}/_FIXTURE_READY"
-    if os.path.exists(done) and fixture_stale(spark, out, fmt=fmt):
-        import shutil
 
-        shutil.rmtree(out, ignore_errors=True)
-    if not os.path.exists(done):
+    def build(out: str) -> None:
         writer = load_table(spark, sf_dir, "events").write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(partition_by)
         getattr(writer, "orc" if fmt == "orc" else "parquet")(out)
-        open(done, "w").close()
-    return out
+
+    suffix = f"events_{fmt}" + (f"_by_{partition_by}" if partition_by else "")
+    return derived_dir(f"{_tag(sf_dir)}/{suffix}", [table_path(sf_dir, "events")], build)
 
 
 @register(
@@ -156,9 +150,8 @@ def q_scan_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     definition instead; the read path (NULL-filling column pruning)
     is identical either way."""
     ensure_instant_reads(spark)
-    out = f"{FIXTURE_ROOT}/{_tag(sf_dir)}/events_schema_gen"
-    done = f"{out}/_FIXTURE_READY"
-    if not os.path.exists(done):
+
+    def build(out: str) -> None:
         e = load_table(spark, sf_dir, "events")
         old = e.where(F.col("event_id") % 2 == 0).select("event_id", "event_type", "user_id")
         new = e.where(F.col("event_id") % 2 == 1).select(
@@ -166,7 +159,10 @@ def q_scan_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         old.write.mode("overwrite").parquet(f"{out}/gen=0")
         new.write.mode("overwrite").parquet(f"{out}/gen=1")
-        open(done, "w").close()
+
+    out = derived_dir(
+        f"{_tag(sf_dir)}/events_schema_gen", [table_path(sf_dir, "events")], build
+    )
     df = spark.read.option("mergeSchema", "true").parquet(f"{out}/gen=0", f"{out}/gen=1")
     return df.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
@@ -203,16 +199,16 @@ def q_scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     length(bytes) across engines."""
     import pyarrow.parquet as pq
 
-    out = f"{FIXTURE_ROOT}/{_tag(sf_dir)}/doc_blobs"
-    done = f"{out}/_FIXTURE_READY"
-    if not os.path.exists(done):
-        os.makedirs(out, exist_ok=True)
-        tbl = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
+    src = table_path(sf_dir, "documents")
+
+    def build(out: str) -> None:
+        tbl = pq.read_table(src, columns=["doc_id", "text"])
         for doc_id, text in zip(tbl.column("doc_id").to_pylist(), tbl.column("text").to_pylist()):
             if doc_id % 50 == 0:
                 with open(f"{out}/doc_{doc_id}.txt", "wb") as f:
                     f.write(text.encode("utf-8"))
-        open(done, "w").close()
+
+    out = derived_dir(f"{_tag(sf_dir)}/doc_blobs", [src], build)
     df = spark.read.format("binaryFile").option("pathGlobFilter", "*.txt").load(out)
     return df.agg(
         F.count("*").alias("n_files"),
@@ -258,6 +254,8 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             # session while old locations persist — a fixed /tmp path
             # cleared up front avoids both failure modes
             import shutil
+
+            from cheetah_spark.streaming import FIXTURE_ROOT
 
             loc = f"{FIXTURE_ROOT}/bucketed/{tbl}"
             shutil.rmtree(loc, ignore_errors=True)

@@ -18,16 +18,15 @@ not in Python.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cheetah_spark.catalog import load_table
+from cheetah_spark.catalog import load_table, table_path
+from cheetah_spark.derived import derived_dir
 from cheetah_spark.functions import journald as JD
 from cheetah_spark.functions import text as X
 from cheetah_spark.registry import register
-from cheetah_spark.streaming import FIXTURE_ROOT, _tag
+from cheetah_spark.streaming import _tag
 
 _MOD = 1_000_000_007
 _NL = "\n"
@@ -70,9 +69,8 @@ def journald_capture_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build (once) the export-format capture: entries separated by
     blank lines (writer lineSep '\\n\\n'), the exact framing
     ``journalctl -o export`` emits for text fields."""
-    out = f"{FIXTURE_ROOT}/{_tag(sf_dir)}/journald_capture"
-    ready = f"{out}/_FIXTURE_READY"
-    if not os.path.exists(ready):
+
+    def build(out: str) -> None:
         e = load_table(spark, sf_dir, "events")
         (
             e.select(_entry_col().alias("value"))
@@ -80,8 +78,13 @@ def journald_capture_dir(spark: SparkSession, sf_dir: str) -> str:
             .option("lineSep", "\n\n")
             .text(out)
         )
-        open(ready, "w").close()
-    return out
+
+    return derived_dir(
+        f"{_tag(sf_dir)}/journald_capture",
+        [table_path(sf_dir, "events")],
+        build,
+        helpers=(_entry_col,),
+    )
 
 
 def _journald_oracle() -> str:

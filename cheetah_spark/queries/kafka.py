@@ -19,24 +19,22 @@ timestamp_ms = epoch millis derived from event_id.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cheetah_spark.catalog import load_table
+from cheetah_spark.catalog import load_table, table_path
+from cheetah_spark.derived import derived_dir
 from cheetah_spark.registry import register
-from cheetah_spark.streaming import FIXTURE_ROOT, _tag, run_stream_to_completion
+from cheetah_spark.streaming import _tag, run_stream_to_completion
 
 _SUBSCRIBE = "logs/click,logs/error"  # two of the five topics
 
 
 def kafka_capture_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build (once) the NDJSON broker capture the replay source reads."""
-    out = f"{FIXTURE_ROOT}/{_tag(sf_dir)}/kafka_capture"
-    ready = f"{out}/_FIXTURE_READY"
-    if not os.path.exists(ready):
+
+    def build(out: str) -> None:
         e = load_table(spark, sf_dir, "events")
         part = (F.col("user_id") % 4).cast("int")
         topic = F.concat(F.lit("logs/"), F.col("event_type"))
@@ -61,8 +59,10 @@ def kafka_capture_dir(spark: SparkSession, sf_dir: str) -> str:
             )
         )
         cap.write.mode("overwrite").json(out)
-        open(ready, "w").close()
-    return out
+
+    return derived_dir(
+        f"{_tag(sf_dir)}/kafka_capture", [table_path(sf_dir, "events")], build
+    )
 
 
 _ENVELOPE_ORACLE = f"""

@@ -16,19 +16,13 @@ JSON ``{"event_id": ..., "user_id": ..., "event_type": ...}``."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cheetah_spark.catalog import load_table
+from cheetah_spark.catalog import load_table, table_path
+from cheetah_spark.derived import derived_dir
 from cheetah_spark.registry import register
-from cheetah_spark.streaming import (
-    FIXTURE_ROOT,
-    _tag,
-    events_replay_chunk,
-    run_stream_to_completion,
-)
+from cheetah_spark.streaming import _tag, events_replay_chunk, run_stream_to_completion
 
 N_SHARDS = 4
 
@@ -37,9 +31,8 @@ def kinesis_capture_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build (once) the NDJSON capture the replay source reads — also
     the PutRecords feed the live-HTTP conformance test routes through
     the loopback service."""
-    out = f"{FIXTURE_ROOT}/{_tag(sf_dir)}/kinesis_capture"
-    ready = f"{out}/_FIXTURE_READY"
-    if not os.path.exists(ready):
+
+    def build(out: str) -> None:
         e = load_table(spark, sf_dir, "events")
         cap = e.select(
             F.concat(F.lit("u"), (F.col("user_id") % 10).cast("string")).alias(
@@ -54,8 +47,10 @@ def kinesis_capture_dir(spark: SparkSession, sf_dir: str) -> str:
             ).alias("data"),
         )
         cap.write.mode("overwrite").json(out)
-        open(ready, "w").close()
-    return out
+
+    return derived_dir(
+        f"{_tag(sf_dir)}/kinesis_capture", [table_path(sf_dir, "events")], build
+    )
 
 
 # the same MD5-nibble routing in ANSI SQL (DuckDB): high nibble of

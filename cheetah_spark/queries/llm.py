@@ -2092,33 +2092,25 @@ def q_llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_index_core(
-    spark: SparkSession, e: DataFrame, assign, n_lists: int, src_path: str, out: str
+    spark: SparkSession,
+    e: DataFrame,
+    assign,
+    n_lists: int,
+    src_path: str,
+    name: str,
+    params: str = "",
 ) -> str:
     """Build (once per source+code generation) a cid-PARTITIONED
-    parquet IVF index at ``out`` and return it — the offline
-    index-build discipline, on disk in the shape a probe can PRUNE:
-    one directory per inverted list, so a reader filtering
-    ``WHERE cid IN (probed)`` lists only nprobe-ish directories. Keyed
-    by the source's (mtime, size) AND the assignment code's source
-    digest (the anchors discipline: editing the builder or
-    regenerating the source invalidates the persisted index without a
-    manual version bump). ``e`` must carry (vec_id, embedding)."""
-    import hashlib
-    import inspect
-    import os
-    import shutil
+    parquet IVF index, store directory ``name``, and return it — the
+    offline index-build discipline, on disk in the shape a probe can
+    PRUNE: one directory per inverted list, so a reader filtering
+    ``WHERE cid IN (probed)`` lists only nprobe-ish directories. The
+    derived-fixture store keys it by ``src_path`` and the assignment
+    code's source, so regenerating the source or editing the build
+    rebuilds it. ``e`` must carry (vec_id, embedding)."""
+    from cheetah_spark.derived import derived_dir
 
-    st = os.stat(src_path)
-    digest = hashlib.sha256(
-        (
-            inspect.getsource(assign)
-            + f";lists:{n_lists};src:{st.st_mtime_ns}:{st.st_size}"
-        ).encode()
-    ).hexdigest()[:16]
-    marker = f"{out}/_INDEX_READY"
-    if os.path.exists(marker) and open(marker).read().strip() != digest:
-        shutil.rmtree(out, ignore_errors=True)
-    if not os.path.exists(marker):
+    def build(out: str) -> None:
         (
             e.select("vec_id", "embedding")
             .mapInPandas(assign, "vec_id long, cid int, embedding array<float>")
@@ -2126,9 +2118,10 @@ def _ivf_index_core(
             .partitionBy("cid")
             .parquet(out)
         )
-        with open(marker, "w") as fh:
-            fh.write(digest)
-    return out
+
+    return derived_dir(
+        name, [src_path], build, f"lists:{n_lists};{params}", helpers=(assign,)
+    )
 
 
 def _ivf_index_dir(
@@ -2137,7 +2130,7 @@ def _ivf_index_dir(
     """The registered-contract cache location of :func:`_ivf_index_core`
     for the ``sf_dir`` embeddings fixture."""
     from cheetah_spark.catalog import table_path
-    from cheetah_spark.streaming import FIXTURE_ROOT, _tag
+    from cheetah_spark.streaming import _tag
 
     suffix = "" if n_lists == _IVF_LISTS else f"_{n_lists}"
     return _ivf_index_core(
@@ -2146,7 +2139,7 @@ def _ivf_index_dir(
         assign,
         n_lists,
         table_path(sf_dir, "embeddings"),
-        f"{FIXTURE_ROOT}/{_tag(sf_dir)}/ivf_index_cid{suffix}",
+        f"{_tag(sf_dir)}/ivf_index_cid{suffix}",
     )
 
 
@@ -3196,13 +3189,11 @@ def _fingerprint_index_dir(spark: SparkSession, sf_dir: str) -> str:
     new crawl batch against. Stored as parquet keyed by content_fp;
     at 100 TB this is a bucketed table on the fingerprint so the
     per-batch anti-join co-locates without reshuffling the index."""
-    import os
+    from cheetah_spark.catalog import table_path
+    from cheetah_spark.derived import derived_dir
+    from cheetah_spark.streaming import _tag
 
-    from cheetah_spark.streaming import FIXTURE_ROOT, _tag
-
-    out = f"{FIXTURE_ROOT}/{_tag(sf_dir)}/fp_index"
-    ready = f"{out}/_FIXTURE_READY"
-    if not os.path.exists(ready):
+    def build(out: str) -> None:
         d = load_table(spark, sf_dir, "documents").where(
             F.col("doc_id") % _INCR_SPLIT < 3
         )
@@ -3212,8 +3203,13 @@ def _fingerprint_index_dir(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(out)
         )
-        open(ready, "w").close()
-    return out
+
+    return derived_dir(
+        f"{_tag(sf_dir)}/fp_index",
+        [table_path(sf_dir, "documents")],
+        build,
+        helpers=(X.norm_text,),
+    )
 
 
 @register(

@@ -14,15 +14,14 @@ payload round-trip all match.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cheetah_spark.catalog import load_table
+from cheetah_spark.catalog import load_table, table_path
+from cheetah_spark.derived import derived_dir
 from cheetah_spark.registry import register
 from cheetah_spark.sources import MqttReplaySource, mqtt_filter_regex
-from cheetah_spark.streaming import FIXTURE_ROOT, _tag, run_stream_to_completion
+from cheetah_spark.streaming import _tag, run_stream_to_completion
 
 _FILTER = "sensors/+/3"  # one wildcard level, exercised in both engines
 _SUB_QOS = 1
@@ -30,9 +29,8 @@ _SUB_QOS = 1
 
 def mqtt_capture_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build (once) the NDJSON broker capture the replay source reads."""
-    out = f"{FIXTURE_ROOT}/{_tag(sf_dir)}/mqtt_capture"
-    ready = f"{out}/_FIXTURE_READY"
-    if not os.path.exists(ready):
+
+    def build(out: str) -> None:
         e = load_table(spark, sf_dir, "events")
         cap = e.select(
             F.concat(
@@ -46,8 +44,10 @@ def mqtt_capture_dir(spark: SparkSession, sf_dir: str) -> str:
             (F.col("event_id") % 50 == 0).alias("retained"),
         )
         cap.write.mode("overwrite").json(out)
-        open(ready, "w").close()
-    return out
+
+    return derived_dir(
+        f"{_tag(sf_dir)}/mqtt_capture", [table_path(sf_dir, "events")], build
+    )
 
 
 # Shared by the batch-replay and live-transport queries: both must

@@ -15,19 +15,13 @@ envelope filter is plain equality), body = JSON ``{"event_id": ...,
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cheetah_spark.catalog import load_table
+from cheetah_spark.catalog import load_table, table_path
+from cheetah_spark.derived import derived_dir
 from cheetah_spark.registry import register
-from cheetah_spark.streaming import (
-    FIXTURE_ROOT,
-    _tag,
-    events_replay_chunk,
-    run_stream_to_completion,
-)
+from cheetah_spark.streaming import _tag, events_replay_chunk, run_stream_to_completion
 
 _TOPIC = "ev.click"
 
@@ -36,9 +30,8 @@ def nsq_capture_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build (once) the NDJSON capture the replay source reads — also
     the PUB feed the live-socket conformance test publishes through
     the loopback nsqd."""
-    out = f"{FIXTURE_ROOT}/{_tag(sf_dir)}/nsq_capture"
-    ready = f"{out}/_FIXTURE_READY"
-    if not os.path.exists(ready):
+
+    def build(out: str) -> None:
         e = load_table(spark, sf_dir, "events")
         cap = e.select(
             F.concat(F.lit("ev."), F.col("event_type")).alias("topic"),
@@ -50,8 +43,10 @@ def nsq_capture_dir(spark: SparkSession, sf_dir: str) -> str:
             ).alias("body"),
         )
         cap.write.mode("overwrite").json(out)
-        open(ready, "w").close()
-    return out
+
+    return derived_dir(
+        f"{_tag(sf_dir)}/nsq_capture", [table_path(sf_dir, "events")], build
+    )
 
 
 _NSQ_ORACLE = """

@@ -18,19 +18,13 @@ the replay path."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cheetah_spark.catalog import load_table
+from cheetah_spark.catalog import load_table, table_path
+from cheetah_spark.derived import derived_dir
 from cheetah_spark.registry import register
-from cheetah_spark.streaming import (
-    FIXTURE_ROOT,
-    _tag,
-    events_replay_chunk,
-    run_stream_to_completion,
-)
+from cheetah_spark.streaming import _tag, events_replay_chunk, run_stream_to_completion
 
 FILTER_EXPR = 'attributes.event_type = "click"'
 
@@ -39,9 +33,8 @@ def pubsub_capture_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build (once) the NDJSON capture the replay source reads — also
     the publish feed the live-HTTP conformance test routes through the
     loopback server."""
-    out = f"{FIXTURE_ROOT}/{_tag(sf_dir)}/pubsub_capture"
-    ready = f"{out}/_FIXTURE_READY"
-    if not os.path.exists(ready):
+
+    def build(out: str) -> None:
         e = load_table(spark, sf_dir, "events")
         # canonical attributes JSON: sorted keys, no spaces — matches
         # _canon_attrs on the wire path
@@ -63,8 +56,10 @@ def pubsub_capture_dir(spark: SparkSession, sf_dir: str) -> str:
             ).alias("data"),
         )
         cap.write.mode("overwrite").json(out)
-        open(ready, "w").close()
-    return out
+
+    return derived_dir(
+        f"{_tag(sf_dir)}/pubsub_capture", [table_path(sf_dir, "events")], build
+    )
 
 
 _PUBSUB_ORACLE = """

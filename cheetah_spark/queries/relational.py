@@ -14,8 +14,6 @@ AQE handles skew. Nothing collects to the driver.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -78,17 +76,19 @@ def _text_lines_fixture(sf_dir: str) -> str:
     """
     import pyarrow.parquet as pq
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = f"/tmp/cheetah_spark_fixtures/{tag}/doc_lines.txt"
-    if not os.path.exists(out):
-        os.makedirs(os.path.dirname(out), exist_ok=True)
-        tbl = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
+    from cheetah_spark.catalog import table_path
+    from cheetah_spark.derived import derived_dir
+    from cheetah_spark.streaming import _tag
+
+    src = table_path(sf_dir, "documents")
+
+    def build(out: str) -> None:
+        tbl = pq.read_table(src, columns=["doc_id", "text"])
         rows = sorted(zip(tbl.column("doc_id").to_pylist(), tbl.column("text").to_pylist()))
-        tmp = out + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
+        with open(f"{out}/doc_lines.txt", "w", encoding="utf-8") as f:
             f.write("|#|".join(t for _, t in rows))
-        os.replace(tmp, out)
-    return out
+
+    return f"{derived_dir(f'{_tag(sf_dir)}/doc_lines', [src], build)}/doc_lines.txt"
 
 
 @register(

@@ -16,21 +16,21 @@ from __future__ import annotations
 import contextlib
 import glob
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cheetah_spark.catalog import ensure_instant_reads, load_table
+from cheetah_spark.derived import derived_dir
 from cheetah_spark.queries import timeseries as _timeseries
 from cheetah_spark.queries._util import dsum2
 from cheetah_spark.registry import register
 from cheetah_spark.sinks import BatcherSink
 from cheetah_spark.sources import ParquetSource
 from cheetah_spark.streaming import (
-    FIXTURE_ROOT,
     _tag,
     events_stream_dir,
-    fixture_stale,
     run_stream_to_completion,
     staged_replay,
 )
@@ -99,19 +99,8 @@ def s_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     interleaved file sets), assert output = one row per event_id —
     equal to the batch distinct count the oracle computes."""
     src_dir = events_stream_dir(spark, sf_dir)
-    dup_dir = f"{FIXTURE_ROOT}/{_tag(sf_dir)}/events_stream_dup_o2"
-    ready = f"{dup_dir}/_FIXTURE_READY"
-    if os.path.exists(ready) and fixture_stale(spark, dup_dir):
-        import shutil
 
-        shutil.rmtree(dup_dir, ignore_errors=True)
-    if not os.path.exists(ready):
-        import shutil
-
-        # drop the pre-fix cache generation (unordered mtimes; see
-        # events_stream_dir on admission order)
-        shutil.rmtree(f"{FIXTURE_ROOT}/{_tag(sf_dir)}/events_stream_dup", ignore_errors=True)
-        os.makedirs(dup_dir, exist_ok=True)
+    def build(out: str) -> None:
         # interleave each time-slice with its duplicate (mtime-pinned
         # admission order): the dup of slice k replays right after k,
         # safely inside the 2h watermark — exercising the dedup state,
@@ -120,10 +109,11 @@ def s_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         t0 = 1_700_100_000
         for k, p in enumerate(sorted(glob.glob(f"{src_dir}/*.parquet"))):
             for j in (0, 1):
-                dst = f"{dup_dir}/data-{2 * k + j:04d}.parquet"
+                dst = f"{out}/data-{2 * k + j:04d}.parquet"
                 shutil.copyfile(p, dst)
                 os.utime(dst, (t0 + 2 * k + j, t0 + 2 * k + j))
-        open(ready, "w").close()
+
+    dup_dir = derived_dir(f"{_tag(sf_dir)}/events_stream_dup", [src_dir], build)
     stream = ParquetSource(dup_dir, streaming=True, max_files_per_trigger=4).read(spark)
     with scoped_state_partitions(spark):
         out = run_stream_to_completion(
@@ -316,8 +306,6 @@ def s_stream_batcher(spark: SparkSession, sf_dir: str) -> DataFrame:
     happened (≥2 epochs over the 8-file / 2-per-trigger replay), and
     (c) the payload really is gzip (part files carry the .gz codec
     suffix) — both pinned TRUE."""
-    import shutil
-
     src_dir = events_stream_dir(spark, sf_dir)
     out_dir = f"/tmp/cheetah_spark_out/batcher_{_tag(sf_dir)}"
     shutil.rmtree(out_dir, ignore_errors=True)
@@ -485,7 +473,6 @@ def s_stream_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     load-gen, so the hash-checked contract row pins the three
     invariants TRUE (the q_approx_distinct_hll pattern: the claim
     itself is the verified value)."""
-    import shutil
     import time
     import uuid
 

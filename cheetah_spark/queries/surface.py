@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import csv
 import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,18 +30,20 @@ def _events_file_fixture(sf_dir: str, fmt: str) -> str:
     purely the scan. Doubles round-trip via repr (exact)."""
     import pyarrow.parquet as pq
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = f"/tmp/cheetah_spark_fixtures/{tag}/events.{fmt}"
-    if not os.path.exists(out):
-        os.makedirs(os.path.dirname(out), exist_ok=True)
+    from cheetah_spark.catalog import table_path
+    from cheetah_spark.derived import derived_dir
+    from cheetah_spark.streaming import _tag
+
+    src = table_path(sf_dir, "events")
+
+    def build(out: str) -> None:
         tbl = pq.read_table(
-            f"{sf_dir}/events.parquet", columns=["event_id", "event_type", "user_id", "value", "props"]
+            src, columns=["event_id", "event_type", "user_id", "value", "props"]
         )
         rows = sorted(
             zip(*(tbl.column(c).to_pylist() for c in ("event_id", "event_type", "user_id", "value", "props")))
         )
-        tmp = out + ".tmp"
-        with open(tmp, "w", encoding="utf-8", newline="") as f:
+        with open(f"{out}/events.{fmt}", "w", encoding="utf-8", newline="") as f:
             if fmt == "csv":
                 w = csv.writer(f)
                 w.writerow(["event_id", "event_type", "user_id", "value", "props"])
@@ -62,8 +63,8 @@ def _events_file_fixture(sf_dir: str, fmt: str) -> str:
                         )
                         + "\n"
                     )
-        os.replace(tmp, out)
-    return out
+
+    return f"{derived_dir(f'{_tag(sf_dir)}/events_{fmt}_file', [src], build)}/events.{fmt}"
 
 
 _EVENTS_AGG_ORACLE = f"""

@@ -21,16 +21,15 @@ facility×severity rollup — 8×8+NULL groups, map-side combinable. A
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cheetah_spark.catalog import load_table
+from cheetah_spark.catalog import load_table, table_path
+from cheetah_spark.derived import derived_dir
 from cheetah_spark.functions import syslog as SL
 from cheetah_spark.functions import text as X
 from cheetah_spark.registry import register
-from cheetah_spark.streaming import FIXTURE_ROOT, _tag
+from cheetah_spark.streaming import _tag
 
 _MOD = 1_000_000_007
 
@@ -92,13 +91,17 @@ _ORACLE_LINE = """
 def syslog_capture_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build (once) the text capture the parse query and the replay
     transport read — one syslog line per event row."""
-    out = f"{FIXTURE_ROOT}/{_tag(sf_dir)}/syslog_capture"
-    ready = f"{out}/_FIXTURE_READY"
-    if not os.path.exists(ready):
+
+    def build(out: str) -> None:
         e = load_table(spark, sf_dir, "events")
         e.select(_line_cols().alias("value")).write.mode("overwrite").text(out)
-        open(ready, "w").close()
-    return out
+
+    return derived_dir(
+        f"{_tag(sf_dir)}/syslog_capture",
+        [table_path(sf_dir, "events")],
+        build,
+        helpers=(_line_cols,),
+    )
 
 
 def _syslog_oracle() -> str:

@@ -28,10 +28,11 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cheetah_spark.catalog import load_table
+from cheetah_spark.catalog import load_table, table_path
+from cheetah_spark.derived import derived_dir
 from cheetah_spark.functions import text as X
 from cheetah_spark.registry import register
-from cheetah_spark.streaming import FIXTURE_ROOT, _tag
+from cheetah_spark.streaming import _tag
 
 _MOD = 1_000_000_007
 
@@ -88,9 +89,7 @@ def webhook_spool_dir(spark: SparkSession, sf_dir: str) -> str:
     to a loopback receiver; return the receiver's spool directory."""
     from cheetah_spark.sinks import WebhookSink
 
-    out = f"{FIXTURE_ROOT}/{_tag(sf_dir)}/webhook_spool"
-    ready = f"{out}/_FIXTURE_READY"
-    if not os.path.exists(ready):
+    def build(out: str) -> None:
         recv = SpoolReceiver(out)
         try:
             e = load_table(spark, sf_dir, "events").where(F.col("event_type") == "error")
@@ -98,8 +97,13 @@ def webhook_spool_dir(spark: SparkSession, sf_dir: str) -> str:
             WebhookSink(webhook_url=recv.url, batch_size=100).write(payload)
         finally:
             recv.close()
-        open(ready, "w").close()
-    return out
+
+    return derived_dir(
+        f"{_tag(sf_dir)}/webhook_spool",
+        [table_path(sf_dir, "events")],
+        build,
+        helpers=(WebhookSink,),
+    )
 
 
 def webhook_stream_spool_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -110,12 +114,11 @@ def webhook_stream_spool_dir(spark: SparkSession, sf_dir: str) -> str:
     from cheetah_spark.sources import ParquetSource
     from cheetah_spark.streaming import events_stream_dir
 
-    out = f"{FIXTURE_ROOT}/{_tag(sf_dir)}/webhook_stream_spool"
-    ready = f"{out}/_FIXTURE_READY"
-    if not os.path.exists(ready):
+    src_dir = events_stream_dir(spark, sf_dir)
+
+    def build(out: str) -> None:
         recv = SpoolReceiver(out)
         try:
-            src_dir = events_stream_dir(spark, sf_dir)
             stream = ParquetSource(
                 src_dir, streaming=True, max_files_per_trigger=2
             ).read(spark)
@@ -140,8 +143,10 @@ def webhook_stream_spool_dir(spark: SparkSession, sf_dir: str) -> str:
                 q.stop()
         finally:
             recv.close()
-        open(ready, "w").close()
-    return out
+
+    return derived_dir(
+        f"{_tag(sf_dir)}/webhook_stream_spool", [src_dir], build, helpers=(WebhookSink,)
+    )
 
 
 def _spool_rollup(got: DataFrame) -> DataFrame:

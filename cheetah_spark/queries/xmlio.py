@@ -91,17 +91,20 @@ def eventlog_capture_dir(spark: SparkSession, sf_dir: str) -> str:
     EventLog envelope q_deser_xml round-trips, one ``{"xml": ...}``
     NDJSON line each — what EvtRender would hand the subscription
     callback (system_windows.go:130-147)."""
-    import os
+    from cheetah_spark.catalog import table_path
+    from cheetah_spark.derived import derived_dir
+    from cheetah_spark.streaming import _tag
 
-    from cheetah_spark.streaming import FIXTURE_ROOT, _tag
-
-    out = f"{FIXTURE_ROOT}/{_tag(sf_dir)}/eventlog_capture"
-    ready = f"{out}/_FIXTURE_READY"
-    if not os.path.exists(ready):
+    def build(out: str) -> None:
         e = load_table(spark, sf_dir, "events").where(F.col("event_id") % 10 == 0)
         e.select(_event_xml().alias("xml")).write.mode("overwrite").json(out)
-        open(ready, "w").close()
-    return out
+
+    return derived_dir(
+        f"{_tag(sf_dir)}/eventlog_capture",
+        [table_path(sf_dir, "events")],
+        build,
+        helpers=(_event_xml,),
+    )
 
 
 def _event_xml():

@@ -15,19 +15,13 @@ slash-delimited and the subscription under test is the prefix
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cheetah_spark.catalog import load_table
+from cheetah_spark.catalog import load_table, table_path
+from cheetah_spark.derived import derived_dir
 from cheetah_spark.registry import register
-from cheetah_spark.streaming import (
-    FIXTURE_ROOT,
-    _tag,
-    events_replay_chunk,
-    run_stream_to_completion,
-)
+from cheetah_spark.streaming import _tag, events_replay_chunk, run_stream_to_completion
 
 PREFIX = "ev/click/"
 
@@ -36,9 +30,8 @@ def zmq_capture_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build (once) the NDJSON capture the replay source reads — also
     the PUB feed the live-socket conformance test publishes through
     the loopback PUB peer."""
-    out = f"{FIXTURE_ROOT}/{_tag(sf_dir)}/zmq_capture"
-    ready = f"{out}/_FIXTURE_READY"
-    if not os.path.exists(ready):
+
+    def build(out: str) -> None:
         e = load_table(spark, sf_dir, "events")
         cap = e.select(
             F.concat(
@@ -55,8 +48,10 @@ def zmq_capture_dir(spark: SparkSession, sf_dir: str) -> str:
             ).alias("payload"),
         )
         cap.write.mode("overwrite").json(out)
-        open(ready, "w").close()
-    return out
+
+    return derived_dir(
+        f"{_tag(sf_dir)}/zmq_capture", [table_path(sf_dir, "events")], build
+    )
 
 
 _ZMQ_ORACLE = """

@@ -24,7 +24,6 @@ joins against an operational store).
 
 from __future__ import annotations
 
-import os
 import sqlite3
 from dataclasses import dataclass
 from typing import Iterator, Optional
@@ -43,53 +42,40 @@ EVENTS_SQLITE_SCHEMA = (
 def events_sqlite_path(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per fixture) an events.sqlite mirror of
     ``events.parquet`` — timestamps stored as INTEGER epoch-µs, the
-    lossless SQLite convention. READY marker keyed on the parquet's
-    (mtime, size), the anchors.py staleness policy."""
+    lossless SQLite convention — in a derived-fixture store directory."""
     from cheetah_spark.catalog import load_table, table_path
-    from cheetah_spark.streaming import FIXTURE_ROOT, _tag
+    from cheetah_spark.derived import derived_dir
+    from cheetah_spark.streaming import _tag
 
-    out_dir = f"{FIXTURE_ROOT}/{_tag(sf_dir)}"
-    os.makedirs(out_dir, exist_ok=True)
-    db = f"{out_dir}/events.sqlite"
-    done = f"{db}.READY"
-    st = os.stat(table_path(sf_dir, "events"))
-    key = f"{st.st_mtime_ns}:{st.st_size}"
-    if os.path.exists(done):
-        try:
-            with open(done) as fh:
-                if fh.read() == key:
-                    return db
-        except OSError:
-            pass
-        os.unlink(db)
-    rows = (
-        load_table(spark, sf_dir, "events")
-        .selectExpr(
-            "event_id",
-            "CAST(unix_micros(ts) AS BIGINT) AS ts_us",
-            "user_id",
-            "event_type",
-            "value",
-            "props",
+    def build(out: str) -> None:
+        rows = (
+            load_table(spark, sf_dir, "events")
+            .selectExpr(
+                "event_id",
+                "CAST(unix_micros(ts) AS BIGINT) AS ts_us",
+                "user_id",
+                "event_type",
+                "value",
+                "props",
+            )
+            .collect()  # fixture build only — bounded test table, one-time
         )
-        .collect()  # fixture build only — bounded test table, one-time
-    )
-    if os.path.exists(db):
-        os.unlink(db)
-    con = sqlite3.connect(db)
-    con.execute(
-        "CREATE TABLE events (event_id INTEGER PRIMARY KEY, ts_us INTEGER, "
-        "user_id INTEGER, event_type TEXT, value REAL, props TEXT)"
-    )
-    con.executemany(
-        "INSERT INTO events VALUES (?, ?, ?, ?, ?, ?)",
-        [(r.event_id, r.ts_us, r.user_id, r.event_type, r.value, r.props) for r in rows],
-    )
-    con.commit()
-    con.close()
-    with open(done, "w") as fh:
-        fh.write(key)
-    return db
+        con = sqlite3.connect(f"{out}/events.sqlite")
+        try:
+            con.execute(
+                "CREATE TABLE events (event_id INTEGER PRIMARY KEY, ts_us INTEGER, "
+                "user_id INTEGER, event_type TEXT, value REAL, props TEXT)"
+            )
+            con.executemany(
+                "INSERT INTO events VALUES (?, ?, ?, ?, ?, ?)",
+                [(r.event_id, r.ts_us, r.user_id, r.event_type, r.value, r.props) for r in rows],
+            )
+            con.commit()
+        finally:
+            con.close()
+
+    out = derived_dir(f"{_tag(sf_dir)}/events_sqlite", [table_path(sf_dir, "events")], build)
+    return f"{out}/events.sqlite"
 
 
 @dataclass

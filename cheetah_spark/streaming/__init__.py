@@ -26,40 +26,6 @@ def _tag(sf_dir: str) -> str:
     return os.path.basename(os.path.normpath(sf_dir))
 
 
-def fixture_stale(spark: SparkSession, path: str, fmt: str = "parquet") -> bool:
-    """True if a cached fixture predates the instant-timestamp contract
-    (its footer Spark-schema says TIMESTAMP_NTZ) and must be rebuilt —
-    batch re-reads of such files re-infer NTZ from the footer metadata
-    no matter what ``inferTimestampNTZ`` says.
-
-    Only parquet carries the Spark-schema footer metadata that causes
-    the NTZ override; other formats (ORC) never go stale this way, so
-    they short-circuit to False — reading an ORC directory as parquet
-    would throw and spuriously mark the fixture stale on every call.
-
-    A fresh verdict is memoized per path for the process lifetime: the
-    footer probe costs a full spark.read.parquet round trip, and a
-    fixture that was fresh once cannot go stale underneath a running
-    process (staleness is a property of how the files were WRITTEN)."""
-    from pyspark.sql import types as T
-
-    if fmt != "parquet":
-        return False
-    if path in _fresh_fixture_paths:
-        return False
-    try:
-        schema = spark.read.parquet(path).schema
-    except Exception:
-        return True
-    if any(isinstance(f.dataType, T.TimestampNTZType) for f in schema.fields):
-        return True
-    _fresh_fixture_paths.add(path)
-    return False
-
-
-_fresh_fixture_paths: set = set()  # paths verified non-stale; see fixture_stale
-
-
 def _ordered_stream_dir(
     spark: SparkSession,
     sf_dir: str,
@@ -67,11 +33,15 @@ def _ordered_stream_dir(
     order_cols: tuple[str, ...],
     n_files: int,
     dir_name: str,
-    drop_legacy: tuple[str, ...] = (),
     transform=None,
+    params: str = "",
+    helpers: tuple = (),
 ) -> str:
     """Shared replay-fixture builder: split ``table`` into n ordered
-    parquet files with strictly increasing mtimes.
+    parquet files with strictly increasing mtimes, cached in the
+    derived-fixture store (``transform`` and ``helpers`` are part of
+    its key, ``params`` carries constants their source does not spell
+    out).
 
     Admission order is pinned explicitly: FileStreamSource admits files
     sorted by MODIFICATION TIME, and a parallel write finishes its part
@@ -80,21 +50,17 @@ def _ordered_stream_dir(
     data (caught by the s_stream_watermark_late oracle, round 4).
     Renaming to slice order and stamping strictly increasing mtimes
     makes replay order == ``order_cols`` order, deterministically."""
-    import glob as _glob
-
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    from cheetah_spark.catalog import ensure_instant_reads, load_table
+    from cheetah_spark.catalog import ensure_instant_reads, table_path
+    from cheetah_spark.derived import derived_dir
 
     ensure_instant_reads(spark)
-    out = f"{FIXTURE_ROOT}/{_tag(sf_dir)}/{dir_name}"
-    done = f"{out}/_FIXTURE_READY"
-    if os.path.exists(done) and fixture_stale(spark, out):
-        shutil.rmtree(out, ignore_errors=True)
-    if not os.path.exists(done):
-        for legacy in drop_legacy:  # pre-fix cache generations
-            shutil.rmtree(f"{FIXTURE_ROOT}/{_tag(sf_dir)}/{legacy}", ignore_errors=True)
+
+    def build(out: str) -> None:
+        from pyspark.sql import Window as W
+        from pyspark.sql import functions as F
+
+        from cheetah_spark.catalog import load_table
+
         t = load_table(spark, sf_dir, table)
         if transform is not None:
             t = transform(t)
@@ -113,23 +79,23 @@ def _ordered_stream_dir(
             dst = f"{out}/data-{i:04d}.parquet"
             os.rename(p, dst)
             os.utime(dst, (base_t + i, base_t + i))
-        open(done, "w").close()
-    return out
+
+    if transform is not None:
+        helpers = (transform, *helpers)
+    return derived_dir(
+        f"{_tag(sf_dir)}/{dir_name}",
+        [table_path(sf_dir, table)],
+        build,
+        f"order:{','.join(order_cols)};{params}",
+        helpers,
+    )
 
 
 def events_stream_dir(spark: SparkSession, sf_dir: str, n_files: int = 8) -> str:
     """Events replay feed: file k holds the k-th time-slice so
-    event-time advances across micro-batches like a live stream.
-    (dir suffix o2: cached pre-fix fixtures keep their broken mtimes,
-    so the fixed layout gets its own cache key)"""
+    event-time advances across micro-batches like a live stream."""
     return _ordered_stream_dir(
-        spark,
-        sf_dir,
-        "events",
-        ("ts", "event_id"),
-        n_files,
-        f"events_stream_{n_files}_o2",
-        drop_legacy=(f"events_stream_{n_files}",),
+        spark, sf_dir, "events", ("ts", "event_id"), n_files, f"events_stream_{n_files}"
     )
 
 
@@ -195,39 +161,30 @@ def staged_replay(spark: SparkSession, sf_dir: str, prefix: str, src_dir: str):
         shutil.rmtree(stage, ignore_errors=True)
 
 
-def run_stream_to_completion(
-    df: DataFrame,
-    transform,
-    output_mode: str = "append",
-    trigger: dict | None = None,
-    extra_drains=(),
-) -> DataFrame:
-    """Start stream → transform → memory sink, drain fully, stop;
-    return the sink contents as a batch DataFrame. Fresh sink name +
-    checkpoint per run (a reused checkpoint would replay nothing).
+_CKPT_ROOT = "/tmp/cheetah_spark_ckpt"
 
-    ``extra_drains``: callables run AFTER the initial drain, each
-    followed by another full drain — the hook for injecting data
-    mid-run (e.g. a watermark-advancing sentinel file) with a
-    deterministic batch boundary before and after."""
-    spark = df.sparkSession
-    name = f"sink_{uuid.uuid4().hex[:12]}"
-    ckpt = f"/tmp/cheetah_spark_ckpt/{name}"
+
+def _drain(spark: SparkSession, prefix: str, writer, trigger=None, extra_drains=()) -> str:
+    """Run one bounded stream to completion and return its fresh name.
+
+    ``writer(name)`` returns the DataStreamWriter; this adds a fresh
+    checkpoint (a reused one would replay nothing) and the trigger,
+    drains, then stops the query, unloads its state-store providers and
+    removes the checkpoint. ``extra_drains``: callables run AFTER the
+    initial drain, each followed by another full drain — the hook for
+    injecting data mid-run (e.g. a watermark-advancing sentinel file)
+    with a deterministic batch boundary before and after."""
+    name = f"{prefix}_{uuid.uuid4().hex[:12]}"
+    ckpt = f"{_CKPT_ROOT}/{name}"
     # bounded conformance runs finish in seconds: push the state-store
     # maintenance cadence out of the way (its snapshot/cleanup passes
     # over providers of already-stopped queries stall later queries
     # sharing the session)
     spark.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
-    writer = (
-        transform(df)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-    )
+    w = writer(name).option("checkpointLocation", ckpt)
     if trigger:
-        writer = writer.trigger(**trigger)
-    query = writer.start()
+        w = w.trigger(**trigger)
+    query = w.start()
     try:
         query.processAllAvailable()
         for drain in extra_drains:
@@ -242,6 +199,30 @@ def run_stream_to_completion(
         except Exception:
             pass  # hygiene only; never fail the query over it
         shutil.rmtree(ckpt, ignore_errors=True)
+    return name
+
+
+def run_stream_to_completion(
+    df: DataFrame,
+    transform,
+    output_mode: str = "append",
+    trigger: dict | None = None,
+    extra_drains=(),
+) -> DataFrame:
+    """Start stream → transform → memory sink, drain fully, stop;
+    return the sink contents as a batch DataFrame (see ``_drain`` for
+    the lifecycle and ``extra_drains``)."""
+    spark = df.sparkSession
+    name = _drain(
+        spark,
+        "sink",
+        lambda name: transform(df)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode),
+        trigger,
+        extra_drains,
+    )
     return spark.table(name)
 
 
@@ -262,36 +243,18 @@ def run_stream_to_files(
     100 TB). foreachBatch keeps the emission distributed: executors
     append parquet, the driver holds nothing, and the read-back is a
     normal scan (also measured mildly faster at 25× — the driver
-    ingest was pure overhead). Checkpoint/state hygiene matches
-    run_stream_to_completion."""
+    ingest was pure overhead)."""
     spark = df.sparkSession
-    name = f"spool_{uuid.uuid4().hex[:12]}"
-    ckpt = f"/tmp/cheetah_spark_ckpt/{name}"
-    out_dir = f"/tmp/cheetah_spark_ckpt/{name}_files"
-    spark.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
     out = transform(df)
     schema = out.schema
 
-    def append_batch(batch: DataFrame, _epoch: int) -> None:
-        batch.write.mode("append").parquet(out_dir)
+    def writer(name: str):
+        def append_batch(batch: DataFrame, _epoch: int) -> None:
+            batch.write.mode("append").parquet(f"{_CKPT_ROOT}/{name}_files")
 
-    writer = (
-        out.writeStream.foreachBatch(append_batch)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    query = writer.start()
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-        try:
-            spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-        except Exception:
-            pass  # hygiene only; never fail the query over it
-        shutil.rmtree(ckpt, ignore_errors=True)
+        return out.writeStream.foreachBatch(append_batch).outputMode(output_mode)
+
+    out_dir = f"{_CKPT_ROOT}/{_drain(spark, 'spool', writer, trigger)}_files"
     if not os.path.isdir(out_dir):  # zero-batch stream: nothing spooled
         return spark.createDataFrame([], schema)
     return spark.read.schema(schema).parquet(out_dir)
@@ -317,33 +280,20 @@ def run_stream_batch_partials(
     aggregation (e.g. a document) never spans micro-batches and the
     final rollup is the partials' monoid merge."""
     spark = df.sparkSession
-    name = f"spool_{uuid.uuid4().hex[:12]}"
-    ckpt = f"/tmp/cheetah_spark_ckpt/{name}"
-    out_dir = f"/tmp/cheetah_spark_ckpt/{name}_files"
-    spark.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
     schema_holder = {}
 
-    def append_batch(batch: DataFrame, _epoch: int) -> None:
-        out = batch_transform(batch)
-        schema_holder.setdefault("schema", out.schema)
-        out.write.mode("append").parquet(out_dir)
+    def writer(name: str):
+        def append_batch(batch: DataFrame, _epoch: int) -> None:
+            out = batch_transform(batch)
+            schema_holder.setdefault("schema", out.schema)
+            out.write.mode("append").parquet(f"{_CKPT_ROOT}/{name}_files")
 
-    writer = df.writeStream.foreachBatch(append_batch).option("checkpointLocation", ckpt)
-    if trigger:
-        writer = writer.trigger(**trigger)
-    query = writer.start()
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-        try:
-            spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-        except Exception:
-            pass  # hygiene only; never fail the query over it
-        shutil.rmtree(ckpt, ignore_errors=True)
+        return df.writeStream.foreachBatch(append_batch)
+
+    out_dir = f"{_CKPT_ROOT}/{_drain(spark, 'spool', writer, trigger)}_files"
     if "schema" not in schema_holder or not os.path.isdir(out_dir):
         # zero-batch stream: derive the partial schema from an empty cut
-        empty = batch_transform(df.sparkSession.createDataFrame([], df.schema))
+        empty = batch_transform(spark.createDataFrame([], df.schema))
         return spark.createDataFrame([], empty.schema)
     return spark.read.schema(schema_holder["schema"]).parquet(out_dir)
 
@@ -392,16 +342,13 @@ def embeddings_stream_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) ->
         )
         return base.unionByName(pert)
 
-    # EVERY planting param in the dir name (mod, offset, shift
-    # magnitude, dim): a constant change must build a fresh fixture,
-    # not serve the stale cached one
     return _ordered_stream_dir(
         spark,
         sf_dir,
         "embeddings",
         ("vec_id",),
         n_files,
-        f"embeddings_stream_{n_files}_m{_ED_PERT_MOD}_o{_ED_PERT_OFFSET}"
-        f"_s025_d{_ED_DIM}",
+        f"embeddings_stream_{n_files}",
         transform=plant,
+        params=f"mod:{_ED_PERT_MOD};offset:{_ED_PERT_OFFSET};dim:{_ED_DIM}",
     )

@@ -13,6 +13,7 @@ import time
 
 import pytest
 
+from cheetah_spark import config
 from cheetah_spark.config import build_sink, build_source, load_pipeline, pipeline_from_config
 from cheetah_spark.sinks import BatcherSink, MemorySink, NdjsonGzipSink
 from cheetah_spark.sources import MultiSource, ParquetSource
@@ -922,13 +923,13 @@ def _staged_url_docs(spark, sf_dir, tmp_path, footer=None):
     return src
 
 
-@pytest.mark.parametrize("max_inline", [None, 0])
-def test_fineweb_chain_from_config_batch(tmp_path, spark, sf_dir, max_inline):
+@pytest.mark.parametrize("inline_lines", [None, 0])
+def test_fineweb_chain_from_config_batch(tmp_path, spark, sf_dir, monkeypatch, inline_lines):
     """The r11-verdict item #5 chain: URL dedup → Gopher quality gate →
     corpus line dedup assembled from JSON alone, output equal to the
     independently composed DataFrame pipeline row-for-row, on both
-    strip paths (inline IN-list, and ``max_inline=0``'s broadcast
-    Arrow strip)."""
+    strip paths (inline IN-list, and the broadcast Arrow strip that an
+    ``INLINE_BOILER_LINES`` of 0 forces)."""
     from pyspark.sql import functions as F
 
     from cheetah_spark.__main__ import main
@@ -950,16 +951,16 @@ def test_fineweb_chain_from_config_batch(tmp_path, spark, sf_dir, max_inline):
              "rules": _GOPHER_SUBSET},
             {"type": "line_dedup", "column": "text", "from": src},
         ],
-        "sink": {"type": "memory", "name": f"cli_fineweb_batch_{max_inline}"},
+        "sink": {"type": "memory", "name": f"cli_fineweb_batch_{inline_lines}"},
     }
-    if max_inline is not None:
-        cfg["transforms"][-1]["max_inline"] = max_inline
+    if inline_lines is not None:
+        monkeypatch.setattr(config, "INLINE_BOILER_LINES", inline_lines)
     f = tmp_path / "cli_fineweb_batch.json"
     f.write_text(json.dumps(cfg))
     assert main(["run", "--config", str(f)]) == 0
     got = {
         r.doc_id: r.asDict()
-        for r in spark.table(f"cli_fineweb_batch_{max_inline}").collect()
+        for r in spark.table(f"cli_fineweb_batch_{inline_lines}").collect()
     }
     # the same chain composed directly
     d = spark.read.parquet(src).withColumn(
@@ -989,8 +990,8 @@ def test_fineweb_chain_from_config_batch(tmp_path, spark, sf_dir, max_inline):
     assert expect  # the chain must not degenerate to an empty corpus
 
 
-@pytest.mark.parametrize("max_inline", [None, 0])
-def test_fineweb_chain_from_config_streaming(tmp_path, spark, sf_dir, max_inline):
+@pytest.mark.parametrize("inline_lines", [None, 0])
+def test_fineweb_chain_from_config_streaming(tmp_path, spark, sf_dir, monkeypatch, inline_lines):
     """The same JSON chain over a STREAMING source: url_dedup routes
     through keyed keep-min state (the first micro-batch containing a
     canonical URL emits its min-id row — deterministic under the
@@ -998,8 +999,9 @@ def test_fineweb_chain_from_config_streaming(tmp_path, spark, sf_dir, max_inline
     s_config_fineweb's driver row). Asserted here: daemon exit 0 plus
     the chain's invariants — one survivor per canonical URL, every
     survivor passed the Gopher gate, no survivor retains a boilerplate
-    line. ``max_inline=0`` sends the strip down the broadcast
-    pandas_udf path, which runs below the keyed-state stage too."""
+    line. An ``INLINE_BOILER_LINES`` of 0 sends the strip down the
+    broadcast mapInArrow path, which runs below the keyed-state stage
+    too."""
     from functools import reduce
     from operator import or_
 
@@ -1030,15 +1032,15 @@ def test_fineweb_chain_from_config_streaming(tmp_path, spark, sf_dir, max_inline
             {"type": "line_dedup", "column": "text", "from": src},
         ],
         # update mode: the chain ends in the url_dedup keyed-state stage
-        "sink": {"type": "memory", "name": f"cli_fineweb_stream_{max_inline}",
+        "sink": {"type": "memory", "name": f"cli_fineweb_stream_{inline_lines}",
                  "output_mode": "update"},
     }
-    if max_inline is not None:
-        cfg["transforms"][-1]["max_inline"] = max_inline
+    if inline_lines is not None:
+        monkeypatch.setattr(config, "INLINE_BOILER_LINES", inline_lines)
     f = tmp_path / "cli_fineweb_stream.json"
     f.write_text(json.dumps(cfg))
     assert main(["run", "--config", str(f), "--timeout", "20"]) == 0
-    out = spark.table(f"cli_fineweb_stream_{max_inline}")
+    out = spark.table(f"cli_fineweb_stream_{inline_lines}")
     n = out.count()
     assert n > 0
     # one survivor per canonical URL
