@@ -24,6 +24,7 @@ query language) cannot do.
 
 from __future__ import annotations
 
+import importlib
 import json
 from typing import Any, Mapping
 
@@ -106,145 +107,46 @@ def _alias(kw):
     return {_MQTT_KEY_ALIASES.get(k, k): v for k, v in kw.items()}
 
 
-def _mqtt_live_source(**kw):  # lazy: keeps the paho gate out of import time
-    from cheetah_spark.sources.mqtt_live import MqttLiveSource
-
-    return MqttLiveSource(**_alias(kw))
-
-
-def _redis_source(**kw):
-    from cheetah_spark.sources.redis_live import RedisSource
-
-    return RedisSource(**_alias(kw))
-
-
-def _redis_sink(**kw):
-    from cheetah_spark.sources.redis_live import RedisStreamSink
-
-    return RedisStreamSink(**_alias(kw))
-
-
-def _nats_source(**kw):
-    from cheetah_spark.sources.nats_live import NatsSource
-
-    return NatsSource(**_alias(kw))
-
-
-def _nats_sink(**kw):
-    from cheetah_spark.sources.nats_live import NatsSink
-
-    return NatsSink(**_alias(kw))
-
-
-def _amqp_source(**kw):
-    from cheetah_spark.sources.amqp_live import AmqpSource
-
-    return AmqpSource(**_alias(kw))
-
-
-def _amqp_sink(**kw):
-    from cheetah_spark.sources.amqp_live import AmqpSink
-
-    return AmqpSink(**_alias(kw))
-
-
-def _pubsub_source(**kw):
-    from cheetah_spark.sources.pubsub_live import PubSubSource
-
-    return PubSubSource(**_alias(kw))
-
-
-def _pubsub_sink(**kw):
-    from cheetah_spark.sources.pubsub_live import PubSubSink
-
-    return PubSubSink(**_alias(kw))
-
-
-def _kinesis_source(**kw):
-    from cheetah_spark.sources.kinesis_live import KinesisSource
-
-    return KinesisSource(**_alias(kw))
-
-
-def _kinesis_sink(**kw):
-    from cheetah_spark.sources.kinesis_live import KinesisSink
-
-    return KinesisSink(**_alias(kw))
-
-
-def _nsq_source(**kw):
-    from cheetah_spark.sources.nsq_live import NsqSource
-
-    return NsqSource(**_alias(kw))
-
-
-def _nsq_sink(**kw):
-    from cheetah_spark.sources.nsq_live import NsqSink
-
-    return NsqSink(**_alias(kw))
-
-
-def _memcache_source(**kw):
-    from cheetah_spark.sources.memcache_live import MemcacheSource
-
-    kw = _alias(kw)
-    if "keys" in kw:
-        kw["keys"] = tuple(kw["keys"])
-    return MemcacheSource(**kw)
-
-
-def _memcache_sink(**kw):
-    from cheetah_spark.sources.memcache_live import MemcacheSink
-
-    return MemcacheSink(**_alias(kw))
-
-
-def _zmq_source(**kw):
-    from cheetah_spark.sources.zmq_live import ZmqSource
-
-    return ZmqSource(**_alias(kw))
-
-
-def _zmq_sink(**kw):
-    from cheetah_spark.sources.zmq_live import ZmqSink
-
-    return ZmqSink(**_alias(kw))
-
-
-def _eventlog_live_source(**kw):
-    from cheetah_spark.sources.eventlog_live import EventLogLiveSource
-
-    return EventLogLiveSource(**kw)
-
-
-def _syslog_live_source(**kw):
-    from cheetah_spark.sources.syslog_live import SyslogSource
-
-    return SyslogSource(**_alias(kw))
-
-
-def _journald_live_source(**kw):
-    from cheetah_spark.sources.journald_live import JournaldSource
-
-    return JournaldSource(**_alias(kw))
-
-
-def _kafka_source(**kw):
-    from cheetah_spark.sources.kafka import KafkaSource
-
-    return KafkaSource(**_alias(kw))
-
-
-def _kafka_sink(**kw):
-    from cheetah_spark.sources.kafka import KafkaSink
-
-    return KafkaSink(**_alias(kw))
-
-
-def _mqtt_live_sink(**kw):
-    from cheetah_spark.sources.mqtt_live import MqttLiveSink
-
-    return MqttLiveSink(**_alias(kw))
+# Config types whose adapter lives in a module imported on first use
+# only: the live transports' modules (and the paho/win32 gates behind
+# them) stay out of import time. Every entry takes the camelCase keys.
+_LAZY_SOURCES = {
+    # reference kawad config types (README.md:168-237): paho / win32 /
+    # journalctl in production, {"transport": "replay"} in the sandbox
+    "mqtt": "cheetah_spark.sources.mqtt_live:MqttLiveSource",
+    "eventlog": "cheetah_spark.sources.eventlog_live:EventLogLiveSource",
+    "syslog": "cheetah_spark.sources.syslog_live:SyslogSource",
+    "journald": "cheetah_spark.sources.journald_live:JournaldSource",
+    # the reference wishlist (README.md:301-311) over public protocols
+    "kafka": "cheetah_spark.sources.kafka:KafkaSource",
+    "redis": "cheetah_spark.sources.redis_live:RedisSource",
+    "nats": "cheetah_spark.sources.nats_live:NatsSource",
+    "amqp": "cheetah_spark.sources.amqp_live:AmqpSource",
+    "pubsub": "cheetah_spark.sources.pubsub_live:PubSubSource",
+    "kinesis": "cheetah_spark.sources.kinesis_live:KinesisSource",
+    "nsq": "cheetah_spark.sources.nsq_live:NsqSource",
+    "memcache": "cheetah_spark.sources.memcache_live:MemcacheSource",
+    "zmq": "cheetah_spark.sources.zmq_live:ZmqSource",
+    # beyond parity (r10): JDBC-style partitioned pull from SQLite
+    "sqlite": "cheetah_spark.sources.sqlite_local:SqliteSource",
+}
+_LAZY_SINKS = {
+    "mqtt": "cheetah_spark.sources.mqtt_live:MqttLiveSink",
+    "kafka": "cheetah_spark.sources.kafka:KafkaSink",
+    "redis": "cheetah_spark.sources.redis_live:RedisStreamSink",
+    "nats": "cheetah_spark.sources.nats_live:NatsSink",
+    "amqp": "cheetah_spark.sources.amqp_live:AmqpSink",
+    "pubsub": "cheetah_spark.sources.pubsub_live:PubSubSink",
+    "kinesis": "cheetah_spark.sources.kinesis_live:KinesisSink",
+    "nsq": "cheetah_spark.sources.nsq_live:NsqSink",
+    "memcache": "cheetah_spark.sources.memcache_live:MemcacheSink",
+    "zmq": "cheetah_spark.sources.zmq_live:ZmqSink",
+}
+
+
+def _lazy_class(spec: str):
+    module, _, name = spec.partition(":")
+    return getattr(importlib.import_module(module), name)
 
 
 # reference kawad s3 destination (README.md:254-269): bucketName is the
@@ -270,15 +172,6 @@ def _s3_sink(**kw):
     return NdjsonGzipSink(path=path, **kw)
 
 
-def _sqlite_source(**kw):
-    from cheetah_spark.sources.sqlite_local import SqliteSource
-
-    kw = _alias(kw)
-    if "columns" in kw and kw["columns"] is not None:
-        kw["columns"] = tuple(kw["columns"])
-    return SqliteSource(**kw)
-
-
 _SOURCE_TYPES = {
     "parquet": ParquetSource,
     "json": JsonSource,
@@ -291,40 +184,6 @@ _SOURCE_TYPES = {
     "rate": RateSource,
     "memory": MemorySource,
     "mqtt_replay": MqttReplaySource,
-    # live transports (reference kawad config types "mqtt" README.md:
-    # 204-217 / "eventlog" README.md:219-237): paho / win32 in
-    # production, replay in the sandbox via {"transport": "replay"}
-    "mqtt": _mqtt_live_source,
-    "eventlog": _eventlog_live_source,
-    # reference kawad README.md:168-177: {"type":"syslog","addr":...};
-    # contentType spelled camelCase there — _alias maps it
-    "syslog": _syslog_live_source,
-    # reference kawad README.md:179-185: {"type":"journald"} (no config)
-    "journald": _journald_live_source,
-    # the reference's own #1 wishlist connector (README.md:301-311):
-    # Spark's native format("kafka") + the Message envelope; replay
-    # transport where no broker/connector exists
-    "kafka": _kafka_source,
-    # wishlist #2 (README.md:301-311): Redis Streams over stdlib RESP
-    "redis": _redis_source,
-    # wishlist #3 (README.md:301-311): NATS over the plain-text client
-    # protocol on stdlib sockets
-    "nats": _nats_source,
-    # wishlist #4 (README.md:301-311): AMQP 0-9-1 over stdlib sockets
-    "amqp": _amqp_source,
-    # wishlist #5 (README.md:301-311): Pub/Sub over the public REST API
-    "pubsub": _pubsub_source,
-    # wishlist #6 (README.md:301-311): Kinesis over the public JSON API
-    "kinesis": _kinesis_source,
-    # wishlist "NSQ?" (README.md:301-311): NSQ over the public TCP protocol
-    "nsq": _nsq_source,
-    # wishlist "memcache?" (README.md:301-311): keyed multi-get reads
-    "memcache": _memcache_source,
-    # wishlist "zmq?" (README.md:301-311): ZMTP 3.0 on stdlib sockets
-    "zmq": _zmq_source,
-    # beyond-parity (r10): relational-store pull — JDBC-style
-    # partitioned range scan over a SQLite file (sources/sqlite_local)
-    "sqlite": _sqlite_source,
 }
 
 _SINK_TYPES = {
@@ -338,22 +197,11 @@ _SINK_TYPES = {
     # gzip-NDJSON sink on an s3a:// path
     "s3": _s3_sink,
     "mqtt_replay": MqttReplaySink,
-    "mqtt": _mqtt_live_sink,
     # reference kawad README.md:244-250: {"type":"runreveal",
     # "webhookURL":...} — an HTTP NDJSON webhook destination,
     # generalized; "webhook" is the engine-native spelling
     "runreveal": WebhookSink,
     "webhook": WebhookSink,
-    # wishlist connector (README.md:301-311)
-    "kafka": _kafka_sink,
-    "redis": _redis_sink,
-    "nats": _nats_sink,
-    "amqp": _amqp_sink,
-    "pubsub": _pubsub_sink,
-    "kinesis": _kinesis_sink,
-    "nsq": _nsq_sink,
-    "memcache": _memcache_sink,
-    "zmq": _zmq_sink,
 }
 
 
@@ -362,6 +210,8 @@ def build_source(cfg: Mapping[str, Any]) -> Source:
     kind = cfg.pop("type")
     if kind == "multi":  # fan-in (reference MultiSource S6)
         return MultiSource(sources=[build_source(c) for c in cfg.pop("sources")])
+    if kind in _LAZY_SOURCES:
+        return _lazy_class(_LAZY_SOURCES[kind])(**_alias(cfg))
     try:
         cls = _SOURCE_TYPES[kind]
     except KeyError:
@@ -379,6 +229,8 @@ def build_sink(cfg: Mapping[str, Any]) -> Sink:
         # config nests the inner sink under "flush"
         inner = build_sink(cfg.pop("flush"))
         return BatcherSink(flush=lambda batch, epoch: inner.write(batch), **cfg)
+    if kind in _LAZY_SINKS:
+        return _lazy_class(_LAZY_SINKS[kind])(**_alias(cfg))
     try:
         cls = _SINK_TYPES[kind]
     except KeyError:

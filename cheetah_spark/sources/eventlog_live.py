@@ -43,11 +43,14 @@ from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
-from pyspark.sql.types import StructType
 
 from cheetah_spark.sources import Source
-from cheetah_spark.sources.seqwindow import SeqWindowStreamReader, capture_files, load_stream
+from cheetah_spark.sources.seqwindow import (
+    LiveDataSource,
+    SeqWindowStreamReader,
+    capture_files,
+    load_stream,
+)
 
 # Subscription constants — system_windows.go:16-43
 EVT_SUBSCRIBE_TO_FUTURE_EVENTS = 1
@@ -189,85 +192,7 @@ def _iter_xml_capture(path: str) -> Iterator[str]:
                 yield from (json.loads(line)["xml"] for line in fh if line.strip())
 
 
-def _make_factory(options) -> Callable:
-    transport = (options.get("transport") or "win32").lower()
-    if transport == "win32":
-        return Win32SubscriptionFactory()
-    if transport == "replay":
-        return ReplaySubscriptionFactory(
-            capture_path=options.get("capture_path") or "",
-            fail_after=int(options.get("fail_after") or -1),
-        )
-    raise ValueError(f"unknown eventlog transport {transport!r} (win32|replay)")
-
-
 EVENTLOG_STREAM_SCHEMA = "xml string, channel string"
-
-
-class _EventLogSimpleStreamReader(SeqWindowStreamReader):
-    """Seq-window reader over the push subscription. No acks: the
-    subscription has none, so commit is a no-op."""
-
-    _PICKLE_FIELDS = ("_channel", "_query", "_method", "_factory", "_accept_data_loss")
-
-    def __init__(self, options):
-        self._channel = options.get("channel") or ""
-        self._query = options.get("query") or "*"  # default query "*" (event_logs.go:49-51)
-        self._method = _METHODS[(options.get("method") or "future").lower()]
-        self._factory = _make_factory(options)
-        # sanctioned recovery path for a lost replay window (mirrors
-        # Kafka's failOnDataLoss=false): log the loss and advance,
-        # instead of permanently failing every restart past the lost
-        # range (round-5 advice)
-        self._accept_data_loss = (
-            (options.get("accept_data_loss") or "false").lower() == "true"
-        )
-        self._init_runtime()
-
-    def _make_listener(self):
-        return self._factory(
-            self._channel, self._query, self._method, self._on_item, self._on_error
-        )
-
-    def _row_of(self, xml: str) -> tuple:
-        return (xml, self._channel)
-
-    def _on_lost_window(self, start_seq: int, end_seq: int) -> None:
-        # A push subscription has no redelivery: a replay window lost
-        # to a driver restart is unrecoverable data loss. The transport
-        # is documented at-most-once, but losing rows SILENTLY (empty
-        # batch committed, stream reports success) hides it from the
-        # operator — fail fast instead (round-4 advice).
-        if not self._accept_data_loss:
-            raise RuntimeError(
-                f"windows_events: replay window lost for offsets "
-                f"[{start_seq},{end_seq}) after restart — the push "
-                "subscription cannot redeliver; rows are unrecoverable "
-                "(at-most-once transport). Set accept_data_loss=true to log "
-                "the loss and advance instead"
-            )
-        print(
-            f"windows_events: replay window lost for offsets "
-            f"[{start_seq},{end_seq}) after restart — advancing "
-            "past it (accept_data_loss=true); rows are unrecoverable "
-            "(at-most-once transport)",
-            file=sys.stderr,
-        )
-
-
-class EventLogStreamDataSource(DataSource):
-    """``spark.readStream.format("cheetah-eventlog")`` — the subscribe
-    half of the reference's Windows EventLog source (S4)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "cheetah-eventlog"
-
-    def schema(self) -> str:
-        return EVENTLOG_STREAM_SCHEMA
-
-    def simpleStreamReader(self, schema: StructType) -> SimpleDataSourceStreamReader:
-        return _EventLogSimpleStreamReader(self.options)
 
 
 @dataclass
@@ -286,16 +211,64 @@ class EventLogLiveSource(Source):
     streaming: bool = True
 
     def read(self, spark: SparkSession) -> DataFrame:
-        return load_stream(
-            spark,
-            EventLogStreamDataSource,
-            channel=self.channel,
-            query=self.query,
-            method=self.method,
-            transport=self.transport,
-            capture_path=self.capture_path,
-            fail_after=self.fail_after,
+        return load_stream(spark, EventLogStreamDataSource, self)
+
+
+@dataclass
+class _EventLogReaderOptions(EventLogLiveSource):
+    # reader-only option, the sanctioned recovery path for a lost
+    # replay window (mirrors Kafka's failOnDataLoss=false): log the
+    # loss and advance, instead of permanently failing every restart
+    # past the lost range (round-5 advice)
+    accept_data_loss: bool = False
+
+
+class _EventLogSimpleStreamReader(SeqWindowStreamReader):
+    """Seq-window reader over the push subscription. No acks: the
+    subscription has none, so commit is a no-op."""
+
+    NAME = "eventlog"
+    SOURCE = _EventLogReaderOptions
+
+    def _make_listener(self):
+        src = self._src
+        if src.transport.lower() == "win32":
+            factory: Callable = Win32SubscriptionFactory()
+        else:
+            factory = ReplaySubscriptionFactory(capture_path=src.capture_path, fail_after=src.fail_after)
+        return factory(src.channel, src.query, _METHODS[src.method.lower()], self._on_item, self._on_error)
+
+    def _row_of(self, xml: str) -> tuple:
+        return (xml, self._src.channel)
+
+    def _on_lost_window(self, start_seq: int, end_seq: int) -> None:
+        # A push subscription has no redelivery: a replay window lost
+        # to a driver restart is unrecoverable data loss. The transport
+        # is documented at-most-once, but losing rows SILENTLY (empty
+        # batch committed, stream reports success) hides it from the
+        # operator — fail fast instead (round-4 advice).
+        if not self._src.accept_data_loss:
+            raise RuntimeError(
+                f"windows_events: replay window lost for offsets "
+                f"[{start_seq},{end_seq}) after restart — the push "
+                "subscription cannot redeliver; rows are unrecoverable "
+                "(at-most-once transport). Set accept_data_loss=true to log "
+                "the loss and advance instead"
+            )
+        print(
+            f"windows_events: replay window lost for offsets "
+            f"[{start_seq},{end_seq}) after restart — advancing "
+            "past it (accept_data_loss=true); rows are unrecoverable "
+            "(at-most-once transport)",
+            file=sys.stderr,
         )
+
+
+class EventLogStreamDataSource(LiveDataSource):
+    """``spark.readStream.format("cheetah-eventlog")`` — the subscribe
+    half of the reference's Windows EventLog source (S4)."""
+
+    NAME, SCHEMA, READER = "cheetah-eventlog", EVENTLOG_STREAM_SCHEMA, _EventLogSimpleStreamReader
 
 
 def parse_eventlog(df: DataFrame) -> DataFrame:

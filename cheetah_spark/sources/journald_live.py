@@ -34,15 +34,14 @@ import struct
 import subprocess
 import threading
 from dataclasses import dataclass
-from typing import BinaryIO, Callable, Iterator
+from typing import BinaryIO, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
-from pyspark.sql.types import StructType
 
 from cheetah_spark.sources import Source
 from cheetah_spark.sources.seqwindow import (
+    LiveDataSource,
     ReplayPump,
     SeqWindowStreamReader,
     capture_files,
@@ -200,18 +199,6 @@ class _ProcAdapter:
             pass
 
 
-@dataclass
-class JournaldReplayFactory:
-    """Frames a recorded export capture through the same reader,
-    optionally in per-micro-batch chunks."""
-
-    capture_path: str = ""
-    chunk_size: int = 0
-
-    def __call__(self, on_entry, on_error):
-        return ReplayPump(_replay_entries(self.capture_path), self.chunk_size, on_entry)
-
-
 def _replay_entries(path: str) -> Iterator[str]:
     for fp in capture_files(path, (".export", ".txt")):
         # binary-safe: a recorded capture can carry the export
@@ -220,24 +207,31 @@ def _replay_entries(path: str) -> Iterator[str]:
             yield from _frame_entries_bytes(fh)
 
 
-def _make_factory(options) -> Callable:
-    transport = (options.get("transport") or "journalctl").lower()
-    if transport == "journalctl":
-        extra = options.get("extra_args") or ""
-        return JournalctlFactory(
-            follow=(options.get("follow") or "true").lower() == "true",
-            after_cursor=options.get("after_cursor") or "",
-            # comma-separated through the option channel, e.g.
-            # "--unit=sshd.service,--priority=4" — server-side
-            # filtering beats shipping everything
-            extra_args=tuple(a for a in extra.split(",") if a),
-        )
-    if transport == "replay":
-        return JournaldReplayFactory(
-            capture_path=options.get("capture_path") or "",
-            chunk_size=int(options.get("chunk_size") or 0),
-        )
-    raise ValueError(f"journald: unknown transport {transport!r} (journalctl|replay)")
+@dataclass
+class JournaldSource(Source):
+    """Source adapter over the cheetah-journald stream format. The
+    reference's config block is just ``{"type":"journald"}``
+    (README.md:179-185) — every field here defaults accordingly."""
+
+    transport: str = "journalctl"
+    follow: bool = True
+    after_cursor: str = ""
+    # journalctl filters, e.g. ("--unit=sshd.service",); comma-joined
+    # through the option channel — server-side filtering beats
+    # shipping everything
+    extra_args: tuple = ()
+    capture_path: str = ""
+    chunk_size: int = 0
+    content_type: str = "raw"  # raw | auto (append parsed struct)
+    streaming: bool = True
+
+    def read(self, spark: SparkSession) -> DataFrame:
+        df = load_stream(spark, JournaldStreamDataSource, self)
+        if self.content_type == "auto":
+            from cheetah_spark.functions import journald as JD
+
+            df = df.withColumn("journal", JD.parsed(F.col("entry")))
+        return df
 
 
 class _JournaldSimpleStreamReader(SeqWindowStreamReader):
@@ -247,14 +241,15 @@ class _JournaldSimpleStreamReader(SeqWindowStreamReader):
     mechanism is the cursor, which rides in every row — there is no
     per-entry ack to fire (``_ack_of`` stays None)."""
 
-    _PICKLE_FIELDS = ("_factory",)
-
-    def __init__(self, options):
-        self._factory = _make_factory(options)
-        self._init_runtime()
+    NAME = "journald"
+    SOURCE = JournaldSource
 
     def _make_listener(self):
-        return self._factory(self._on_item, self._on_error)
+        src = self._src
+        if src.transport.lower() == "replay":
+            return ReplayPump(_replay_entries(src.capture_path), src.chunk_size, self._on_item)
+        factory = JournalctlFactory(src.follow, src.after_cursor, src.extra_args)
+        return factory(self._on_item, self._on_error)
 
     def _row_of(self, entry: str) -> tuple:
         return (entry, _cursor_of(entry))
@@ -267,48 +262,7 @@ class _JournaldSimpleStreamReader(SeqWindowStreamReader):
         )
 
 
-class JournaldStreamDataSource(DataSource):
+class JournaldStreamDataSource(LiveDataSource):
     """``spark.readStream.format("cheetah-journald")``."""
 
-    @classmethod
-    def name(cls) -> str:
-        return "cheetah-journald"
-
-    def schema(self) -> str:
-        return JOURNALD_STREAM_SCHEMA
-
-    def simpleStreamReader(self, schema: StructType) -> SimpleDataSourceStreamReader:
-        return _JournaldSimpleStreamReader(self.options)
-
-
-@dataclass
-class JournaldSource(Source):
-    """Source adapter over the cheetah-journald stream format. The
-    reference's config block is just ``{"type":"journald"}``
-    (README.md:179-185) — every field here defaults accordingly."""
-
-    transport: str = "journalctl"
-    follow: bool = True
-    after_cursor: str = ""
-    extra_args: tuple = ()  # journalctl filters, e.g. ("--unit=sshd.service",)
-    capture_path: str = ""
-    chunk_size: int = 0
-    content_type: str = "raw"  # raw | auto (append parsed struct)
-    streaming: bool = True
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        df = load_stream(
-            spark,
-            JournaldStreamDataSource,
-            transport=self.transport,
-            follow=self.follow,
-            after_cursor=self.after_cursor,
-            extra_args=",".join(self.extra_args),
-            capture_path=self.capture_path,
-            chunk_size=self.chunk_size,
-        )
-        if self.content_type == "auto":
-            from cheetah_spark.functions import journald as JD
-
-            df = df.withColumn("journal", JD.parsed(F.col("entry")))
-        return df
+    NAME, SCHEMA, READER = "cheetah-journald", JOURNALD_STREAM_SCHEMA, _JournaldSimpleStreamReader

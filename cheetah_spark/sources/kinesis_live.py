@@ -51,16 +51,17 @@ from typing import Iterator, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
-from pyspark.sql.types import StructType
+from pyspark.sql.datasource import SimpleDataSourceStreamReader
 
 from cheetah_spark.sinks import Sink, write_transport
 from cheetah_spark.sources import Source
 from cheetah_spark.sources.seqwindow import (
+    LiveDataSource,
     ReplayPump,
     SeqWindowStreamReader,
     capture_lines,
     load_stream,
+    source_from_options,
 )
 
 KINESIS_SCHEMA = (
@@ -327,169 +328,7 @@ class KinesisClient:
 
 
 # ---------------------------------------------------------------------------
-# Streaming readers
-# ---------------------------------------------------------------------------
-
-
-class _KinesisCursorStreamReader(SimpleDataSourceStreamReader):
-    """CURSOR reader over the live API (reference S5 poller shape,
-    poller.go): offsets are per-shard positions
-    ``{"pos": {shard_id: next_seq_int}}``, ``read`` polls GetRecords
-    from the committed positions, and ``readBetweenOffsets`` re-fetches
-    the exact window from the service via AT_SEQUENCE_NUMBER — the
-    stream retains records, so a reader restart replays losslessly
-    with no local buffering at all (and ``commit`` has nothing to ack:
-    Kinesis consumers own their positions, which ARE the checkpoint)."""
-
-    def __init__(self, options):
-        self._addr = options.get("addr") or ""
-        self._stream = options.get("stream") or "events"
-        self._limit = int(options.get("max_records") or 1000)
-        self._client: Optional[KinesisClient] = None
-        self._shard_ids: Optional[list] = None
-
-    def __getstate__(self):
-        return {
-            "_addr": self._addr,
-            "_stream": self._stream,
-            "_limit": self._limit,
-        }
-
-    def __setstate__(self, state):
-        self.__dict__.update(state)
-        self._client = None
-        self._shard_ids = None
-
-    def _ensure(self):
-        if self._client is None:
-            self._client = KinesisClient(self._addr)
-            self._shard_ids = [s["ShardId"] for s in self._client.describe_stream(self._stream)]
-        return self._client
-
-    def initialOffset(self) -> dict:
-        self._ensure()
-        return {"pos": {sid: 0 for sid in self._shard_ids}}
-
-    def _iter_at(self, shard_id: str, pos: int) -> str:
-        """Iterator at position ``pos``: TRIM_HORIZON for the stream
-        start (AT_SEQUENCE_NUMBER needs an existing record to anchor
-        on), AT_SEQUENCE_NUMBER otherwise."""
-        c = self._ensure()
-        if pos == 0:
-            return c.get_shard_iterator(self._stream, shard_id, "TRIM_HORIZON")
-        return c.get_shard_iterator(
-            self._stream, shard_id, "AT_SEQUENCE_NUMBER", str(pos)
-        )
-
-    def _fetch(self, shard_id: str, from_pos: int, until_pos: Optional[int] = None) -> list:
-        """Fetch records of one shard from position ``from_pos``
-        (inclusive), to the stream head or ``until_pos`` (exclusive)."""
-        c = self._ensure()
-        it = self._iter_at(shard_id, from_pos)
-        rows = []
-        while True:
-            want = (until_pos - from_pos - len(rows)) if until_pos is not None else self._limit
-            if until_pos is not None and want <= 0:
-                break
-            out = c.get_records(it, min(want, self._limit))
-            rows.extend(out["records"])
-            it = out["next"]
-            if not out["records"] or (until_pos is None and not out["behind"]):
-                break
-        return rows
-
-    def read(self, start: dict) -> Tuple[Iterator[tuple], dict]:
-        c = self._ensure()
-        pos = dict(start["pos"])
-        rows = []
-        for sid in self._shard_ids:
-            p = int(pos.get(sid, 0))
-            # ONE GetRecords per shard per micro-batch: admission stays
-            # bounded by max_records even against a deep backlog (the
-            # next trigger continues from the advanced position)
-            it = self._iter_at(sid, p)
-            recs = c.get_records(it, self._limit)["records"]
-            for seq, pk, data in recs:
-                rows.append((sid, seq, pk, data))
-            pos[sid] = p + len(recs)
-        return iter(rows), {"pos": pos}
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        # deterministic service-side replay: the stream retains the
-        # window, so a restarted reader re-fetches it exactly
-        self._ensure()
-        rows = []
-        for sid in self._shard_ids:
-            p0 = int(start["pos"].get(sid, 0))
-            p1 = int(end["pos"].get(sid, 0))
-            if p1 > p0:
-                for seq, pk, data in self._fetch(sid, p0, p1):
-                    rows.append((sid, seq, pk, data))
-        return iter(rows)
-
-    def commit(self, end: dict) -> None:
-        pass  # positions are the checkpoint; nothing to ack service-side
-
-
-class _KinesisReplaySimpleStreamReader(SeqWindowStreamReader):
-    """Replay transport on the shared seq-window core: the NDJSON
-    capture (partition_key, data) is routed to shards by the same MD5
-    rule the service applies, with per-shard positions as sequence
-    numbers."""
-
-    _PICKLE_FIELDS = ("_capture_path", "_chunk_size", "_n_shards")
-
-    def __init__(self, options):
-        self._capture_path = options.get("capture_path") or ""
-        self._chunk_size = int(options.get("chunk_size") or 0)
-        self._n_shards = int(options.get("shard_count") or 4)
-        self._init_runtime()
-
-    def _make_listener(self):
-        return ReplayPump(self._routed(), self._chunk_size, self._on_item)
-
-    def _routed(self) -> Iterator[tuple]:
-        seqs = [0] * self._n_shards
-        for line in capture_lines(self._capture_path):
-            rec = json.loads(line)
-            i = shard_for_key(rec["partition_key"], self._n_shards)
-            yield shard_id_str(i), str(seqs[i]), rec["partition_key"], rec["data"]
-            seqs[i] += 1
-
-    def _row_of(self, item) -> tuple:
-        return item
-
-    def _lost_window_error(self, start_seq: int, end_seq: int) -> Exception:
-        return RuntimeError(
-            f"kinesis-replay: window [{start_seq},{end_seq}) lost after restart "
-            "of the capture pump; the live transport re-fetches from the "
-            "service instead (cursor reader)"
-        )
-
-
-class KinesisStreamDataSource(DataSource):
-    """``spark.readStream.format("cheetah-kinesis")`` — a Kinesis
-    stream as a Python streaming data source (cursor reader over the
-    live API; seq-window pump over a replay capture)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "cheetah-kinesis"
-
-    def schema(self) -> str:
-        return KINESIS_SCHEMA
-
-    def simpleStreamReader(self, schema: StructType) -> SimpleDataSourceStreamReader:
-        transport = (self.options.get("transport") or "http").lower()
-        if transport == "http":
-            return _KinesisCursorStreamReader(self.options)
-        if transport == "replay":
-            return _KinesisReplaySimpleStreamReader(self.options)
-        raise ValueError(f"kinesis: unknown transport {transport!r} (http|replay)")
-
-
-# ---------------------------------------------------------------------------
-# Source / Sink adapters (config types)
+# Source config
 # ---------------------------------------------------------------------------
 
 
@@ -542,17 +381,159 @@ class KinesisSource(Source):
                 "partition_key",
                 "data",
             )
-        return load_stream(
-            spark,
-            KinesisStreamDataSource,
-            transport=self.transport,
-            addr=self.addr,
-            stream=self.stream,
-            max_records=self.max_records,
-            shard_count=self.shard_count,
-            capture_path=self.capture_path,
-            chunk_size=self.chunk_size,
+        return load_stream(spark, KinesisStreamDataSource, self)
+
+
+# ---------------------------------------------------------------------------
+# Streaming readers
+# ---------------------------------------------------------------------------
+
+
+class _KinesisCursorStreamReader(SimpleDataSourceStreamReader):
+    """CURSOR reader over the live API (reference S5 poller shape,
+    poller.go): offsets are per-shard positions
+    ``{"pos": {shard_id: next_seq_int}}``, ``read`` polls GetRecords
+    from the committed positions, and ``readBetweenOffsets`` re-fetches
+    the exact window from the service via AT_SEQUENCE_NUMBER — the
+    stream retains records, so a reader restart replays losslessly
+    with no local buffering at all (and ``commit`` has nothing to ack:
+    Kinesis consumers own their positions, which ARE the checkpoint)."""
+
+    def __init__(self, options):
+        self._src = source_from_options(KinesisSource, options)
+        self._client: Optional[KinesisClient] = None
+        self._shard_ids: Optional[list] = None
+
+    def __getstate__(self):
+        return {"_src": self._src}
+
+    def __setstate__(self, state):
+        self._src = state["_src"]
+        self._client = None
+        self._shard_ids = None
+
+    def _ensure(self):
+        if self._client is None:
+            self._client = KinesisClient(self._src.addr)
+            self._shard_ids = [s["ShardId"] for s in self._client.describe_stream(self._src.stream)]
+        return self._client
+
+    def initialOffset(self) -> dict:
+        self._ensure()
+        return {"pos": {sid: 0 for sid in self._shard_ids}}
+
+    def _iter_at(self, shard_id: str, pos: int) -> str:
+        """Iterator at position ``pos``: TRIM_HORIZON for the stream
+        start (AT_SEQUENCE_NUMBER needs an existing record to anchor
+        on), AT_SEQUENCE_NUMBER otherwise."""
+        c = self._ensure()
+        if pos == 0:
+            return c.get_shard_iterator(self._src.stream, shard_id, "TRIM_HORIZON")
+        return c.get_shard_iterator(
+            self._src.stream, shard_id, "AT_SEQUENCE_NUMBER", str(pos)
         )
+
+    def _fetch(self, shard_id: str, from_pos: int, until_pos: Optional[int] = None) -> list:
+        """Fetch records of one shard from position ``from_pos``
+        (inclusive), to the stream head or ``until_pos`` (exclusive)."""
+        c = self._ensure()
+        it = self._iter_at(shard_id, from_pos)
+        rows = []
+        while True:
+            want = (until_pos - from_pos - len(rows)) if until_pos is not None else self._src.max_records
+            if until_pos is not None and want <= 0:
+                break
+            out = c.get_records(it, min(want, self._src.max_records))
+            rows.extend(out["records"])
+            it = out["next"]
+            if not out["records"] or (until_pos is None and not out["behind"]):
+                break
+        return rows
+
+    def read(self, start: dict) -> Tuple[Iterator[tuple], dict]:
+        c = self._ensure()
+        pos = dict(start["pos"])
+        rows = []
+        for sid in self._shard_ids:
+            p = int(pos.get(sid, 0))
+            # ONE GetRecords per shard per micro-batch: admission stays
+            # bounded by max_records even against a deep backlog (the
+            # next trigger continues from the advanced position)
+            it = self._iter_at(sid, p)
+            recs = c.get_records(it, self._src.max_records)["records"]
+            for seq, pk, data in recs:
+                rows.append((sid, seq, pk, data))
+            pos[sid] = p + len(recs)
+        return iter(rows), {"pos": pos}
+
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
+        # deterministic service-side replay: the stream retains the
+        # window, so a restarted reader re-fetches it exactly
+        self._ensure()
+        rows = []
+        for sid in self._shard_ids:
+            p0 = int(start["pos"].get(sid, 0))
+            p1 = int(end["pos"].get(sid, 0))
+            if p1 > p0:
+                for seq, pk, data in self._fetch(sid, p0, p1):
+                    rows.append((sid, seq, pk, data))
+        return iter(rows)
+
+    def commit(self, end: dict) -> None:
+        pass  # positions are the checkpoint; nothing to ack service-side
+
+
+class _KinesisReplaySimpleStreamReader(SeqWindowStreamReader):
+    """Replay transport on the shared seq-window core: the NDJSON
+    capture (partition_key, data) is routed to shards by the same MD5
+    rule the service applies, with per-shard positions as sequence
+    numbers."""
+
+    NAME = "kinesis"
+    SOURCE = KinesisSource
+
+    def _make_listener(self):
+        return ReplayPump(self._routed(), self._src.chunk_size, self._on_item)
+
+    def _routed(self) -> Iterator[tuple]:
+        n_shards = self._src.shard_count
+        seqs = [0] * n_shards
+        for line in capture_lines(self._src.capture_path):
+            rec = json.loads(line)
+            i = shard_for_key(rec["partition_key"], n_shards)
+            yield shard_id_str(i), str(seqs[i]), rec["partition_key"], rec["data"]
+            seqs[i] += 1
+
+    def _row_of(self, item) -> tuple:
+        return item
+
+    def _lost_window_error(self, start_seq: int, end_seq: int) -> Exception:
+        return RuntimeError(
+            f"kinesis-replay: window [{start_seq},{end_seq}) lost after restart "
+            "of the capture pump; the live transport re-fetches from the "
+            "service instead (cursor reader)"
+        )
+
+
+def _kinesis_reader(options) -> SimpleDataSourceStreamReader:
+    """The cursor reader over the live API; the seq-window pump over a
+    replay capture (which rejects an unknown transport)."""
+    if source_from_options(KinesisSource, options).transport.lower() == "http":
+        return _KinesisCursorStreamReader(options)
+    return _KinesisReplaySimpleStreamReader(options)
+
+
+class KinesisStreamDataSource(LiveDataSource):
+    """``spark.readStream.format("cheetah-kinesis")`` — a Kinesis
+    stream as a Python streaming data source (cursor reader over the
+    live API; seq-window pump over a replay capture)."""
+
+    NAME, SCHEMA, READER = "cheetah-kinesis", KINESIS_SCHEMA, staticmethod(_kinesis_reader)
+
+
+# ---------------------------------------------------------------------------
+# Sink adapter (config type)
+# ---------------------------------------------------------------------------
 
 
 @dataclass

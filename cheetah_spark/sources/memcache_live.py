@@ -30,7 +30,6 @@ identical bytes."""
 from __future__ import annotations
 
 import socket
-import threading
 from dataclasses import dataclass, field
 from typing import Iterable, Optional
 
@@ -39,6 +38,7 @@ from pyspark.sql import functions as F
 
 from cheetah_spark.sinks import Sink, send_partitions
 from cheetah_spark.sources import Source
+from cheetah_spark.sources.seqwindow import LoopbackServer
 
 MEMCACHE_SCHEMA = "key string, flags int, value string"
 
@@ -111,93 +111,63 @@ class MemcacheClient:
             pass
 
 
-class MiniMemcacheServer:
+class MiniMemcacheServer(LoopbackServer):
     """Loopback memcached: set/get (multi-key)/delete/flush_all/
     version over the text protocol — a real memcached accepts the
     same bytes."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0):
-        self._sock = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._sock.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._sock.bind((host, port))
-        self._sock.listen(16)
-        self.addr = "%s:%d" % self._sock.getsockname()
-        self._lock = threading.Lock()
         self._store: dict[str, tuple[int, bytes]] = {}
-        self._closing = False
-        threading.Thread(target=self._accept_loop, daemon=True).start()
-
-    def _accept_loop(self) -> None:
-        while not self._closing:
-            try:
-                conn, _ = self._sock.accept()
-            except OSError:
-                return
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
+        super().__init__(host, port)
 
     def _serve(self, conn) -> None:
         fh = conn.makefile("rb")
-        try:
-            while not self._closing:
-                line = fh.readline()
-                if not line:
-                    return
-                parts = line.rstrip(b"\r\n").decode().split(" ")
-                cmd = parts[0]
-                if cmd == "set":
-                    key, flags, _exp, nbytes = (
-                        parts[1],
-                        int(parts[2]),
-                        int(parts[3]),
-                        int(parts[4]),
-                    )
-                    data = fh.read(nbytes + 2)[:-2]
-                    with self._lock:
-                        self._store[key] = (flags, data)
-                    if "noreply" not in parts:
-                        conn.sendall(b"STORED\r\n")
-                elif cmd in ("get", "gets"):
-                    out = b""
-                    with self._lock:
-                        for key in parts[1:]:
-                            hit = self._store.get(key)
-                            if hit is not None:
-                                flags, data = hit
-                                out += f"VALUE {key} {flags} {len(data)}\r\n".encode()
-                                out += data + b"\r\n"
-                    conn.sendall(out + b"END\r\n")
-                elif cmd == "delete":
-                    with self._lock:
-                        existed = self._store.pop(parts[1], None) is not None
-                    conn.sendall(b"DELETED\r\n" if existed else b"NOT_FOUND\r\n")
-                elif cmd == "flush_all":
-                    with self._lock:
-                        self._store.clear()
-                    conn.sendall(b"OK\r\n")
-                elif cmd == "version":
-                    conn.sendall(b"VERSION 1.6.0-mini\r\n")
-                elif cmd == "quit":
-                    return
-                else:
-                    conn.sendall(b"ERROR\r\n")
-        except (ConnectionError, OSError):
-            return
-        finally:
-            try:
-                conn.close()
-            except OSError:
-                pass
+        while not self._closing:
+            line = fh.readline()
+            if not line:
+                return
+            parts = line.rstrip(b"\r\n").decode().split(" ")
+            cmd = parts[0]
+            if cmd == "set":
+                key, flags, _exp, nbytes = (
+                    parts[1],
+                    int(parts[2]),
+                    int(parts[3]),
+                    int(parts[4]),
+                )
+                data = fh.read(nbytes + 2)[:-2]
+                with self._lock:
+                    self._store[key] = (flags, data)
+                if "noreply" not in parts:
+                    self._send(conn, b"STORED\r\n")
+            elif cmd in ("get", "gets"):
+                out = b""
+                with self._lock:
+                    for key in parts[1:]:
+                        hit = self._store.get(key)
+                        if hit is not None:
+                            flags, data = hit
+                            out += f"VALUE {key} {flags} {len(data)}\r\n".encode()
+                            out += data + b"\r\n"
+                self._send(conn, out + b"END\r\n")
+            elif cmd == "delete":
+                with self._lock:
+                    existed = self._store.pop(parts[1], None) is not None
+                self._send(conn, b"DELETED\r\n" if existed else b"NOT_FOUND\r\n")
+            elif cmd == "flush_all":
+                with self._lock:
+                    self._store.clear()
+                self._send(conn, b"OK\r\n")
+            elif cmd == "version":
+                self._send(conn, b"VERSION 1.6.0-mini\r\n")
+            elif cmd == "quit":
+                return
+            else:
+                self._send(conn, b"ERROR\r\n")
 
     def key_count(self) -> int:
         with self._lock:
             return len(self._store)
-
-    def close(self) -> None:
-        self._closing = True
-        try:
-            self._sock.close()
-        except OSError:
-            pass
 
 
 @dataclass
@@ -264,6 +234,9 @@ class MemcacheSource(Source):
     keep_misses: bool = False
     batch_size: int = 64  # keys per multi-get
     streaming: bool = False
+
+    def __post_init__(self) -> None:
+        self.keys = tuple(self.keys)  # a JSON config gives a list
 
     def read(self, spark: SparkSession) -> DataFrame:
         if self.streaming:

@@ -62,12 +62,11 @@ from dataclasses import dataclass
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
-from pyspark.sql.types import StructType
 
 from cheetah_spark.sinks import Sink, send_partitions
 from cheetah_spark.sources import Source, mqtt_filter_regex
 from cheetah_spark.sources.seqwindow import (
+    LiveDataSource,
     ReplayPump,
     SeqWindowStreamReader,
     capture_lines,
@@ -275,115 +274,11 @@ class _ReplayAdapter:
         self.connected = False
 
 
-def _make_factory(options) -> Callable:
-    transport = (options.get("transport") or "paho").lower()
-    if transport == "paho":
-        return PahoClientFactory()
-    if transport == "replay":
-        return ReplayClientFactory(
-            capture_path=options.get("capture_path") or "",
-            ack_log=options.get("ack_log") or "",
-            publish_log=options.get("publish_log") or "",
-            fail_connect=(options.get("fail_connect") or "").lower() == "true",
-            drop_connection_after=int(options.get("drop_connection_after") or -1),
-            chunk_size=int(options.get("chunk_size") or 0),
-        )
-    raise ValueError(f"unknown mqtt transport {transport!r} (paho|replay)")
-
-
-def _opts_from(options) -> MqttOpts:
-    return MqttOpts(
-        broker=options.get("broker") or "",
-        client_id=options.get("client_id") or "",
-        topic=options.get("topic") or "#",
-        qos=int(options.get("qos") or 1),
-        retained=(options.get("retained") or "").lower() == "true",
-        keep_alive=float(options.get("keep_alive") or 30.0),
-        username=options.get("username") or "",
-        password=options.get("password") or "",
-    )
-
-
 # Envelope columns the source emits — the Message[T] shape
 # (types.go:10-26) + delivery metadata, matching MqttReplaySource.
 MQTT_STREAM_SCHEMA = (
     "key string, value binary, topic string, attributes map<string,string>"
 )
-
-
-class _MqttSimpleStreamReader(SeqWindowStreamReader):
-    """Driver-side reader on the shared
-    :class:`~cheetah_spark.sources.seqwindow.SeqWindowStreamReader`
-    core: buffers pushed messages, serves them as seq-numbered
-    micro-batch slices, acks on commit.
-
-    Offsets are ``{"seq": n}`` — the count of messages admitted so
-    far. ``commit(end)`` fires the manual acks for every message below
-    ``end`` — at-least-once, ack-after-sink (T4): an unacked QoS≥1
-    message is redelivered by the broker on reconnect. The lost-window
-    policy is QoS-aware (see ``_on_lost_window``)."""
-
-    _PICKLE_FIELDS = ("_opts", "_factory")
-
-    def __init__(self, options):
-        self._opts = _opts_from(options)
-        if (options.get("transport") or "paho").lower() == "paho":
-            self._opts.validate_connect()
-        self._factory = _make_factory(options)
-        self._init_runtime()
-
-    def _make_listener(self):
-        return self._factory(self._opts, self._on_item, self._on_error)
-
-    def _row_of(self, msg: MqttMessage) -> tuple:
-        return (
-            str(msg.mid),
-            bytes(msg.payload),
-            msg.topic,
-            {"qos": str(msg.qos), "retained": str(msg.retained).lower()},
-        )
-
-    def _ack_of(self, msg: MqttMessage, seq: int, listener):
-        return msg  # MqttMessage carries its own ack closure
-
-    def _on_lost_window(self, start_seq: int, end_seq: int) -> None:
-        # The replay window lives in this reader process's memory, so a
-        # driver restart loses it. For QoS>=1 the unacked messages come
-        # back via broker redelivery (at-least-once holds); at QoS 0
-        # there is no redelivery, so committing this empty range is
-        # silent data loss — fail the query instead of hiding it, and
-        # make the QoS>=1 reliance on redelivery visible in the log.
-        if int(self._opts.qos) == 0:
-            raise RuntimeError(
-                f"mqtt: replay window lost for offsets [{start_seq},{end_seq}) "
-                "after restart and qos=0 has no broker redelivery — rows are "
-                "unrecoverable; use qos>=1 for at-least-once recovery"
-            )
-        import warnings
-
-        warnings.warn(
-            f"mqtt: replay window lost for offsets [{start_seq},{end_seq}) "
-            f"({end_seq - start_seq} rows) — relying on broker QoS>=1 redelivery "
-            "of unacked messages for delivery",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-
-
-class MqttStreamDataSource(DataSource):
-    """``spark.readStream.format("cheetah-mqtt")`` — the subscribe half
-    of the reference's MQTT connector (mqtt.Source, mqtt.go:178-251) as
-    a Python streaming data source."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "cheetah-mqtt"
-
-    def schema(self) -> str:
-        return MQTT_STREAM_SCHEMA
-
-    def simpleStreamReader(self, schema: StructType) -> SimpleDataSourceStreamReader:
-        return _MqttSimpleStreamReader(self.options)
 
 
 @dataclass
@@ -410,23 +305,96 @@ class MqttLiveSource(Source):
     streaming: bool = True
 
     def read(self, spark: SparkSession) -> DataFrame:
-        return load_stream(
-            spark,
-            MqttStreamDataSource,
-            broker=self.broker,
-            client_id=self.client_id,
-            topic=self.topic,
-            qos=self.qos,
-            username=self.username,
-            password=self.password,
-            keep_alive=self.keep_alive,
-            transport=self.transport,
-            capture_path=self.capture_path,
-            ack_log=self.ack_log,
-            drop_connection_after=self.drop_connection_after,
-            fail_connect=self.fail_connect,
-            chunk_size=self.chunk_size,
+        return load_stream(spark, MqttStreamDataSource, self)
+
+
+class _MqttSimpleStreamReader(SeqWindowStreamReader):
+    """Driver-side reader on the shared
+    :class:`~cheetah_spark.sources.seqwindow.SeqWindowStreamReader`
+    core: buffers pushed messages, serves them as seq-numbered
+    micro-batch slices, acks on commit.
+
+    Offsets are ``{"seq": n}`` — the count of messages admitted so
+    far. ``commit(end)`` fires the manual acks for every message below
+    ``end`` — at-least-once, ack-after-sink (T4): an unacked QoS≥1
+    message is redelivered by the broker on reconnect. The lost-window
+    policy is QoS-aware (see ``_on_lost_window``)."""
+
+    NAME = "mqtt"
+    SOURCE = MqttLiveSource
+
+    def _opts(self) -> MqttOpts:
+        src = self._src
+        return MqttOpts(
+            broker=src.broker,
+            client_id=src.client_id,
+            topic=src.topic,
+            qos=src.qos,
+            keep_alive=src.keep_alive,
+            username=src.username,
+            password=src.password,
         )
+
+    def _validate(self) -> None:
+        super()._validate()
+        if self._src.transport.lower() == "paho":
+            self._opts().validate_connect()
+
+    def _make_listener(self):
+        src = self._src
+        if src.transport.lower() == "paho":
+            factory: Callable = PahoClientFactory()
+        else:
+            factory = ReplayClientFactory(
+                capture_path=src.capture_path,
+                ack_log=src.ack_log,
+                fail_connect=src.fail_connect,
+                drop_connection_after=src.drop_connection_after,
+                chunk_size=src.chunk_size,
+            )
+        return factory(self._opts(), self._on_item, self._on_error)
+
+    def _row_of(self, msg: MqttMessage) -> tuple:
+        return (
+            str(msg.mid),
+            bytes(msg.payload),
+            msg.topic,
+            {"qos": str(msg.qos), "retained": str(msg.retained).lower()},
+        )
+
+    def _ack_of(self, msg: MqttMessage, seq: int, listener):
+        return msg  # MqttMessage carries its own ack closure
+
+    def _on_lost_window(self, start_seq: int, end_seq: int) -> None:
+        # The replay window lives in this reader process's memory, so a
+        # driver restart loses it. For QoS>=1 the unacked messages come
+        # back via broker redelivery (at-least-once holds); at QoS 0
+        # there is no redelivery, so committing this empty range is
+        # silent data loss — fail the query instead of hiding it, and
+        # make the QoS>=1 reliance on redelivery visible in the log.
+        if int(self._src.qos) == 0:
+            raise RuntimeError(
+                f"mqtt: replay window lost for offsets [{start_seq},{end_seq}) "
+                "after restart and qos=0 has no broker redelivery — rows are "
+                "unrecoverable; use qos>=1 for at-least-once recovery"
+            )
+        import warnings
+
+        warnings.warn(
+            f"mqtt: replay window lost for offsets [{start_seq},{end_seq}) "
+            f"({end_seq - start_seq} rows) — relying on broker QoS>=1 redelivery "
+            "of unacked messages for delivery",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+
+
+class MqttStreamDataSource(LiveDataSource):
+    """``spark.readStream.format("cheetah-mqtt")`` — the subscribe half
+    of the reference's MQTT connector (mqtt.Source, mqtt.go:178-251) as
+    a Python streaming data source."""
+
+    NAME, SCHEMA, READER = "cheetah-mqtt", MQTT_STREAM_SCHEMA, _MqttSimpleStreamReader
 
 
 @dataclass

@@ -34,19 +34,17 @@ from __future__ import annotations
 
 import json
 import socket
-import threading
 from dataclasses import dataclass
-from typing import Callable, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
-from pyspark.sql.types import StructType
 
 from cheetah_spark.sinks import Sink, write_transport
 from cheetah_spark.sources import Source
 from cheetah_spark.sources.seqwindow import (
-    NdjsonReplayFactory,
+    LiveDataSource,
+    LoopbackServer,
     SeqWindowStreamReader,
     load_stream,
 )
@@ -191,7 +189,7 @@ class NatsClient:
             pass
 
 
-class MiniNatsServer:
+class MiniNatsServer(LoopbackServer):
     """Loopback NATS server — the conformance stand-in (a real
     nats-server accepts the same bytes). Supports INFO banner,
     CONNECT, PING/PONG, PUB fan-out to SUB'd clients with full
@@ -200,81 +198,47 @@ class MiniNatsServer:
     but deterministic), and UNSUB."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0):
-        self._sock = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._sock.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._sock.bind((host, port))
-        self._sock.listen(16)
-        self.addr = "%s:%d" % self._sock.getsockname()
         # sid-keyed subscriptions: (conn, subject, queue)
         self._subs: dict[tuple, tuple] = {}
         self._rr: dict[str, int] = {}  # queue-group round-robin cursor
-        # per-connection send locks: a PONG from a client's serve thread
-        # must not interleave bytes with a MSG fan-out from another
-        # client's thread on the same socket
-        self._send_locks: dict[int, threading.Lock] = {}
-        self._lock = threading.Lock()
-        self._closing = False
-        threading.Thread(target=self._accept_loop, daemon=True).start()
-
-    def _accept_loop(self) -> None:
-        while not self._closing:
-            try:
-                conn, _ = self._sock.accept()
-            except OSError:
-                return
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
-
-    def _send(self, conn, data: bytes) -> None:
-        with self._send_locks.setdefault(id(conn), threading.Lock()):
-            conn.sendall(data)
+        super().__init__(host, port)
 
     def _serve(self, conn) -> None:
         fh = conn.makefile("rb")
+        self._send(
+            conn,
+            b"INFO "
+            + json.dumps(
+                {"server_name": "mini-nats", "proto": 1, "max_payload": 1 << 20}
+            ).encode()
+            + b"\r\n",
+        )
+        while not self._closing:
+            op = read_op(fh)
+            verb = op[0]
+            if verb == "CONNECT":
+                continue
+            if verb == "PING":
+                self._send(conn, b"PONG\r\n")
+            elif verb == "PONG":
+                continue
+            elif verb == "SUB":
+                _, subject, queue, sid = op
+                with self._lock:
+                    self._subs[(id(conn), sid)] = (conn, subject, queue)
+            elif verb == "UNSUB":
+                with self._lock:
+                    self._subs.pop((id(conn), op[1]), None)
+            elif verb == "PUB":
+                _, subject, reply_to, payload = op
+                self._fanout(subject, reply_to, payload)
+            else:
+                self._send(conn, b"-ERR 'Unknown Protocol Operation'\r\n")
+
+    def _on_disconnect(self, conn) -> None:
         with self._lock:
-            self._send_locks[id(conn)] = threading.Lock()
-        try:
-            self._send(
-                conn,
-                b"INFO "
-                + json.dumps(
-                    {"server_name": "mini-nats", "proto": 1, "max_payload": 1 << 20}
-                ).encode()
-                + b"\r\n",
-            )
-            while not self._closing:
-                try:
-                    op = read_op(fh)
-                except (ConnectionError, OSError):
-                    return
-                verb = op[0]
-                if verb == "CONNECT":
-                    continue
-                if verb == "PING":
-                    self._send(conn, b"PONG\r\n")
-                elif verb == "PONG":
-                    continue
-                elif verb == "SUB":
-                    _, subject, queue, sid = op
-                    with self._lock:
-                        self._subs[(id(conn), sid)] = (conn, subject, queue)
-                elif verb == "UNSUB":
-                    with self._lock:
-                        self._subs.pop((id(conn), op[1]), None)
-                elif verb == "PUB":
-                    _, subject, reply_to, payload = op
-                    self._fanout(subject, reply_to, payload)
-                else:
-                    self._send(conn, b"-ERR 'Unknown Protocol Operation'\r\n")
-        finally:
-            with self._lock:
-                dead = [k for k in self._subs if k[0] == id(conn)]
-                for k in dead:
-                    del self._subs[k]
-                self._send_locks.pop(id(conn), None)
-            try:
-                conn.close()
-            except OSError:
-                pass
+            for k in [k for k in self._subs if k[0] == id(conn)]:
+                del self._subs[k]
 
     def _fanout(self, subject: str, reply_to: str, payload: bytes) -> None:
         with self._lock:
@@ -298,128 +262,9 @@ class MiniNatsServer:
             except OSError:
                 pass
 
-    def close(self) -> None:
-        self._closing = True
-        try:
-            self._sock.close()
-        except OSError:
-            pass
-
 
 # ---------------------------------------------------------------------------
-# Streaming reader (seq-window core) + transports
-# ---------------------------------------------------------------------------
-
-
-@dataclass
-class NatsListenerFactory:
-    """Real socket subscriber: SUB on connect, a background thread
-    drains MSG frames into the reader buffer. Connection loss is fatal
-    (reference S3 policy — core NATS cannot replay what was missed)."""
-
-    addr: str = ""
-    subject: str = ">"
-    queue: str = ""
-
-    def __call__(self, on_msg, on_error):
-        listener = _SubListener(self, on_msg, on_error)
-        listener.start()
-        return listener
-
-
-class _SubListener:
-    def __init__(self, cfg: NatsListenerFactory, on_msg, on_error):
-        self._cfg = cfg
-        self._on_msg = on_msg
-        self._on_error = on_error
-        self._closing = False
-        self._client: Optional[NatsClient] = None
-
-    def start(self) -> None:
-        # connect + SUB synchronously so no message published after
-        # construction can be missed; drain on a background thread
-        self._client = NatsClient(self._cfg.addr)
-        self._client.sub(self._cfg.subject, sid="1", queue=self._cfg.queue)
-        self._client.ping()  # round-trip: the SUB is registered server-side
-        threading.Thread(target=self._loop, name="cheetah-nats-sub", daemon=True).start()
-
-    def _loop(self) -> None:
-        try:
-            while not self._closing:
-                subject, _sid, reply_to, payload = self._client.next_msg()
-                self._on_msg(subject, reply_to, payload)
-        except Exception as exc:
-            if not self._closing:
-                self._on_error(exc)
-
-    def close(self) -> None:
-        self._closing = True
-        if self._client is not None:
-            self._client.close()
-
-
-def _nats_item(rec: dict) -> tuple:
-    return rec["subject"], rec.get("reply_to") or "", rec["payload"]
-
-
-def _nats_factory(options) -> Callable:
-    transport = (options.get("transport") or "socket").lower()
-    if transport == "socket":
-        return NatsListenerFactory(
-            addr=options.get("addr") or "",
-            subject=options.get("subject") or ">",
-            queue=options.get("queue") or "",
-        )
-    if transport == "replay":
-        return NdjsonReplayFactory.from_options(options, _nats_item)
-    raise ValueError(f"nats: unknown transport {transport!r} (socket|replay)")
-
-
-class _NatsSimpleStreamReader(SeqWindowStreamReader):
-    """Seq-window reader over the SUB listener / replay pump. No acks:
-    core NATS delivery is at-most-once (JetStream consumers add acks,
-    on a real server)."""
-
-    _PICKLE_FIELDS = ("_factory",)
-
-    def __init__(self, options):
-        self._factory = _nats_factory(options)
-        self._init_runtime()
-
-    def _make_listener(self):
-        return self._factory(self._on_msg, self._on_error)
-
-    def _on_msg(self, subject: str, reply_to: str, payload: str) -> None:
-        self._on_item((subject, reply_to, payload))
-
-    def _row_of(self, item: tuple) -> tuple:
-        return item
-
-    def _lost_window_error(self, start_seq: int, end_seq: int) -> Exception:
-        return RuntimeError(
-            f"nats: replay window lost for offsets [{start_seq},{end_seq}) after "
-            "restart — core NATS is at-most-once with no server-side replay; "
-            "use JetStream (durable consumer) for redelivery on a real server"
-        )
-
-
-class NatsStreamDataSource(DataSource):
-    """``spark.readStream.format("cheetah-nats")`` — a NATS
-    subscription as a Python streaming data source."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "cheetah-nats"
-
-    def schema(self) -> str:
-        return NATS_SCHEMA
-
-    def simpleStreamReader(self, schema: StructType) -> SimpleDataSourceStreamReader:
-        return _NatsSimpleStreamReader(self.options)
-
-
-# ---------------------------------------------------------------------------
-# Source / Sink adapters (config types)
+# Source config + streaming reader (seq-window core)
 # ---------------------------------------------------------------------------
 
 
@@ -449,16 +294,53 @@ class NatsSource(Source):
             if self.subject and self.subject != ">":
                 env = env.where(_subject_match_col(self.subject))
             return env
-        return load_stream(
-            spark,
-            NatsStreamDataSource,
-            transport=self.transport,
-            addr=self.addr,
-            subject=self.subject,
-            queue=self.queue,
-            capture_path=self.capture_path,
-            chunk_size=self.chunk_size,
+        return load_stream(spark, NatsStreamDataSource, self)
+
+
+class _NatsSimpleStreamReader(SeqWindowStreamReader):
+    """Seq-window reader over a SUB connection / replay capture. Items
+    are the rows ``(subject, reply_to, payload)``. No acks: core NATS
+    delivery is at-most-once (JetStream consumers add acks, on a real
+    server), and connection loss is fatal (reference S3 policy — core
+    NATS cannot replay what was missed)."""
+
+    NAME = "nats"
+    SOURCE = NatsSource
+
+    def _connect(self) -> NatsClient:
+        client = NatsClient(self._src.addr)
+        client.sub(self._src.subject, sid="1", queue=self._src.queue)
+        client.ping()  # round-trip: the SUB is registered server-side
+        return client
+
+    def _poll(self, client: NatsClient):
+        subject, _sid, reply_to, payload = client.next_msg()
+        return ((subject, reply_to, payload),)
+
+    def _replay_item(self, rec: dict) -> tuple:
+        return rec["subject"], rec.get("reply_to") or "", rec["payload"]
+
+    def _row_of(self, item: tuple) -> tuple:
+        return item
+
+    def _lost_window_error(self, start_seq: int, end_seq: int) -> Exception:
+        return RuntimeError(
+            f"nats: replay window lost for offsets [{start_seq},{end_seq}) after "
+            "restart — core NATS is at-most-once with no server-side replay; "
+            "use JetStream (durable consumer) for redelivery on a real server"
         )
+
+
+class NatsStreamDataSource(LiveDataSource):
+    """``spark.readStream.format("cheetah-nats")`` — a NATS
+    subscription as a Python streaming data source."""
+
+    NAME, SCHEMA, READER = "cheetah-nats", NATS_SCHEMA, _NatsSimpleStreamReader
+
+
+# ---------------------------------------------------------------------------
+# Sink adapter (config type)
+# ---------------------------------------------------------------------------
 
 
 def _subject_match_col(pattern: str):

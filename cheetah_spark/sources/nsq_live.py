@@ -36,17 +36,17 @@ import socket
 import struct
 import threading
 from dataclasses import dataclass
-from typing import Callable, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
-from pyspark.sql.types import StructType
 
 from cheetah_spark.sinks import Sink, write_transport
 from cheetah_spark.sources import Source
 from cheetah_spark.sources.seqwindow import (
-    NdjsonReplayFactory,
+    AckHandle,
+    LiveDataSource,
+    LoopbackServer,
     SeqWindowStreamReader,
     load_stream,
 )
@@ -173,7 +173,7 @@ class _Channel:
         self.consumer = None  # (conn, rdy_remaining)
 
 
-class MiniNsqServer:
+class MiniNsqServer(LoopbackServer):
     """Loopback nsqd: magic + IDENTIFY, topics fanning out to channels
     (every channel receives every message; consumers on one channel
     share its queue), RDY flow control, FIN acks, REQ requeues, and
@@ -181,81 +181,51 @@ class MiniNsqServer:
     the at-least-once contract FIN-on-commit relies on."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0):
-        self._sock = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._sock.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._sock.bind((host, port))
-        self._sock.listen(16)
-        self.addr = "%s:%d" % self._sock.getsockname()
-        self._lock = threading.Lock()
         self._topics: dict[str, dict[str, _Channel]] = {}
         self._parked: dict[str, list[bytes]] = {}  # PUBs before any channel
         self._mid = itertools.count(1)
-        self._send_locks: dict[int, threading.Lock] = {}
-        self._closing = False
-        threading.Thread(target=self._accept_loop, daemon=True).start()
-
-    def _accept_loop(self) -> None:
-        while not self._closing:
-            try:
-                conn, _ = self._sock.accept()
-            except OSError:
-                return
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
-
-    def _send(self, conn, data: bytes) -> None:
-        with self._send_locks.setdefault(id(conn), threading.Lock()):
-            conn.sendall(data)
+        super().__init__(host, port)
 
     def _serve(self, conn) -> None:
         fh = conn.makefile("rb")
-        with self._lock:
-            self._send_locks[id(conn)] = threading.Lock()
-        try:
-            if fh.read(4) != _MAGIC:
-                return
-            while not self._closing:
-                try:
-                    line = fh.readline()
-                except OSError:
-                    return
-                if not line:
-                    return
-                parts = line.rstrip(b"\n").split(b" ")
-                verb = parts[0].decode()
-                if verb == "IDENTIFY":
-                    (n,) = struct.unpack(">I", fh.read(4))
-                    fh.read(n)
-                    self._send(conn, _frame(FRAME_RESPONSE, b"OK"))
-                elif verb == "PUB":
-                    topic = parts[1].decode()
-                    (n,) = struct.unpack(">I", fh.read(4))
-                    body = fh.read(n)
-                    self._publish(topic, body)
-                    self._send(conn, _frame(FRAME_RESPONSE, b"OK"))
-                elif verb == "SUB":
-                    topic, channel = parts[1].decode(), parts[2].decode()
-                    with self._lock:
-                        ch = self._channel(topic, channel)
-                        ch.consumer = (conn, 0)
-                    self._send(conn, _frame(FRAME_RESPONSE, b"OK"))
-                elif verb == "RDY":
-                    count = int(parts[1])
-                    self._set_rdy(conn, count)
-                elif verb == "FIN":
-                    self._fin(parts[1].decode())
-                elif verb == "REQ":
-                    self._req(parts[1].decode())
-                elif verb == "NOP":
-                    continue
-                elif verb == "CLS":
-                    self._send(conn, _frame(FRAME_RESPONSE, b"CLOSE_WAIT"))
-                    return
-                else:
-                    self._send(conn, _frame(FRAME_ERROR, b"E_INVALID"))
-        except (ConnectionError, OSError):
+        if fh.read(4) != _MAGIC:
             return
-        finally:
-            self._drop_conn(conn)
+        while not self._closing:
+            line = fh.readline()
+            if not line:
+                return
+            parts = line.rstrip(b"\n").split(b" ")
+            verb = parts[0].decode()
+            if verb == "IDENTIFY":
+                (n,) = struct.unpack(">I", fh.read(4))
+                fh.read(n)
+                self._send(conn, _frame(FRAME_RESPONSE, b"OK"))
+            elif verb == "PUB":
+                topic = parts[1].decode()
+                (n,) = struct.unpack(">I", fh.read(4))
+                body = fh.read(n)
+                self._publish(topic, body)
+                self._send(conn, _frame(FRAME_RESPONSE, b"OK"))
+            elif verb == "SUB":
+                topic, channel = parts[1].decode(), parts[2].decode()
+                with self._lock:
+                    ch = self._channel(topic, channel)
+                    ch.consumer = (conn, 0)
+                self._send(conn, _frame(FRAME_RESPONSE, b"OK"))
+            elif verb == "RDY":
+                count = int(parts[1])
+                self._set_rdy(conn, count)
+            elif verb == "FIN":
+                self._fin(parts[1].decode())
+            elif verb == "REQ":
+                self._req(parts[1].decode())
+            elif verb == "NOP":
+                continue
+            elif verb == "CLS":
+                self._send(conn, _frame(FRAME_RESPONSE, b"CLOSE_WAIT"))
+                return
+            else:
+                self._send(conn, _frame(FRAME_ERROR, b"E_INVALID"))
 
     def _channel(self, topic: str, channel: str) -> _Channel:
         chans = self._topics.setdefault(topic, {})
@@ -310,7 +280,7 @@ class MiniNsqServer:
                     ),
                 )
             except OSError:
-                self._drop_conn(conn)
+                self._drop(conn)
                 return
 
     def _fin(self, mid: str) -> None:
@@ -332,8 +302,7 @@ class MiniNsqServer:
         for ch in targets:
             self._pump_channel(ch)
 
-    def _drop_conn(self, conn) -> None:
-        requeued = []
+    def _on_disconnect(self, conn) -> None:
         with self._lock:
             for chans in self._topics.values():
                 for ch in chans.values():
@@ -343,13 +312,6 @@ class MiniNsqServer:
                     for m in sorted(mine):
                         _cid, body, attempts = ch.in_flight.pop(m)
                         ch.queue.insert(0, (m, body, attempts + 1))
-                    if mine:
-                        requeued.append(ch)
-            self._send_locks.pop(id(conn), None)
-        try:
-            conn.close()
-        except OSError:
-            pass
 
     # -- introspection for tests ----------------------------------------------
     def in_flight_count(self) -> int:
@@ -364,158 +326,9 @@ class MiniNsqServer:
         with self._lock:
             return len(self._topics.get(topic, {}).get(channel, _Channel("")).queue)
 
-    def close(self) -> None:
-        self._closing = True
-        try:
-            self._sock.close()
-        except OSError:
-            pass
-
 
 # ---------------------------------------------------------------------------
-# Streaming reader (seq-window core) + transports
-# ---------------------------------------------------------------------------
-
-
-@dataclass
-class NsqListenerFactory:
-    """Real socket consumer: SUB + RDY on connect, a background thread
-    drains message frames into the reader buffer; message ids ride
-    along for FIN-on-commit."""
-
-    addr: str = ""
-    topic: str = "ev"
-    channel: str = "cheetah"
-    rdy: int = 2500
-
-    def __call__(self, on_msg, on_error):
-        listener = _NsqSubListener(self, on_msg, on_error)
-        listener.start()
-        return listener
-
-
-class _NsqSubListener:
-    def __init__(self, cfg: NsqListenerFactory, on_msg, on_error):
-        self._cfg = cfg
-        self._on_msg = on_msg
-        self._on_error = on_error
-        self._closing = False
-        self._client: Optional[NsqClient] = None
-
-    def start(self) -> None:
-        c = NsqClient(self._cfg.addr)
-        c.sub(self._cfg.topic, self._cfg.channel)
-        c.rdy(self._cfg.rdy)
-        self._client = c
-        threading.Thread(target=self._loop, name="cheetah-nsq-sub", daemon=True).start()
-
-    def _loop(self) -> None:
-        try:
-            while not self._closing:
-                mid, attempts, body = self._client.next_message()
-                self._on_msg(self._cfg.topic, mid, attempts, body)
-        except Exception as exc:
-            if not self._closing:
-                self._on_error(exc)
-
-    def ack(self, message_id: str) -> None:
-        self._client.fin(message_id)
-
-    def close(self) -> None:
-        self._closing = True
-        if self._client is not None:
-            self._client.close()
-
-
-def _nsq_item(rec: dict) -> tuple:
-    # replay has no nsqd to FIN: message_id None, attempts 1
-    return rec["topic"], None, 1, rec["body"]
-
-
-def _nsq_factory(options) -> Callable:
-    transport = (options.get("transport") or "socket").lower()
-    if transport == "socket":
-        return NsqListenerFactory(
-            addr=options.get("addr") or "",
-            topic=options.get("topic") or "ev",
-            channel=options.get("channel") or "cheetah",
-            rdy=int(options.get("rdy") or 2500),
-        )
-    if transport == "replay":
-        return NdjsonReplayFactory.from_options(options, _nsq_item)
-    raise ValueError(f"nsq: unknown transport {transport!r} (socket|replay)")
-
-
-class _MidAck:
-    __slots__ = ("_listener", "_mid")
-
-    def __init__(self, listener, mid: str):
-        self._listener = listener
-        self._mid = mid
-
-    def ack(self) -> None:
-        try:
-            self._listener.ack(self._mid)
-        except Exception:
-            pass  # nsqd requeues in-flight on disconnect/timeout
-
-
-class _NsqSimpleStreamReader(SeqWindowStreamReader):
-    """Seq-window reader over the SUB listener / replay pump. Acks:
-    ``FIN <id>`` fires on checkpoint commit (reference kawa T4 ackFn);
-    a lost replay window warns and relies on in-flight requeue (the
-    MQTT QoS>=1 / AMQP policy)."""
-
-    _PICKLE_FIELDS = ("_factory",)
-
-    def __init__(self, options):
-        self._factory = _nsq_factory(options)
-        self._init_runtime()
-
-    def _make_listener(self):
-        return self._factory(self._on_msg, self._on_error)
-
-    def _on_msg(self, topic: str, mid, attempts: int, body: str) -> None:
-        self._on_item((topic, mid, attempts, body))
-
-    def _row_of(self, item: tuple) -> tuple:
-        topic, mid, attempts, body = item
-        return (topic, mid or "", attempts, body)
-
-    def _ack_of(self, item, seq: int, listener):
-        mid = item[1]
-        if mid is None:
-            return None
-        return _MidAck(listener, mid)
-
-    def _on_lost_window(self, start_seq: int, end_seq: int) -> None:
-        import warnings
-
-        warnings.warn(
-            f"nsq: replay window [{start_seq},{end_seq}) lost after restart; "
-            "messages in it were never FIN'd — nsqd requeues in-flight "
-            "messages on disconnect/timeout (at-least-once)",
-            stacklevel=2,
-        )
-
-
-class NsqStreamDataSource(DataSource):
-    """``spark.readStream.format("cheetah-nsq")`` — an NSQ channel
-    consumer as a Python streaming data source."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "cheetah-nsq"
-
-    def schema(self) -> str:
-        return NSQ_SCHEMA
-
-    def simpleStreamReader(self, schema: StructType) -> SimpleDataSourceStreamReader:
-        return _NsqSimpleStreamReader(self.options)
-
-
-# ---------------------------------------------------------------------------
-# Source / Sink adapters (config types)
+# Source config + streaming reader (seq-window core)
 # ---------------------------------------------------------------------------
 
 
@@ -555,17 +368,62 @@ class NsqSource(Source):
             if self.topic:
                 env = env.where(F.col("topic") == self.topic)
             return env
-        return load_stream(
-            spark,
-            NsqStreamDataSource,
-            transport=self.transport,
-            addr=self.addr,
-            topic=self.topic,
-            channel=self.channel,
-            rdy=self.rdy,
-            capture_path=self.capture_path,
-            chunk_size=self.chunk_size,
+        return load_stream(spark, NsqStreamDataSource, self)
+
+
+class _NsqSimpleStreamReader(SeqWindowStreamReader):
+    """Seq-window reader over a SUB + RDY connection / replay capture.
+    Items are ``(topic, message_id, attempts, body)``. Acks:
+    ``FIN <id>`` fires on checkpoint commit (reference kawa T4 ackFn);
+    a lost replay window warns and relies on in-flight requeue (the
+    MQTT QoS>=1 / AMQP policy)."""
+
+    NAME = "nsq"
+    SOURCE = NsqSource
+
+    def _connect(self) -> NsqClient:
+        c = NsqClient(self._src.addr)
+        c.sub(self._src.topic, self._src.channel)
+        c.rdy(self._src.rdy)
+        return c
+
+    def _poll(self, client: NsqClient):
+        mid, attempts, body = client.next_message()
+        return ((self._src.topic, mid, attempts, body),)
+
+    def _replay_item(self, rec: dict) -> tuple:
+        # replay has no nsqd to FIN: message_id None, attempts 1
+        return rec["topic"], None, 1, rec["body"]
+
+    def _row_of(self, item: tuple) -> tuple:
+        topic, mid, attempts, body = item
+        return (topic, mid or "", attempts, body)
+
+    def _ack_of(self, item, seq: int, listener):
+        mid = item[1]
+        return None if mid is None else AckHandle(listener.client.fin, mid)
+
+    def _on_lost_window(self, start_seq: int, end_seq: int) -> None:
+        import warnings
+
+        warnings.warn(
+            f"nsq: replay window [{start_seq},{end_seq}) lost after restart; "
+            "messages in it were never FIN'd — nsqd requeues in-flight "
+            "messages on disconnect/timeout (at-least-once)",
+            stacklevel=2,
         )
+
+
+class NsqStreamDataSource(LiveDataSource):
+    """``spark.readStream.format("cheetah-nsq")`` — an NSQ channel
+    consumer as a Python streaming data source."""
+
+    NAME, SCHEMA, READER = "cheetah-nsq", NSQ_SCHEMA, _NsqSimpleStreamReader
+
+
+# ---------------------------------------------------------------------------
+# Sink adapter (config type)
+# ---------------------------------------------------------------------------
 
 
 @dataclass

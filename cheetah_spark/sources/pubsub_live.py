@@ -42,17 +42,16 @@ import threading
 import time
 import urllib.request
 from dataclasses import dataclass
-from typing import Callable, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
-from pyspark.sql.types import StructType
 
 from cheetah_spark.sinks import Sink, write_transport
 from cheetah_spark.sources import Source
 from cheetah_spark.sources.seqwindow import (
-    NdjsonReplayFactory,
+    AckHandle,
+    LiveDataSource,
     SeqWindowStreamReader,
     load_stream,
 )
@@ -350,148 +349,12 @@ class PubSubClient:
         if ack_ids:
             self._call("POST", f"{self.sub_path(sub)}:acknowledge", {"ackIds": ack_ids})
 
-
-# ---------------------------------------------------------------------------
-# Streaming reader (seq-window core) + transports
-# ---------------------------------------------------------------------------
-
-
-@dataclass
-class PubSubListenerFactory:
-    """Real REST consumer: a background thread polls ``:pull`` into the
-    reader buffer; ack-ids ride along for ack-on-commit."""
-
-    addr: str = ""
-    project: str = "p"
-    subscription: str = "sub"
-    poll_ms: int = 100
-    max_messages: int = 500
-
-    def __call__(self, on_msg, on_error):
-        listener = _PullListener(self, on_msg, on_error)
-        listener.start()
-        return listener
-
-
-class _PullListener:
-    def __init__(self, cfg: PubSubListenerFactory, on_msg, on_error):
-        self._cfg = cfg
-        self._on_msg = on_msg
-        self._on_error = on_error
-        self._closing = False
-        self._client = PubSubClient(cfg.addr, cfg.project)
-
-    def start(self) -> None:
-        threading.Thread(target=self._loop, name="cheetah-pubsub-pull", daemon=True).start()
-
-    def _loop(self) -> None:
-        try:
-            while not self._closing:
-                recs = self._client.pull(self._cfg.subscription, self._cfg.max_messages)
-                for ack_id, mid, attrs, data in recs:
-                    self._on_msg(ack_id, mid, _canon_attrs(attrs), data)
-                if not recs:
-                    time.sleep(self._cfg.poll_ms / 1000.0)
-        except Exception as exc:
-            if not self._closing:
-                self._on_error(exc)
-
-    def ack(self, ack_id: str) -> None:
-        self._client.acknowledge(self._cfg.subscription, [ack_id])
-
     def close(self) -> None:
-        self._closing = True
-
-
-def _pubsub_item(rec: dict) -> tuple:
-    # replay: nothing to ack
-    return None, rec["message_id"], rec["attributes"], rec["data"]
-
-
-def _pubsub_factory(options) -> Callable:
-    transport = (options.get("transport") or "http").lower()
-    if transport == "http":
-        return PubSubListenerFactory(
-            addr=options.get("addr") or "",
-            project=options.get("project") or "p",
-            subscription=options.get("subscription") or "sub",
-            poll_ms=int(options.get("poll_ms") or 100),
-            max_messages=int(options.get("max_messages") or 500),
-        )
-    if transport == "replay":
-        return NdjsonReplayFactory.from_options(options, _pubsub_item)
-    raise ValueError(f"pubsub: unknown transport {transport!r} (http|replay)")
-
-
-class _AckIdAck:
-    __slots__ = ("_listener", "_ack_id")
-
-    def __init__(self, listener, ack_id: str):
-        self._listener = listener
-        self._ack_id = ack_id
-
-    def ack(self) -> None:
-        try:
-            self._listener.ack(self._ack_id)
-        except Exception:
-            pass  # lease expires -> service redelivers; at-least-once holds
-
-
-class _PubSubSimpleStreamReader(SeqWindowStreamReader):
-    """Seq-window reader over the pull listener / replay pump. Acks:
-    ``:acknowledge`` per ack-id fires on checkpoint commit (reference
-    kawa T4 ackFn); a lost replay window warns and relies on
-    lease-expiry redelivery (the MQTT QoS>=1 / AMQP policy)."""
-
-    _PICKLE_FIELDS = ("_factory",)
-
-    def __init__(self, options):
-        self._factory = _pubsub_factory(options)
-        self._init_runtime()
-
-    def _make_listener(self):
-        return self._factory(self._on_msg, self._on_error)
-
-    def _on_msg(self, ack_id, mid: str, attributes: str, data: str) -> None:
-        self._on_item((ack_id, mid, attributes, data))
-
-    def _row_of(self, item: tuple) -> tuple:
-        return item[1:]
-
-    def _ack_of(self, item, seq: int, listener):
-        ack_id = item[0]
-        if ack_id is None:
-            return None
-        return _AckIdAck(listener, ack_id)
-
-    def _on_lost_window(self, start_seq: int, end_seq: int) -> None:
-        import warnings
-
-        warnings.warn(
-            f"pubsub: replay window [{start_seq},{end_seq}) lost after restart; "
-            "messages in it were never acked — their leases expire and the "
-            "service redelivers them (at-least-once)",
-            stacklevel=2,
-        )
-
-
-class PubSubStreamDataSource(DataSource):
-    """``spark.readStream.format("cheetah-pubsub")`` — a Pub/Sub
-    subscription as a Python streaming data source."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "cheetah-pubsub"
-
-    def schema(self) -> str:
-        return PUBSUB_SCHEMA
-
-    def simpleStreamReader(self, schema: StructType) -> SimpleDataSourceStreamReader:
-        return _PubSubSimpleStreamReader(self.options)
+        pass  # one HTTP request per call: no connection to close
 
 
 # ---------------------------------------------------------------------------
-# Source / Sink adapters (config types)
+# Source config + streaming reader (seq-window core)
 # ---------------------------------------------------------------------------
 
 
@@ -525,18 +388,62 @@ class PubSubSource(Source):
             if self.filter:
                 env = env.where(filter_match_col(self.filter))
             return env
-        return load_stream(
-            spark,
-            PubSubStreamDataSource,
-            transport=self.transport,
-            addr=self.addr,
-            project=self.project,
-            subscription=self.subscription,
-            poll_ms=self.poll_ms,
-            max_messages=self.max_messages,
-            capture_path=self.capture_path,
-            chunk_size=self.chunk_size,
+        return load_stream(spark, PubSubStreamDataSource, self)
+
+
+class _PubSubSimpleStreamReader(SeqWindowStreamReader):
+    """Seq-window reader over ``:pull`` polling / replay capture. Items
+    are ``(ack_id, message_id, attributes, data)``. Acks:
+    ``:acknowledge`` per ack-id fires on checkpoint commit (reference
+    kawa T4 ackFn); a lost replay window warns and relies on
+    lease-expiry redelivery (the MQTT QoS>=1 / AMQP policy)."""
+
+    NAME = "pubsub"
+    SOURCE = PubSubSource
+
+    def _connect(self) -> PubSubClient:
+        return PubSubClient(self._src.addr, self._src.project)
+
+    def _poll(self, client: PubSubClient):
+        recs = client.pull(self._src.subscription, self._src.max_messages)
+        if not recs:
+            time.sleep(self._src.poll_ms / 1000.0)
+        return [(ack_id, mid, _canon_attrs(attrs), data) for ack_id, mid, attrs, data in recs]
+
+    def _replay_item(self, rec: dict) -> tuple:
+        # replay: nothing to ack
+        return None, rec["message_id"], rec["attributes"], rec["data"]
+
+    def _row_of(self, item: tuple) -> tuple:
+        return item[1:]
+
+    def _ack_of(self, item, seq: int, listener):
+        ack_id = item[0]
+        if ack_id is None:
+            return None
+        return AckHandle(listener.client.acknowledge, self._src.subscription, [ack_id])
+
+    def _on_lost_window(self, start_seq: int, end_seq: int) -> None:
+        import warnings
+
+        warnings.warn(
+            f"pubsub: replay window [{start_seq},{end_seq}) lost after restart; "
+            "messages in it were never acked — their leases expire and the "
+            "service redelivers them (at-least-once)",
+            stacklevel=2,
         )
+
+
+class PubSubStreamDataSource(LiveDataSource):
+    """``spark.readStream.format("cheetah-pubsub")`` — a Pub/Sub
+    subscription as a Python streaming data source."""
+
+    NAME, SCHEMA, READER = "cheetah-pubsub", PUBSUB_SCHEMA, _PubSubSimpleStreamReader
+
+
+# ---------------------------------------------------------------------------
+# Sink adapter (config type)
+# ---------------------------------------------------------------------------
 
 
 @dataclass

@@ -30,19 +30,18 @@ from __future__ import annotations
 
 import json
 import socket
-import threading
+import time
 from dataclasses import dataclass
-from typing import Callable, Optional, Tuple
+from typing import Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
-from pyspark.sql.types import StructType
 
 from cheetah_spark.sinks import Sink, write_transport
 from cheetah_spark.sources import Source
 from cheetah_spark.sources.seqwindow import (
-    NdjsonReplayFactory,
+    LiveDataSource,
+    LoopbackServer,
     SeqWindowStreamReader,
     load_stream,
 )
@@ -131,45 +130,25 @@ class RedisClient:
             pass
 
 
-class MiniRedisServer:
+class MiniRedisServer(LoopbackServer):
     """Loopback RESP server with in-memory Streams — the conformance
     stand-in (a real redis-server accepts the same bytes). Supports
     PING, XADD (explicit or ``*`` auto ids), XLEN, XRANGE (- +
     bounds), XREAD COUNT n STREAMS key id (exclusive-from)."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0):
-        self._sock = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._sock.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._sock.bind((host, port))
-        self._sock.listen(16)
-        self.addr = "%s:%d" % self._sock.getsockname()
         self._streams: dict[str, list] = {}
-        self._lock = threading.Lock()
-        self._closing = False
-        threading.Thread(target=self._accept_loop, daemon=True).start()
-
-    def _accept_loop(self) -> None:
-        while not self._closing:
-            try:
-                conn, _ = self._sock.accept()
-            except OSError:
-                return
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
+        super().__init__(host, port)
 
     def _serve(self, conn) -> None:
         fh = conn.makefile("rb")
-        with conn:
-            while not self._closing:
-                try:
-                    req = resp_read(fh)
-                except (ConnectionError, OSError):
-                    return
-                try:
-                    reply = self._dispatch([str(a) for a in req])
-                except Exception as exc:  # protocol error → RESP error reply
-                    conn.sendall(b"-ERR %s\r\n" % str(exc).encode("utf-8"))
-                    continue
-                conn.sendall(reply)
+        while not self._closing:
+            req = resp_read(fh)
+            try:
+                reply = self._dispatch([str(a) for a in req])
+            except Exception as exc:  # protocol error → RESP error reply
+                reply = b"-ERR %s\r\n" % str(exc).encode("utf-8")
+            self._send(conn, reply)
 
     # -- encoding helpers
     @staticmethod
@@ -234,131 +213,14 @@ class MiniRedisServer:
             return b"*1\r\n*2\r\n" + self._bulk(stream) + self._entries(rows)
         raise ValueError(f"unknown command '{cmd}'")
 
-    def close(self) -> None:
-        self._closing = True
-        try:
-            self._sock.close()
-        except OSError:
-            pass
-
 
 # ---------------------------------------------------------------------------
-# Streaming reader (seq-window core) + transports
+# Source config + streaming reader (seq-window core)
 # ---------------------------------------------------------------------------
 
 
-@dataclass
-class RedisListenerFactory:
-    """Real RESP poller: XREAD from ``start_id``, advancing the id
-    cursor — the wire-level replay semantics Redis Streams provide."""
-
-    addr: str = ""
-    stream: str = ""
-    start_id: str = "0"
-    poll_ms: int = 25
-
-    def __call__(self, on_entry, on_error):
-        poller = _XReadPoller(self, on_entry, on_error)
-        poller.start()
-        return poller
-
-
-class _XReadPoller:
-    def __init__(self, cfg: RedisListenerFactory, on_entry, on_error):
-        self._cfg = cfg
-        self._on_entry = on_entry
-        self._on_error = on_error
-        self._closing = False
-
-    def start(self) -> None:
-        threading.Thread(target=self._loop, name="cheetah-redis-xread", daemon=True).start()
-
-    def _loop(self) -> None:
-        try:
-            client = RedisClient(self._cfg.addr)
-            last = self._cfg.start_id
-            import time as _time
-
-            while not self._closing:
-                got = client.xread(self._cfg.stream, last, count=512)
-                if not got:
-                    _time.sleep(self._cfg.poll_ms / 1000.0)
-                    continue
-                stream, entries = got[0][0], got[0][1]
-                for sid, flat in entries:
-                    fields = {flat[i]: flat[i + 1] for i in range(0, len(flat), 2)}
-                    self._on_entry(stream, sid, json.dumps(fields, sort_keys=True))
-                    last = sid
-        except Exception as exc:  # connection loss is fatal (reference S3 policy)
-            if not self._closing:
-                self._on_error(exc)
-
-    def close(self) -> None:
-        self._closing = True
-
-
-def _redis_item(rec: dict) -> tuple:
-    return rec["stream"], rec["id"], rec["fields"]
-
-
-def _redis_factory(options) -> Callable:
-    transport = (options.get("transport") or "socket").lower()
-    if transport == "socket":
-        return RedisListenerFactory(
-            addr=options.get("addr") or "",
-            stream=options.get("stream") or "",
-            start_id=options.get("start_id") or "0",
-            poll_ms=int(options.get("poll_ms") or 25),
-        )
-    if transport == "replay":
-        return NdjsonReplayFactory.from_options(options, _redis_item)
-    raise ValueError(f"redis: unknown transport {transport!r} (socket|replay)")
-
-
-class _RedisSimpleStreamReader(SeqWindowStreamReader):
-    """Seq-window reader over the XREAD poller / replay pump."""
-
-    _PICKLE_FIELDS = ("_factory",)
-
-    def __init__(self, options):
-        self._factory = _redis_factory(options)
-        self._init_runtime()
-
-    def _make_listener(self):
-        return self._factory(self._on_entry, self._on_error)
-
-    def _on_entry(self, stream: str, sid: str, fields_json: str) -> None:
-        self._on_item((stream, sid, fields_json))
-
-    def _row_of(self, item: tuple) -> tuple:
-        return item
-
-    def _lost_window_error(self, start_seq: int, end_seq: int) -> Exception:
-        return RuntimeError(
-            f"redis: replay window lost for offsets [{start_seq},{end_seq}) after "
-            "restart — re-read the stream from the last committed entry id "
-            "(XRANGE replay) or use consumer groups + XACK on a real server"
-        )
-
-
-class RedisStreamDataSource(DataSource):
-    """``spark.readStream.format("cheetah-redis")`` — Redis Streams as
-    a Python streaming data source."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "cheetah-redis"
-
-    def schema(self) -> str:
-        return REDIS_STREAM_SCHEMA
-
-    def simpleStreamReader(self, schema: StructType) -> SimpleDataSourceStreamReader:
-        return _RedisSimpleStreamReader(self.options)
-
-
-# ---------------------------------------------------------------------------
-# Source / Sink adapters (config types)
-# ---------------------------------------------------------------------------
+def _fields_json(flat: list) -> str:
+    return json.dumps({flat[i]: flat[i + 1] for i in range(0, len(flat), 2)}, sort_keys=True)
 
 
 @dataclass
@@ -385,31 +247,59 @@ class RedisSource(Source):
                 )
             client = RedisClient(self.addr)
             try:
-                rows = [
-                    (
-                        self.stream,
-                        sid,
-                        json.dumps(
-                            {flat[i]: flat[i + 1] for i in range(0, len(flat), 2)},
-                            sort_keys=True,
-                        ),
-                    )
-                    for sid, flat in client.xrange(self.stream)
-                ]
+                rows = [(self.stream, sid, _fields_json(flat)) for sid, flat in client.xrange(self.stream)]
             finally:
                 client.close()
             return spark.createDataFrame(rows, REDIS_STREAM_SCHEMA)
-        return load_stream(
-            spark,
-            RedisStreamDataSource,
-            transport=self.transport,
-            addr=self.addr,
-            stream=self.stream,
-            start_id=self.start_id,
-            poll_ms=self.poll_ms,
-            capture_path=self.capture_path,
-            chunk_size=self.chunk_size,
+        return load_stream(spark, RedisStreamDataSource, self)
+
+
+class _RedisSimpleStreamReader(SeqWindowStreamReader):
+    """Seq-window reader over XREAD polling / replay capture. Items are
+    the rows ``(stream, id, fields)``. The poller advances its id
+    cursor from ``start_id`` — the wire-level replay semantics Redis
+    Streams provide."""
+
+    NAME = "redis"
+    SOURCE = RedisSource
+
+    def _connect(self) -> RedisClient:
+        self._last_id = self._src.start_id
+        return RedisClient(self._src.addr)
+
+    def _poll(self, client: RedisClient):
+        got = client.xread(self._src.stream, self._last_id, count=512)
+        if not got:
+            time.sleep(self._src.poll_ms / 1000.0)
+            return ()
+        stream, entries = got[0][0], got[0][1]
+        self._last_id = entries[-1][0]
+        return [(stream, sid, _fields_json(flat)) for sid, flat in entries]
+
+    def _replay_item(self, rec: dict) -> tuple:
+        return rec["stream"], rec["id"], rec["fields"]
+
+    def _row_of(self, item: tuple) -> tuple:
+        return item
+
+    def _lost_window_error(self, start_seq: int, end_seq: int) -> Exception:
+        return RuntimeError(
+            f"redis: replay window lost for offsets [{start_seq},{end_seq}) after "
+            "restart — re-read the stream from the last committed entry id "
+            "(XRANGE replay) or use consumer groups + XACK on a real server"
         )
+
+
+class RedisStreamDataSource(LiveDataSource):
+    """``spark.readStream.format("cheetah-redis")`` — Redis Streams as
+    a Python streaming data source."""
+
+    NAME, SCHEMA, READER = "cheetah-redis", REDIS_STREAM_SCHEMA, _RedisSimpleStreamReader
+
+
+# ---------------------------------------------------------------------------
+# Sink adapter (config type)
+# ---------------------------------------------------------------------------
 
 
 @dataclass

@@ -1,4 +1,4 @@
-"""Shared seq-window stream-reader base for push/pump transports.
+"""The live-transport shell every broker source runs on.
 
 The live transport sources (amqp, nats, nsq, pubsub, redis, zmq, mqtt,
 syslog, journald, eventlog, and kinesis's replay transport) all run
@@ -16,28 +16,42 @@ Source API (``SimpleDataSourceStreamReader``):
   committed offset (at-least-once, ack-after-checkpoint — reference
   kawa T4 ackFn semantics);
 - Spark pickles the reader into the data-source runner process before
-  first use, so only declarative config travels; runtime state (lock,
-  buffers, transport handle) is rebuilt on unpickle.
+  first use, so only the transport's Source dataclass travels; runtime
+  state (lock, buffers, transport handle) is rebuilt on unpickle.
 
-Round-8 self-declared debt (sources/syslog_live.py): this core was
-triplicated, so an offset-machinery fix had to land three times — the
-exact place a silent at-least-once bug would creep in. It now lives
-once here; subclasses supply only the transport factory and the
-envelope/ack/lost-window hooks.
+Config is declared once, as the transport's Source dataclass:
+``load_stream`` forwards its fields as string options and the reader
+rebuilds the same dataclass with ``source_from_options``, coercing each
+value by the type of the field's default.
 
 Subclass contract:
 
-- set ``_PICKLE_FIELDS`` to the attribute names that must survive
-  pickling (the declarative config — at minimum ``_factory``);
-- implement ``_make_listener()`` (construct + start the transport,
-  wiring ``self._on_item`` / ``self._on_error``);
+- set ``NAME`` (the label in errors) and ``SOURCE`` (the Source
+  dataclass the options rebuild; the default of its ``transport``
+  field names the live transport, the other accepted one is
+  ``"replay"``); the rebuilt config is ``self._src``;
 - implement ``_row_of(item)`` → the output tuple;
-- optionally override ``_ack_of(item, seq, listener)`` → an object
-  with ``.ack()`` (or None for ack-less transports);
+- live transport on the shared ``ListenerLoop``: implement
+  ``_connect()`` → a client with ``close()`` (subscribed before it
+  returns) and ``_poll(client)`` → the items of one receive round;
+- replay transport over an NDJSON capture at ``capture_path``:
+  implement ``_replay_item(record)`` → the item;
+- a transport with its own adapter overrides ``_make_listener()``
+  instead (construct + start it, wiring ``self._on_item`` /
+  ``self._on_error``; a replay adapter exposes ``pump()``);
+- optionally override ``_ack_of(item, seq, listener)`` → an
+  ``AckHandle`` (or None for an item with nothing to ack; the
+  shared listener's client is ``listener.client``), and
+  ``_validate()`` for construction-time config checks;
 - implement ``_lost_window_error(start_seq, end_seq)`` → the
   exception for an unrecoverable lost replay window, or override
-  ``_on_lost_window`` entirely for softer policies (mqtt QoS≥1 warns
-  and relies on broker redelivery).
+  ``_on_lost_window`` entirely for softer policies (brokers that
+  redeliver unacked messages warn instead).
+
+``LiveDataSource`` is the ``format("cheetah-*")`` data source: a
+subclass sets only ``NAME``, ``SCHEMA`` and ``READER``.
+``LoopbackServer`` is the threaded TCP server the loopback broker
+fakes share.
 
 Replay transports (a recorded capture standing in for the live
 sender) share the rest:
@@ -47,23 +61,21 @@ sender) share the rest:
   ``_``/``.`` files, and only the files a streaming file sink
   committed to ``_spark_metadata`` when that manifest exists;
 - ``ReplayPump`` delivers the capture's items ``chunk_size`` per
-  micro-batch ``read`` (all at construction when ``chunk_size <= 0``);
-- ``NdjsonReplayFactory`` is the replay factory of the transports
-  whose capture is NDJSON; each passes only its record → item
-  mapping.
+  micro-batch ``read`` (all at construction when ``chunk_size <= 0``).
 """
 
 from __future__ import annotations
 
+import dataclasses
 import itertools
 import json
 import os
+import socket
 import threading
-from dataclasses import dataclass
 from typing import Callable, Iterable, Iterator, List, Optional, Tuple
 from urllib.parse import unquote
 
-from pyspark.sql.datasource import SimpleDataSourceStreamReader
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 # slices of recent read() results kept for readBetweenOffsets replay;
 # Spark's own simple-reader prefetch cache normally serves this — the
@@ -71,10 +83,157 @@ from pyspark.sql.datasource import SimpleDataSourceStreamReader
 _WINDOW_KEEP = 8
 
 
+# ---------------------------------------------------------------------------
+# Config: one Source dataclass, forwarded as options and rebuilt
+# ---------------------------------------------------------------------------
+
+
+def source_options(source) -> dict:
+    """The Source dataclass's fields as ``load_stream`` string options:
+    a tuple joins with commas; None and empty values are left out, so
+    the reader falls back to the field default."""
+    out = {}
+    for f in dataclasses.fields(source):
+        v = getattr(source, f.name)
+        if isinstance(v, tuple):
+            v = ",".join(v)
+        if v is not None and v != "":
+            out[f.name] = str(v)
+    return out
+
+
+def _coerce(raw: str, default):
+    if isinstance(default, bool):
+        return raw.lower() == "true"
+    if isinstance(default, (int, float)):
+        return type(default)(raw)
+    if isinstance(default, tuple):
+        return tuple(a for a in raw.split(",") if a)
+    return raw
+
+
+def source_from_options(cls, options):
+    """Rebuild the Source dataclass ``cls`` from string options: each
+    present, non-empty option is coerced by the type of its field's
+    default (str, int, float, bool, or a comma-split tuple); the
+    others keep the default."""
+    kw = {}
+    for f in dataclasses.fields(cls):
+        raw = options.get(f.name)
+        if raw is not None and raw != "":
+            kw[f.name] = _coerce(raw, f.default)
+    return cls(**kw)
+
+
+def load_stream(spark, data_source, source):
+    """Register ``data_source`` on the session and open it as a stream
+    with ``source``'s fields as options (``source_options``).
+    Registration is an idempotent per-session catalog write, so there
+    is no memo: an id(spark)-keyed cache would go stale when CPython
+    reuses a collected session's address."""
+    spark.dataSource.register(data_source)
+    reader = spark.readStream.format(data_source.name())
+    for k, v in source_options(source).items():
+        reader = reader.option(k, v)
+    return reader.load()
+
+
+class LiveDataSource(DataSource):
+    """``spark.readStream.format(NAME)`` with schema ``SCHEMA``; each
+    stream gets ``READER(options)``. A transport's subclass sets only
+    these three."""
+
+    NAME: str = ""
+    SCHEMA: str = ""
+    READER: Callable = None
+
+    @classmethod
+    def name(cls) -> str:
+        return cls.NAME
+
+    def schema(self) -> str:
+        return self.SCHEMA
+
+    def simpleStreamReader(self, schema) -> SimpleDataSourceStreamReader:
+        return type(self).READER(self.options)
+
+
+# ---------------------------------------------------------------------------
+# Live transport: one listener loop, one ack handle
+# ---------------------------------------------------------------------------
+
+
+class ListenerLoop:
+    """A live transport's listener. ``connect()`` runs synchronously, so
+    the subscription is in place before the first read; then
+    ``poll(client)`` runs round after round on a daemon thread, each
+    round's items going to ``on_item`` in order. A poll exception
+    reaches ``on_error`` only while the listener is open (connection
+    loss is fatal, reference S3 policy); ``close()`` closes the client,
+    which unblocks a pending receive."""
+
+    def __init__(
+        self,
+        connect: Callable,
+        poll: Callable,
+        on_item: Callable,
+        on_error: Callable,
+        name: str = "cheetah-listener",
+    ):
+        self.client = connect()
+        self._closing = False
+        self.thread = threading.Thread(
+            target=self._run, args=(poll, on_item, on_error), name=name, daemon=True
+        )
+        self.thread.start()
+
+    def _run(self, poll, on_item, on_error) -> None:
+        try:
+            while not self._closing:
+                for item in poll(self.client):
+                    on_item(item)
+        except Exception as exc:
+            if not self._closing:
+                on_error(exc)
+
+    def close(self) -> None:
+        self._closing = True
+        self.client.close()
+
+
+class AckHandle:
+    """``ack()`` calls ``fn(*args)`` once the batch holding the item is
+    committed. A failing ack is swallowed: the broker redelivers what
+    was never acked, so at-least-once holds."""
+
+    __slots__ = ("_fn", "_args")
+
+    def __init__(self, fn: Callable, *args):
+        self._fn = fn
+        self._args = args
+
+    def ack(self) -> None:
+        try:
+            self._fn(*self._args)
+        except Exception:
+            pass
+
+
+# ---------------------------------------------------------------------------
+# The seq-window reader core
+# ---------------------------------------------------------------------------
+
+
 class SeqWindowStreamReader(SimpleDataSourceStreamReader):
     """Seq-offset buffering reader core (see module docstring)."""
 
-    _PICKLE_FIELDS: tuple = ("_factory",)
+    NAME: str = ""
+    SOURCE: type = None
+
+    def __init__(self, options):
+        self._src = source_from_options(self.SOURCE, options)
+        self._validate()
+        self._init_runtime()
 
     def _init_runtime(self) -> None:
         self._lock = threading.Lock()
@@ -85,7 +244,7 @@ class SeqWindowStreamReader(SimpleDataSourceStreamReader):
         self._listener = None
 
     def __getstate__(self):
-        return {k: getattr(self, k) for k in self._PICKLE_FIELDS}
+        return {"_src": self._src}  # the config alone crosses the pickle
 
     def __setstate__(self, state):
         self.__dict__.update(state)
@@ -100,16 +259,37 @@ class SeqWindowStreamReader(SimpleDataSourceStreamReader):
         self._fatal = exc
 
     # -- subclass hooks -----------------------------------------------------
+    def _validate(self) -> None:
+        live = self.SOURCE.transport  # the Source's default transport
+        if self._src.transport.lower() not in (live, "replay"):
+            raise ValueError(
+                f"unknown {self.NAME} transport {self._src.transport!r} ({live}|replay)"
+            )
+
     def _make_listener(self):
+        if self._src.transport.lower() == "replay":
+            items = (self._replay_item(json.loads(line)) for line in capture_lines(self._src.capture_path))
+            return ReplayPump(items, self._src.chunk_size, self._on_item)
+        return ListenerLoop(
+            self._connect, self._poll, self._on_item, self._on_error, f"cheetah-{self.NAME}-listener"
+        )
+
+    def _connect(self):
+        raise NotImplementedError
+
+    def _poll(self, client) -> Iterable:
+        raise NotImplementedError
+
+    def _replay_item(self, record: dict):
         raise NotImplementedError
 
     def _row_of(self, item) -> tuple:
         raise NotImplementedError
 
-    def _ack_of(self, item, seq: int, listener):
-        """Return an object with ``.ack()`` to fire on commit, or None
-        for transports with nothing to ack (e.g. journald cursors ride
-        in the rows)."""
+    def _ack_of(self, item, seq: int, listener) -> Optional[AckHandle]:
+        """Return an ``AckHandle`` to fire on commit, or None for an
+        item with nothing to ack (replay items, ack-less transports,
+        journald cursors that ride in the rows)."""
         return None
 
     def _lost_window_error(self, start_seq: int, end_seq: int) -> Exception:
@@ -139,8 +319,9 @@ class SeqWindowStreamReader(SimpleDataSourceStreamReader):
             pump()
         if self._fatal is not None:
             # fatal contract: surface the lost transport as a query
-            # error — offsets stay uncommitted
-            raise RuntimeError(str(self._fatal))
+            # error — offsets stay uncommitted; the transport's own
+            # exception stays attached as the cause
+            raise RuntimeError(str(self._fatal)) from self._fatal
         with self._lock:
             drained, self._buffer = self._buffer, []
         rows = []
@@ -172,19 +353,76 @@ class SeqWindowStreamReader(SimpleDataSourceStreamReader):
             self._pending.pop(seq).ack()
 
 
-def load_stream(spark, data_source, **options):
-    """Register ``data_source`` on the session and open it as a stream,
-    forwarding every non-empty option as a string (each reader's option
-    parser supplies the defaults). Registration is an idempotent
-    per-session catalog write, so there is no memo: an id(spark)-keyed
-    cache would go stale when CPython reuses a collected session's
-    address."""
-    spark.dataSource.register(data_source)
-    reader = spark.readStream.format(data_source.name())
-    for k, v in options.items():
-        if v is not None and v != "":
-            reader = reader.option(k, str(v))
-    return reader.load()
+# ---------------------------------------------------------------------------
+# Loopback server: the threaded TCP shell of the broker fakes
+# ---------------------------------------------------------------------------
+
+
+class LoopbackServer:
+    """Threaded TCP server the loopback broker fakes share: binds
+    ``host:port`` (0 picks an ephemeral port; ``addr`` is the bound
+    ``host:port``), accepts on a daemon thread, and runs
+    ``_serve(conn)`` on one daemon thread per connection. ``_send``
+    serialises writes per connection (a reply from a connection's own
+    thread must not interleave with a fan-out from another's). When
+    ``_serve`` returns or the peer fails, ``_drop`` runs
+    ``_on_disconnect`` and closes the connection; ``close()`` stops
+    accepting. A subclass sets its own state before calling
+    ``__init__``."""
+
+    def __init__(self, host: str = "127.0.0.1", port: int = 0):
+        self._lock = threading.Lock()
+        self._send_locks: dict[int, threading.Lock] = {}
+        self._closing = False
+        self._sock = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
+        self._sock.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
+        self._sock.bind((host, port))
+        self._sock.listen(16)
+        self.addr = "%s:%d" % self._sock.getsockname()
+        threading.Thread(target=self._accept_loop, daemon=True).start()
+
+    def _accept_loop(self) -> None:
+        while not self._closing:
+            try:
+                conn, _ = self._sock.accept()
+            except OSError:
+                return
+            threading.Thread(target=self._handle, args=(conn,), daemon=True).start()
+
+    def _handle(self, conn) -> None:
+        try:
+            self._serve(conn)
+        except (OSError, RuntimeError):
+            pass  # the peer hung up or spoke out of protocol: drop it
+        finally:
+            self._drop(conn)
+
+    def _serve(self, conn) -> None:
+        raise NotImplementedError
+
+    def _send(self, conn, data: bytes) -> None:
+        with self._send_locks.setdefault(id(conn), threading.Lock()):
+            conn.sendall(data)
+
+    def _on_disconnect(self, conn) -> None:
+        """Forget the connection's server-side state (subscriptions,
+        unacked deliveries). Runs under no lock; idempotent."""
+
+    def _drop(self, conn) -> None:
+        self._on_disconnect(conn)
+        with self._lock:
+            self._send_locks.pop(id(conn), None)
+        try:
+            conn.close()
+        except OSError:
+            pass
+
+    def close(self) -> None:
+        self._closing = True
+        try:
+            self._sock.close()
+        except OSError:
+            pass
 
 
 # ---------------------------------------------------------------------------
@@ -264,26 +502,3 @@ class ReplayPump:
 
     def close(self) -> None:
         pass
-
-
-@dataclass
-class NdjsonReplayFactory:
-    """Replay transport over an NDJSON capture: ``item`` maps one
-    capture record to the argument tuple of the transport's message
-    callback (a module-level function, so the factory pickles)."""
-
-    item: Callable[[dict], tuple]
-    capture_path: str = ""
-    chunk_size: int = 0
-
-    @classmethod
-    def from_options(cls, options, item: Callable[[dict], tuple]) -> "NdjsonReplayFactory":
-        return cls(
-            item,
-            capture_path=options.get("capture_path") or "",
-            chunk_size=int(options.get("chunk_size") or 0),
-        )
-
-    def __call__(self, on_msg, on_error) -> ReplayPump:
-        items = (self.item(json.loads(line)) for line in capture_lines(self.capture_path))
-        return ReplayPump(items, self.chunk_size, lambda args: on_msg(*args))

@@ -94,6 +94,10 @@ class SqliteSource(Source):
     num_partitions: int = 8
     columns: Optional[tuple] = None
 
+    def __post_init__(self) -> None:
+        if self.columns is not None:
+            self.columns = tuple(self.columns)  # a JSON config gives a list
+
     def read(self, spark: SparkSession) -> DataFrame:
         con = sqlite3.connect(f"file:{self.path}?mode=ro", uri=True)
         lo, hi = con.execute(

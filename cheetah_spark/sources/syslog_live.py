@@ -49,15 +49,15 @@ import json
 import socket
 import threading
 from dataclasses import dataclass
-from typing import Callable, Iterator, Tuple
+from typing import Iterator, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
-from pyspark.sql.types import StructType
 
 from cheetah_spark.sources import Source
 from cheetah_spark.sources.seqwindow import (
+    AckHandle,
+    LiveDataSource,
     ReplayPump,
     SeqWindowStreamReader,
     capture_lines,
@@ -67,60 +67,31 @@ from cheetah_spark.sources.seqwindow import (
 SYSLOG_STREAM_SCHEMA = "raw string, peer string"
 
 
-@dataclass
-class SyslogOpts:
-    addr: str = "127.0.0.1:0"
-    proto: str = "udp"  # udp (RFC 5426) | tcp (RFC 6587 newline framing)
-    content_type: str = "raw"  # raw | auto (append parsed struct)
-
-    def host_port(self) -> Tuple[str, int]:
-        host, _, port = self.addr.rpartition(":")
-        return host or "127.0.0.1", int(port)
-
-
-class SyslogRecord:
-    __slots__ = ("raw", "peer", "seq", "_ack")
-
-    def __init__(self, raw: str, peer: str, seq: int, ack=None):
-        self.raw = raw
-        self.peer = peer
-        self.seq = seq
-        self._ack = ack
-
-    def ack(self) -> None:
-        if self._ack is not None:
-            self._ack(self)
-
-
-@dataclass
-class SocketListenerFactory:
+def _bind_socket(src: SyslogSource, on_record, on_error) -> _SocketAdapter:
     """Real datagram/stream listener on stdlib sockets. Binding
     ``port=0`` picks an ephemeral port; the bound address is written
     to ``addr_file`` so the test process (outside the data-source
     runner) can learn where to send."""
-
-    addr_file: str = ""
-
-    def __call__(self, opts: SyslogOpts, on_record, on_error):
-        proto = opts.proto.lower()
-        host, port = opts.host_port()
-        if proto == "udp":
-            sock = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
-            sock.bind((host, port))
-        elif proto == "tcp":
-            sock = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-            sock.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-            sock.bind((host, port))
-            sock.listen(8)
-        else:
-            raise ValueError(f"syslog: unknown proto {opts.proto!r} (udp|tcp)")
-        if self.addr_file:
-            bound = sock.getsockname()
-            with open(self.addr_file, "w") as fh:
-                fh.write(f"{bound[0]}:{bound[1]}")
-        adapter = _SocketAdapter(sock, proto, on_record, on_error)
-        adapter.start()
-        return adapter
+    proto = src.proto.lower()
+    host, _, port = src.addr.rpartition(":")
+    host = host or "127.0.0.1"
+    if proto == "udp":
+        sock = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
+        sock.bind((host, int(port)))
+    elif proto == "tcp":
+        sock = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
+        sock.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
+        sock.bind((host, int(port)))
+        sock.listen(8)
+    else:
+        raise ValueError(f"syslog: unknown proto {src.proto!r} (udp|tcp)")
+    if src.addr_file:
+        bound = sock.getsockname()
+        with open(src.addr_file, "w") as fh:
+            fh.write(f"{bound[0]}:{bound[1]}")
+    adapter = _SocketAdapter(sock, proto, on_record, on_error)
+    adapter.start()
+    return adapter
 
 
 class _SocketAdapter:
@@ -199,26 +170,9 @@ class _SocketAdapter:
             pass
 
 
-@dataclass
-class SyslogReplayFactory:
-    """Deterministic sender stand-in: delivers an NDJSON capture
-    (records ``{"raw": ..., "peer": ...}``; bare text files work too —
-    each line becomes a record with a synthetic peer) through the same
-    reader, recording acks to ``ack_log`` in commit order."""
-
-    capture_path: str = ""
-    ack_log: str = ""
-    chunk_size: int = 0
-
-    def __call__(self, opts: SyslogOpts, on_record, on_error):
-        return ReplayPump(
-            _replay_records(self.capture_path), self.chunk_size, lambda rec: on_record(*rec)
-        )
-
-    def log_ack(self, rec: SyslogRecord) -> None:
-        if self.ack_log:
-            with open(self.ack_log, "a") as fh:
-                fh.write(json.dumps({"seq": rec.seq, "peer": rec.peer}) + "\n")
+def _log_ack(ack_log: str, seq: int, peer: str) -> None:
+    with open(ack_log, "a") as fh:
+        fh.write(json.dumps({"seq": seq, "peer": peer}) + "\n")
 
 
 def _replay_records(path: str) -> Iterator[Tuple[str, str]]:
@@ -238,77 +192,6 @@ def _replay_records(path: str) -> Iterator[Tuple[str, str]]:
                 yield raw, peer
                 continue
         yield line, "replay:0"
-
-
-def _make_factory(options) -> Callable:
-    transport = (options.get("transport") or "socket").lower()
-    if transport == "socket":
-        return SocketListenerFactory(addr_file=options.get("addr_file") or "")
-    if transport == "replay":
-        return SyslogReplayFactory(
-            capture_path=options.get("capture_path") or "",
-            ack_log=options.get("ack_log") or "",
-            chunk_size=int(options.get("chunk_size") or 0),
-        )
-    raise ValueError(f"syslog: unknown transport {transport!r} (socket|replay)")
-
-
-class _SyslogSimpleStreamReader(SeqWindowStreamReader):
-    """Driver-side reader on the shared
-    :class:`~cheetah_spark.sources.seqwindow.SeqWindowStreamReader`
-    core: buffers listener-pushed lines, serves them as seq-numbered
-    micro-batch slices, acks replay records on commit. UDP records
-    have no ack by nature — the wire protocol has no redelivery — so
-    commit only fires the replay-transport ack log."""
-
-    _PICKLE_FIELDS = ("_opts", "_factory")
-
-    def __init__(self, options):
-        self._opts = SyslogOpts(
-            addr=options.get("addr") or "127.0.0.1:0",
-            proto=options.get("proto") or "udp",
-            content_type=options.get("content_type") or "raw",
-        )
-        self._factory = _make_factory(options)
-        self._init_runtime()
-
-    def _make_listener(self):
-        return self._factory(self._opts, self._on_record, self._on_error)
-
-    def _on_record(self, raw: str, peer: str) -> None:
-        self._on_item((raw, peer))
-
-    def _row_of(self, item: tuple) -> tuple:
-        return item
-
-    def _ack_of(self, item: tuple, seq: int, listener):
-        raw, peer = item
-        return SyslogRecord(raw, peer, seq, ack=getattr(self._factory, "log_ack", None))
-
-    def _lost_window_error(self, start_seq: int, end_seq: int) -> Exception:
-        # datagram transports have no redelivery; surface the gap
-        # instead of silently committing an empty range
-        return RuntimeError(
-            f"syslog: replay window lost for offsets [{start_seq},{end_seq}) "
-            "after restart — datagram transport has no redelivery; rows are "
-            "unrecoverable (use the replay transport or durable upstream relay "
-            "for at-least-once)"
-        )
-
-
-class SyslogStreamDataSource(DataSource):
-    """``spark.readStream.format("cheetah-syslog")`` — the kawad
-    syslog source config type as a Python streaming data source."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "cheetah-syslog"
-
-    def schema(self) -> str:
-        return SYSLOG_STREAM_SCHEMA
-
-    def simpleStreamReader(self, schema: StructType) -> SimpleDataSourceStreamReader:
-        return _SyslogSimpleStreamReader(self.options)
 
 
 @dataclass
@@ -337,18 +220,7 @@ class SyslogSource(Source):
     streaming: bool = True
 
     def read(self, spark: SparkSession) -> DataFrame:
-        df = load_stream(
-            spark,
-            SyslogStreamDataSource,
-            addr=self.addr,
-            proto=self.proto,
-            content_type=self.content_type,
-            transport=self.transport,
-            capture_path=self.capture_path,
-            ack_log=self.ack_log,
-            chunk_size=self.chunk_size,
-            addr_file=self.addr_file,
-        )
+        df = load_stream(spark, SyslogStreamDataSource, self)
         if self.content_type == "auto":
             from cheetah_spark.functions import syslog as SL
 
@@ -365,3 +237,47 @@ class SyslogSource(Source):
                 "(raw|auto|rfc3164|rfc5424)"
             )
         return df
+
+
+class _SyslogSimpleStreamReader(SeqWindowStreamReader):
+    """Driver-side reader on the shared
+    :class:`~cheetah_spark.sources.seqwindow.SeqWindowStreamReader`
+    core: buffers listener-pushed lines, serves them as seq-numbered
+    micro-batch slices, and on commit records replay acks to
+    ``ack_log`` in commit order. UDP records have no ack by nature —
+    the wire protocol has no redelivery — so commit has nothing else
+    to fire."""
+
+    NAME = "syslog"
+    SOURCE = SyslogSource
+
+    def _make_listener(self):
+        src = self._src
+        if src.transport.lower() == "replay":
+            return ReplayPump(_replay_records(src.capture_path), src.chunk_size, self._on_item)
+        return _bind_socket(src, lambda raw, peer: self._on_item((raw, peer)), self._on_error)
+
+    def _row_of(self, item: tuple) -> tuple:
+        return item
+
+    def _ack_of(self, item: tuple, seq: int, listener):
+        if self._src.transport.lower() != "replay" or not self._src.ack_log:
+            return None
+        return AckHandle(_log_ack, self._src.ack_log, seq, item[1])
+
+    def _lost_window_error(self, start_seq: int, end_seq: int) -> Exception:
+        # datagram transports have no redelivery; surface the gap
+        # instead of silently committing an empty range
+        return RuntimeError(
+            f"syslog: replay window lost for offsets [{start_seq},{end_seq}) "
+            "after restart — datagram transport has no redelivery; rows are "
+            "unrecoverable (use the replay transport or durable upstream relay "
+            "for at-least-once)"
+        )
+
+
+class SyslogStreamDataSource(LiveDataSource):
+    """``spark.readStream.format("cheetah-syslog")`` — the kawad
+    syslog source config type as a Python streaming data source."""
+
+    NAME, SCHEMA, READER = "cheetah-syslog", SYSLOG_STREAM_SCHEMA, _SyslogSimpleStreamReader

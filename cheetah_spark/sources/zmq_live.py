@@ -38,17 +38,16 @@ import socket
 import struct
 import threading
 from dataclasses import dataclass
-from typing import Callable, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
-from pyspark.sql.types import StructType
 
 from cheetah_spark.sinks import Sink, write_transport
 from cheetah_spark.sources import Source
 from cheetah_spark.sources.seqwindow import (
-    NdjsonReplayFactory,
+    LiveDataSource,
+    LoopbackServer,
     SeqWindowStreamReader,
     load_stream,
 )
@@ -133,7 +132,7 @@ def _handshake(sock, socket_type: str) -> "socket.SocketIO":
     return fh
 
 
-class ZmqPubSocket:
+class ZmqPubSocket(LoopbackServer):
     """PUB socket that BINDS: accepts SUB peers, tracks their prefix
     subscriptions (spec 29: ``\\x01 prefix`` subscribe / ``\\x00
     prefix`` unsubscribe arrive as messages), and fans out multipart
@@ -141,51 +140,30 @@ class ZmqPubSocket:
     a real libzmq SUB connects to this verbatim."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0):
-        self._sock = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._sock.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._sock.bind((host, port))
-        self._sock.listen(16)
-        self.addr = "%s:%d" % self._sock.getsockname()
-        self._lock = threading.Lock()
         self._peers: dict[int, tuple] = {}  # id -> (conn, set[prefix])
-        self._closing = False
-        threading.Thread(target=self._accept_loop, daemon=True).start()
-
-    def _accept_loop(self) -> None:
-        while not self._closing:
-            try:
-                conn, _ = self._sock.accept()
-            except OSError:
-                return
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
+        super().__init__(host, port)
 
     def _serve(self, conn) -> None:
-        try:
-            fh = _handshake(conn, "PUB")
+        fh = _handshake(conn, "PUB")
+        with self._lock:
+            self._peers[id(conn)] = (conn, set())
+        while not self._closing:
+            is_cmd, frames = _read_multipart(fh)
+            if is_cmd:
+                continue
+            sub = frames[0]
             with self._lock:
-                self._peers[id(conn)] = (conn, set())
-            while not self._closing:
-                is_cmd, frames = _read_multipart(fh)
-                if is_cmd:
-                    continue
-                sub = frames[0]
-                with self._lock:
-                    peer = self._peers.get(id(conn))
-                    if peer is None:
-                        return
-                    if sub[:1] == b"\x01":
-                        peer[1].add(sub[1:])
-                    elif sub[:1] == b"\x00":
-                        peer[1].discard(sub[1:])
-        except (ConnectionError, OSError, RuntimeError):
-            pass
-        finally:
-            with self._lock:
-                self._peers.pop(id(conn), None)
-            try:
-                conn.close()
-            except OSError:
-                pass
+                peer = self._peers.get(id(conn))
+                if peer is None:
+                    return
+                if sub[:1] == b"\x01":
+                    peer[1].add(sub[1:])
+                elif sub[:1] == b"\x00":
+                    peer[1].discard(sub[1:])
+
+    def _on_disconnect(self, conn) -> None:
+        with self._lock:
+            self._peers.pop(id(conn), None)
 
     def send(self, topic: str, payload: str) -> None:
         """Multipart [topic, payload] to every peer whose prefix set
@@ -200,20 +178,13 @@ class ZmqPubSocket:
             ]
         for conn in targets:
             try:
-                conn.sendall(data)
+                self._send(conn, data)
             except OSError:
                 pass
 
     def subscriber_count(self) -> int:
         with self._lock:
             return sum(1 for _c, p in self._peers.values() if p)
-
-    def close(self) -> None:
-        self._closing = True
-        try:
-            self._sock.close()
-        except OSError:
-            pass
 
 
 class ZmqSubSocket:
@@ -252,7 +223,7 @@ class ZmqSubSocket:
             pass
 
 
-class ZmqSubBindCollector:
+class ZmqSubBindCollector(LoopbackServer):
     """SUB socket that BINDS (the fan-in collector shape): accepts PUB
     peers that CONNECT, sends each its subscription (subscriptions
     travel SUB→PUB regardless of who bound), and collects their
@@ -261,54 +232,24 @@ class ZmqSubBindCollector:
 
     def __init__(self, prefix: str = "", host: str = "127.0.0.1", port: int = 0):
         self._prefix = prefix.encode("utf-8")
-        self._sock = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._sock.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._sock.bind((host, port))
-        self._sock.listen(16)
-        self.addr = "%s:%d" % self._sock.getsockname()
-        self._lock = threading.Lock()
         self.received: list[tuple[str, str]] = []
-        self._closing = False
-        threading.Thread(target=self._accept_loop, daemon=True).start()
-
-    def _accept_loop(self) -> None:
-        while not self._closing:
-            try:
-                conn, _ = self._sock.accept()
-            except OSError:
-                return
-            threading.Thread(target=self._serve, args=(conn,), daemon=True).start()
+        super().__init__(host, port)
 
     def _serve(self, conn) -> None:
-        try:
-            fh = _handshake(conn, "SUB")
-            conn.sendall(_frame(b"\x01" + self._prefix))
-            while not self._closing:
-                is_cmd, frames = _read_multipart(fh)
-                if is_cmd:
-                    continue
-                topic = frames[0].decode("utf-8")
-                payload = frames[1].decode("utf-8") if len(frames) > 1 else ""
-                with self._lock:
-                    self.received.append((topic, payload))
-        except (ConnectionError, OSError, RuntimeError):
-            pass
-        finally:
-            try:
-                conn.close()
-            except OSError:
-                pass
+        fh = _handshake(conn, "SUB")
+        self._send(conn, _frame(b"\x01" + self._prefix))
+        while not self._closing:
+            is_cmd, frames = _read_multipart(fh)
+            if is_cmd:
+                continue
+            topic = frames[0].decode("utf-8")
+            payload = frames[1].decode("utf-8") if len(frames) > 1 else ""
+            with self._lock:
+                self.received.append((topic, payload))
 
     def snapshot(self) -> list:
         with self._lock:
             return list(self.received)
-
-    def close(self) -> None:
-        self._closing = True
-        try:
-            self._sock.close()
-        except OSError:
-            pass
 
 
 class ZmqPubConnectSocket:
@@ -372,112 +313,7 @@ class ZmqPubConnectSocket:
 
 
 # ---------------------------------------------------------------------------
-# Streaming reader (seq-window core) + transports
-# ---------------------------------------------------------------------------
-
-
-@dataclass
-class ZmqListenerFactory:
-    """Real SUB socket: connect + subscribe on construction, a
-    background thread drains messages into the reader buffer.
-    Connection loss is fatal (at-most-once: nothing to replay)."""
-
-    addr: str = ""
-    prefix: str = ""
-
-    def __call__(self, on_msg, on_error):
-        listener = _ZmqSubListener(self, on_msg, on_error)
-        listener.start()
-        return listener
-
-
-class _ZmqSubListener:
-    def __init__(self, cfg: ZmqListenerFactory, on_msg, on_error):
-        self._cfg = cfg
-        self._on_msg = on_msg
-        self._on_error = on_error
-        self._closing = False
-        self._client: Optional[ZmqSubSocket] = None
-
-    def start(self) -> None:
-        self._client = ZmqSubSocket(self._cfg.addr, self._cfg.prefix)
-        threading.Thread(target=self._loop, name="cheetah-zmq-sub", daemon=True).start()
-
-    def _loop(self) -> None:
-        try:
-            while not self._closing:
-                topic, payload = self._client.recv()
-                self._on_msg(topic, payload)
-        except Exception as exc:
-            if not self._closing:
-                self._on_error(exc)
-
-    def close(self) -> None:
-        self._closing = True
-        if self._client is not None:
-            self._client.close()
-
-
-def _zmq_item(rec: dict) -> tuple:
-    return rec["topic"], rec["payload"]
-
-
-def _zmq_factory(options) -> Callable:
-    transport = (options.get("transport") or "socket").lower()
-    if transport == "socket":
-        return ZmqListenerFactory(
-            addr=options.get("addr") or "",
-            prefix=options.get("prefix") or "",
-        )
-    if transport == "replay":
-        return NdjsonReplayFactory.from_options(options, _zmq_item)
-    raise ValueError(f"zmq: unknown transport {transport!r} (socket|replay)")
-
-
-class _ZmqSimpleStreamReader(SeqWindowStreamReader):
-    """Seq-window reader over the SUB listener / replay pump. No acks:
-    ZeroMQ PUB/SUB is at-most-once fire-and-forget."""
-
-    _PICKLE_FIELDS = ("_factory",)
-
-    def __init__(self, options):
-        self._factory = _zmq_factory(options)
-        self._init_runtime()
-
-    def _make_listener(self):
-        return self._factory(self._on_msg, self._on_error)
-
-    def _on_msg(self, topic: str, payload: str) -> None:
-        self._on_item((topic, payload))
-
-    def _row_of(self, item: tuple) -> tuple:
-        return item
-
-    def _lost_window_error(self, start_seq: int, end_seq: int) -> Exception:
-        return RuntimeError(
-            f"zmq: replay window lost for offsets [{start_seq},{end_seq}) after "
-            "restart — ZeroMQ PUB/SUB is at-most-once with no replay anywhere; "
-            "put a durable queue (kafka/redis/nsq) in front for redelivery"
-        )
-
-
-class ZmqStreamDataSource(DataSource):
-    """``spark.readStream.format("cheetah-zmq")`` — a ZeroMQ SUB
-    socket as a Python streaming data source."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "cheetah-zmq"
-
-    def schema(self) -> str:
-        return ZMQ_SCHEMA
-
-    def simpleStreamReader(self, schema: StructType) -> SimpleDataSourceStreamReader:
-        return _ZmqSimpleStreamReader(self.options)
-
-
-# ---------------------------------------------------------------------------
-# Source / Sink adapters (config types)
+# Source config + streaming reader (seq-window core)
 # ---------------------------------------------------------------------------
 
 
@@ -503,15 +339,49 @@ class ZmqSource(Source):
             if self.prefix:
                 env = env.where(F.col("topic").startswith(self.prefix))
             return env
-        return load_stream(
-            spark,
-            ZmqStreamDataSource,
-            transport=self.transport,
-            addr=self.addr,
-            prefix=self.prefix,
-            capture_path=self.capture_path,
-            chunk_size=self.chunk_size,
+        return load_stream(spark, ZmqStreamDataSource, self)
+
+
+class _ZmqSimpleStreamReader(SeqWindowStreamReader):
+    """Seq-window reader over a SUB socket (connect + subscribe before
+    the first read) / replay capture. Items are the rows ``(topic,
+    payload)``. No acks: ZeroMQ PUB/SUB is at-most-once
+    fire-and-forget, and connection loss is fatal (nothing to
+    replay)."""
+
+    NAME = "zmq"
+    SOURCE = ZmqSource
+
+    def _connect(self) -> ZmqSubSocket:
+        return ZmqSubSocket(self._src.addr, self._src.prefix)
+
+    def _poll(self, client: ZmqSubSocket):
+        return (client.recv(),)
+
+    def _replay_item(self, rec: dict) -> tuple:
+        return rec["topic"], rec["payload"]
+
+    def _row_of(self, item: tuple) -> tuple:
+        return item
+
+    def _lost_window_error(self, start_seq: int, end_seq: int) -> Exception:
+        return RuntimeError(
+            f"zmq: replay window lost for offsets [{start_seq},{end_seq}) after "
+            "restart — ZeroMQ PUB/SUB is at-most-once with no replay anywhere; "
+            "put a durable queue (kafka/redis/nsq) in front for redelivery"
         )
+
+
+class ZmqStreamDataSource(LiveDataSource):
+    """``spark.readStream.format("cheetah-zmq")`` — a ZeroMQ SUB
+    socket as a Python streaming data source."""
+
+    NAME, SCHEMA, READER = "cheetah-zmq", ZMQ_SCHEMA, _ZmqSimpleStreamReader
+
+
+# ---------------------------------------------------------------------------
+# Sink adapter (config type)
+# ---------------------------------------------------------------------------
 
 
 @dataclass

@@ -83,6 +83,74 @@ def test_unknown_types_rejected():
         build_sink({"type": "s4"})
 
 
+# Every lazily imported config type: (kind, "module:Class", config
+# with camelCase keys where the class has an aliased field, the same
+# config in field names). The cases hold what the per-type wrappers
+# built before the table replaced them.
+_LAZY_CASES = [
+    ("source", "mqtt", "mqtt_live:MqttLiveSource", {"clientID": "c", "keepAlive": 45.0}, {"client_id": "c", "keep_alive": 45.0}),
+    ("source", "eventlog", "eventlog_live:EventLogLiveSource", {"capturePath": "/cap"}, {"capture_path": "/cap"}),
+    ("source", "syslog", "syslog_live:SyslogSource", {"contentType": "auto"}, {"content_type": "auto"}),
+    ("source", "journald", "journald_live:JournaldSource", {"chunkSize": 3}, {"chunk_size": 3}),
+    ("source", "kafka", "kafka:KafkaSource", {"bootstrapServers": "h:9092", "groupID": "g"}, {"bootstrap_servers": "h:9092", "group_id": "g"}),
+    ("source", "redis", "redis_live:RedisSource", {"startID": "5-0", "pollMs": 7}, {"start_id": "5-0", "poll_ms": 7}),
+    ("source", "nats", "nats_live:NatsSource", {"chunkSize": 3}, {"chunk_size": 3}),
+    ("source", "amqp", "amqp_live:AmqpSource", {"bindingKey": "a.#", "exchangeType": "direct"}, {"binding_key": "a.#", "exchange_type": "direct"}),
+    ("source", "pubsub", "pubsub_live:PubSubSource", {"maxMessages": 9}, {"max_messages": 9}),
+    ("source", "kinesis", "kinesis_live:KinesisSource", {"maxRecords": 9, "streamName": "s"}, {"max_records": 9, "stream": "s"}),
+    ("source", "nsq", "nsq_live:NsqSource", {"capturePath": "/cap"}, {"capture_path": "/cap"}),
+    ("source", "memcache", "memcache_live:MemcacheSource", {"batchSize": 3, "keys": ["a", "b"]}, {"batch_size": 3, "keys": ("a", "b")}),
+    ("source", "zmq", "zmq_live:ZmqSource", {"chunkSize": 3}, {"chunk_size": 3}),
+    (
+        "source", "sqlite", "sqlite_local:SqliteSource",
+        {"path": "/db", "table": "t", "schema": "a int", "partitionColumn": "a", "numPartitions": 2, "columns": ["a"]},
+        {"path": "/db", "table": "t", "schema": "a int", "partition_col": "a", "num_partitions": 2, "columns": ("a",)},
+    ),
+    ("sink", "mqtt", "mqtt_live:MqttLiveSink", {"clientID": "c", "userName": "u"}, {"client_id": "c", "username": "u"}),
+    ("sink", "kafka", "kafka:KafkaSink", {"bootstrapServers": "h:9092"}, {"bootstrap_servers": "h:9092"}),
+    ("sink", "redis", "redis_live:RedisStreamSink", {"capturePath": "/cap"}, {"capture_path": "/cap"}),
+    ("sink", "nats", "nats_live:NatsSink", {"capturePath": "/cap"}, {"capture_path": "/cap"}),
+    ("sink", "amqp", "amqp_live:AmqpSink", {"routingKey": "k"}, {"routing_key": "k"}),
+    ("sink", "pubsub", "pubsub_live:PubSubSink", {"batchSize": 5}, {"batch_size": 5}),
+    ("sink", "kinesis", "kinesis_live:KinesisSink", {"batchSize": 5, "streamName": "s"}, {"batch_size": 5, "stream": "s"}),
+    ("sink", "nsq", "nsq_live:NsqSink", {"capturePath": "/cap"}, {"capture_path": "/cap"}),
+    ("sink", "memcache", "memcache_live:MemcacheSink", {"key_col": "k", "flags": 2}, {"key_col": "k", "flags": 2}),
+    ("sink", "zmq", "zmq_live:ZmqSink", {"capturePath": "/cap"}, {"capture_path": "/cap"}),
+]
+
+
+@pytest.mark.parametrize(
+    "kind,tag,cls_path,cfg,fields", _LAZY_CASES, ids=[f"{c[0]}-{c[1]}" for c in _LAZY_CASES]
+)
+def test_lazy_config_types_build_their_class(kind, tag, cls_path, cfg, fields):
+    import importlib
+
+    module, _, name = cls_path.partition(":")
+    cls = getattr(importlib.import_module(f"cheetah_spark.sources.{module}"), name)
+    build = build_source if kind == "source" else build_sink
+    got = build({"type": tag, **cfg})
+    assert type(got) is cls
+    assert got == cls(**fields)
+
+
+def test_lazy_config_types_cover_the_table():
+    cases = {(c[0], c[1]) for c in _LAZY_CASES}
+    table = {("source", t) for t in config._LAZY_SOURCES} | {("sink", t) for t in config._LAZY_SINKS}
+    assert cases == table
+
+
+def test_config_import_leaves_the_transports_unimported():
+    import subprocess
+    import sys
+
+    probe = (
+        "import sys, cheetah_spark.config; "
+        "print(sorted(m for m in sys.modules if m.endswith(('_live', '.kafka', 'sqlite_local'))))"
+    )
+    out = subprocess.run([sys.executable, "-c", probe], capture_output=True, text=True, check=True)
+    assert out.stdout.strip() == "[]"
+
+
 def test_streaming_config_topology_with_metrics(spark, sf_dir):
     """The s_stream_batcher topology declared as config (streaming
     parquet replay → batcher-wrapped gzip-NDJSON sink), with the

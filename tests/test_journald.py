@@ -132,9 +132,10 @@ def test_journalctl_extra_args_reach_the_factory():
     shipping everything) must flow from the config/dataclass surface
     through the option channel into the factory (r8 self-review: the
     field existed but nothing ever passed it)."""
-    from cheetah_spark.sources.journald_live import JournaldSource, _make_factory
+    from cheetah_spark.sources.journald_live import JournaldSource
+    from cheetah_spark.sources.seqwindow import source_from_options
 
-    f = _make_factory({"extra_args": "--unit=sshd.service,--priority=4"})
+    f = source_from_options(JournaldSource, {"extra_args": "--unit=sshd.service,--priority=4"})
     assert f.extra_args == ("--unit=sshd.service", "--priority=4")
     src = JournaldSource(extra_args=("--unit=sshd.service",))
     assert ",".join(src.extra_args) == "--unit=sshd.service"

@@ -9,7 +9,9 @@ SURVEY.md, BASELINE.md) are not scanned: they describe past states of
 the tree. A retired script or record that is still cited fails here.
 
 Also: no module under cheetah_spark/ but the derived-fixture store
-keeps a fixture cache of its own (see ``_ROOT_USES`` below).
+keeps a fixture cache of its own (see ``_ROOT_USES`` below), and no
+live transport module rebuilds the reader shell that
+``sources/seqwindow.py`` holds once.
 """
 
 from __future__ import annotations
@@ -126,3 +128,45 @@ def test_cache_guard_sees_a_hand_rolled_cache():
     )
     found = _cache_sites("cheetah_spark/queries/x.py", ast.parse(src))
     assert len(found) == 4, found
+
+
+# The live transports declare their config once, as their Source
+# dataclass, and run on the shell in sources/seqwindow.py: its options
+# parser and its DataSource base. A transport module that reads a
+# reader option itself, or defines its own simpleStreamReader, has
+# forked that shell.
+def _shell_sites(rel: str, tree) -> list[str]:
+    found = []
+    for fn, n in _nodes(tree):
+        if (
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "get"
+            and getattr(n.func.value, "id", getattr(n.func.value, "attr", None)) == "options"
+        ):
+            found.append(f"{rel}:{n.lineno} ({fn}): options.get")
+        if isinstance(n, ast.FunctionDef) and n.name == "simpleStreamReader":
+            found.append(f"{rel}:{n.lineno}: simpleStreamReader")
+    return found
+
+
+def test_live_transports_use_the_shared_shell():
+    found = []
+    for f in sorted((REPO / "cheetah_spark" / "sources").glob("*_live.py")):
+        rel = f.relative_to(REPO).as_posix()
+        found += _shell_sites(rel, ast.parse(f.read_text(encoding="utf-8")))
+    assert not found, found
+
+
+def test_shell_guard_sees_a_hand_rolled_reader():
+    src = (
+        "class XStreamDataSource(DataSource):\n"
+        "    def simpleStreamReader(self, schema):\n"
+        "        return _XReader(self.options)\n"
+        "class _XReader:\n"
+        "    def __init__(self, options):\n"
+        "        self._addr = options.get('addr') or ''\n"
+        "        self._n = int(self.options.get('n') or 1)\n"
+    )
+    found = _shell_sites("cheetah_spark/sources/x_live.py", ast.parse(src))
+    assert len(found) == 3, found

@@ -209,7 +209,7 @@ def test_replay_bare_text_json_payload_line(tmp_path, spark):
     """A bare-text capture whose message starts with '{' (JSON-payload
     syslog) must replay as a raw record, not JSONDecodeError the pump
     (r8 advice)."""
-    from cheetah_spark.sources.syslog_live import SyslogReplayFactory
+    from cheetah_spark.sources.syslog_live import _replay_records
 
     cap = tmp_path / "cap.txt"
     cap.write_text(
@@ -217,9 +217,7 @@ def test_replay_bare_text_json_payload_line(tmp_path, spark):
         '{"raw": "<13>Aug 15 11:22:33 h app: x", "peer": "1.2.3.4:514"}\n'
         "<13>Aug 15 11:22:33 h app: plain\n"
     )
-    got: list[tuple[str, str]] = []
-    f = SyslogReplayFactory(capture_path=str(cap))
-    f(None, lambda raw, peer: got.append((raw, peer)), lambda e: None)
+    got = list(_replay_records(str(cap)))
     assert got == [
         ('{"not": "an ndjson capture record"', "replay:0"),
         ("<13>Aug 15 11:22:33 h app: x", "1.2.3.4:514"),
