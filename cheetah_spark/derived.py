@@ -23,7 +23,10 @@ those sources. So every such directory is cached by one rule:
   ``tmp_path``) reaches every fixture.
 - **Memo:** one per-process memo on the full key. The sources are
   stat'ed on every call, so a rewrite inside a running process is
-  caught; a hit costs those stats and no Spark action.
+  caught; a hit costs those stats and no Spark action. A value read
+  from a source rather than written beside it (``source_memo``, for
+  example a compiled line set) is held in memory under the same
+  source rule.
 
 Build-function source is hashed rather than versioned by hand: it is
 stable across processes and changes exactly when the definition
@@ -52,6 +55,7 @@ _FORMAT = "1"
 
 _digests: dict = {}  # code object (or callable) -> source digest
 _memo: dict = {}  # fixture path -> key last verified on disk
+_reads: dict = {}  # source_memo key -> (source stat parts, value)
 
 
 def _src_digest(fn) -> str:
@@ -133,3 +137,22 @@ def _publish(path: str, key: str, build) -> None:
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
         shutil.rmtree(old, ignore_errors=True)
+
+
+def source_memo(key, source: str, compute):
+    """``compute()``, remembered under ``key`` while every file under
+    ``source`` keeps its ``(mtime_ns, size)``. A changed source
+    recomputes and replaces the entry, so one ``key`` holds one entry.
+    A ``source`` that is not a local path (a URI) is computed on every
+    call. The stats are taken before ``compute`` runs, so a rewrite
+    during it is caught by the next call."""
+    try:
+        stats = _stat_parts(source)
+    except OSError:
+        return compute()
+    hit = _reads.get(key)
+    if hit is not None and hit[0] == stats:
+        return hit[1]
+    value = compute()
+    _reads[key] = (stats, value)
+    return value

@@ -33,6 +33,46 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
+# Spark SQL text twins. A plan built from one ``F.expr`` string costs one
+# parse, while every Column call pays pyspark's per-call Py4J chatter
+# (``_with_origin``: a conf read, a class lookup, an origin set and clear),
+# so the plan-build hot paths spell their expressions as SQL text. The
+# ``*_sql`` builders below return the same expression trees as their
+# Column kernels, over a SQL expression string.
+
+
+def sql_of(col: Column | str) -> str:
+    """Spark SQL text of ``col``: a str names one column (quoted as a
+    single identifier); a Column is read back as its SQL text, so it
+    must be one the parser reads back (a column reference, or built-in
+    calls over one)."""
+    if isinstance(col, str):
+        return "`" + col.replace("`", "``") + "`"
+    return col._jc.toString()
+
+
+def sql_str(value: str) -> str:
+    """``value`` as a Spark SQL string literal (the parser unescapes
+    backslashes, so they are doubled)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def tokens_sql(expr: str, pattern: str = WORD_RE) -> str:
+    """:func:`tokens` as Spark SQL text over ``expr``."""
+    return f"regexp_extract_all(lower({expr}), {sql_str(pattern)}, 0)"
+
+
+def shingles_sql(toks_expr: str, k: int = 3) -> str:
+    """:func:`shingles` as Spark SQL text, the token array let-bound by
+    the same one-element ``transform``."""
+    return (
+        f"get(transform(array({toks_expr}), tk -> CASE WHEN size(tk) < {k}"
+        " THEN CAST(array() AS ARRAY<STRING>)"
+        f" ELSE transform(sequence(1, size(tk) - {k - 1}),"
+        f" i -> array_join(slice(tk, i, {k}), ' ')) END), 0)"
+    )
+
+
 def norm_text(col: Column | str) -> Column:
     """Canonical form for fingerprinting: lowercase, collapse whitespace."""
     return F.trim(F.regexp_replace(F.lower(_c(col)), "\\s+", " "))
@@ -127,6 +167,11 @@ def minhash_params(num_hashes: int = 32) -> list[tuple[int, int]]:
 def minhash_base(col: Column) -> Column:
     """31-bit base hash of a shingle (one md5, shared with DuckDB)."""
     return hash56(col) % _MINHASH_MOD
+
+
+def minhash_base_sql(expr: str) -> str:
+    """:func:`minhash_base` as Spark SQL text over ``expr``."""
+    return f"(CAST(conv(substring(md5({expr}), 1, 14), 16, 10) AS BIGINT) % {_MINHASH_MOD})"
 
 
 def oracle_minhash_base(expr: str) -> str:

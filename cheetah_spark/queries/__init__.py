@@ -85,7 +85,7 @@ CHECK_FIRST = [
     "s_llm_url_dedup",
     "q_llm_url_dedup",
     # changed this round: banding refactored onto the shared
-    # minhash_bucket_expr (same plan; evidence predates the code)
+    # minhash_bucket_sql (same plan; evidence predates the code)
     "q_llm_minhash_dedup",
     "s_llm_minhash_dedup",
     # changed this round: local top-k tie order fixed to the

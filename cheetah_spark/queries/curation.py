@@ -2194,28 +2194,28 @@ def _messy_url_expr():
     )
 
 
-def _canonical_url_expr(url):
-    """The canonicalization spec (Catalyst built-ins only): lowercase
-    scheme+host, strip leading www., drop utm_* params, sort remaining
-    params, drop the fragment."""
-    scheme = F.lower(F.regexp_extract(url, r"^([A-Za-z]+)://", 1))
-    host = F.lower(F.regexp_extract(url, r"^[A-Za-z]+://([^/?#]+)", 1))
-    host = F.regexp_replace(host, r"^www\.", "")
-    path = F.regexp_extract(url, r"^[A-Za-z]+://[^/?#]+([^?#]*)", 1)
-    query = F.regexp_extract(url, r"\?([^#]*)", 1)
-    kept = F.array_join(
-        F.array_sort(
-            F.filter(
-                F.split(query, "&"),
-                lambda p: ~p.startswith("utm_") & (p != ""),
-            )
-        ),
-        "&",
+def _canonical_url_sql(url: str) -> str:
+    """The canonicalization spec as Spark SQL text over the SQL
+    expression ``url`` (Catalyst built-ins only): lowercase scheme+host,
+    strip leading www., drop utm_* params, sort remaining params, drop
+    the fragment. The one definition every caller parses; DuckDB
+    mirror: :func:`_canon_url_sql`."""
+    kept = (
+        rf"array_join(array_sort(filter(split(regexp_extract({url}, '\\?([^#]*)', 1), '&'),"
+        " p -> NOT startswith(p, 'utm_') AND p != '')), '&')"
     )
-    return F.concat(
-        scheme, F.lit("://"), host, path,
-        F.when(kept != "", F.concat(F.lit("?"), kept)).otherwise(F.lit("")),
+    return (
+        f"concat(lower(regexp_extract({url}, '^([A-Za-z]+)://', 1)), '://',"
+        rf" regexp_replace(lower(regexp_extract({url}, '^[A-Za-z]+://([^/?#]+)', 1)), '^www\\.', ''),"
+        f" regexp_extract({url}, '^[A-Za-z]+://[^/?#]+([^?#]*)', 1),"
+        f" CASE WHEN {kept} != '' THEN concat('?', {kept}) ELSE '' END)"
     )
+
+
+def _canonical_url_expr(url) -> "F.Column":
+    """:func:`_canonical_url_sql` over ``url`` (a column name or a
+    Column) as one parsed Column."""
+    return F.expr(_canonical_url_sql(X.sql_of(url)))
 
 
 # the fixture's messy-URL derivation and the canonicalization, as
@@ -2234,7 +2234,7 @@ _MESSY_URL_EXPR_SQL = f"""(CASE WHEN doc_id % 2 = 0 THEN 'https' ELSE 'HTTP' END
 
 
 def _canon_url_sql(url: str = "url") -> str:
-    """DuckDB mirror of :func:`_canonical_url_expr` over column ``url``."""
+    """DuckDB mirror of :func:`_canonical_url_sql` over column ``url``."""
     return f"""lower(regexp_extract({url}, '^([A-Za-z]+)://', 1)) || '://'
                    || regexp_replace(lower(regexp_extract({url}, '^[A-Za-z]+://([^/?#]+)', 1)),
                                      '^www\\.', '')
@@ -2298,7 +2298,7 @@ def q_llm_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     urls = d.select("doc_id", "source", _messy_url_expr().alias("url"))
     canon = urls.select(
-        "doc_id", "source", _canonical_url_expr(F.col("url")).alias("curl")
+        "doc_id", "source", _canonical_url_expr("url").alias("curl")
     )
     # min/count over a curl-partitioned window ≡ the groupBy+join
     # spelling the oracle keeps (each fetch paired with its page's
@@ -2553,7 +2553,7 @@ def s_llm_url_dedup(
     def canon_frame(df: DataFrame) -> DataFrame:
         urls = df.select("doc_id", "source", _messy_url_expr().alias("url"))
         return urls.select(
-            "doc_id", "source", _canonical_url_expr(F.col("url")).alias("curl")
+            "doc_id", "source", _canonical_url_expr("url").alias("curl")
         )
 
     with scoped_state_partitions(spark):
@@ -2734,53 +2734,63 @@ def q_llm_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def gopher_feat_exprs(nt) -> dict:
-    """The Gopher feature columns over an arbitrary text Column —
-    map-only Catalyst higher-order functions, no Python."""
-    words = F.filter(F.split(nt, r"\s+"), lambda x: x != "")
-    lines = F.filter(F.split(nt, "\n"), lambda x: x != "")
+    """The Gopher features over a text column (a column name or a
+    Column), as Spark SQL text: feature name → expression. Map-only
+    Catalyst higher-order functions, no Python. Spelled once, as SQL,
+    so every caller parses the same definition (DuckDB mirror:
+    :func:`gopher_fail_sql`)."""
+    t = X.sql_of(nt)
+    words = rf"filter(split({t}, '\\s+'), x -> x != '')"
+    lines = rf"filter(split({t}, '\n'), x -> x != '')"
+    toks = X.tokens_sql(t)
     return {
-        "n_w": F.size(words).cast("bigint"),
-        "sum_wlen": F.aggregate(
-            words, F.lit(0).cast("bigint"), lambda acc, w: acc + F.length(w)
+        "n_w": f"CAST(size({words}) AS BIGINT)",
+        "sum_wlen": f"aggregate({words}, CAST(0 AS BIGINT), (acc, w) -> acc + length(w))",
+        "n_lines": f"CAST(size({lines}) AS BIGINT)",
+        "n_bullet": (
+            f"CAST(size(filter({lines}, x -> startswith(ltrim(x), '- ')"
+            " OR startswith(ltrim(x), '* '))) AS BIGINT)"
         ),
-        "n_lines": F.size(lines).cast("bigint"),
-        "n_bullet": F.size(
-            F.filter(lines, lambda x: F.ltrim(x).startswith("- ") | F.ltrim(x).startswith("* "))
-        ).cast("bigint"),
-        "n_ell_lines": F.size(F.filter(lines, lambda x: F.rtrim(x).endswith("..."))).cast("bigint"),
-        "cnt_hash": (F.length(nt) - F.length(F.replace(nt, F.lit("#"), F.lit("")))).cast("bigint"),
-        "cnt_ell": ((F.length(nt) - F.length(F.replace(nt, F.lit("..."), F.lit("")))) / 3).cast("bigint"),
-        "n_alpha": F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]"))).cast("bigint"),
-        "n_stop": sum(
-            (F.array_contains(X.tokens(nt), w).cast("int") for w in _GOPHER_STOPWORDS),
-            start=F.lit(0),
-        ).cast("bigint"),
+        "n_ell_lines": f"CAST(size(filter({lines}, x -> endswith(rtrim(x), '...'))) AS BIGINT)",
+        "cnt_hash": f"CAST(length({t}) - length(replace({t}, '#', '')) AS BIGINT)",
+        "cnt_ell": f"CAST((length({t}) - length(replace({t}, '...', ''))) / 3 AS BIGINT)",
+        "n_alpha": f"CAST(size(filter({words}, w -> w RLIKE '[A-Za-z]')) AS BIGINT)",
+        "n_stop": "CAST(0 + "
+        + " + ".join(f"CAST(array_contains({toks}, '{w}') AS INT)" for w in _GOPHER_STOPWORDS)
+        + " AS BIGINT)",
+    }
+
+
+def gopher_rule_sql(feat) -> dict:
+    """The seven published Gopher rules (Rae et al. 2021 Table A1) as
+    Spark SQL booleans over the feature expressions — exact integer
+    cross-multiplies, never float ratio compares. ``feat`` maps feature
+    name → SQL text: :func:`gopher_feat_exprs` output for a single-pass
+    expression, or the feature names over a materialized feature
+    projection. Insertion order is the f_* report column order."""
+    f = {k: f"({v})" for k, v in feat.items()}
+    n_w = f["n_w"]
+    return {
+        "wordcount": f"({n_w} < {_GOPHER_MIN_WORDS} OR {n_w} > {_GOPHER_MAX_WORDS})",
+        "meanlen": f"({f['sum_wlen']} < 3 * {n_w} OR {f['sum_wlen']} > 10 * {n_w})",
+        "symbol": f"(({f['cnt_hash']} + {f['cnt_ell']}) * 10 > {n_w})",
+        "bullet": f"({f['n_bullet']} * 10 > 9 * {f['n_lines']})",
+        "ellipsis": f"({f['n_ell_lines']} * 10 > 3 * {f['n_lines']})",
+        "alpha": f"({f['n_alpha']} * 10 < 8 * {n_w})",
+        "stopword": f"({f['n_stop']} < 2)",
     }
 
 
 def gopher_rule_exprs(feat) -> dict:
-    """The seven published Gopher rules (Rae et al. 2021 Table A1) as
-    boolean Columns over the feature columns — exact integer
-    cross-multiplies, never float ratio compares. ``feat`` maps
-    feature name → Column (either :func:`gopher_feat_exprs` output for
-    a single-pass expression, or ``F.col`` over a materialized feature
-    projection). Insertion order is the f_* report column order."""
-    return {
-        "wordcount": (feat["n_w"] < _GOPHER_MIN_WORDS) | (feat["n_w"] > _GOPHER_MAX_WORDS),
-        "meanlen": (feat["sum_wlen"] < 3 * feat["n_w"]) | (feat["sum_wlen"] > 10 * feat["n_w"]),
-        "symbol": (feat["cnt_hash"] + feat["cnt_ell"]) * 10 > feat["n_w"],
-        "bullet": feat["n_bullet"] * 10 > 9 * feat["n_lines"],
-        "ellipsis": feat["n_ell_lines"] * 10 > 3 * feat["n_lines"],
-        "alpha": feat["n_alpha"] * 10 < 8 * feat["n_w"],
-        "stopword": feat["n_stop"] < 2,
-    }
+    """:func:`gopher_rule_sql` as parsed boolean Columns."""
+    return {k: F.expr(v) for k, v in gopher_rule_sql(feat).items()}
 
 
 def gopher_fail_sql(col: str, rules: tuple = None) -> str:
     """DuckDB boolean expression: document column ``col`` fails ANY of
     the named Gopher rules — the oracle mirror of the declarative
     `gopher_rules` filter transform (config.py), rule for rule the
-    same integer cross-multiplies as :func:`gopher_rule_exprs`."""
+    same integer cross-multiplies as :func:`gopher_rule_sql`."""
     words = f"list_filter(string_split_regex({col}, '\\s+'), x -> x <> '')"
     lines = f"list_filter(string_split({col}, chr(10)), x -> x <> '')"
     n_w = f"len({words})::BIGINT"
@@ -2823,13 +2833,10 @@ def _gopher_judged(docs: DataFrame) -> DataFrame:
         "doc_id", "lang", (F.col("doc_id") % 7).alias("genre"),
         _gopher_noisy_text_expr().alias("nt"),
     )
-    fx = gopher_feat_exprs(F.col("nt"))
-    feats = noisy.select("lang", "genre", *[c.alias(k) for k, c in fx.items()])
-    rules = gopher_rule_exprs({k: F.col(k) for k in fx})
-    return feats.select(
-        "lang", "genre",
-        *[c.alias(f"r_{k}") for k, c in rules.items()],
-    )
+    fx = gopher_feat_exprs("nt")
+    feats = noisy.selectExpr("lang", "genre", *[f"{v} AS {k}" for k, v in fx.items()])
+    rules = gopher_rule_sql({k: k for k in fx})
+    return feats.selectExpr("lang", "genre", *[f"{v} AS r_{k}" for k, v in rules.items()])
 
 
 def _gopher_rollup(rules: DataFrame) -> DataFrame:
@@ -3203,13 +3210,15 @@ def boiler_line_set(
     min_docs: int = _LINE_DF_K,
 ) -> list:
     """Corpus-level boilerplate line set over an arbitrary text column,
-    collected to the driver for broadcast: lines appearing in >=
-    ``min_docs`` distinct documents. Bounded by |distinct repeated
-    lines| — the same broadcast-side discipline as s_llm_line_dedup's
-    offline compile (boilerplate is by definition ≪ corpus). Used by
-    the declarative `line_dedup` transform (config.py), whose
-    per-document rewrite is then a pure Arrow-batched map with zero
-    joins and zero streaming state."""
+    collected to the driver: lines appearing in >= ``min_docs`` distinct
+    documents. Bounded by |distinct repeated lines| — the same
+    broadcast-side discipline as s_llm_line_dedup's offline compile
+    (boilerplate is by definition ≪ corpus). The declarative
+    `line_dedup` transform (config.py) compiles it once per corpus
+    version: the set of a local `from` corpus is memoized on the
+    ``(mtime_ns, size)`` of its files, so a rebuild of the plan runs no
+    job until the corpus is rewritten. Its per-document rewrite is then
+    a pure map with zero joins and zero streaming state."""
     ex = docs.select(
         id_col,
         F.explode(

@@ -475,9 +475,11 @@ def q_config_fineweb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one map-only canonicalization pass + one keep-min
     shuffle (url_dedup), a map-only rule battery, a broadcast-set
-    Arrow strip, ONE per-lang hash aggregate. The boilerplate compile
-    is a separate bounded corpus pass (the offline-compile discipline
-    of s_llm_line_dedup)."""
+    Arrow strip, ONE per-lang hash aggregate. The boilerplate set is
+    compiled once per corpus version (the offline-compile discipline
+    of s_llm_line_dedup): a bounded corpus pass the first time, then
+    held in memory until the corpus files change, so a rebuild of
+    this plan runs no job for it."""
     src = _fineweb_src_dir(spark, sf_dir)
     cfg = {
         "source": {"type": "parquet", "path": src},

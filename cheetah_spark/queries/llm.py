@@ -535,15 +535,16 @@ _MH_ROWS = _MH_HASHES // _MH_BANDS  # 4 rows per band
 _MH_PARAMS = X.minhash_params(_MH_HASHES)
 
 
-def minhash_bucket_expr(sig: "F.Column", b: "F.Column") -> "F.Column":
-    """The LSH bucket key of band ``b`` of a MinHash signature: md5 of
-    the band's row slice, comma-joined — 128-bit uniform keys, so the
-    (band, bucket) shuffle never concentrates on a hot hash. The ONE
-    definition every banding consumer shares (batch candidate
-    generation, the streaming bucket-min state machine, the
-    declarative ``minhash_dedup`` transform); oracle mirror:
+def minhash_bucket_sql(sig: str, b: str) -> str:
+    """The LSH bucket key of band ``b`` of a MinHash signature, as Spark
+    SQL text over the SQL expressions ``sig`` and ``b``: md5 of the
+    band's row slice, comma-joined — 128-bit uniform keys, so the (band,
+    bucket) shuffle never concentrates on a hot hash. The ONE definition
+    every banding consumer parses (batch candidate generation, the
+    streaming bucket-min state machine, the declarative
+    ``minhash_dedup`` transform); oracle mirror:
     :func:`_oracle_bands_cand`."""
-    return F.md5(F.array_join(F.slice(sig, b * _MH_ROWS + 1, _MH_ROWS), ","))
+    return f"md5(array_join(slice({sig}, {b} * {_MH_ROWS} + 1, {_MH_ROWS}), ','))"
 
 
 def minhash_sig_expr(text: "F.Column") -> "F.Column":
@@ -597,8 +598,9 @@ def minhash_sigs_arrow(
 ) -> DataFrame:
     """(id_col, sig array<bigint>[32]) computed map-only — THE MinHash
     signature kernel of every batch and micro-batch caller: md5 base
-    hashes JVM-side (one per distinct shingle, the same
-    ``X.minhash_base`` expression every formulation shares), then the
+    hashes JVM-side (one per distinct shingle, the
+    ``X.minhash_base`` value every formulation shares, parsed here from
+    one SQL text with the tokens and shingles), then the
     32 permutations + elementwise-min fold VECTORIZED in one
     ``mapInArrow`` stage (numpy broadcasting + segmented
     ``minimum.reduceat`` — zero per-shingle Python).
@@ -621,15 +623,16 @@ def minhash_sigs_arrow(
     # DISTINCT shingle array (q_llm_ngram_jaccard, the recall eval)
     # hashes it directly instead of re-tokenizing the text
     shingled = (
-        F.col(shingles_col)
+        X.sql_of(shingles_col)
         if shingles_col is not None
-        else F.array_distinct(X.shingles(X.tokens(F.col(text_col)), 3))
+        else f"array_distinct({X.shingles_sql(X.tokens_sql(X.sql_of(text_col)), 3)})"
     )
-    hs = F.transform(shingled, lambda s: X.minhash_base(s))
     # never-null input lists: a null text's hs coalesces to [] so the
     # Arrow offsets stay well-defined; [] rows are dropped in the fold
-    base = df.select(
-        F.col(id_col), F.coalesce(hs, F.array().cast("array<bigint>")).alias("hs")
+    base = df.selectExpr(
+        X.sql_of(id_col),
+        f"coalesce(transform({shingled}, s -> {X.minhash_base_sql('s')}),"
+        " CAST(array() AS ARRAY<BIGINT>)) AS hs",
     )
     return base.mapInArrow(_minhash_fold, f"`{id_col}` long, sig array<bigint>")
 
@@ -730,12 +733,13 @@ def q_llm_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def minhash_bands(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id_col, b, bucket): one row per signature band, keyed by
-    :func:`minhash_bucket_expr` — the banding every batch and
+    :func:`minhash_bucket_sql` — the banding every batch and
     micro-batch MinHash consumer shares (oracle mirror: the ``bands``
     CTE of :func:`_oracle_bands_cand`)."""
-    return sigs.select(
-        id_col, F.explode(F.sequence(F.lit(0), F.lit(_MH_BANDS - 1))).alias("b"), "sig"
-    ).select(id_col, "b", minhash_bucket_expr(F.col("sig"), F.col("b")).alias("bucket"))
+    i = X.sql_of(id_col)
+    return sigs.selectExpr(
+        i, f"explode(sequence(0, {_MH_BANDS - 1})) AS b", "sig"
+    ).selectExpr(i, "b", f"{minhash_bucket_sql('sig', 'b')} AS bucket")
 
 
 def _minhash_band_candidates(sigs: DataFrame) -> DataFrame:
