@@ -683,43 +683,34 @@ def build_transform(cfg: Mapping[str, Any]) -> Handler:
         mode = cfg.get("mode", "filter")
         name = cfg.get("as", "contaminated")
 
+        # The filter is compiled once per eval-corpus version, the
+        # line_dedup rule: a local `from` corpus is held in the derived
+        # store's per-process memo under the (mtime_ns, size) of its
+        # files, so a rebuild starts no job; a rewritten corpus
+        # recompiles. A URI `from` compiles on every build.
         def decontaminate(df: DataFrame) -> DataFrame:
+            from cheetah_spark.derived import source_memo
             from cheetah_spark.functions import text as X
             from cheetah_spark.queries import curation as C
             from cheetah_spark.queries.streams import bloom_shingle_hit
 
             spark = df.sparkSession
-            # offline compile: eval shingles -> k bit positions -> OR
-            # into m/32 words (the q_llm_bloom_decontaminate build,
-            # same shared position/shingle expressions), collected and
-            # DENSIFIED driver-side — the filter is constant memory
-            # (m = 2^18 bits = 64 KiB of words) regardless of eval-set
-            # size, the bounded-driver-state class.
-            shl_eval = F.array_distinct(
-                X.shingles(X.tokens(F.col(eval_col)), ngram)
+
+            def compile_words() -> list:
+                # offline compile: eval shingles -> k bit positions ->
+                # OR into m/32 words (curation.bloom_words, the
+                # q_llm_bloom_decontaminate build), collected and
+                # DENSIFIED driver-side — the filter is constant memory
+                # (m = 2^18 bits = 64 KiB of words) regardless of
+                # eval-set size, the bounded-driver-state class.
+                words = [0] * (C._BLOOM_M // 32)
+                for r in C.bloom_words(spark.read.parquet(eval_from), eval_col, ngram).collect():
+                    words[int(r.word_idx)] = int(r.word)
+                return words
+
+            words = source_memo(
+                ("decontaminate", eval_from, eval_col, ngram), eval_from, compile_words
             )
-            sparse = (
-                spark.read.parquet(eval_from)
-                .select(F.explode(shl_eval).alias("s"))
-                .distinct()
-                .select(
-                    F.explode(
-                        F.array(*C._bloom_positions_spark(F.col("s")))
-                    ).alias("pos")
-                )
-                .groupBy((F.col("pos") / 32).cast("bigint").alias("word_idx"))
-                .agg(
-                    F.bit_or(
-                        F.expr(
-                            "shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT))"
-                        )
-                    ).alias("word")
-                )
-                .collect()
-            )
-            words = [0] * (C._BLOOM_M // 32)
-            for r in sparse:
-                words[int(r.word_idx)] = int(r.word)
             # ONE array literal (a single Catalyst constant, not 8k
             # child nodes): the probe is pure per-row expression —
             # zero joins, zero Python — so it composes anywhere a map
@@ -751,42 +742,54 @@ def build_transform(cfg: Mapping[str, Any]) -> Handler:
         nprobe = int(cfg.get("nprobe", 4))
         name = cfg.get("as", "neighbors")
 
+        # (n_lists, centroid panel) is compiled once per index-corpus
+        # version, the line_dedup rule: a local `index` is held in the
+        # derived store's per-process memo under the (mtime_ns, size) of
+        # its files, so a rebuild runs neither the sizing count nor the
+        # centroid collect; a rewritten corpus recompiles. A URI
+        # `index` compiles on every build.
         def enrich(df: DataFrame) -> DataFrame:
             import hashlib
 
-            import numpy as np
-
+            from cheetah_spark.derived import source_memo
             from cheetah_spark.queries.llm import (
                 _ivf_index_core,
+                _seed_panel,
+                _topk_array,
                 ivf_assign_fn,
+                ivf_probe_expand,
                 ivf_probe_topk,
+                ivf_rerank,
             )
+
             spark = df.sparkSession
-            ref = spark.read.parquet(index_path).select(
-                F.col(index_id).alias("vec_id"), F.col(index_emb).alias("embedding")
+
+            def ref() -> DataFrame:
+                return spark.read.parquet(index_path).select(
+                    F.col(index_id).alias("vec_id"), F.col(index_emb).alias("embedding")
+                )
+
+            def panel():
+                r = ref()
+                # nlists ~ sqrt(n) is the standard IVF sizing (measured
+                # in SCALE.md: it keeps per-probe index bytes flat)
+                n = int(nlists_cfg) if nlists_cfg else max(16, int(r.count() ** 0.5))
+                return n, _seed_panel(r, n)
+
+            n_lists, C = source_memo(
+                ("ann_enrich", index_path, index_id, index_emb, nlists_cfg), index_path, panel
             )
-            # nlists ~ sqrt(n) is the standard IVF sizing (measured in
-            # SCALE.md: it is what keeps per-probe index bytes flat)
-            n_lists = (
-                int(nlists_cfg)
-                if nlists_cfg
-                else max(16, int(ref.count() ** 0.5))
-            )
-            cent = ref.orderBy("vec_id").limit(n_lists).collect()
-            C = np.array([r.embedding for r in cent], dtype=np.float64)
-            C /= np.linalg.norm(C, axis=1, keepdims=True)
             store_name = (
                 "ann_index/"
                 f"{hashlib.sha256(index_path.encode()).hexdigest()[:12]}_{n_lists}"
             )
             index_dir = _ivf_index_core(
-                spark, ref, ivf_assign_fn(C), n_lists, index_path, store_name,
+                spark, ref(), ivf_assign_fn(C), n_lists, index_path, store_name,
                 params=f"id:{index_id};embedding:{index_emb}",
             )
             queries = df.select(
                 F.col(id_col).alias("vec_id"), F.col(emb_col).alias("embedding")
             )
-            nb = F.struct(F.col("neighbor_id"), F.col("cos_sim"))
             if not df.isStreaming:
                 # whole-table enrich: the query side is corpus-sized, so
                 # it SHUFFLE-joins the pruned index (broadcasting it
@@ -796,18 +799,7 @@ def build_transform(cfg: Mapping[str, Any]) -> Handler:
                     spark, index_dir, C, queries, k, nprobe,
                     broadcast_queries=False,
                 )
-                packed = topk.groupBy("query_id").agg(
-                    F.array_sort(
-                        F.collect_list(nb),
-                        lambda a, b: F.when(a.cos_sim > b.cos_sim, -1)
-                        .when(a.cos_sim < b.cos_sim, 1)
-                        .otherwise(
-                            F.when(a.neighbor_id < b.neighbor_id, -1)
-                            .when(a.neighbor_id > b.neighbor_id, 1)
-                            .otherwise(0)
-                        ),
-                    ).alias(name)
-                )
+                packed = _topk_array(topk, k, name)
                 return df.join(
                     packed.withColumnRenamed("query_id", id_col), id_col, "left"
                 )
@@ -819,49 +811,13 @@ def build_transform(cfg: Mapping[str, Any]) -> Handler:
             # s_llm_ann_ivf ships), and per-query top-k folds in an
             # update-mode aggregation — each query arrives in exactly
             # one trigger, so its row emits once, complete and final.
-            from cheetah_spark.functions import vectors as V
-            from cheetah_spark.queries.llm import ivf_probe_expand
-
-            dim = int(C.shape[1])
-            # per-side ||x||² once before the join: one unrolled dot
-            # per candidate instead of three (same floats — norms are
-            # per-vector functions; also a third the generated-code
-            # size, which sets the first trigger's Janino bill)
-            probed = ivf_probe_expand(C, nprobe, queries).withColumn(
-                "nsq_q", V.l2_norm_sq("qv", dim)
+            cand = ivf_rerank(
+                ivf_probe_expand(C, nprobe, queries),
+                spark.read.parquet(index_dir),
+                int(C.shape[1]),
+                broadcast_queries=False,
             )
-            idx = spark.read.parquet(index_dir).withColumn(
-                "nsq_c", V.l2_norm_sq("embedding", dim)
-            )
-            cand = (
-                probed.join(idx, "cid")
-                .where(F.col("query_id") != F.col("vec_id"))
-                .select(
-                    "query_id",
-                    F.col("vec_id").alias("neighbor_id"),
-                    (
-                        V.dot("qv", "embedding", dim)
-                        / (F.sqrt(F.col("nsq_q")) * F.sqrt(F.col("nsq_c")))
-                    ).alias("cos_sim"),
-                )
-            )
-            packed = cand.groupBy("query_id").agg(
-                F.slice(
-                    F.array_sort(
-                        F.collect_list(nb),
-                        lambda a, b: F.when(a.cos_sim > b.cos_sim, -1)
-                        .when(a.cos_sim < b.cos_sim, 1)
-                        .otherwise(
-                            F.when(a.neighbor_id < b.neighbor_id, -1)
-                            .when(a.neighbor_id > b.neighbor_id, 1)
-                            .otherwise(0)
-                        ),
-                    ),
-                    1,
-                    k,
-                ).alias(name)
-            )
-            return packed.withColumnRenamed("query_id", id_col)
+            return _topk_array(cand, k, name).withColumnRenamed("query_id", id_col)
 
         return enrich
     # --- r13: security detections as declarative stages — the

@@ -598,6 +598,16 @@ _DECON_K = 3  # shingle width shared with the dedup family
 _DECON_FLAG_DEN = 8  # flag a doc when >= 1/8 of its shingles hit the eval set
 
 
+def _is_eval() -> "F.Column":
+    """The eval/train split of ``documents``: a doc is in the stand-in
+    benchmark set when the seeded hash56 of its doc_id falls in the
+    lowest _EVAL_PERMIL of 1000 buckets."""
+    return (
+        X.hash56(F.concat(F.lit(_DECON_SEED), F.col("doc_id").cast("string"))) % 1000
+        < _EVAL_PERMIL
+    )
+
+
 @register(
     "q_llm_decontaminate",
     oracle=f"""
@@ -655,12 +665,8 @@ def q_llm_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct shingles hit the eval set (exact integer cross-multiply,
     no float threshold)."""
     d = load_table(spark, sf_dir, "documents")
-    is_eval = (
-        X.hash56(F.concat(F.lit(_DECON_SEED), F.col("doc_id").cast("string"))) % 1000
-        < _EVAL_PERMIL
-    )
     shl = F.array_distinct(X.shingles(X.tokens(F.col("text")), _DECON_K))
-    tagged = d.select("doc_id", "lang", "text", is_eval.alias("is_eval"))
+    tagged = d.select("doc_id", "lang", "text", _is_eval().alias("is_eval"))
     eval_sh = (
         tagged.where(F.col("is_eval"))
         .select(F.explode(shl).alias("s"))
@@ -1457,6 +1463,39 @@ def _bloom_positions_spark(s: "F.Column") -> list:
     return [X.hash56(s, seed=F.lit(seed)) % _BLOOM_M for seed in _BLOOM_SEEDS]
 
 
+def bloom_words(eval_docs: DataFrame, col: str = "text", ngram: int = _DECON_K) -> DataFrame:
+    """Build the Bloom filter from eval documents: their distinct
+    ``ngram`` shingles -> k bit positions each -> OR-aggregated into
+    (word_idx, word) rows, one per occupied 32-bit word (at most m/32).
+    The one build of the registered operator, its streaming anchor and
+    the ``decontaminate`` transform."""
+    shl = F.array_distinct(X.shingles(X.tokens(F.col(col)), ngram))
+    eval_sh = eval_docs.select(F.explode(shl).alias("s")).distinct()
+    pos = eval_sh.select(F.explode(F.array(*_bloom_positions_spark(F.col("s")))).alias("pos"))
+    return pos.groupBy((F.col("pos") / 32).cast("bigint").alias("word_idx")).agg(
+        # SQL shiftleft: the bit count is a per-row column (the python
+        # F.shiftleft wrapper only takes a literal int)
+        F.bit_or(F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT))")).alias("word")
+    )
+
+
+def bloom_slot_probe(train: DataFrame, bloom: DataFrame):
+    """Probe each shingle ``s`` of ``train`` against the (word_idx,
+    word) filter: one BROADCAST left join per hash function on the
+    shingle's word slot. Returns the joined frame and the all-k-bits-set
+    membership Column over it."""
+    probed = train
+    hit = F.lit(True)
+    for i, p in enumerate(_bloom_positions_spark(F.col("s"))):
+        b = F.broadcast(bloom.select(F.col("word_idx").alias(f"wi{i}"), F.col("word").alias(f"w{i}")))
+        probed = probed.withColumn(f"pos{i}", p).join(
+            b, (F.col(f"pos{i}") / 32).cast("bigint") == F.col(f"wi{i}"), "left"
+        )
+        bit = F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST(pos{i} % 32 AS INT))")
+        hit = hit & (F.coalesce(F.col(f"w{i}"), F.lit(0)).bitwiseAND(bit) != 0)
+    return probed, hit
+
+
 def _oracle_bloom_positions(expr: str) -> list[str]:
     return [f"({X.oracle_hash56(expr, seed=repr(seed))} % {_BLOOM_M})" for seed in _BLOOM_SEEDS]
 
@@ -1527,37 +1566,15 @@ def q_llm_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact semi-join re-checks only the Bloom survivors.
     """
     d = load_table(spark, sf_dir, "documents")
-    is_eval = (
-        X.hash56(F.concat(F.lit(_DECON_SEED), F.col("doc_id").cast("string"))) % 1000
-        < _EVAL_PERMIL
-    )
     shl = F.array_distinct(X.shingles(X.tokens(F.col("text")), _DECON_K))
-    tagged = d.select("doc_id", "lang", "text", is_eval.alias("is_eval"))
-
-    # --- build: eval shingles -> k positions -> OR-agg into words ---
-    eval_sh = tagged.where(F.col("is_eval")).select(F.explode(shl).alias("s")).distinct()
-    pos = eval_sh.select(
-        F.explode(F.array(*_bloom_positions_spark(F.col("s")))).alias("pos")
-    )
-    bloom = pos.groupBy((F.col("pos") / 32).cast("bigint").alias("word_idx")).agg(
-        # SQL shiftleft: the bit count is a per-row column (the python
-        # F.shiftleft wrapper only takes a literal int)
-        F.bit_or(F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT))")).alias("word")
-    ).localCheckpoint()  # m/32 rows; each of the k probe joins below
-    # broadcasts its own projection — without the checkpoint every
-    # broadcast re-runs the eval-side shingle+hash build (k eval scans)
-
-    # --- probe: each train shingle joins its k word slots (broadcast) ---
+    tagged = d.select("doc_id", "lang", "text", _is_eval().alias("is_eval"))
+    # m/32 rows; each of the k probe joins below broadcasts its own
+    # projection — without the checkpoint every broadcast re-runs the
+    # eval-side shingle+hash build (k eval scans)
+    bloom = bloom_words(tagged.where(F.col("is_eval"))).localCheckpoint()
+    # each train shingle joins its k word slots (broadcast)
     train = tagged.where(~F.col("is_eval")).select("doc_id", "lang", F.explode(shl).alias("s"))
-    probed = train
-    hit = F.lit(True)
-    for i, p in enumerate(_bloom_positions_spark(F.col("s"))):
-        b = F.broadcast(bloom.select(F.col("word_idx").alias(f"wi{i}"), F.col("word").alias(f"w{i}")))
-        probed = probed.withColumn(f"pos{i}", p).join(
-            b, (F.col(f"pos{i}") / 32).cast("bigint") == F.col(f"wi{i}"), "left"
-        )
-        bit = F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST(pos{i} % 32 AS INT))")
-        hit = hit & (F.coalesce(F.col(f"w{i}"), F.lit(0)).bitwiseAND(bit) != 0)
+    probed, hit = bloom_slot_probe(train, bloom)
     probed = probed.withColumn("hit", hit)
     return probed.groupBy("lang").agg(
         F.countDistinct("doc_id").alias("n_train_docs"),

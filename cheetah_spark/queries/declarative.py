@@ -678,10 +678,10 @@ def _ann_enrich_contract(spark: SparkSession, sf_dir: str, enriched) -> "DataFra
     persisted exact anchor, exactly like s_llm_ann_ivf."""
     from pyspark.sql import functions as F
 
-    from cheetah_spark.queries.llm import _QUERY_MOD, _ann_contract
+    from cheetah_spark.queries.llm import _ann_contract, _queries
 
     rows = (
-        enriched.where(F.col("vec_id") % _QUERY_MOD == 0)
+        _queries(enriched)
         .select("vec_id", F.explode("neighbors").alias("nb"))
         .select(
             F.col("vec_id").alias("query_id"),
@@ -711,8 +711,8 @@ def _register_ann_enrich_pair():
         declarative transform attaches a (cos DESC, id ASC) top-k
         neighbor array to EVERY embeddings row — offline-compiled
         cid-partitioned IVF index (the shared _ivf_index_core /
-        ivf_assign_fn / ivf_probe_expand definitions), pruned shuffle
-        join + window rerank — and the query panel's rows are graded by
+        ivf_assign_fn / ivf_probe_expand / ivf_rerank definitions),
+        pruned shuffle join + window rerank — and the query panel's rows are graded by
         the ANN family's recall contract against the persisted exact
         anchor, same constants as q/s_llm_ann_ivf."""
         cfg = {

@@ -20,11 +20,13 @@ Scale notes per operator are inline.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 from cheetah_spark.catalog import load_table
 from cheetah_spark.functions import text as X
@@ -321,7 +323,6 @@ def _winnow_fp_arrow(d: DataFrame) -> DataFrame:
     shuffled the ~80x-exploded k-gram stream by doc_id just to run the
     w-row running min (guide §2.4 — remove the shuffle outright; §4.2
     — hand whole batches to vectorized native code)."""
-    import numpy as np
     import pyarrow as pa
 
     w = _WIN_W
@@ -640,7 +641,6 @@ def minhash_sigs_arrow(
 def _minhash_fold(batches):
     """The Arrow stage of :func:`minhash_sigs_arrow`: batches of (id,
     base-hash list) in, (id, sig) out, with no row for an empty list."""
-    import numpy as np
     import pyarrow as pa
 
     a_np = np.array([a for a, _ in _MH_PARAMS], dtype=np.int64).reshape(-1, 1)
@@ -1301,9 +1301,132 @@ _TOPK = 5
 _QUERY_MOD = 100  # vec_id % _QUERY_MOD == 0 → query set (~1% of corpus)
 
 
-@register(
-    "q_llm_similarity_topk",
-    oracle=f"""
+# --- the vector-search kernels ------------------------------------------
+#
+# Every exact, ANN, k-NN and IVF path below, and config.py's ann_enrich
+# transform, is built from these: one row normalization, one seed panel
+# and one query panel, one (score DESC, neighbor_id ASC) rank, one local
+# numpy cut in that same order, one nsq cosine, one PQ encode and one
+# ADC-pool rerank. The oracles rank by that total order, so it is
+# spelled once here and nowhere else.
+
+
+def _unit_rows(vectors):
+    """``vectors`` (an embedding batch's ``tolist()``, or collected
+    arrays) as a float64 matrix whose rows have unit L2 norm: the dot of
+    two unit rows is their cosine."""
+    M = np.array(vectors, dtype=np.float64)
+    return M / np.linalg.norm(M, axis=1, keepdims=True)
+
+
+def _queries(e: DataFrame) -> DataFrame:
+    """The contract's query set: every vec_id % _QUERY_MOD == 0 row."""
+    return e.where(F.col("vec_id") % _QUERY_MOD == 0)
+
+
+def _seed_panel(e: DataFrame, n: int):
+    """The ``n`` lowest-vec_id embeddings as unit rows: the centroid
+    seeds and training samples of every IVF and PQ index. No random
+    init, so any cluster builds the same index."""
+    return _unit_rows([r.embedding for r in e.orderBy("vec_id").limit(n).collect()])
+
+
+def _query_panel(queries: DataFrame, *extra: str):
+    """Collect a bounded query frame to the driver: its (vec_id,
+    embedding, *extra) rows, their vec_ids and their unit-row matrix —
+    the panel a numpy-scored path ships inside its Arrow closure."""
+    rows = queries.select("vec_id", "embedding", *extra).collect()
+    ids = np.array([r.vec_id for r in rows], dtype=np.int64)
+    return rows, ids, _unit_rows([r.embedding for r in rows])
+
+
+def _rank_topk(scored: DataFrame, k: int, score: str = "cos_sim", rk: str = "rk") -> DataFrame:
+    """Each query's global top-k: ``rk`` = row_number over (score DESC,
+    neighbor_id ASC), the oracles' total order, cut at ``rk <= k``."""
+    w = Window.partitionBy("query_id").orderBy(F.col(score).desc(), F.col("neighbor_id").asc())
+    return scored.withColumn(rk, F.row_number().over(w)).where(F.col(rk) <= k)
+
+
+def _local_topk(qids, ids, scores, k: int, score: str = "cos_sim", **carry):
+    """The local cut of a |Q| x n score block: each query's best
+    ``min(k, n)`` columns as (query_id, neighbor_id, score, *carry)
+    rows, where each ``carry`` array runs parallel to ``ids``.
+
+    lexsort, not argpartition: the local selection must follow the SAME
+    total order as the global :func:`_rank_topk` and the oracle —
+    (score DESC, neighbor_id ASC) — or an exact tie at the local
+    boundary (a duplicate embedding; two vectors sharing all PQ codes,
+    whose ADC scores tie structurally) could evict the oracle-chosen
+    lower neighbor_id before the global rank ever sees it, and the
+    result would depend on the partition layout."""
+    take = min(k, scores.shape[1])
+    idx = np.lexsort((np.broadcast_to(ids, scores.shape), -scores), axis=1)[:, :take]
+    return pd.DataFrame(
+        {
+            "query_id": np.repeat(qids, take),
+            "neighbor_id": ids[idx].ravel(),
+            score: np.take_along_axis(scores, idx, axis=1).ravel(),
+            **{name: col[idx].ravel() for name, col in carry.items()},
+        }
+    )
+
+
+def _nsq_cosine(qv: str, cv: str, dim: int | None = None):
+    """Cosine of the ``qv``/``cv`` arrays from squared norms computed
+    once per vector before the pairing (columns ``nsq_q``/``nsq_c``):
+    one dot per candidate pair instead of three, with the same floats
+    (a norm is a per-vector function). With ``dim`` the dot is the
+    unrolled codegen chain."""
+    dot = V.dot(qv, cv, dim) if dim else V.dot(F.col(qv), F.col(cv))
+    return dot / (F.sqrt(F.col("nsq_q")) * F.sqrt(F.col("nsq_c")))
+
+
+def _exact_topk_of(e: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact cosine top-k of a bounded (vec_id, embedding) query frame
+    against the whole corpus: broadcast crossJoin (no corpus shuffle),
+    self pairs excluded, ranked by :func:`_rank_topk`."""
+    q = queries.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qv"),
+        V.l2_norm_sq(F.col("embedding")).alias("nsq_q"),
+    )
+    joined = F.broadcast(q).crossJoin(
+        e.select(
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("cv"),
+            V.l2_norm_sq(F.col("embedding")).alias("nsq_c"),
+        )
+    ).where(F.col("query_id") != F.col("neighbor_id"))
+    scored = joined.select("query_id", "neighbor_id", _nsq_cosine("qv", "cv").alias("cos_sim"))
+    return _rank_topk(scored, _TOPK)
+
+
+def _topk_array(cand: DataFrame, k: int, name: str) -> DataFrame:
+    """Each query's top-k as ONE array column ``name`` of (neighbor_id,
+    cos_sim) structs, in :func:`_rank_topk`'s order — the form a
+    streaming aggregation can emit (no window may follow a stream), so
+    the order is spelled as an ``array_sort`` comparator."""
+    nb = F.struct(F.col("neighbor_id"), F.col("cos_sim"))
+    return cand.groupBy("query_id").agg(
+        F.slice(
+            F.array_sort(
+                F.collect_list(nb),
+                lambda a, b: F.when(a.cos_sim > b.cos_sim, -1)
+                .when(a.cos_sim < b.cos_sim, 1)
+                .otherwise(
+                    F.when(a.neighbor_id < b.neighbor_id, -1)
+                    .when(a.neighbor_id > b.neighbor_id, 1)
+                    .otherwise(0)
+                ),
+            ),
+            1,
+            k,
+        ).alias(name)
+    )
+
+
+# the exact top-k oracle of q_llm_similarity_topk and q_llm_ann_bruteforce
+_EXACT_TOPK_ORACLE = f"""
         WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % {_QUERY_MOD} = 0),
         scored AS (
             SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -1316,7 +1439,12 @@ _QUERY_MOD = 100  # vec_id % _QUERY_MOD == 0 → query set (~1% of corpus)
             FROM scored
         )
         SELECT query_id, neighbor_id, cos_sim, rk FROM ranked WHERE rk <= {_TOPK}
-    """,
+    """
+
+
+@register(
+    "q_llm_similarity_topk",
+    oracle=_EXACT_TOPK_ORACLE,
     tags=("llm", "vector"),
 )
 def q_llm_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1329,24 +1457,7 @@ def q_llm_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_llm_ann_bruteforce (vectorized partial top-k: shuffles k rows
     per query per partition instead of |C|)."""
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") % _QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        V.l2_norm_sq(F.col("embedding")).alias("nsq_q"),
-    )
-    joined = F.broadcast(q).crossJoin(
-        e.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("cv"),
-            V.l2_norm_sq(F.col("embedding")).alias("nsq_c"),
-        )
-    ).where(F.col("query_id") != F.col("neighbor_id"))
-    cos = V.dot(F.col("qv"), F.col("cv")) / (F.sqrt(F.col("nsq_q")) * F.sqrt(F.col("nsq_c")))
-    scored = joined.select("query_id", "neighbor_id", cos.alias("cos_sim"))
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= _TOPK)
+    return _exact_topk_of(e, _queries(e))
 
 
 def _topk_schema() -> str:
@@ -1392,23 +1503,18 @@ def _exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchors.anchor_df keys the persisted parquet by the embeddings
     fixture's (mtime, size) and serves bit-exact doubles from a
     collect → createDataFrame local relation."""
-    from cheetah_spark.anchors import anchor_df
-
-    return anchor_df(
-        spark,
-        sf_dir,
-        "exact_topk",
-        ("embeddings",),
-        q_llm_similarity_topk,
-        params=_EXACT_TOPK_PARAMS,
-        helpers=(V.dot, V.l2_norm_sq),  # scoring semantics
-    )
+    schema, rows = _exact_topk_rows(spark, sf_dir)
+    return spark.createDataFrame(rows, schema)
 
 
 # builder definition key: invalidates persisted anchors when the
 # anchor's semantics change (round-5 advice — a stale /tmp anchor from
 # an older code revision must not be silently served)
 _EXACT_TOPK_PARAMS = f"topk={_TOPK};qmod={_QUERY_MOD};v1"
+
+# the kernels an exact top-k anchor's values come from (scoring
+# semantics, the query set and the rank order)
+_EXACT_TOPK_HELPERS = (V.dot, V.l2_norm_sq, _nsq_cosine, _rank_topk, _exact_topk_of)
 
 
 def _exact_topk_rows(spark: SparkSession, sf_dir: str):
@@ -1421,7 +1527,7 @@ def _exact_topk_rows(spark: SparkSession, sf_dir: str):
         ("embeddings",),
         q_llm_similarity_topk,
         params=_EXACT_TOPK_PARAMS,
-        helpers=(V.dot, V.l2_norm_sq),  # scoring semantics
+        helpers=(*_EXACT_TOPK_HELPERS, _queries),
     )
 
 
@@ -1495,20 +1601,7 @@ def _ann_contract(
 
 @register(
     "q_llm_ann_bruteforce",
-    oracle=f"""
-        WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % {_QUERY_MOD} = 0),
-        scored AS (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   {V.oracle_cosine("q.embedding", "c.embedding")} AS cos_sim
-            FROM q JOIN embeddings c ON q.vec_id <> c.vec_id
-        ),
-        ranked AS (
-            SELECT *, row_number() OVER (
-                PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rk
-            FROM scored
-        )
-        SELECT query_id, neighbor_id, cos_sim, rk FROM ranked WHERE rk <= {_TOPK}
-    """,
+    oracle=_EXACT_TOPK_ORACLE,
     tags=("llm", "vector"),
 )
 def q_llm_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1526,51 +1619,20 @@ def q_llm_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-verifiable against the same exact-top-k oracle as
     q_llm_similarity_topk. Also asserted equal to that query in
     tests/test_llm.py."""
-    import numpy as np
-
     e = load_table(spark, sf_dir, "embeddings")
-    qrows = (
-        e.where(F.col("vec_id") % _QUERY_MOD == 0)
-        .select("vec_id", "embedding")
-        .collect()
-    )  # small query set: bounded by construction, broadcast via closure
-    qids = np.array([r.vec_id for r in qrows], dtype=np.int64)
-    qm = np.array([r.embedding for r in qrows], dtype=np.float64)
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
+    # small query set: bounded by construction, broadcast via closure
+    qrows, qids, qm = _query_panel(_queries(e))
     k = _TOPK + 1  # +1: the query row itself may be in-batch
 
     def local_topk(batches):
         for pdf in batches:
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            vm = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            vm /= np.linalg.norm(vm, axis=1, keepdims=True)
-            sims = qm @ vm.T  # |Q| × batch
-            take = min(k, sims.shape[1])
-            # lexsort, not argpartition (the r12 _knn_vote finding, same
-            # class): local selection must follow the SAME total order
-            # as the global window and the oracle — (cos_sim DESC,
-            # neighbor_id ASC) — or an exact-duplicate embedding tied at
-            # the local boundary could evict the oracle-chosen lower
-            # neighbor_id before the global rank ever sees it
-            idx = np.lexsort((np.broadcast_to(ids, sims.shape), -sims), axis=1)[
-                :, :take
-            ]
-            out = {
-                "query_id": np.repeat(qids, take),
-                "neighbor_id": ids[idx].ravel(),
-                "cos_sim": np.take_along_axis(sims, idx, axis=1).ravel(),
-            }
-            yield pd.DataFrame(out)
+            sims = qm @ _unit_rows(pdf["embedding"].tolist()).T  # |Q| × batch
+            yield _local_topk(qids, ids, sims, k)
 
     local = e.select("vec_id", "embedding").mapInPandas(local_topk, schema=_topk_schema())
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    sel = (
-        local.where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= _TOPK)
-        .select("query_id", "neighbor_id", "rk")
+    sel = _rank_topk(local.where(F.col("query_id") != F.col("neighbor_id")), _TOPK).select(
+        "query_id", "neighbor_id", "rk"
     )
     # bit-exact cosine for the selected pairs. The selection is bounded
     # (|Q|×k rows) and the query embeddings are already driver-side, so
@@ -1635,8 +1697,6 @@ def _ann_lsh_topk(spark: SparkSession, sf_dir: str, query_df=None) -> DataFrame:
     candidate set for recall. On real near-dup corpora (target sims
     ≥ 0.8, e.g. the embed_dedup use case) fewer/wider bands (8×8)
     collapse the candidate set to ~the true duplicates."""
-    import numpy as np
-
     from cheetah_spark.functions.vectors import _lsh_sign
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -1701,7 +1761,7 @@ def _ann_lsh_topk(spark: SparkSession, sf_dir: str, query_df=None) -> DataFrame:
     # to keep 1%; measured ~2x on the whole query). query_df overrides
     # the query side (the fixed-|Q| production mode below).
     if query_df is None:
-        query_df = e.where(F.col("vec_id") % _QUERY_MOD == 0)
+        query_df = _queries(e)
     q = bucketed(query_df).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qv"),
@@ -1717,7 +1777,6 @@ def _ann_lsh_topk(spark: SparkSession, sf_dir: str, query_df=None) -> DataFrame:
     # shape shuffled every candidate WITH both 64-dim arrays attached
     # (~2 GB at sf0.1, the whole query's bottleneck — redundant JVM
     # codegen dot products are far cheaper than moving vectors).
-    cos = V.dot(F.col("qv"), F.col("cv")) / (F.sqrt(F.col("nsq_q")) * F.sqrt(F.col("nsq_c")))
     scored = (
         F.broadcast(q)
         .join(
@@ -1731,14 +1790,11 @@ def _ann_lsh_topk(spark: SparkSession, sf_dir: str, query_df=None) -> DataFrame:
             on=["band", "bucket"],
         )
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cos.alias("cos_sim"))
+        .select("query_id", "neighbor_id", _nsq_cosine("qv", "cv").alias("cos_sim"))
         .groupBy("query_id", "neighbor_id")
         .agg(F.max("cos_sim").alias("cos_sim"))
     )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= _TOPK)
+    return _rank_topk(scored, _TOPK)
 
 
 @register(
@@ -1774,36 +1830,16 @@ def q_llm_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FIXEDQ_N = 64
 
 
+def _fixed_panel(e: DataFrame) -> DataFrame:
+    """The fixed query panel: the _FIXEDQ_N lowest vec_ids."""
+    return e.orderBy("vec_id").limit(_FIXEDQ_N)
+
+
 def _similarity_topk_fixedq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-k ground truth for the fixed query set (the anchor
     builder — q_llm_similarity_topk's shape with |Q| pinned)."""
     e = load_table(spark, sf_dir, "embeddings")
-    q = (
-        e.orderBy("vec_id")
-        .limit(_FIXEDQ_N)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qv"),
-            V.l2_norm_sq(F.col("embedding")).alias("nsq_q"),
-        )
-    )
-    joined = (
-        F.broadcast(q)
-        .crossJoin(
-            e.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("embedding").alias("cv"),
-                V.l2_norm_sq(F.col("embedding")).alias("nsq_c"),
-            )
-        )
-        .where(F.col("query_id") != F.col("neighbor_id"))
-    )
-    cos = V.dot(F.col("qv"), F.col("cv")) / (F.sqrt(F.col("nsq_q")) * F.sqrt(F.col("nsq_c")))
-    scored = joined.select("query_id", "neighbor_id", cos.alias("cos_sim"))
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= _TOPK)
+    return _exact_topk_of(e, _fixed_panel(e))
 
 
 _EXACT_TOPK_FIXEDQ_PARAMS = f"topk={_TOPK};fixedq={_FIXEDQ_N};v1"
@@ -1819,7 +1855,7 @@ def _exact_topk_fixedq_rows(spark: SparkSession, sf_dir: str):
         ("embeddings",),
         _similarity_topk_fixedq,
         params=_EXACT_TOPK_FIXEDQ_PARAMS,
-        helpers=(V.dot, V.l2_norm_sq),
+        helpers=(*_EXACT_TOPK_HELPERS, _fixed_panel),
     )
 
 
@@ -1858,8 +1894,7 @@ def q_llm_ann_lsh_fixedq(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract row q_llm_ann_lsh stays alongside as the evaluation-mode
     semantics)."""
     e = load_table(spark, sf_dir, "embeddings")
-    qdf = e.orderBy("vec_id").limit(_FIXEDQ_N)
-    approx = _ann_lsh_topk(spark, sf_dir, query_df=qdf)
+    approx = _ann_lsh_topk(spark, sf_dir, query_df=_fixed_panel(e))
     return _ann_contract(
         spark, sf_dir, approx, 0.8, exact_rows_fn=_exact_topk_fixedq_rows
     )
@@ -2008,6 +2043,7 @@ def q_llm_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _IVF_LISTS = 16
 _IVF_NPROBE = 4
+_IVF_ASSIGNED = "vec_id long, cid int, embedding array<float>"  # ivf_assign_fn's rows
 
 
 def _ann_ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int = _IVF_NPROBE) -> DataFrame:
@@ -2022,48 +2058,10 @@ def _ann_ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int = _IVF_NPROBE) -
     list id — the scan fraction is nprobe/nlists (25% here) instead of
     100%, and no O(|Q|x|C|) pairing exists anywhere. Recall vs the
     exact top-k is measured in tests/test_llm.py."""
-    import numpy as np
-
     e = load_table(spark, sf_dir, "embeddings")
-    cent = e.orderBy("vec_id").limit(_IVF_LISTS).collect()
-    C = np.array([r.embedding for r in cent], dtype=np.float64)
-    C /= np.linalg.norm(C, axis=1, keepdims=True)
-
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-            cid = np.argmax(Vn @ C.T, axis=1).astype("int32")
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"].to_numpy(), "cid": cid, "embedding": pdf["embedding"]}
-            )
-
-    assigned = e.select("vec_id", "embedding").mapInPandas(
-        assign, "vec_id long, cid int, embedding array<float>"
-    )
-
-    def probe(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-            top = np.argsort(-(Vn @ C.T), axis=1)[:, :nprobe].astype("int32")
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(pdf["vec_id"].to_numpy(), nprobe),
-                    "cid": top.ravel(),
-                    "qv": pdf["embedding"].repeat(nprobe),
-                }
-            )
-
-    q = (
-        e.where(F.col("vec_id") % _QUERY_MOD == 0)
-        .select("vec_id", "embedding")
-        .mapInPandas(probe, "query_id long, cid int, qv array<float>")
-    )
+    C = _seed_panel(e, _IVF_LISTS)
+    assigned = e.select("vec_id", "embedding").mapInPandas(ivf_assign_fn(C), _IVF_ASSIGNED)
+    q = ivf_probe_expand(C, nprobe, _queries(e))
     cand = (
         F.broadcast(q)
         .join(assigned, "cid")
@@ -2073,10 +2071,7 @@ def _ann_ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int = _IVF_NPROBE) -
     scored = cand.select(
         "query_id", "neighbor_id", V.cosine(F.col("qv"), F.col("cv")).alias("cos_sim")
     )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= _TOPK)
+    return _rank_topk(scored, _TOPK)
 
 
 @register(
@@ -2117,14 +2112,15 @@ def _ivf_index_core(
     def build(out: str) -> None:
         (
             e.select("vec_id", "embedding")
-            .mapInPandas(assign, "vec_id long, cid int, embedding array<float>")
+            .mapInPandas(assign, _IVF_ASSIGNED)
             .write.mode("overwrite")
             .partitionBy("cid")
             .parquet(out)
         )
 
     return derived_dir(
-        name, [src_path], build, f"lists:{n_lists};{params}", helpers=(assign,)
+        name, [src_path], build, f"lists:{n_lists};{params}",
+        helpers=(assign, _unit_rows, _nearest_list),
     )
 
 
@@ -2147,21 +2143,23 @@ def _ivf_index_dir(
     )
 
 
+def _nearest_list(X, C):
+    """Each unit row's inverted list: the nearest centroid by cosine
+    (the rows of ``C`` are unit too, so argmax dot == argmax cosine)."""
+    return np.argmax(X @ C.T, axis=1)
+
+
 def ivf_assign_fn(C):
     """The inverted-list assignment pass over (vec_id, embedding)
     batches — nearest centroid by cosine (rows are L2-normalized so
     argmax dot == argmax cosine). ONE definition for the contract
     stream, the scale experiment, and the declarative ``ann_enrich``
     transform; its source is part of every index's staleness digest."""
-    import numpy as np
-
     def assign(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V_ = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            Vn = V_ / np.linalg.norm(V_, axis=1, keepdims=True)
-            cid = np.argmax(Vn @ C.T, axis=1).astype("int32")
+            cid = _nearest_list(_unit_rows(pdf["embedding"].tolist()), C).astype("int32")
             yield pd.DataFrame(
                 {"vec_id": pdf["vec_id"].to_numpy(), "cid": cid, "embedding": pdf["embedding"]}
             )
@@ -2177,15 +2175,12 @@ def ivf_probe_expand(C, nprobe: int, queries: DataFrame) -> DataFrame:
     (query_id, cid, qv) — the ONE expansion both the eager pruned probe
     (:func:`ivf_probe_topk`) and the lazy stream-static ``ann_enrich``
     join consume."""
-    import numpy as np
-
     def probe(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V_ = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            Vn = V_ / np.linalg.norm(V_, axis=1, keepdims=True)
-            top = np.argsort(-(Vn @ C.T), axis=1)[:, :nprobe].astype("int32")
+            sims = _unit_rows(pdf["embedding"].tolist()) @ C.T
+            top = np.argsort(-sims, axis=1)[:, :nprobe].astype("int32")
             yield pd.DataFrame(
                 {
                     "query_id": np.repeat(pdf["vec_id"].to_numpy(), nprobe),
@@ -2206,7 +2201,6 @@ def ivf_probe_topk(
     queries: DataFrame,
     k: int,
     nprobe: int,
-    exclude_self: bool = True,
     broadcast_queries: bool = True,
 ) -> DataFrame:
     """Answer a bounded (vec_id, embedding) query frame against a
@@ -2220,8 +2214,6 @@ def ivf_probe_topk(
     window top-k. Returns (query_id, neighbor_id, cos_sim). Shared by
     the s_llm_ann_ivf contract stream and the declarative
     ``ann_enrich`` transform."""
-    from pyspark.sql.window import Window
-
     q = ivf_probe_expand(C, nprobe, queries)
     # bounded by |queries| x nprobe (driver-held like any centroid
     # panel); the isin filter below is a PARTITION filter on the
@@ -2233,40 +2225,38 @@ def ivf_probe_topk(
             F.col("query_id").alias("neighbor_id"),
             F.lit(0.0).alias("cos_sim"),
         ).limit(0)
-    dim = int(C.shape[1])
-    # norms are per-VECTOR functions: compute each side's ||x||² once
-    # before the join instead of twice per candidate pair (the cosine
-    # then costs ONE unrolled dot per pair, not three — same floats,
-    # the lsh/similarity_topk nsq discipline; also one third the
-    # generated-code size, which is what the first trigger/invocation
-    # pays Janino for)
-    q = q.withColumn("nsq_q", V.l2_norm_sq("qv", dim))
-    idx = (
-        spark.read.parquet(index_dir)
-        .where(F.col("cid").isin(cids))
-        .withColumn("nsq_c", V.l2_norm_sq("embedding", dim))
-    )
+    idx = spark.read.parquet(index_dir).where(F.col("cid").isin(cids))
     # broadcast is right for a bounded query panel (the contract shape);
     # a corpus-sized query side (ann_enrich over a whole table) must
     # shuffle-join instead — pass broadcast_queries=False
-    cand = (F.broadcast(q) if broadcast_queries else q).join(idx, "cid")
-    if exclude_self:
-        cand = cand.where(F.col("query_id") != F.col("vec_id"))
-    cand = cand.select(
+    cand = ivf_rerank(q, idx, int(C.shape[1]), broadcast_queries)
+    return _rank_topk(cand, k).select("query_id", "neighbor_id", "cos_sim")
+
+
+def ivf_rerank(
+    q: DataFrame,
+    idx: DataFrame,
+    dim: int,
+    broadcast_queries: bool = True,
+) -> DataFrame:
+    """Exact cosine of every (probe-expanded query, index row) pair that
+    shares a list id, self pairs excluded: (query_id, neighbor_id,
+    cos_sim). Each side's ||x||² is computed once before the join
+    (:func:`_nsq_cosine`: one unrolled dot per pair, not three, and a
+    third of the generated code, which the first trigger pays Janino
+    for). The one scorer of :func:`ivf_probe_topk` and the streaming
+    ``ann_enrich`` join."""
+    q = q.withColumn("nsq_q", V.l2_norm_sq("qv", dim))
+    idx = idx.withColumn("nsq_c", V.l2_norm_sq("embedding", dim))
+    cand = (
+        (F.broadcast(q) if broadcast_queries else q)
+        .join(idx, "cid")
+        .where(F.col("query_id") != F.col("vec_id"))
+    )
+    return cand.select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        (
-            V.dot("qv", "embedding", dim)
-            / (F.sqrt(F.col("nsq_q")) * F.sqrt(F.col("nsq_c")))
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim")
+        _nsq_cosine("qv", "embedding", dim).alias("cos_sim"),
     )
 
 
@@ -2309,10 +2299,6 @@ def s_llm_ann_ivf(
     arrived query. The drained spool is bit-identical to the batch
     operator's top-k, so the contract rows hash-match q_llm_ann_ivf's
     oracle verbatim."""
-    import numpy as np
-
-    from pyspark.sql.window import Window
-
     from cheetah_spark.sources import ParquetSource
     from cheetah_spark.streaming import (
         embeddings_raw_stream_dir,
@@ -2325,10 +2311,7 @@ def s_llm_ann_ivf(
     # standard IVF practice) used by the scale probe to measure the
     # pruning axis — per-trigger index fraction = probed/nlists
     n_lists = int(nlists) if nlists else _IVF_LISTS
-    cent = e.orderBy("vec_id").limit(n_lists).collect()
-    C = np.array([r.embedding for r in cent], dtype=np.float64)
-    C /= np.linalg.norm(C, axis=1, keepdims=True)
-
+    C = _seed_panel(e, n_lists)
     index_dir = _ivf_index_dir(spark, sf_dir, e, ivf_assign_fn(C), n_lists)
 
     def answer_batch(batch: DataFrame) -> DataFrame:
@@ -2336,7 +2319,7 @@ def s_llm_ann_ivf(
             spark,
             index_dir,
             C,
-            batch.where(F.col("vec_id") % _QUERY_MOD == 0),
+            _queries(batch),
             _TOPK,
             _IVF_NPROBE,
         )
@@ -2379,24 +2362,17 @@ def _ann_ivfpq_topk(
     8-byte codes. Partial top-pools (k rows per query per partition)
     are the only shuffle; the bounded pool joins raw vectors once for
     the exact rerank."""
-    import numpy as np
-
-    from pyspark.sql.window import Window
-
     pq_m = _IVFPQ_M if pq_m is None else pq_m
     pq_k = _IVFPQ_K if pq_k is None else pq_k
     rerank = _IVFPQ_RERANK if rerank is None else rerank
     e = load_table(spark, sf_dir, "embeddings")
-    seeds = e.orderBy("vec_id").limit(_IVF_LISTS + _PQ_SAMPLE).collect()
-    C = np.array([r.embedding for r in seeds[:_IVF_LISTS]], dtype=np.float64)
-    C /= np.linalg.norm(C, axis=1, keepdims=True)
+    seeds = _seed_panel(e, _IVF_LISTS + _PQ_SAMPLE)
+    C = seeds[:_IVF_LISTS]
     # residual codebooks trained on a bounded sample (offset past the
     # centroid seeds, whose own residuals are zero and would
     # degenerate the init)
-    S = np.array([r.embedding for r in seeds[_IVF_LISTS:]], dtype=np.float64)
-    S /= np.linalg.norm(S, axis=1, keepdims=True)
-    S = S - C[np.argmax(S @ C.T, axis=1)]  # training sample as residuals
-    d_sub = S.shape[1] // pq_m
+    S = seeds[_IVF_LISTS:]
+    S = S - C[_nearest_list(S, C)]  # training sample as residuals
     books = _pq_train_books(S, pq_m, pq_k)
     # wider probe + rerank pool than the single-technique variants:
     # quantization error compounds with list pruning, and both knobs
@@ -2409,20 +2385,13 @@ def _ann_ivfpq_topk(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-            cid = np.argmax(Vn @ C.T, axis=1)
-            R = Vn - C[cid]
-            codes = np.empty((len(V), pq_m), dtype="int32")
-            for m in range(pq_m):
-                sub = R[:, m * d_sub : (m + 1) * d_sub]
-                d2 = ((sub[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
-                codes[:, m] = np.argmin(d2, axis=1)
+            Vn = _unit_rows(pdf["embedding"].tolist())
+            cid = _nearest_list(Vn, C)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
                     "cid": cid.astype("int32"),
-                    "code": list(codes),
+                    "code": list(_pq_encode(Vn - C[cid], books)),
                 }
             )
 
@@ -2435,15 +2404,10 @@ def _ann_ivfpq_topk(
     # bounded query-side state on the driver (|Q| rows — the PQ/kmeans
     # pattern): normalized query vectors, their probed lists, and the
     # per-(query, list) coarse term qn·C[l] of the ADC score
-    qrows = e.where(F.col("vec_id") % _QUERY_MOD == 0).select("vec_id", "embedding").collect()
-    Q = np.array([r.embedding for r in qrows], dtype=np.float64)
-    Q /= np.linalg.norm(Q, axis=1, keepdims=True)
-    qids = np.array([r.vec_id for r in qrows])
+    _, qids, Q = _query_panel(_queries(e))
     coarse = Q @ C.T  # |Q| × nlists
     probed = np.argsort(-coarse, axis=1)[:, :nprobe]  # |Q| × nprobe
-    tables = np.stack(
-        [Q[:, m * d_sub : (m + 1) * d_sub] @ books[m].T for m in range(pq_m)], axis=1
-    )  # |Q| × M × K
+    tables = _pq_tables(Q, books)  # |Q| × M × K
     # queries probing each list: list id -> array of query indices
     probes_by_list = {
         l: np.where((probed == l).any(axis=1))[0] for l in range(_IVF_LISTS)
@@ -2460,56 +2424,17 @@ def _ann_ivfpq_topk(
                 if qi is None or len(qi) == 0:
                     continue
                 Cm = np.array(grp["code"].tolist(), dtype="int64")  # n × M
-                ids = grp["vec_id"].to_numpy()
                 # ADC: coarse term + residual table lookups, only for
                 # the queries that probe THIS list
                 approx = coarse[qi, l][:, None] + np.stack(
                     [tables[qi, m, :][:, Cm[:, m]] for m in range(pq_m)]
                 ).sum(axis=0)  # |qi| × n
-                k = min(pool, approx.shape[1])
-                # lexsort, not argpartition: ADC ties are STRUCTURAL in
-                # PQ (two vectors sharing all M codes score identically),
-                # so the local pool cut must follow the global window's
-                # total order (adc DESC, neighbor_id ASC) or pool
-                # membership becomes partition-layout-dependent
-                top = np.lexsort(
-                    (np.broadcast_to(ids, approx.shape), -approx), axis=1
-                )[:, :k]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.repeat(qids[qi], k),
-                            "neighbor_id": ids[top].ravel(),
-                            "adc": np.take_along_axis(approx, top, axis=1).ravel(),
-                        }
-                    )
-                )
+                out.append(_local_topk(qids[qi], grp["vec_id"].to_numpy(), approx, pool, "adc"))
             if out:
                 yield pd.concat(out, ignore_index=True)
 
     partials = coded.mapInPandas(adc_score, "query_id long, neighbor_id long, adc double")
-    w_pool = Window.partitionBy("query_id").orderBy(F.col("adc").desc(), F.col("neighbor_id"))
-    cand = (
-        partials.where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("prk", F.row_number().over(w_pool))
-        .where(F.col("prk") <= pool)
-        .drop("prk", "adc")
-    )
-    qdf = F.broadcast(
-        e.where(F.col("vec_id") % _QUERY_MOD == 0).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-        )
-    )
-    scored = (
-        cand.join(
-            e.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")),
-            "neighbor_id",
-        )
-        .join(qdf, "query_id")
-        .select("query_id", "neighbor_id", V.cosine(F.col("qv"), F.col("cv")).alias("cos_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= _TOPK)
+    return _adc_rerank(e, partials, pool)
 
 
 @register(
@@ -2641,8 +2566,6 @@ def _pq_train_books(X, m: int, k: int, iters: int = _PQ_TRAIN_ITERS):
     X: n × d sample (already normalized / residualized by the caller).
     Returns [m] arrays of k × (d//m). Empty clusters keep their
     previous centroid (deterministic, no re-seeding)."""
-    import numpy as np
-
     d_sub = X.shape[1] // m
     books = []
     for j in range(m):
@@ -2657,6 +2580,51 @@ def _pq_train_books(X, m: int, k: int, iters: int = _PQ_TRAIN_ITERS):
                     cb[c] = pts.mean(axis=0)
         books.append(cb)
     return books
+
+
+def _pq_encode(X, books):
+    """PQ codes of the rows of ``X``: per subspace, the index of the
+    nearest codeword of ``books[m]`` by L2 (one int32 column per
+    codebook)."""
+    d_sub = X.shape[1] // len(books)
+    codes = np.empty((len(X), len(books)), dtype="int32")
+    for m, book in enumerate(books):
+        sub = X[:, m * d_sub : (m + 1) * d_sub]
+        d2 = ((sub[:, None, :] - book[None, :, :]) ** 2).sum(axis=2)
+        codes[:, m] = np.argmin(d2, axis=1)
+    return codes
+
+
+def _pq_tables(Q, books):
+    """ADC tables: per query row of ``Q``, the M × K subspace dot
+    products with every codeword (|Q| × M × K)."""
+    d_sub = Q.shape[1] // len(books)
+    return np.stack(
+        [Q[:, m * d_sub : (m + 1) * d_sub] @ book.T for m, book in enumerate(books)], axis=1
+    )
+
+
+def _adc_rerank(e: DataFrame, partials: DataFrame, pool: int) -> DataFrame:
+    """Exact rerank of an ADC candidate pool. ``partials`` holds each
+    partition's local (query_id, neighbor_id, adc) cut; each query keeps
+    its global ``pool`` best by (adc DESC, neighbor_id ASC), only those
+    pairs join the raw vectors back (the query panel by broadcast), and
+    their exact cosines are ranked."""
+    cand = _rank_topk(
+        partials.where(F.col("query_id") != F.col("neighbor_id")), pool, "adc", "prk"
+    ).drop("prk", "adc")
+    qdf = F.broadcast(
+        _queries(e).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
+    )
+    scored = (
+        cand.join(
+            e.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")),
+            "neighbor_id",
+        )
+        .join(qdf, "query_id")
+        .select("query_id", "neighbor_id", V.cosine(F.col("qv"), F.col("cv")).alias("cos_sim"))
+    )
+    return _rank_topk(scored, _TOPK)
 
 
 def _ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2679,44 +2647,23 @@ def _ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     |Q|-bounded rerank pool touches raw vectors again via an equi-join
     on neighbor_id. Recall vs the exact top-k is measured in
     tests/test_llm.py."""
-    import numpy as np
-
-    from pyspark.sql.window import Window
-
     e = load_table(spark, sf_dir, "embeddings")
-    sample_rows = e.orderBy("vec_id").limit(_PQ_SAMPLE).collect()
-    S = np.array([r.embedding for r in sample_rows], dtype=np.float64)
-    S /= np.linalg.norm(S, axis=1, keepdims=True)
-    d_sub = S.shape[1] // _PQ_M
     # codebooks[m]: K × d_sub — Lloyd-trained on the bounded sample
-    books = _pq_train_books(S, _PQ_M, _PQ_K)
+    books = _pq_train_books(_seed_panel(e, _PQ_SAMPLE), _PQ_M, _PQ_K)
 
     def encode(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            V /= np.linalg.norm(V, axis=1, keepdims=True)
-            codes = np.empty((len(V), _PQ_M), dtype="int32")
-            for m in range(_PQ_M):
-                sub = V[:, m * d_sub : (m + 1) * d_sub]
-                # nearest codeword by L2 within the subspace
-                d2 = ((sub[:, None, :] - books[m][None, :, :]) ** 2).sum(axis=2)
-                codes[:, m] = np.argmin(d2, axis=1)
+            codes = _pq_encode(_unit_rows(pdf["embedding"].tolist()), books)
             yield pd.DataFrame({"vec_id": pdf["vec_id"].to_numpy(), "code": list(codes)})
 
     encoded = e.select("vec_id", "embedding").mapInPandas(
         encode, "vec_id long, code array<int>"
     )
 
-    qrows = e.where(F.col("vec_id") % _QUERY_MOD == 0).select("vec_id", "embedding").collect()
-    Q = np.array([r.embedding for r in qrows], dtype=np.float64)
-    Q /= np.linalg.norm(Q, axis=1, keepdims=True)
-    qids = np.array([r.vec_id for r in qrows])
-    # ADC tables: per query, M × K subspace dot products
-    tables = np.stack(
-        [Q[:, m * d_sub : (m + 1) * d_sub] @ books[m].T for m in range(_PQ_M)], axis=1
-    )  # |Q| × M × K
+    _, qids, Q = _query_panel(_queries(e))
+    tables = _pq_tables(Q, books)  # |Q| × M × K
     pool = _PQ_RERANK * _TOPK
 
     def adc_score(batches):
@@ -2724,46 +2671,14 @@ def _ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             if len(pdf) == 0:
                 continue
             C = np.array(pdf["code"].tolist(), dtype="int64")  # n × M
-            ids = pdf["vec_id"].to_numpy()
             # approx cos for all queries × batch rows: sum of table lookups
             approx = np.stack(
                 [tables[:, m, C[:, m]] for m in range(_PQ_M)]
             ).sum(axis=0)  # |Q| × n
-            k = min(pool, approx.shape[1])
-            # lexsort, not argpartition: same structural-ADC-tie reason
-            # as the IVFPQ pool cut above
-            top = np.lexsort(
-                (np.broadcast_to(ids, approx.shape), -approx), axis=1
-            )[:, :k]
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(qids, k),
-                    "neighbor_id": ids[top].ravel(),
-                    "adc": np.take_along_axis(approx, top, axis=1).ravel(),
-                }
-            )
+            yield _local_topk(qids, pdf["vec_id"].to_numpy(), approx, pool, "adc")
 
     partials = encoded.mapInPandas(adc_score, "query_id long, neighbor_id long, adc double")
-    w_pool = Window.partitionBy("query_id").orderBy(F.col("adc").desc(), F.col("neighbor_id"))
-    cand = (
-        partials.where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("prk", F.row_number().over(w_pool))
-        .where(F.col("prk") <= pool)
-        .drop("prk", "adc")
-    )
-    # exact rerank of the bounded pool: join back the raw vectors
-    qdf = F.broadcast(
-        e.where(F.col("vec_id") % _QUERY_MOD == 0).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-        )
-    )
-    scored = (
-        cand.join(e.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")), "neighbor_id")
-        .join(qdf, "query_id")
-        .select("query_id", "neighbor_id", V.cosine(F.col("qv"), F.col("cv")).alias("cos_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= _TOPK)
+    return _adc_rerank(e, partials, pool)
 
 
 @register(
@@ -2798,18 +2713,27 @@ def _kmeans_centroids(spark: SparkSession, sf_dir: str, iters: int, k: int = _KM
     vec_ids, ties broken by lowest cluster id, decimal sums are
     partitioning-independent.
 
-    The fitted (C, wcss) pair is memoized per (sf_dir, iters): the
-    result is deterministic and K×d floats small, and both
+    The fitted (C, wcss) pair is memoized per (sf_dir, iters, k) and
+    embeddings version (``derived.source_memo``: a rewritten table
+    refits): the result is deterministic and K×d floats small, and both
     q_llm_kmeans and q_llm_semdedup consume the same model — a
     production pipeline trains centroids once and reuses them across
     downstream stages, it does not re-run Lloyd's per query."""
-    import numpy as np
+    from cheetah_spark.catalog import table_path
+    from cheetah_spark.derived import source_memo
 
-    key = (sf_dir, iters, k)
     e = load_table(spark, sf_dir, "embeddings")
-    if key in _kmeans_memo:
-        C, wcss_per_iter = _kmeans_memo[key]
-        return e, C.copy(), list(wcss_per_iter)
+    C, wcss_per_iter = source_memo(
+        ("kmeans", sf_dir, iters, k),
+        table_path(sf_dir, "embeddings"),
+        lambda: _kmeans_fit(e, iters, k),
+    )
+    return e, C.copy(), list(wcss_per_iter)
+
+
+def _kmeans_fit(e: DataFrame, iters: int, k: int):
+    """Lloyd's on ``e`` from the k lowest-vec_id seeds: the final
+    centroids and the WCSS of every iteration."""
     seed = e.orderBy("vec_id").limit(k).collect()
     C = np.array([r.embedding for r in seed], dtype=np.float64)
 
@@ -2860,11 +2784,7 @@ def _kmeans_centroids(spark: SparkSession, sf_dir: str, iters: int, k: int = _KM
             counts[r.cid] = r.n
             newC[r.cid, r.dim] = float(r.s) / r.n
         C = newC  # empty clusters keep their previous centroid
-    _kmeans_memo[key] = (C.copy(), list(wcss_per_iter))
-    return e, C, wcss_per_iter
-
-
-_kmeans_memo: dict = {}  # (sf_dir, iters) -> (C, wcss_per_iter); see _kmeans_centroids
+    return C, wcss_per_iter
 
 
 def _kmeans_result(spark: SparkSession, sf_dir: str, iters: int) -> DataFrame:
@@ -2873,8 +2793,6 @@ def _kmeans_result(spark: SparkSession, sf_dir: str, iters: int) -> DataFrame:
 
 
 def _kmeans_per_cluster(e: DataFrame, C) -> DataFrame:
-    import numpy as np
-
     def final_assign(batches):
         for pdf in batches:
             if len(pdf) == 0:
@@ -2993,8 +2911,6 @@ def _semdedup_per_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~125 vectors, making sum(|cluster|²) ≈ 125·n — linear — while the
     driver's centroid state stays a K×d array (n/125 × 64 doubles =
     0.004% of corpus size, bounded at any scale)."""
-    import numpy as np
-
     e, C, _wcss = _kmeans_centroids(
         spark, sf_dir, _KM_ITERS, k=_semdedup_k(spark, sf_dir)
     )
@@ -3319,8 +3235,6 @@ _PCA_ORACLE = f"""
 def _pca_eigfit(G, s, n):
     """Fold raw moments (Gram G = ΣxxT, s = Σx, count n) into the fitted
     model + the four fit-invariant flags. Driver-side on a d×d matrix."""
-    import numpy as np
-
     dim = len(s)
     mu = s / n
     cov = G / n - np.outer(mu, mu)  # population covariance
@@ -3347,8 +3261,6 @@ def _pca_apply_flags(e: DataFrame, mu, W, lam, n: int, d: int):
     """APPLY the rotation corpus-wide (map-only pass, broadcast μ/W);
     per-component decimal-exact sums (order-independent) checked
     against the eigenvalues on the driver at d scalars."""
-    import numpy as np
-
     def project(batches):
         for pdf in batches:
             if len(pdf) == 0:
@@ -3443,8 +3355,6 @@ def q_llm_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
       and variance equal to its eigenvalue — decimal-exact
       order-independent sums, compared on the driver at 16 scalars.
     """
-    import numpy as np
-
     e = load_table(spark, sf_dir, "embeddings")
 
     # --- pass 1a: hash-exact per-dim snapped moments (the SQL mirror)
@@ -3569,19 +3479,12 @@ def _knn_vote(qdf: DataFrame, train: DataFrame) -> DataFrame:
     """Shared k-NN majority-vote body (q_llm_knn_classify and its
     fixed-panel twin): collect the bounded query side, local numpy
     top-k per train partition, rank-reduce, broadcast vote join."""
-    import numpy as np
-
-    from pyspark.sql.window import Window
-
     # ONE bounded collect serves the Arrow closure AND the final truth
     # join (previously a second qdf scan); neighbor labels ride the
     # local-top-k emission itself (train vec_ids are unique, so
     # carrying the label is exactly the old 1:1 label join — which cost
     # a third full corpus scan)
-    qrows = qdf.select("vec_id", "embedding", "label").collect()
-    qids = np.array([r.vec_id for r in qrows], dtype=np.int64)
-    qm = np.array([r.embedding for r in qrows], dtype=np.float64)
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
+    qrows, qids, qm = _query_panel(qdf, "label")
 
     # the helper is label-type-generic (int labels in the fixture,
     # strings in the semantics tests) — carry the input's own type
@@ -3590,39 +3493,13 @@ def _knn_vote(qdf: DataFrame, train: DataFrame) -> DataFrame:
     def local_topk(batches):
         for pdf in batches:
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            labels = pdf["label"].to_numpy()
-            vm = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            vm /= np.linalg.norm(vm, axis=1, keepdims=True)
-            sims = qm @ vm.T
-            take = min(_KNN_K, sims.shape[1])
-            # lexsort, not argpartition: local selection must follow the
-            # SAME total order as the global rank and the oracle —
-            # (cos_sim DESC, neighbor_id ASC) — or an exact-duplicate
-            # embedding could evict the oracle-chosen lower neighbor_id
-            # at the local boundary before the global rank sees it
-            idx = np.lexsort((np.broadcast_to(ids, sims.shape), -sims), axis=1)[
-                :, :take
-            ]
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(qids, take),
-                    "neighbor_id": ids[idx].ravel(),
-                    "cos_sim": np.take_along_axis(sims, idx, axis=1).ravel(),
-                    "n_label": labels[idx].ravel(),
-                }
-            )
+            sims = qm @ _unit_rows(pdf["embedding"].tolist()).T
+            yield _local_topk(qids, ids, sims, _KNN_K, n_label=pdf["label"].to_numpy())
 
     local = train.select("vec_id", "embedding", "label").mapInPandas(
         local_topk, schema=f"{_topk_schema()}, n_label {lbl_type}"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    sel = (
-        local.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= _KNN_K)
-        .select("query_id", "n_label")
-    )
+    sel = _rank_topk(local, _KNN_K).select("query_id", "n_label")
     votes = sel.groupBy("query_id", "n_label").agg(F.count("*").alias("n_votes"))
     vw = Window.partitionBy("query_id").orderBy(
         F.col("n_votes").desc(), F.col("n_label").asc()
@@ -3701,7 +3578,7 @@ def q_llm_knn_classify_fixedq(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale probe measured for the fixedq family (1.26 s at 10x, 4.11 s at
     25x, 6.56 s at 50x)."""
     e = load_table(spark, sf_dir, "embeddings")
-    qdf = e.orderBy("vec_id").limit(_FIXEDQ_N).select("vec_id", "embedding", "label")
+    qdf = _fixed_panel(e).select("vec_id", "embedding", "label")
     qids = [int(r.vec_id) for r in qdf.select("vec_id").collect()]
     train = e.where(~F.col("vec_id").isin(qids)).select(
         "vec_id", "embedding", "label"
@@ -3748,8 +3625,6 @@ def q_udaf_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     trims the bounded histogram instead — same result, bounded
     groups). The fixture runs the direct form to exercise the UDAF
     execution path itself."""
-    import numpy as np
-
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -3874,8 +3749,6 @@ def _prefix_shingles(t: DataFrame) -> DataFrame:
     stream TWICE (agg by s, then the probe side by s again); the window
     pays one s-shuffle then reuses the partitioning (guide §2.4 — the
     r13 CS13/CS14 span/url-dedup pattern)."""
-    from pyspark.sql.window import Window
-
     wc = Window.partitionBy("s")
     wd = Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("s").asc())
     return (

@@ -904,10 +904,6 @@ def bloom_probe_transform(df: DataFrame, bloom_row: DataFrame) -> DataFrame:
     from cheetah_spark.functions import text as X
     from cheetah_spark.queries import curation as C
 
-    is_eval = (
-        X.hash56(F.concat(F.lit(C._DECON_SEED), F.col("doc_id").cast("string"))) % 1000
-        < C._EVAL_PERMIL
-    )
     shl = F.array_distinct(X.shingles(X.tokens(F.col("text")), C._DECON_K))
 
     def shingle_hits(s):
@@ -916,7 +912,7 @@ def bloom_probe_transform(df: DataFrame, bloom_row: DataFrame) -> DataFrame:
         return bloom_shingle_hit(s, F.col("words"))
 
     per_doc = (
-        df.where(~is_eval)
+        df.where(~C._is_eval())
         .withColumn("shl", shl)
         .where(F.size("shl") > 0)
         .withColumn("bk", F.lit(1))
@@ -961,10 +957,6 @@ def bloom_probe_partials(df: DataFrame, bloom: DataFrame) -> DataFrame:
     from cheetah_spark.functions import text as X
     from cheetah_spark.queries import curation as C
 
-    is_eval = (
-        X.hash56(F.concat(F.lit(C._DECON_SEED), F.col("doc_id").cast("string"))) % 1000
-        < C._EVAL_PERMIL
-    )
     shl = F.array_distinct(X.shingles(X.tokens(F.col("text")), C._DECON_K))
     # explode the EXPRESSION directly (the batch operator's shape):
     # aliasing the array into a projection first makes Generate carry
@@ -972,18 +964,8 @@ def bloom_probe_partials(df: DataFrame, bloom: DataFrame) -> DataFrame:
     # slower at the 25× tier (140 s vs 6.5 s for this stage alone).
     # explode of an empty array emits nothing, which IS the
     # zero-shingle-doc exclusion the batch semantics require.
-    train = df.where(~is_eval).select("doc_id", "lang", F.explode(shl).alias("s"))
-    probed = train
-    hit = F.lit(True)
-    for i, p in enumerate(C._bloom_positions_spark(F.col("s"))):
-        b = F.broadcast(
-            bloom.select(F.col("word_idx").alias(f"wi{i}"), F.col("word").alias(f"w{i}"))
-        )
-        probed = probed.withColumn(f"pos{i}", p).join(
-            b, (F.col(f"pos{i}") / 32).cast("bigint") == F.col(f"wi{i}"), "left"
-        )
-        bit = F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST(pos{i} % 32 AS INT))")
-        hit = hit & (F.coalesce(F.col(f"w{i}"), F.lit(0)).bitwiseAND(bit) != 0)
+    train = df.where(~C._is_eval()).select("doc_id", "lang", F.explode(shl).alias("s"))
+    probed, hit = C.bloom_slot_probe(train, bloom)
     per_doc = (
         probed.select("doc_id", "lang", hit.cast("int").alias("hit"))
         .groupBy("doc_id", "lang")
@@ -1054,24 +1036,7 @@ def s_llm_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cheetah_spark.anchors import anchor_rows
 
     def _bloom_words_build(spark_, sf_):
-        d_ = load_table(spark_, sf_, "documents")
-        is_eval_ = (
-            X.hash56(
-                F.concat(F.lit(C._DECON_SEED), F.col("doc_id").cast("string"))
-            )
-            % 1000
-            < C._EVAL_PERMIL
-        )
-        shl_ = F.array_distinct(X.shingles(X.tokens(F.col("text")), C._DECON_K))
-        eval_sh = d_.where(is_eval_).select(F.explode(shl_).alias("s")).distinct()
-        pos = eval_sh.select(
-            F.explode(F.array(*C._bloom_positions_spark(F.col("s")))).alias("pos")
-        )
-        return pos.groupBy((F.col("pos") / 32).cast("bigint").alias("word_idx")).agg(
-            F.bit_or(
-                F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 32 AS INT))")
-            ).alias("word")
-        )
+        return C.bloom_words(load_table(spark_, sf_, "documents").where(C._is_eval()))
 
     _schema, word_rows = anchor_rows(
         spark,
@@ -1081,8 +1046,9 @@ def s_llm_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         _bloom_words_build,
         params=f"m={C._BLOOM_M};k={C._BLOOM_K};shingle={C._DECON_K};"
         f"permil={C._EVAL_PERMIL};v1",
-        # the bit layout is defined by these shared expression helpers
-        helpers=(C._bloom_positions_spark, X.shingles, X.tokens),
+        # the bit layout and the eval split are defined by these shared
+        # helpers
+        helpers=(C.bloom_words, C._is_eval, C._bloom_positions_spark, X.shingles, X.tokens),
     )
     bloom = spark.createDataFrame(
         [(int(r.word_idx), int(r.word)) for r in word_rows],

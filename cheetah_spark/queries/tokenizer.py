@@ -91,9 +91,6 @@ def q_llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_bpe_memo: dict = {}  # sf_dir -> (merges, initial_symbols, final_symbols)
-
-
 def _bpe_anchor_build(spark: SparkSession, sf_dir: str):
     """Train and flatten the tokenizer model into an anchor table —
     one row per merge (rank, left, right, freq) with the corpus symbol
@@ -115,8 +112,9 @@ def _bpe_anchor_build(spark: SparkSession, sf_dir: str):
 
 def _trained(spark: SparkSession, sf_dir: str):
     """Tokenizer model per fixture: trained once, persisted as a
-    per-fixture anchor parquet (anchors.anchor_df — the same persist
-    policy as the ANN exact-top-k anchors), memoized per process.
+    per-fixture anchor parquet (anchors.anchor_rows — the same persist
+    policy as the ANN exact-top-k anchors), whose rows the anchor store
+    memoizes per process under its key, so a rewritten corpus retrains.
 
     A pipeline trains its tokenizer once and every downstream encode
     reuses the same merge list; persisting the model means a COLD
@@ -125,22 +123,20 @@ def _trained(spark: SparkSession, sf_dir: str):
     iterative training loop inside whatever query it happens to run
     first — the round-5 verdict's suspected cause for the 2x
     q_llm_bpe_encode driver-bench row."""
-    if sf_dir not in _bpe_memo:
-        from cheetah_spark.anchors import anchor_df
+    from cheetah_spark.anchors import anchor_rows
 
-        rows = anchor_df(
-            spark,
-            sf_dir,
-            "bpe_model",
-            ("documents",),
-            _bpe_anchor_build,
-            params=f"merges={_BPE_MERGES};v2",  # v2: rank -1 stats sentinel row
-            helpers=(train_bpe,),  # merge semantics live in the operator
-        ).collect()
-        rows.sort(key=lambda r: r.rank)
-        merges = [(r.rank, r.left, r.right, r.freq) for r in rows if r.rank >= 0]
-        _bpe_memo[sf_dir] = (merges, int(rows[0].initial), int(rows[0].final))
-    return _bpe_memo[sf_dir]
+    _schema, rows = anchor_rows(
+        spark,
+        sf_dir,
+        "bpe_model",
+        ("documents",),
+        _bpe_anchor_build,
+        params=f"merges={_BPE_MERGES};v2",  # v2: rank -1 stats sentinel row
+        helpers=(train_bpe,),  # merge semantics live in the operator
+    )
+    rows = sorted(rows, key=lambda r: r.rank)
+    merges = [(r.rank, r.left, r.right, r.freq) for r in rows if r.rank >= 0]
+    return merges, int(rows[0].initial), int(rows[0].final)
 
 
 @register(
@@ -336,17 +332,12 @@ def q_llm_unigram_tokenizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-_uni_memo: dict = {}  # sf_dir -> probs dict
-
-
 def _uni_model(spark: SparkSession, sf_dir: str) -> dict:
     """The trained unigram model per fixture: anchor-persisted as a
     (piece, prob) table (code-identity keyed like the BPE anchor),
-    memoized per process. Probs snap to 12 decimals at persist time so
-    the stored model is bit-stable across sessions."""
-    if sf_dir in _uni_memo:
-        return _uni_memo[sf_dir]
+    whose rows the anchor store memoizes per process under its key.
+    Probs snap to 12 decimals at persist time so the stored model is
+    bit-stable across sessions."""
     from cheetah_spark.anchors import anchor_rows
 
     def _build(spark_, sf_):
@@ -374,9 +365,7 @@ def _uni_model(spark: SparkSession, sf_dir: str) -> dict:
         f"prune={_UNI_PRUNE};v1",
         helpers=(_tu,),  # EM/prune semantics live in the operator
     )
-    probs = {r.piece: float(r.prob) for r in rows}
-    _uni_memo[sf_dir] = probs
-    return probs
+    return {r.piece: float(r.prob) for r in rows}
 
 
 @register(

@@ -1582,6 +1582,117 @@ def test_ann_enrich_transform_streaming_matches_batch(tmp_path, spark, sf_dir):
     assert got == expect and got
 
 
+def _jobs_of(spark, fn, group: str) -> int:
+    """Spark jobs started while ``fn`` runs, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ann_enrich_rebuild_compiles_the_panel_once_per_index_version(
+    tmp_path, spark, sf_dir, monkeypatch
+):
+    """A second build of the batch ann_enrich transform runs neither the
+    nlists sizing count nor the centroid collect: its only jobs are the
+    parquet schema reads (the index corpus and the built index) and
+    ivf_probe_topk's collect of the probed list ids, which is the
+    pruning read's input. Rewriting the index corpus recompiles the
+    panel: the neighbors then match the numpy IVF mirror on the new
+    corpus."""
+    import duckdb
+    import numpy as np
+
+    import cheetah_spark.streaming as S
+    from cheetah_spark.queries.llm import ivf_probe_expand
+
+    monkeypatch.setattr(S, "FIXTURE_ROOT", str(tmp_path / "fixtures"))
+    index = str(tmp_path / "ref.parquet")
+    k, nprobe = 3, 4
+    # nlists unset: the transform sizes it as max(16, sqrt(n))
+    enrich = config.build_transform(
+        {"type": "ann_enrich", "index": index, "k": k, "nprobe": nprobe}
+    )
+    for version, min_id in enumerate((0, 100)):
+        duckdb.sql(
+            f"COPY (SELECT vec_id, embedding FROM '{sf_dir}/embeddings.parquet'"
+            f" WHERE vec_id >= {min_id} ORDER BY vec_id)"
+            f" TO '{index}' (FORMAT PARQUET)"
+        )
+        df = spark.read.parquet(index)
+        rows = [(r.vec_id, list(r.embedding)) for r in df.collect()]
+        nlists = max(16, int(len(rows) ** 0.5))
+        first = _jobs_of(spark, lambda: enrich(df), f"ann_enrich_first_{version}")
+        out = {}
+        second = _jobs_of(
+            spark, lambda: out.setdefault("df", enrich(df)), f"ann_enrich_second_{version}"
+        )
+        got = {
+            r.vec_id: [nb.neighbor_id for nb in (r.neighbors or [])]
+            for r in out["df"].collect()
+        }
+        assert got == _numpy_ivf_neighbors(rows, k, nlists, nprobe)
+        # the probe's job count does not depend on the centroid values
+        C = np.eye(nlists, len(rows[0][1]))
+        index_dir = glob.glob(f"{tmp_path}/fixtures/ann_index/*_{nlists}")[0]
+        expected = (
+            _jobs_of(spark, lambda: spark.read.parquet(index), f"ann_ref_read_{version}")
+            + _jobs_of(spark, lambda: spark.read.parquet(index_dir), f"ann_idx_read_{version}")
+            + _jobs_of(
+                spark,
+                lambda: ivf_probe_expand(C, nprobe, df).select("cid").distinct().collect(),
+                f"ann_cid_collect_{version}",
+            )
+        )
+        assert second == expected
+        assert first >= second + 2  # the count and the centroid collect
+
+
+def test_decontaminate_rebuild_starts_no_job_and_follows_the_eval_corpus(
+    tmp_path, spark, sf_dir
+):
+    """A second build of the decontaminate transform starts no job: the
+    Bloom words of a local eval corpus are compiled once per corpus
+    version. Rewriting the eval corpus recompiles them: the flags then
+    change, and equal the broadcast word-slot join over the new
+    corpus."""
+    from pyspark.sql import functions as F
+
+    from cheetah_spark.functions import text as X
+    from cheetah_spark.queries import curation as C
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "lang", "text")
+    train_src = str(tmp_path / "train_docs")
+    eval_src = str(tmp_path / "eval_docs")
+    docs.where(F.col("doc_id") % 7 > 1).write.parquet(train_src)
+    decon = config.build_transform(
+        {"type": "decontaminate", "column": "text", "from": eval_src, "mode": "annotate"}
+    )
+    train = spark.read.parquet(train_src)
+    flags = []
+    for version in (0, 1):
+        docs.where(F.col("doc_id") % 7 == version).write.mode("overwrite").parquet(eval_src)
+        decon(train)
+        out = {}
+        assert _jobs_of(
+            spark, lambda: out.setdefault("df", decon(train)), f"decon_rebuild_{version}"
+        ) == 0
+        got = {r.doc_id for r in out["df"].where("contaminated").select("doc_id").collect()}
+        shl = F.array_distinct(X.shingles(X.tokens(F.col("text")), 3))
+        probed, hit = C.bloom_slot_probe(
+            train.select("doc_id", F.explode(shl).alias("s")),
+            C.bloom_words(spark.read.parquet(eval_src)),
+        )
+        assert got == {r.doc_id for r in probed.where(hit).select("doc_id").distinct().collect()}
+        assert got
+        flags.append(got)
+    assert flags[0] != flags[1]
+
+
 def test_example_configs_construct():
     """examples/*.json must keep constructing through the daemon loader
     — a transform/sink schema change that orphans the shipped examples

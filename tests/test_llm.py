@@ -5,6 +5,8 @@ run from the driver, so the strong checks live here)."""
 
 from __future__ import annotations
 
+import pytest
+
 from cheetah_spark.registry import REGISTRY, _ensure_loaded
 
 _ensure_loaded()
@@ -511,17 +513,35 @@ def test_ann_ivf_index_is_cid_partitioned_and_prunable(spark, sf_dir):
     assert got_cids <= set(probed)
 
 
-def test_ann_bruteforce_duplicate_embeddings_keep_lowest_ids(spark, tmp_path):
+def _pq_topk(spark, sf):
+    from cheetah_spark.queries.llm import _ann_pq_topk
+
+    return _ann_pq_topk(spark, sf)
+
+
+# Every path through the shared local cut (llm._local_topk) that this
+# 8-dim fixture can run. IVF-PQ trains 16 x 256-entry codebooks, which
+# needs at least 16 dims; _knn_vote returns votes, not neighbor ids
+# (its own tie test is in tests/test_analytics_semantics.py).
+@pytest.mark.parametrize(
+    "topk",
+    [
+        pytest.param(lambda spark, sf: REGISTRY["q_llm_ann_bruteforce"].fn(spark, sf),
+                     id="q_llm_ann_bruteforce"),
+        pytest.param(_pq_topk, id="_ann_pq_topk"),
+    ],
+)
+def test_ann_bruteforce_duplicate_embeddings_keep_lowest_ids(spark, tmp_path, topk):
     """The local top-k cut must follow the oracle's total order
     (cos DESC, neighbor_id ASC) even when MANY corpus vectors tie
     exactly (duplicate embeddings): with 50 identical best-match
     vectors, the returned top-k must be the 5 LOWEST ids — an
     argpartition cut picks arbitrary tied members and fails this
-    (the r12 _knn_vote bug class, fixed r13 in the bruteforce path)."""
+    (the r12 _knn_vote bug class, fixed r13 in the bruteforce path).
+    Identical vectors get identical PQ codes, so their ADC scores tie
+    too: the PQ pool cut is held to the same order."""
     import numpy as np
     import pandas as pd
-
-    from cheetah_spark.registry import REGISTRY
 
     rng = np.random.default_rng(7)
     dim = 8
@@ -540,12 +560,43 @@ def test_ann_bruteforce_duplicate_embeddings_keep_lowest_ids(spark, tmp_path):
     pd.DataFrame(rows, columns=["vec_id", "embedding", "label"]).to_parquet(
         f"{sf}/embeddings.parquet", index=False
     )
-    out = REGISTRY["q_llm_ann_bruteforce"].fn(spark, sf)
+    out = topk(spark, sf)
     got = [
         r.neighbor_id
         for r in out.where("query_id = 0").orderBy("rk").collect()
     ]
     assert got == [1, 2, 3, 4, 5], got
+
+
+def test_kmeans_refits_a_rewritten_table(spark, sf_dir, tmp_path):
+    """The fitted k-means model follows its embeddings table: rewrite
+    the table in the same process (fewer rows, 8 of the 64 dims) and
+    q_llm_kmeans must match its oracle on the new data, from centroids
+    fitted to it. A model memo keyed on the sf dir alone serves the
+    64-dim centroids of the first table."""
+    import duckdb
+    from conftest import assert_matches_oracle
+
+    from cheetah_spark.queries.llm import _KM_ITERS, _kmeans_centroids
+
+    src = f"{sf_dir}/embeddings.parquet"
+    sf = tmp_path / "km_sf"
+    sf.mkdir()
+    q = REGISTRY["q_llm_kmeans"]
+    for n, dims in ((600, 64), (400, 8)):
+        con = duckdb.connect()
+        try:
+            con.execute(
+                f"COPY (SELECT vec_id, embedding[1:{dims}] AS embedding, label"
+                f" FROM '{src}' ORDER BY vec_id LIMIT {n})"
+                f" TO '{sf}/embeddings.parquet' (FORMAT PARQUET)"
+            )
+            con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{sf}/embeddings.parquet'")
+            assert_matches_oracle(q.fn(spark, str(sf)), con.sql(q.oracle))
+        finally:
+            con.close()
+        _e, C, _wcss = _kmeans_centroids(spark, str(sf), _KM_ITERS)
+        assert C.shape[1] == dims
 
 
 def test_winnow_fold_matches_window_formulation_on_edges(spark):

@@ -130,6 +130,49 @@ def test_cache_guard_sees_a_hand_rolled_cache():
     assert len(found) == 4, found
 
 
+# A value read from a source table (a fitted model, a compiled set) is
+# memoized by the store too: ``derived.source_memo`` keys it on the
+# source's file stats, and an anchor's rows are held under the anchor's
+# store key. A module-level ``*_memo`` dict anywhere else is a cache
+# keyed on something weaker (a path string), which keeps serving the old
+# value after the table is rewritten.
+_MEMO_HOMES = {"cheetah_spark/derived.py", "cheetah_spark/anchors.py"}
+
+
+def _memo_sites(rel: str, tree) -> list[str]:
+    found = []
+    for n in tree.body:
+        targets = n.targets if isinstance(n, ast.Assign) else [getattr(n, "target", None)]
+        for t in targets:
+            if isinstance(t, ast.Name) and t.id.endswith("_memo"):
+                found.append(f"{rel}:{n.lineno}: {t.id}")
+    return found
+
+
+def test_module_memos_live_in_the_store():
+    found = []
+    for f in sorted((REPO / "cheetah_spark").rglob("*.py")):
+        rel = f.relative_to(REPO).as_posix()
+        if rel not in _MEMO_HOMES:
+            found += _memo_sites(rel, ast.parse(f.read_text(encoding="utf-8")))
+    assert not found, found
+
+
+def test_memo_guard_sees_a_hand_rolled_memo():
+    src = (
+        "_model_memo: dict = {}\n"
+        "_probs_memo = {}\n"
+        "def model(sf_dir):\n"
+        "    _local_memo = {}\n"
+        "    return _model_memo.setdefault(sf_dir, 1)\n"
+    )
+    found = _memo_sites("cheetah_spark/queries/x.py", ast.parse(src))
+    assert found == [
+        "cheetah_spark/queries/x.py:1: _model_memo",
+        "cheetah_spark/queries/x.py:2: _probs_memo",
+    ], found
+
+
 # The live transports declare their config once, as their Source
 # dataclass, and run on the shell in sources/seqwindow.py: its options
 # parser and its DataSource base. A transport module that reads a
